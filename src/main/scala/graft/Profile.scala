@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler._
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** r17 measurement harness (guide §1): per-JOB wall-time breakdown for a
   * query — how many Spark jobs an invocation schedules, what each costs,
@@ -12,7 +13,8 @@ import scala.collection.mutable
   * before touching any plan.
   *
   * Usage: sbt "runMain graft.Profile <sfDir> <query> [query...]"
-  * Prints, per query: warmed total, job count, sum of job times, and
+  * Prints, per query: warmed total, job count, sum of job times, busy
+  * time (the union of job intervals), the driver gap (wall - busy), and
   * the top jobs with their stage/task counts. Measurement-only — never
   * run by the driver, changes no query. */
 object Profile {
@@ -45,13 +47,26 @@ object Profile {
     def reset(): Unit = synchronized { jobs.clear(); stageTasks.clear(); stageToJob.clear() }
   }
 
-  /** LiveListenerBus.waitUntilEmpty is private[spark]; reflective call
-    * (the BandCapSweep technique) so job-end events land before reads. */
-  private def drainBus(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
-  }
+  /** Blocks until the async listener bus has delivered every posted
+    * event, so listener reads see all events of the jobs that ran
+    * before the call. `LiveListenerBus.waitUntilEmpty` is
+    * `private[spark]` (bytecode-public), reached via reflection; if that
+    * fails, a settle-sleep only widens the window, never narrows it. */
+  private[graft] def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    try {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
+    } catch { case NonFatal(_) => Thread.sleep(1500) }
+
+  /** Length of the union of [start, end] intervals: the time at least
+    * one job was running. Overlapping jobs are counted once, so the
+    * driver gap `wall - busy` stays >= 0 (`wall - Σ job time` does not). */
+  private[graft] def busyTime(intervals: Seq[(Long, Long)]): Long =
+    intervals.filter { case (s, e) => e > s }.sortBy(_._1)
+      .foldLeft((0L, Long.MinValue)) { case ((busy, end), (s, e)) =>
+        if (e <= end) (busy, end) else (busy + e - math.max(s, end), e)
+      }._1
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Profile <sfDir> <query> [query...]")
@@ -75,15 +90,16 @@ object Profile {
       // warmup (JIT + substrates), same lifecycle as Bench
       try action(fns(name)(spark, sfDir)) catch { case e: Throwable =>
         println(s"[profile] $name warmup failed: $e"); }
-      drainBus(spark)
+      drainListenerBus(spark)
       listener.reset()
       val t0 = System.nanoTime()
       action(fns(name)(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
-      drainBus(spark)
+      drainListenerBus(spark)
       val jobs = listener.jobs.values.toSeq
       val jobSum = jobs.map(j => (j.completed - j.submitted).max(0L)).sum / 1e3
-      println(f"\n== $name%s wall=$wall%.3fs jobs=${jobs.size}%d jobSum=$jobSum%.3fs gap=${wall - jobSum}%.3fs")
+      val busy = busyTime(jobs.map(j => (j.submitted, j.completed))) / 1e3
+      println(f"\n== $name%s wall=$wall%.3fs jobs=${jobs.size}%d jobSum=$jobSum%.3fs busy=$busy%.3fs gap=${wall - busy}%.3fs")
       jobs.sortBy(j => -(j.completed - j.submitted)).take(14).foreach { j =>
         val ms = (j.completed - j.submitted).max(0L)
         println(f"  job ${j.id}%3d ${ms / 1e3}%7.3fs stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(60)}%s")

@@ -14,8 +14,7 @@ import org.apache.spark.sql.SparkSession
   * of TIMESTAMP_NTZ, which unix_micros/window() reject.
   */
 object Sessions {
-  def create(appName: String, cpus: String,
-      extraConf: Map[String, String] = Map.empty): SparkSession = {
+  def create(appName: String, cpus: String): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -52,16 +51,13 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-    // memory-regime overrides (SpillSweep) and other main-specific conf;
-    // must land before getOrCreate since they configure the context.
-    // SPARK_GRAFT_CONF ("k=v;k=v") is the local-iteration escape hatch
-    // for flags the mains don't parametrize (e.g. flipping
-    // spark.graft.joinPlanner.enabled in a bench A/B); the driver never
-    // sets it, so recorded rounds always run the defaults.
-    val envConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
-    val spark = (envConf ++ extraConf).foldLeft(builder) {
+    // SPARK_GRAFT_CONF ("k=v;k=v") sets session conf for regimes the
+    // mains don't parametrize: flipping spark.graft.joinPlanner.enabled
+    // in an A/B, or the memory-pressure StressSweep variant whose runs
+    // are committed as STRESS_spill_r1*.json (static confs like
+    // spark.memory.fraction, hence before getOrCreate). The driver
+    // never sets it, so recorded rounds always run the defaults.
+    val spark = envConf.foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -72,4 +68,18 @@ object Sessions {
     graft.functions.Porter.register(spark)
     spark
   }
+
+  /** `SPARK_GRAFT_CONF` as (key, value) pairs; see [[parseConf]]. */
+  def envConf: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_CONF").map(parseConf).getOrElse(Seq.empty)
+
+  /** Parses a "k=v;k=v" conf list. Blank entries are skipped; an entry
+    * without a key and `=` fails loudly, so a mistyped knob cannot
+    * silently leave the run on the defaults. */
+  def parseConf(s: String): Seq[(String, String)] =
+    s.split(";").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"SPARK_GRAFT_CONF entry not k=v: $kv")
+      (kv.take(i).trim, kv.drop(i + 1).trim)
+    }
 }

@@ -411,7 +411,7 @@ object StreamQueries extends QueryGroup {
   /** Corpus-bucket occupancy past which a band bucket is dead for the
     * life of the stream (st8c).
     *
-    * CONFIRMED at 16 by the round-16 ladder (graft.NeardupCapSweep,
+    * CONFIRMED at 16 by the round-16 ladder (its committed result:
     * STRESS_neardupcap_r16.json): planted clusters with per-band corpus
     * occupancies {~2.7, 8, 27, 108, 432} straddling caps {4,16,64,256}.
     * Measured trade per rung (recall‰ of genuine near-dups / candidate

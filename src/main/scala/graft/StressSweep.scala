@@ -1,8 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
+import scala.util.control.NonFatal
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Executes EVERY registered query against a (stress) sf dir with full
   * row evaluation — the completion-at-scale companion to Bench: where
@@ -27,13 +33,27 @@ import scala.concurrent.ExecutionContext.Implicits.global
   * drop counts) so rounds can diff scaling the way BENCH_r*.json diffs
   * wall-times; with a fourth argument (a prior artifact, e.g. an sf0.1
   * run) each key also carries `ratio` = this run's seconds over the
-  * baseline's.
+  * baseline's. Every key also records the stage-level memory counters
+  * (`mem_spilled_bytes`, `disk_spilled_bytes`, `peak_exec_mem_bytes`),
+  * and the artifact is rewritten after every key.
+  *
+  * VARIANTS run through this same harness under `SPARK_GRAFT_CONF`
+  * (stamped into the artifact as `env_conf`) and `SPARK_GRAFT_SWEEP_ONLY`
+  * (the key battery). The memory-pressure (spill) regime squeezes the
+  * unified pool so heavy shuffles, aggregations and persists must take
+  * the spill path; nonzero spill is the proof it engaged:
+  *   SPARK_GRAFT_CONF="spark.memory.fraction=0.15;spark.graft.substrateStorageLevel=DISK_ONLY"
+  *   SPARK_GRAFT_SWEEP_ONLY=la_build_pipeline,la_daily_run,t_corpus_pipeline,j6_reconcile_fixpoint,g1_connected_components,d2_minhash_lsh,k2_nt_triples,st8c_stream_admit_capped
+  * Leave the contract-quadratic pair-listers (j17, d4, d19, d13, st8,
+  * m1v) out of such a battery: under a starved pool their quadratic
+  * contract is a JVM-killing executor OOM, not a measurement.
   *
   * Usage: runMain graft.StressSweep [sfDir] [timeoutSecs] [outJson [baselineJson]]
   */
 object StressSweep {
   final private case class Res(secs: Double, status: String, note: String,
-      guardDrops: Long, dropsTainted: Boolean = false)
+      guardDrops: Long, dropsTainted: Boolean, memSpilled: Long,
+      diskSpilled: Long, peakExecMem: Long)
 
   /** Keys whose sf1/sf0.1 ratio is super-linear BY CONTRACT — the note
     * rides the artifact so a round-over-round ratio diff reads the why
@@ -74,27 +94,31 @@ object StressSweep {
         case _ => Map.empty[String, Double]
       }
     }.getOrElse(Map.empty)
-    val spark = Sessions.create("graft-stress-sweep",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    // env-conf passthrough (round-16 verdict item 5): a sweep variant
-    // under a session knob — e.g. SPARK_GRAFT_SWEEP_CONF=
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // a sweep variant under a session knob — e.g. SPARK_GRAFT_CONF=
     // "spark.graft.bandCap=256" for the capped-d2 sf100 rung — runs
-    // through the SAME harness instead of a one-off main, and the
-    // artifact stamps exactly what was set ("env_conf") so the rung is
-    // comparable to the default-knob artifact it sits beside
-    val envConf: Seq[(String, String)] = sys.env.get("SPARK_GRAFT_SWEEP_CONF")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        .map { kv =>
-          val i = kv.indexOf('=')
-          require(i > 0, s"SPARK_GRAFT_SWEEP_CONF entry not k=v: $kv")
-          (kv.take(i), kv.drop(i + 1))
-        }).getOrElse(Seq.empty)
-    envConf.foreach { case (k, v) =>
-      spark.conf.set(k, v)
-      println(s"[sweep] env conf: $k=$v")
-    }
-    // local-iteration filter (comma-separated); the driver never sets
-    // it, so recorded sweeps always cover the full registry
+    // through the SAME harness instead of a one-off main; Sessions
+    // applies it, and the artifact stamps exactly what was set
+    // ("env_conf") so the rung is comparable to the default-knob
+    // artifact it sits beside
+    val envConf = Sessions.envConf
+    val spark = Sessions.create("graft-stress-sweep", cpus)
+    envConf.foreach { case (k, v) => println(s"[sweep] env conf: $k=$v") }
+    // stage-level memory counters, read per key as deltas (peak: reset
+    // per key); under the spill regime a sweep that "passes" with zero
+    // spill just wasn't under pressure
+    val memSpilled, diskSpilled, peakExec = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach { m =>
+          memSpilled.addAndGet(m.memoryBytesSpilled)
+          diskSpilled.addAndGet(m.diskBytesSpilled)
+          peakExec.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
+        }
+    })
+    // key-battery filter (comma-separated): local iteration or a
+    // variant's battery; the driver never sets it, so recorded sweeps
+    // always cover the full registry
     val only = sys.env.get("SPARK_GRAFT_SWEEP_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     var failed = List.empty[String]
@@ -109,8 +133,74 @@ object StressSweep {
       val unknown = names -- Queries.all.map(_.name).toSet
       require(unknown.isEmpty, s"SPARK_GRAFT_SWEEP_ONLY unknown: ${unknown.mkString(",")}")
     }
-    val results: Seq[(String, Res)] = sweepSet.map { q =>
+    var results = Vector.empty[(String, Res)]
+
+    // JSON demands '.' decimal separators; f"" uses the JVM default
+    // locale, which on comma-separator locales would emit invalid JSON
+    def num(fmt: String, v: Double): String =
+      String.format(java.util.Locale.ROOT, fmt, Double.box(v))
+    def str(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    // env + corpus stamp: a sweep's seconds are only comparable to a
+    // prior artifact's under the same heap/threads AND the same
+    // corpus draw (the driver regenerates testdata every round, and
+    // StressGen corpora derive from it) — record both, same
+    // fingerprint as BENCH (Bench.corpusFingerprint), so ratio-flag
+    // adjudication reads off the artifacts
+    val stamp = outJson.map { _ =>
+      val heapG = Runtime.getRuntime.maxMemory() / (1 << 30)
+      val (corpusId, corpusStats) = Bench.corpusFingerprint(spark, sfDir)
+      val corpusTables = corpusStats.map { case (n, r, b) =>
+        s"""${str(n)}:{"rows":$r,"bytes":$b}""" }.mkString("{", ",", "}")
+      val envConfJson = envConf.map { case (k, v) => s"${str(k)}:${str(v)}" }
+        .mkString("{", ",", "}")
+      Profile.drainListenerBus(spark) // its stages precede the first key
+      s""""sf_dir":${str(sfDir)},"timeout_secs":$timeoutSecs,""" +
+        s""""heap_gib":$heapG,"cpus":$cpus,"env_conf":$envConfJson,""" +
+        s""""corpus":{"id":${str(corpusId)},"tables":$corpusTables},"""
+    }
+    // the artifact is REWRITTEN after every key: a key that kills the
+    // whole JVM (an executor OutOfMemoryError in local mode exits the
+    // process via SparkUncaughtExceptionHandler) must not erase the
+    // keys measured before it. Temp-then-ATOMIC_MOVE, because that kill
+    // can land DURING a plain truncate-then-write.
+    def writeArtifact(isoSecs: Map[String, Double]): Unit = for (path <- outJson; head <- stamp) {
+      val rows = results.map { case (name, r) =>
+        val ratio = baseline.get(name).filter(_ > 0)
+          .map(b => s""","ratio":${num("%.2f", r.secs / b)}""").getOrElse("")
+        val note = if (r.note.nonEmpty) s""","note":${str(r.note)}""" else ""
+        val drops = if (r.guardDrops > 0) s""","guard_drops":${r.guardDrops}""" else ""
+        val taint = if (r.dropsTainted) s""","drops_tainted":true""" else ""
+        val iso = isoSecs.get(name)
+          .map(s => s""","iso_secs":${num("%.3f", s)}""").getOrElse("")
+        val mem = s""","mem_spilled_bytes":${r.memSpilled},""" +
+          s""""disk_spilled_bytes":${r.diskSpilled},""" +
+          s""""peak_exec_mem_bytes":${r.peakExecMem}"""
+        s"""${str(name)}:{"secs":${num("%.3f", r.secs)},"status":${str(r.status)}$ratio$iso$drops$taint$mem$note}"""
+      }.mkString(",")
+      val doc = s"""{$head""" +
+        s""""n_queries":${results.size},""" +
+        s""""total_secs":${num("%.1f", results.map(_._2.secs).sum)},""" +
+        s""""n_timeout":${timedOut.size},"n_fail":${failed.size},""" +
+        s""""total_mem_spilled_bytes":${results.map(_._2.memSpilled).sum},""" +
+        s""""total_disk_spilled_bytes":${results.map(_._2.diskSpilled).sum},""" +
+        s""""queries":{$rows}}"""
+      val target = Paths.get(path)
+      val dir = Option(target.toAbsolutePath.getParent).getOrElse(Paths.get("."))
+      val tmp = Files.createTempFile(dir, ".sweep", ".tmp")
+      Files.writeString(tmp, doc)
+      Files.move(tmp, target,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
+
+    sweepSet.foreach { q =>
       zombies = zombies.filterNot(_.isCompleted)
+      val (m0, d0) = (memSpilled.get, diskSpilled.get)
+      peakExec.set(0L)
       val t0 = System.nanoTime()
       val drops0 = DedupQueries.guardDropCount.get()
       val group = s"sweep-${q.name}"
@@ -146,16 +236,23 @@ object StressSweep {
           ("fail",
             String.valueOf(e.getMessage).linesIterator.next().take(120))
       }
-      spark.catalog.clearCache()
+      // an executor OOM can shut the local context down, and clearCache
+      // on a stopped context throws: the key must still be recorded
+      try spark.catalog.clearCache() catch { case NonFatal(_) => () }
       val secs = (System.nanoTime() - t0) / 1e9
+      Profile.drainListenerBus(spark) // this key's stage events land here
+      val (mem, disk, peak) =
+        (memSpilled.get - m0, diskSpilled.get - d0, peakExec.get)
       val drops = DedupQueries.guardDropCount.get() - drops0
       val tainted = drops > 0 && zombies.exists(!_.isCompleted)
       val extra = (if (drops > 0) s"  [guard drops: $drops" +
           (if (tainted) ", TAINTED by a live zombie future]" else "]")
         else "") +
         (if (note.nonEmpty) s"  $note" else "")
-      println(f"[sweep] ${q.name}%-28s $secs%7.2f s  $status$extra")
-      q.name -> Res(secs, status, note, drops, tainted)
+      println(f"[sweep] ${q.name}%-28s $secs%7.2f s  $status  " +
+        f"peak=${peak / 1e6}%.0fMB spill=${mem / 1e6}%.0f/${disk / 1e6}%.0fMB$extra")
+      results :+= q.name -> Res(secs, status, note, drops, tainted, mem, disk, peak)
+      writeArtifact(Map.empty)
     }
     // isolated re-measurement of ratio-flag suspects — the manual
     // adjudication protocol every round applied by hand (r12 d5, r15
@@ -184,51 +281,12 @@ object StressSweep {
     val slowest = results.sortBy(-_._2.secs).take(10)
       .map { case (n, r) => f"$n=${r.secs}%.1f" }.mkString(", ")
     println(f"[sweep] TOTAL ${results.size} queries $total%.1f s; slowest: $slowest")
+    println(f"[sweep] spilled mem ${results.map(_._2.memSpilled).sum / 1e9}%.2f GB, " +
+      f"disk ${results.map(_._2.diskSpilled).sum / 1e9}%.2f GB")
     if (timedOut.nonEmpty)
       println(s"[sweep] TIMED OUT (reported, not silent): ${timedOut.reverse.mkString(", ")}")
-    outJson.foreach { path =>
-      // JSON demands '.' decimal separators; f"" uses the JVM default
-      // locale, which on comma-separator locales would emit invalid JSON
-      def num(fmt: String, v: Double): String =
-        String.format(java.util.Locale.ROOT, fmt, Double.box(v))
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val rows = results.map { case (name, r) =>
-        val ratio = baseline.get(name).filter(_ > 0)
-          .map(b => s""","ratio":${num("%.2f", r.secs / b)}""").getOrElse("")
-        val note = if (r.note.nonEmpty) s""","note":${q(r.note)}""" else ""
-        val drops = if (r.guardDrops > 0) s""","guard_drops":${r.guardDrops}""" else ""
-        val taint = if (r.dropsTainted) s""","drops_tainted":true""" else ""
-        val iso = isoSecs.get(name)
-          .map(s => s""","iso_secs":${num("%.3f", s)}""").getOrElse("")
-        s"""${q(name)}:{"secs":${num("%.3f", r.secs)},"status":${q(r.status)}$ratio$iso$drops$taint$note}"""
-      }.mkString(",")
-      // env + corpus stamp: a sweep's seconds are only comparable to a
-      // prior artifact's under the same heap/threads AND the same
-      // corpus draw (the driver regenerates testdata every round, and
-      // StressGen corpora derive from it) — record both, same
-      // fingerprint as BENCH (Bench.corpusFingerprint), so ratio-flag
-      // adjudication reads off the artifacts
-      val heapG = Runtime.getRuntime.maxMemory() / (1 << 30)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val (corpusId, corpusStats) = Bench.corpusFingerprint(spark, sfDir)
-      val corpusTables = corpusStats.map { case (n, r, b) =>
-        s"""${q(n)}:{"rows":$r,"bytes":$b}""" }.mkString("{", ",", "}")
-      val envConfJson = envConf.map { case (k, v) => s"${q(k)}:${q(v)}" }
-        .mkString("{", ",", "}")
-      val doc = s"""{"sf_dir":${q(sfDir)},"timeout_secs":$timeoutSecs,""" +
-        s""""heap_gib":$heapG,"cpus":$cpus,"env_conf":$envConfJson,""" +
-        s""""corpus":{"id":${q(corpusId)},"tables":$corpusTables},""" +
-        s""""n_queries":${results.size},"total_secs":${num("%.1f", total)},""" +
-        s""""n_timeout":${timedOut.size},"n_fail":${failed.size},""" +
-        s""""queries":{$rows}}"""
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), doc)
-      println(s"[sweep] artifact written: $path")
-    }
+    writeArtifact(isoSecs)
+    outJson.foreach(path => println(s"[sweep] artifact written: $path"))
     if (failed.nonEmpty) {
       println(s"[sweep] FAILED: ${failed.reverse.mkString(", ")}")
       spark.stop(); sys.exit(1)

@@ -13,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - streaming/StreamingOps.scala — per-micro-batch deltas, bounded
   *     by batch size regardless of corpus size;
   *   - operators/JoinPlanner.scala — O(1) sketch grids (fixed cell
-  *     count, never grows with the data);
-  *   - NeardupCapSweep.scala / BandCapSweep.scala — the ladder
-  *     harnesses themselves, which measure per-rung peak memory under
-  *     the level they persist at (routing them would make the
-  *     measurement depend on the knob under test); both are bounded
-  *     planted corpora (tens of thousands of short docs), never
-  *     corpus-shaped.
+  *     count, never grows with the data).
   * `.cache()` (always MEMORY_AND_DISK, ignores every knob) is banned
   * outright, and so is an explicit-level `.persist(StorageLevel.X)`
   * anywhere but operators/Substrate.scala (the regime's single routing
@@ -61,9 +55,7 @@ class CacheRegimeLintSpec extends AnyFunSuite {
 
   private val allowedBarePersist = Set(
     "streaming/StreamingOps.scala", // per-batch deltas (batch-bounded)
-    "operators/JoinPlanner.scala",  // O(1) sketch grids
-    "NeardupCapSweep.scala",        // ladder harness measures levels
-    "BandCapSweep.scala")           // ladder harness measures levels
+    "operators/JoinPlanner.scala")  // O(1) sketch grids
 
   // explicit-level .persist(StorageLevel.X) is the regime bypass; only
   // the regime's own routing point may use it

@@ -7,7 +7,8 @@
 # the snapshot commit. It runs, in order:
 #   1. full `sbt test` (includes the cache-regime + plan-audit lints),
 #   2. Verify at sf0.01 + the DuckDB oracle compare (tools/check.py),
-#   3. the stress_diff gate selftest.
+#   3. the stress_diff gate selftest,
+#   4. the repo benchmark's trace-analysis self-tests (pure Python).
 # Usage: tools/gate.sh [sf-dir]       (default /root/testdata/sf0.01)
 # Logs land in /tmp/graft_gate/ stamped with the tree state so the
 # round record can cite "gate ran at <sha/dirty>".
@@ -41,6 +42,7 @@ step sbt_test sbt -batch test
 step verify sbt -batch "runMain graft.Verify $SF $VDIR"
 step oracle python3 tools/check.py "$VDIR" "$SF"
 step diff_selftest python3 tools/stress_diff_selftest.py
+step perfbench_layers python3 perfbench/test_perfbench.py LayerTest
 
 if [ "$fail" -eq 0 ]; then
   echo "[gate] ALL GREEN at $STAMP — snapshot commit may proceed"
