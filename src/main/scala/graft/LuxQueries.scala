@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Substrate
 import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -72,8 +73,29 @@ object LuxQueries extends QueryGroup {
     * record/triple indexes (built offline, queried many times). Rebuilding
     * it per query re-scanned 5 parquet tables and re-ran two full
     * distinct() shuffles each time, which dominated lux_q1's wall-clock.
-    * At 100 TB this is a bucketed table (by id / subject) on disk so hop
-    * joins are co-partitioned; in-process, persist() plays that role. */
+    *
+    * Layout: entities are hash-partitioned on `id` and triples on
+    * `subject`, both into ONE shared count, `Substrate.indexPartitions`
+    * — ceil(leaf bytes of both / `spark.graft.substrateTargetPartitionBytes`),
+    * no cores floor (the Substrate header says why). The persisted
+    * layout stays statically visible (Sessions freezes cached-plan
+    * partitioning), so a FORWARD hop (`Rel`: triples joined on `object`
+    * against a broadcast sub-result) keeps the subject partitioning,
+    * its `distinct` on the subject id needs no exchange, and its
+    * semi-join with an entity leaf is co-partitioned. An INVERSE hop
+    * (`InvRel`) projects `object`, which is not a partitioning key, so
+    * its `distinct` still shuffles; a second triple permutation keyed
+    * on `object` would remove that. At 100 TB the same layout is a
+    * bucketed table on disk (by id / subject, one bucket count).
+    *
+    * One-partition caveat: below one target of leaf bytes (64 MiB by
+    * default, so every bench corpus) the layout is a single partition.
+    * Spark keeps a join's single-partition sides unshuffled only while
+    * each side's size estimate is at most `spark.sql.maxSinglePartitionBytes`
+    * (128 MiB), and without CBO a hop's inner join is estimated as the
+    * product of its sides, so the static plan still shuffles both sides
+    * of a forward hop's semi-join there (lux_q1_hop_range at sf0.1); at
+    * two or more partitions it does not. */
   private val substrateCache =
     scala.collection.concurrent.TrieMap[(SparkSession, String), (DataFrame, DataFrame)]()
   private val evictionHooked =
@@ -94,14 +116,20 @@ object LuxQueries extends QueryGroup {
       true
     })
     val (e, t) = substrateCache.getOrElseUpdate((spark, dir), {
-      (entities(spark, dir).persistSubstrate(), triples(spark, dir).persistSubstrate())
+      val (e0, t0) = (entities(spark, dir), triples(spark, dir))
+      val n = Substrate.indexPartitions(e0, t0)
+      (e0.repartition(n, col("id")), t0.repartition(n, col("subject")))
     })
-    // an external spark.catalog.clearCache() (Bench's per-key cache
-    // lifecycle) unpersists the blocks but leaves this memo — re-arm
-    // so later lux queries cache again instead of silently recomputing
-    // the substrate forever
-    if (e.storageLevel == org.apache.spark.storage.StorageLevel.NONE) e.persistSubstrate()
-    if (t.storageLevel == org.apache.spark.storage.StorageLevel.NONE) t.persistSubstrate()
+    // persist on first use, and re-arm after an external
+    // spark.catalog.clearCache() (Bench's per-key cache lifecycle), which
+    // unpersists the blocks but leaves this memo — without it later lux
+    // queries would silently recompute the substrate forever. The memo
+    // holds the keyed frames, so the re-persisted blocks keep the layout.
+    // Built eagerly: under AQE a cached plan's partitioning is visible to
+    // the planner only once the cache is built, so a query compiled over
+    // a lazy substrate would plan the exchanges the keyed layout removes.
+    for (df <- Seq(e, t) if df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      df.persistSubstrate().count()
     (e, t)
   }
 

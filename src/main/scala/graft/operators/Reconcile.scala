@@ -48,7 +48,17 @@ object Reconcile {
     * re-distincted the full edge set every round (O(rounds × total)),
     * which is the difference between a BFS and re-crawling the whole
     * graph per round at 100 TB. One scalar (new-node count) reaches
-    * the driver per round; lineage is cut with localCheckpoint. */
+    * the driver per round; lineage is cut with localCheckpoint.
+    *
+    * Contract, both parts required for the closure to equal `fixpoint`'s:
+    *   - NODE-ANCHORED and monotone: an expander returns only edges whose
+    *     `src` is in its input node set;
+    *   - EMPTY IN, EMPTY OUT: an expander maps an empty node set to an
+    *     empty edge set. Layers run two per driver round-trip, so the
+    *     round that finds the last new nodes in its first layer still
+    *     expands the (empty) frontier in its second. An expander that
+    *     adds constant or seed edges regardless of its input would
+    *     enlarge the closure there instead of stopping. */
   def frontierFixpoint(seed: DataFrame,
       expanders: Seq[DataFrame => DataFrame],
       maxIter: Int = 50): DataFrame = {
@@ -80,10 +90,9 @@ object Reconcile {
         // second expansion chains lazily on the first layer's
         // checkpoint, so ONE count materializes both layers — half the
         // per-layer driver scalar barriers of the one-layer loop. The
-        // closure is unchanged: the frontier sequence f1, f2 is exactly
-        // the one-layer loop's, and when f1 is empty the node-anchored
-        // contract makes e2/f2 empty (expanding an empty node set
-        // produces no edges), so stopping on n2 == 0 alone stops at the
+        // frontier sequence f1, f2 is exactly the one-layer loop's; an
+        // empty f1 gives an empty e2/f2 by the empty-in/empty-out
+        // contract (scaladoc), so stopping on n2 == 0 alone stops at the
         // same layer set. An odd maxIter falls through to the single-
         // layer tail below, so the layer COUNT bound is also unchanged.
         val seen1 = seen.union(f1) // disjoint by anti-join

@@ -18,9 +18,16 @@ import org.apache.spark.sql.functions._
   * intersect/union of id sets; NOT inside AND = andNot (except);
   * Rel = semi-join subject<-object; InvRel = reversed.
   *
-  * Scale: every hop is a semi-join on the hash-partitioned triple table;
-  * sub-results are id sets (narrow). AQE converts small sub-results to
-  * broadcast semi-joins at runtime.
+  * Scale: sub-results are id sets (narrow). Every hop joins the triple
+  * table against its sub-result; small sub-results broadcast (statically
+  * or by AQE at runtime). Over `LuxQueries.substrate` — entities
+  * hash-partitioned on `id`, triples on `subject`, one shared partition
+  * count — a FORWARD hop (Rel) whose sub-result broadcasts streams
+  * triples in their subject layout, so its `distinct` needs no exchange
+  * and its semi-join with an entity leaf is co-partitioned. An INVERSE
+  * hop (InvRel) returns `object`, which the layout does not key, so its
+  * `distinct` still shuffles. The compiler itself takes any two frames;
+  * the layout, and its one-partition caveat, are the substrate's.
   */
 /** Q4: the searchConfig-style field catalog — config as data (§1.3).
   * Declares queryable leaf fields and relationship predicates; the

@@ -104,6 +104,32 @@ class ReconcileSpec extends AnyFunSuite {
     }
   }
 
+  test("frontierFixpoint: a closure ending on an odd layer expands an " +
+      "empty frontier and still equals fixpoint") {
+    import spark.implicits._
+    // layer 1 finds {2, 4}, layer 2 finds {3, 5}, layer 3 finds nothing.
+    // Layers run in pairs, so the round holding layer 3 also runs layer
+    // 4 over layer 3's empty frontier: the empty-in/empty-out contract
+    // is what keeps that layer from adding edges.
+    val rel = Seq((0L, 1L), (1L, 2L), (1L, 4L), (2L, 3L), (4L, 5L))
+      .toDF("src", "dst")
+    val seed = Seq((0L, 1L)).toDF("src", "dst")
+    val frontiers = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val crawl: DataFrame => DataFrame = ns => {
+      frontiers += ns
+      rel.join(ns.withColumnRenamed("v", "src"), "src")
+    }
+    val front = Reconcile.frontierFixpoint(seed, Seq(crawl))
+    val edgeCrawl: DataFrame => DataFrame = e =>
+      rel.join(e.select($"src").union(e.select($"dst")).distinct(), "src")
+    val whole = Reconcile.fixpoint(seed, Seq(edgeCrawl), maxIter = 50)
+    assert(frontiers.size === 4, "expected two paired rounds")
+    assert(frontiers.last.count() === 0L, "the last layer must expand an empty frontier")
+    assert(front.as[(Long, Long)].collect().toSet ===
+      whole.as[(Long, Long)].collect().toSet)
+    assert(front.count() === 5L)
+  }
+
   test("frontierFixpoint with a no-op expander terminates immediately") {
     import spark.implicits._
     val seed = Seq((1L, 2L)).toDF("src", "dst")
