@@ -73,19 +73,11 @@ object BuildChainQueries extends QueryGroup {
     * outgrew the budget, the same call sketches the probe and degrades
     * to shuffle-hash (or salts a hot reference key) without a code
     * change — GatherPlanSpec pins all three shapes on uniform and
-    * skewed inputs.
-    *
-    * Config flag `spark.graft.joinPlanner.enabled` (default true,
-    * runtime-settable) reverts to the plain Catalyst-chosen join — the
-    * rollback lever a production adoption ships with. Both inputs
-    * carry the join key as `k`. */
+    * skewed inputs. Both inputs carry the join key as `k`. */
   private[graft] def gatherRefs(refs: DataFrame, members: DataFrame,
       cfg: operators.JoinPlanner.Config = operators.JoinPlanner.Config())
-      : DataFrame = {
-    val plannerOn = operators.JoinPlanner.enabled(refs.sparkSession)
-    if (plannerOn) operators.JoinPlanner.planJoinStaged(refs, members, cfg)._1
-    else refs.join(members, "k")
-  }
+      : DataFrame =
+    operators.JoinPlanner.planJoinStaged(refs, members, cfg)._1
 
 
   def laBuildPipeline(spark: SparkSession, dir: String): DataFrame = {
@@ -320,44 +312,18 @@ object BuildChainQueries extends QueryGroup {
   }
 
   /** Day-0 state — yesterday's name index, idmap labels, and merged
-    * fold — memoized per (session, dir) and persisted, exactly the
-    * LuxQueries.substrate pattern: in production these ARE persisted
-    * tables from yesterday's run, so the incremental query (and its
-    * bench number) must not pay their rebuild on every invocation.
-    * Re-armed after an external clearCache (Bench's per-key cache
-    * lifecycle). */
-  private val day0Cache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)]()
-
-  private val day0EvictionHooked =
-    scala.collection.concurrent.TrieMap[SparkSession, Boolean]()
-
-  private def day0State(spark: SparkSession, dir: String)
+    * fold — a [[Fixtures.persisted]] substrate per (session, dir), like
+    * LuxQueries.substrate: in production these ARE persisted tables from
+    * yesterday's run, so the incremental query (and its bench number)
+    * must not pay their rebuild on every invocation. */
+  private[graft] def day0State(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    // drop memo entries when the context dies (the LuxQueries pattern —
-    // a long-lived multi-session embedding must not pin dead sessions)
-    day0EvictionHooked.getOrElseUpdate(spark, {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          day0Cache.keys.filter(_._1 eq spark).foreach(day0Cache.remove)
-          day0EvictionHooked.remove(spark): Unit
-        }
-      })
-      true
-    })
-    // synchronized: TrieMap.getOrElseUpdate evaluates the builder
-    // non-atomically — two concurrent first calls would both build and
-    // persist, and the loser's persisted day-0 frames would leak in the
-    // block-manager cache for the application lifetime (same discipline
-    // as the SourceQueries fixture memos)
-    val (idx, lab, out) = day0Cache.synchronized {
-      day0Cache.getOrElseUpdate((spark, dir), {
+    val Seq(idx, lab, out) = Fixtures.persisted(spark, "day0", dir) {
       val base = Tables.load(spark, dir, "part")
         .select($"p_partkey".cast("long").as("pk"), incKey.as("nm"))
         .filter($"pk" % 10 =!= 0)
-      val baseIdx = base.groupBy($"nm").agg(min($"pk").as("m")).persistSubstrate()
+      val baseIdx = base.groupBy($"nm").agg(min($"pk").as("m"))
       // with a SINGLE blocking key every component is a star around the
       // per-key min, so the cluster label IS the index value — running
       // general CC here would recompute the groupBy-min with an
@@ -365,13 +331,7 @@ object BuildChainQueries extends QueryGroup {
       // needed, is exercised by g7/j6/la_build_pipeline)
       val baseLab = base.join(baseIdx, "nm")
         .select($"pk", $"nm", $"m".as("yuid"))
-        .persistSubstrate()
-      (baseIdx, baseLab, incFold(baseLab).persistSubstrate())
-      })
-    }
-    Seq(idx, lab, out).foreach { df =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        df.persistSubstrate()
+      Seq(baseIdx, baseLab, incFold(baseLab))
     }
     (idx, lab, out)
   }
@@ -470,35 +430,24 @@ object BuildChainQueries extends QueryGroup {
   // metadata put, never a data shuffle.
   // ──────────────────────────────────────────────────────────────────
 
-  /** Published-table dirs, one per (application, sf-dir): day-0 output
-    * committed as v1 exactly once; each la_daily_run invocation then
-    * advances the version by one. */
-  private val dailyTables =
-    scala.collection.concurrent.TrieMap[(String, String), String]()
-
   private def listParquet(p: String): Seq[String] =
     Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
       .map(_.getAbsolutePath).toSeq.sorted
 
+  /** Published-table dir, one per (session, sf-dir): day-0 output
+    * committed as v1 exactly once; each la_daily_run invocation then
+    * advances the version by one. */
   private def dailyTable(spark: SparkSession, dir: String,
-      day0Out: DataFrame): String = synchronized {
-    dailyTables.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      val table = java.nio.file.Files.createTempDirectory("graft_daily_")
-        .toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(table))
-      }))
+      day0Out: DataFrame): String =
+    Fixtures.once(spark, "daily_table", dir) {
+      val table = Fixtures.tempDir("graft_daily_").getPath
       val p = s"$table/data/day0"
       day0Out.write.mode("overwrite").parquet(p)
       val (m1, _) = sources.TableCommit.commit(table)(_ => listParquet(p))
       require(m1.version == 1L, s"day-0 publish must be v1, got ${m1.version}")
       table
-    })
-  }
+    }
 
   /** ONE-VERSION READ WINDOW (round-13 advice, documented contract):
     * the returned DataFrame is a LAZY read over the files this run just

@@ -237,8 +237,7 @@ object ExportQueries extends QueryGroup {
     import spark.implicits._
     val docs = Tables.load(spark, dir, "documents")
       .select($"doc_id", $"lang", $"source", $"text", $"n_chars")
-    val out = java.nio.file.Files.createTempDirectory("graft_k1_")
-      .resolve("docs_jsonl").toString
+    val out = new java.io.File(Fixtures.tempDir("graft_k1_"), "docs_jsonl").getPath
     sources.Jsonl.save(docs, out, shards = 3)
     val existing = docs.filter($"doc_id" < 100).select($"doc_id")
     sources.Jsonl.load(spark, out, "doc_id", Some(existing))

@@ -319,23 +319,16 @@ object IncrementalQueries extends QueryGroup {
     * pinning that a conflict actually happened and was retried, and
     * data-file counts pinning that losing a race never duplicates or
     * drops a data file. */
-  /** The committed-table fixture is built ONCE per (application,
-    * sf dir) — the s15/s22 write-once discipline: re-invocations
-    * (Bench's best-of loop, the stress sweep's repeat passes) must
-    * not each write a fresh full orders copy into tmpdir and stack
-    * another shutdown hook; they re-read the already-raced table,
+  /** The committed-table fixture is built ONCE per (session, sf dir)
+    * ([[Fixtures.once]]): re-invocations (Bench's best-of loop, the
+    * stress sweep's repeat passes) must not each write a fresh full
+    * orders copy into tmpdir; they re-read the already-raced table,
     * whose manifests are immutable by construction. */
-  private val commitDirs =
-    scala.collection.mutable.Map.empty[(String, String), (String, Int)]
-
   def optimisticCommit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.sources.TableCommit
-    val (table, bAttempts) = synchronized {
-      commitDirs.getOrElseUpdate(
-        (spark.sparkContext.applicationId, dir),
-        buildCommitFixture(spark, dir))
-    }
+    val (table, bAttempts) =
+      Fixtures.once(spark, "commit", dir)(buildCommitFixture(spark, dir))
     def snap(v: Long) = {
       val man = TableCommit.Manifest(v,
         java.nio.file.Files.readAllLines(
@@ -357,14 +350,7 @@ object IncrementalQueries extends QueryGroup {
       dir: String): (String, Int) = {
     import spark.implicits._
     import graft.sources.TableCommit
-    val table = java.nio.file.Files.createTempDirectory("graft_commit_")
-      .toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(table))
-    }))
+    val table = Fixtures.tempDir("graft_commit_").getPath
     val o = Tables.load(spark, dir, "orders")
       .select($"o_orderkey".cast("long").as("k"),
         round($"o_totalprice" * 100).cast("long").as("cents"))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Substrate
-import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.plans.LuxCompiler
@@ -68,11 +67,13 @@ object LuxQueries extends QueryGroup {
         lit("locatedIn").as("predicate"), concat(lit("n"), $"s_nationkey").as("object")))
   }
 
-  /** The substrate is materialized ONCE per (session, dir) and shared by
-    * every compiled query — the analog of the reference's persistent
-    * record/triple indexes (built offline, queried many times). Rebuilding
-    * it per query re-scanned 5 parquet tables and re-ran two full
-    * distinct() shuffles each time, which dominated lux_q1's wall-clock.
+  /** The substrate is materialized ONCE per (session, dir) through
+    * [[Fixtures.persisted]] (eager build, re-armed after an external
+    * `clearCache()`) and shared by every compiled query — the analog of
+    * the reference's persistent record/triple indexes (built offline,
+    * queried many times). Rebuilding it per query re-scanned 5 parquet
+    * tables and re-ran two full distinct() shuffles each time, which
+    * dominated lux_q1's wall-clock.
     *
     * Layout: entities are hash-partitioned on `id` and triples on
     * `subject`, both into ONE shared count, `Substrate.indexPartitions`
@@ -96,40 +97,12 @@ object LuxQueries extends QueryGroup {
     * product of its sides, so the static plan still shuffles both sides
     * of a forward hop's semi-join there (lux_q1_hop_range at sf0.1); at
     * two or more partitions it does not. */
-  private val substrateCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (DataFrame, DataFrame)]()
-  private val evictionHooked =
-    scala.collection.concurrent.TrieMap[SparkSession, Boolean]()
-
   private[graft] def substrate(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // evict on context shutdown so a long-lived multi-session embedding
-    // doesn't pin dead SparkSession references (the cached blocks
-    // themselves die with the context)
-    evictionHooked.getOrElseUpdate(spark, {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          substrateCache.keys.filter(_._1 eq spark).foreach(substrateCache.remove)
-          evictionHooked.remove(spark)
-        }
-      })
-      true
-    })
-    val (e, t) = substrateCache.getOrElseUpdate((spark, dir), {
+    val Seq(e, t) = Fixtures.persisted(spark, "lux_substrate", dir) {
       val (e0, t0) = (entities(spark, dir), triples(spark, dir))
       val n = Substrate.indexPartitions(e0, t0)
-      (e0.repartition(n, col("id")), t0.repartition(n, col("subject")))
-    })
-    // persist on first use, and re-arm after an external
-    // spark.catalog.clearCache() (Bench's per-key cache lifecycle), which
-    // unpersists the blocks but leaves this memo — without it later lux
-    // queries would silently recompute the substrate forever. The memo
-    // holds the keyed frames, so the re-persisted blocks keep the layout.
-    // Built eagerly: under AQE a cached plan's partitioning is visible to
-    // the planner only once the cache is built, so a query compiled over
-    // a lazy substrate would plan the exchanges the keyed layout removes.
-    for (df <- Seq(e, t) if df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persistSubstrate().count()
+      Seq(e0.repartition(n, col("id")), t0.repartition(n, col("subject")))
+    }
     (e, t)
   }
 
@@ -137,13 +110,8 @@ object LuxQueries extends QueryGroup {
     * long-lived service embedding this module calls when an index epoch
     * rolls over (`dir = None` drops every substrate of the session).
     * Queries rebuild the substrate lazily on next use. */
-  def evictSubstrate(spark: SparkSession, dir: Option[String] = None): Unit = {
-    val keys = substrateCache.keys
-      .filter(k => (k._1 eq spark) && dir.forall(_ == k._2)).toSeq
-    for (k <- keys; (e, t) <- substrateCache.remove(k)) {
-      e.unpersist(); t.unpersist()
-    }
-  }
+  def evictSubstrate(spark: SparkSession, dir: Option[String] = None): Unit =
+    Fixtures.evict(spark, "lux_substrate", dir)
 
   private def run(query: String)(spark: SparkSession, dir: String): DataFrame = {
     val (e, t) = substrate(spark, dir)

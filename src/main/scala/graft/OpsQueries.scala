@@ -51,17 +51,12 @@ object OpsQueries extends QueryGroup {
     * the index (build) is counted first and the broadcast exit taken
     * without a probe pass — at small scales this reproduces the
     * pre-adoption explicit broadcast; past the budget the full
-    * broadcast/shuffle/salt decision runs. Flag-off reverts to the
-    * pre-adoption plan (explicit broadcast), NOT a bare join — the
-    * rollback must restore the exact round-13 physical shape.
-    * NameReconcilePlanSpec pins the branches. */
+    * broadcast/shuffle/salt decision runs. NameReconcilePlanSpec pins
+    * the branches. */
   private[graft] def indexJoin(probe: DataFrame, index: DataFrame,
       cfg: operators.JoinPlanner.Config = operators.JoinPlanner.Config())
-      : DataFrame = {
-    val plannerOn = operators.JoinPlanner.enabled(probe.sparkSession)
-    if (plannerOn) operators.JoinPlanner.planJoinStaged(probe, index, cfg)._1
-    else probe.join(broadcast(index), "k")
-  }
+      : DataFrame =
+    operators.JoinPlanner.planJoinStaged(probe, index, cfg)._1
 
   /** K4+J1+W7: index-backed exact-name reconciliation. The index maps
     * (lowercased name, brand-as-type) -> canonical id (deterministic
@@ -332,16 +327,12 @@ object OpsQueries extends QueryGroup {
     * build side (the same persisted recs) is sketched first and the
     * broadcast exit taken at fixture scales without a probe pass; past
     * the budget the probe is sketched and the full
-    * broadcast/shuffle/salt decision runs. Same rollback flag as the
-    * gather (`spark.graft.joinPlanner.enabled`); both inputs carry the
+    * broadcast/shuffle/salt decision runs. Both inputs carry the
     * blocking key as `k`; ErBlockingPlanSpec pins the branches. */
   private[graft] def blockingJoin(lhs: DataFrame, rhs: DataFrame,
       cfg: operators.JoinPlanner.Config = operators.JoinPlanner.Config())
-      : DataFrame = {
-    val plannerOn = operators.JoinPlanner.enabled(lhs.sparkSession)
-    if (plannerOn) operators.JoinPlanner.planJoinStaged(lhs, rhs, cfg)._1
-    else lhs.join(rhs, "k")
-  }
+      : DataFrame =
+    operators.JoinPlanner.planJoinStaged(lhs, rhs, cfg)._1
 
   def erPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -252,41 +252,32 @@ object ScaleQueries extends QueryGroup {
     * auto-broadcast from short-circuiting the demonstration (with a
     * broadcast join bucketing would be moot). PlanSpec pins the
     * exchange-free join. Oracle = the plain join. */
-  /** One bucketed-layout fixture per (application, sf dir), written at
-    * most once and reused by every subsequent invocation — the layout IS
-    * the point (pay the shuffle at write time, join exchange-free
-    * forever after), so rebuilding it per call was both wrong-shaped and
-    * a shared-warehouse race: two concurrent sessions DROPping and
-    * re-writing the same table names could collide. Table names carry a
-    * per-JVM random suffix (cross-session isolation) and the write is
-    * synchronized (in-session parallel invocations see one build). */
-  private val bucketSuffix =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-  private val bucketFixtures =
-    scala.collection.mutable.Map.empty[(String, String), (String, String)]
-
+  /** One bucketed-layout fixture per (session, sf dir), written at
+    * most once ([[Fixtures.once]]) and reused by every subsequent
+    * invocation — the layout IS the point (pay the shuffle at write time,
+    * join exchange-free forever after), so rebuilding it per call was
+    * both wrong-shaped and a shared-warehouse race: two concurrent
+    * sessions DROPping and re-writing the same table names could
+    * collide. Table names carry the random suffix of the fixture's
+    * [[Fixtures.tempDir]], unique across sessions and JVMs. */
   private def bucketTables(spark: SparkSession, dir: String): (String, String) =
-    synchronized {
+    Fixtures.once(spark, "bucketed", dir) {
       import spark.implicits._
-      // keyed per application so a fresh session (new catalog) rebuilds
-      bucketFixtures.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-        val tag = s"${bucketSuffix}_${bucketFixtures.size}"
-        val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_bucketed_$tag").getAbsolutePath
-        val sides = Seq(
-          (s"graft_b_orders_$tag",
-            Tables.load(spark, dir, "orders").select($"o_orderkey", $"o_custkey"),
-            "o_orderkey"),
-          (s"graft_b_lineitem_$tag",
-            Tables.load(spark, dir, "lineitem").select($"l_orderkey",
-              round($"l_extendedprice" * 100).cast("long").as("price_cents")),
-            "l_orderkey"))
-        sides.foreach { case (name, df, key) =>
-          df.write.format("parquet").option("path", s"$base/$name")
-            .mode("overwrite").bucketBy(8, key).sortBy(key).saveAsTable(name)
-        }
-        (sides(0)._1, sides(1)._1)
-      })
+      val base = Fixtures.tempDir("graft_bucketed_")
+      val tag = base.getName.stripPrefix("graft_bucketed_")
+      val sides = Seq(
+        (s"graft_b_orders_$tag",
+          Tables.load(spark, dir, "orders").select($"o_orderkey", $"o_custkey"),
+          "o_orderkey"),
+        (s"graft_b_lineitem_$tag",
+          Tables.load(spark, dir, "lineitem").select($"l_orderkey",
+            round($"l_extendedprice" * 100).cast("long").as("price_cents")),
+          "l_orderkey"))
+      sides.foreach { case (name, df, key) =>
+        df.write.format("parquet").option("path", s"$base/$name")
+          .mode("overwrite").bucketBy(8, key).sortBy(key).saveAsTable(name)
+      }
+      (sides(0)._1, sides(1)._1)
     }
 
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {

@@ -52,9 +52,9 @@ object Sessions {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_CONF ("k=v;k=v") sets session conf for regimes the
-    // mains don't parametrize: flipping spark.graft.joinPlanner.enabled
-    // in an A/B, or the memory-pressure StressSweep variant whose runs
-    // are committed as STRESS_spill_r1*.json (static confs like
+    // mains don't parametrize: a substrate target partition size in an
+    // A/B, or the memory-pressure StressSweep variant whose runs are
+    // committed as STRESS_spill_r1*.json (static confs like
     // spark.memory.fraction, hence before getOrCreate). The driver
     // never sets it, so recorded rounds always run the defaults.
     val spark = envConf.foldLeft(builder) {

@@ -380,10 +380,10 @@ object SourceQueries extends QueryGroup {
       |FROM customer WHERE c_custkey % 997 <= 500""".stripMargin
 
   /** S4/S5: the archive-dir loader over a generated type/uu/uuid.json
-    * tree (written once per sf-dir under the JVM temp dir): path-derived
-    * identifiers, deleted-record (short body) skip, cache-through
-    * anti-join against already-loaded ids (keys % 10 == 0), schema'd
-    * JSON parse. The fixture itself is written EXECUTOR-SIDE in
+    * tree (a [[Fixtures.onDisk]] fixture, written once per sf-dir):
+    * path-derived identifiers, deleted-record (short body) skip,
+    * cache-through anti-join against already-loaded ids (keys % 10 ==
+    * 0), schema'd JSON parse. The fixture itself is written EXECUTOR-SIDE in
     * parallel (spark.range + foreachPartition): at the 10× stress scale
     * that is 150k files, and the old driver-side writeString loop was
     * the measured 44 s bulk of this query's sf1 cost — fixture
@@ -393,10 +393,7 @@ object SourceQueries extends QueryGroup {
   def archiveLoad(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val n = Tables.load(spark, dir, "customer").count()
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_archive_${math.abs(dir.hashCode)}_$n")
-    val marker = new java.io.File(base, "_DONE")
-    if (!marker.exists()) {
+    val base = Fixtures.onDisk("archive", dir, s"$n") { base =>
       val basePath = base.getAbsolutePath
       // pre-create the 30 shared type/uu dirs once (mkdirs is
       // idempotent but cheap to hoist off the per-file path)
@@ -413,7 +410,6 @@ object SourceQueries extends QueryGroup {
             basePath, s"t${i % 3}", s"u${i % 10}", s"$i.json"), body)
         }
       }
-      java.nio.file.Files.writeString(marker.toPath, "ok")
     }
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", LongType)))
@@ -422,7 +418,6 @@ object SourceQueries extends QueryGroup {
       .select(concat(lit("t"), $"c_custkey" % 3, lit("/u"), $"c_custkey" % 10,
         lit("/"), $"c_custkey", lit(".json")).as("ident"))
     sources.Archive.loadDir(spark, base.getAbsolutePath, schema, Some(cached))
-      .filter(!$"ident".endsWith("_DONE")) // the generation marker
       .select($"ident", $"data.id".as("id"), $"data.v".as("v"))
   }
   private val archiveLoadOracle: String =
@@ -445,11 +440,7 @@ object SourceQueries extends QueryGroup {
     import spark.implicits._
     val n = Tables.load(spark, dir, "customer").count()
     val shards = 32
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_zips_${math.abs(dir.hashCode)}_${n}_$shards")
-    val marker = new java.io.File(base, "_DONE")
-    if (!marker.exists()) {
-      base.mkdirs()
+    val base = Fixtures.onDisk("zips", dir, s"${n}_$shards") { base =>
       val basePath = base.getAbsolutePath
       spark.range(0L, shards.toLong).foreach { zBoxed =>
         val z = zBoxed.longValue()
@@ -466,7 +457,6 @@ object SourceQueries extends QueryGroup {
         }
         zout.close()
       }
-      java.nio.file.Files.writeString(marker.toPath, "ok")
     }
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", LongType)))
@@ -589,12 +579,7 @@ object SourceQueries extends QueryGroup {
   def dnbLoad(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val n = Tables.load(spark, dir, "customer").count()
-    val safeDir = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_dnb_${safeDir}_$n")
-    val marker = new java.io.File(base, "_DONE")
-    if (!marker.exists()) {
-      base.mkdirs()
+    val base = Fixtures.onDisk("dnb", dir, s"$n") { base =>
       def rec(ck: Long, name: String, about: Boolean) =
         s"""{"@id":"https://d-nb.info/gnd/$ck${if (about) "/about" else ""}","preferredName":"$name"}"""
       val dumpLines =
@@ -608,16 +593,10 @@ object SourceQueries extends QueryGroup {
         case Seq(a, b) => s"[$a,$b]"
         case Seq(a)    => a
       }.mkString("[", ",", "]")
-      def publish(nm: String, content: String): Unit = {
-        val tmp = java.io.File.createTempFile(nm, ".tmp", base)
-        java.nio.file.Files.writeString(tmp.toPath, content)
-        java.nio.file.Files.move(tmp.toPath, new java.io.File(base, nm).toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      publish("dump.json", dumpLines.mkString("\n"))
-      publish("sachbegriff.json", sachJson)
-      publish("_DONE", "ok")
+      java.nio.file.Files.writeString(new java.io.File(base, "dump.json").toPath,
+        dumpLines.mkString("\n"))
+      java.nio.file.Files.writeString(
+        new java.io.File(base, "sachbegriff.json").toPath, sachJson)
     }
     val schema = StructType(Seq(
       StructField("@id", org.apache.spark.sql.types.StringType),
@@ -702,77 +681,45 @@ object SourceQueries extends QueryGroup {
       |  'n' || (ck % 100) AS raw_ident
       |FROM b""".stripMargin
 
-  /** Fixture dirs live under java.io.tmpdir for the JVM's lifetime and
-    * are swept on exit — without the hook every run (and every plan-only
-    * build, e.g. the registry audit) would orphan fresh graft_evo_* /
-    * graft_snap_* trees. */
-  private def sweepOnExit(dir: String): String = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => rm(new java.io.File(dir))))
-    dir
-  }
-
-  /** One evolved-layout fixture per (application, sf dir): generation 1
-    * written with the v1 schema, generation 2 with an added column —
-    * the s15 write-once discipline (suffixed dir, synchronized). */
-  private val evoSuffix =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-  private val evoDirs =
-    scala.collection.mutable.Map.empty[(String, String), String]
-
+  /** One evolved-layout fixture per (session, sf dir) in a
+    * [[Fixtures.tempDir]]: generation 1 written with the v1 schema,
+    * generation 2 with an added column. */
   private[graft] def evolutionDir(spark: SparkSession, dir: String): String =
-    synchronized {
+    Fixtures.once(spark, "evolution", dir) {
       import spark.implicits._
-      evoDirs.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-        val base = sweepOnExit(
-          new java.io.File(System.getProperty("java.io.tmpdir"),
-            s"graft_evo_${evoSuffix}_${evoDirs.size}").getAbsolutePath)
-        val o = Tables.load(spark, dir, "orders")
-        o.filter($"o_orderkey" % 2 === 0)
-          .select($"o_orderkey", $"o_custkey")
-          .write.mode("overwrite").parquet(s"$base/gen=1")
-        o.filter($"o_orderkey" % 2 === 1)
-          .select($"o_orderkey", $"o_custkey",
-            round($"o_totalprice" * 100).cast("long").as("price_cents"))
-          .write.mode("overwrite").parquet(s"$base/gen=2")
-        base
-      })
+      val base = Fixtures.tempDir("graft_evo_").getPath
+      val o = Tables.load(spark, dir, "orders")
+      o.filter($"o_orderkey" % 2 === 0)
+        .select($"o_orderkey", $"o_custkey")
+        .write.mode("overwrite").parquet(s"$base/gen=1")
+      o.filter($"o_orderkey" % 2 === 1)
+        .select($"o_orderkey", $"o_custkey",
+          round($"o_totalprice" * 100).cast("long").as("price_cents"))
+        .write.mode("overwrite").parquet(s"$base/gen=2")
+      base
     }
 
-  /** One two-commit snapshot fixture per (application, sf dir): commit 1
-    * writes a third of orders, its file list is captured as the v1
-    * manifest, then commit 2 APPENDS the rest into the same directory —
-    * same write-once discipline as the evolution fixture. */
-  private val snapSuffix =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-  private val snapDirs =
-    scala.collection.mutable.Map.empty[(String, String), (String, Seq[String])]
-
+  /** One two-commit snapshot fixture per (session, sf dir) in a
+    * [[Fixtures.tempDir]]: commit 1 writes a third of orders, its file
+    * list is captured as the v1 manifest, then commit 2 APPENDS the rest
+    * into the same directory. */
   private[graft] def snapshotFixture(
       spark: SparkSession, dir: String): (String, Seq[String]) =
-    synchronized {
+    Fixtures.once(spark, "snapshot", dir) {
       import spark.implicits._
-      snapDirs.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-        val base = sweepOnExit(
-          new java.io.File(System.getProperty("java.io.tmpdir"),
-            s"graft_snap_${snapSuffix}_${snapDirs.size}").getAbsolutePath)
-        val o = Tables.load(spark, dir, "orders")
-          .select($"o_orderkey",
-            round($"o_totalprice" * 100).cast("long").as("cents"))
-        o.filter($"o_orderkey" % 3 === 0).write.mode("overwrite").parquet(base)
-        // the v1 manifest: the exact files of commit 1 — a snapshot is a
-        // FILE LIST, captured at commit time (a driver-side metadata op,
-        // like any table-format manifest)
-        val v1 = new java.io.File(base).listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).toSeq.sorted
-        o.filter($"o_orderkey" % 3 =!= 0).write.mode("append").parquet(base)
-        (base, v1)
-      })
+      val base = Fixtures.tempDir("graft_snap_").getPath
+      val o = Tables.load(spark, dir, "orders")
+        .select($"o_orderkey",
+          round($"o_totalprice" * 100).cast("long").as("cents"))
+      o.filter($"o_orderkey" % 3 === 0).write.mode("overwrite").parquet(base)
+      // the v1 manifest: the exact files of commit 1 — a snapshot is a
+      // FILE LIST, captured at commit time (a driver-side metadata op,
+      // like any table-format manifest)
+      val v1 = new java.io.File(base).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(_.getAbsolutePath).toSeq.sorted
+      o.filter($"o_orderkey" % 3 =!= 0).write.mode("append").parquet(base)
+      (base, v1)
     }
 
   /** S22: snapshot-pinned read via a file manifest — the time-travel /
@@ -874,18 +821,9 @@ object SourceQueries extends QueryGroup {
   def wofLoad(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val n = Tables.load(spark, dir, "customer").count()
-    // key the fixture dir by the full (sanitized) sf path, not its
-    // hashCode — equal-rowcount sf dirs must not collide; and publish
-    // the db with write-temp + atomic rename so a concurrent driver
-    // either sees the marker with a complete db or regenerates.
-    // (wof2: fixture format version — bumped for the overflow pads so
-    // stale memo dirs from earlier rounds regenerate)
-    val safeDir = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_wof2_${safeDir}_$n")
-    val marker = new java.io.File(base, "_DONE")
-    if (!marker.exists()) {
-      base.mkdirs()
+    // (v2: fixture format version — bumped for the overflow pads so
+    // stale fixture dirs from earlier rounds regenerate)
+    val base = Fixtures.onDisk("wof", dir, s"v2_$n") { base =>
       val rows = (0L until n).map { ck =>
         val id = if (ck % 2 == 0) 10000000L + ck else 100000000L + ck
         val pt = Seq("locality", "region", "country")((ck % 3).toInt)
@@ -893,18 +831,8 @@ object SourceQueries extends QueryGroup {
         Seq(id.toString,
           s"""{"wof:name": "p${ck % 60}", "wof:placetype": "$pt"$pad}""": Any)
       }
-      val tmpDb = java.io.File.createTempFile("wof", ".db.tmp", base)
-      sources.Sqlite.writeDb(tmpDb, "geojson",
+      sources.Sqlite.writeDb(new java.io.File(base, "wof.db"), "geojson",
         "CREATE TABLE geojson (id TEXT, body TEXT)", rows)
-      java.nio.file.Files.move(tmpDb.toPath,
-        new java.io.File(base, "wof.db").toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val tmpMark = java.io.File.createTempFile("done", ".tmp", base)
-      java.nio.file.Files.writeString(tmpMark.toPath, "ok")
-      java.nio.file.Files.move(tmpMark.toPath, marker.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     val schema = StructType(Seq(
       StructField("wof:name", org.apache.spark.sql.types.StringType),
@@ -942,11 +870,7 @@ object SourceQueries extends QueryGroup {
   def geonamesTsv(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val n = Tables.load(spark, dir, "customer").count()
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_geonames_${math.abs(dir.hashCode)}_$n")
-    val marker = new java.io.File(base, "_DONE")
-    if (!marker.exists()) {
-      base.mkdirs()
+    val base = Fixtures.onDisk("geonames", dir, s"$n") { base =>
       val all = (0L until n).map { i =>
         val (lat, lng) =
           if (i % 9 == 0) ("", "") else (s"${i % 90}.25", s"${i % 180}.5")
@@ -958,7 +882,6 @@ object SourceQueries extends QueryGroup {
         .map(i => s"${i - i % 10}\t$i\tADM").mkString("\n")
       java.nio.file.Files.writeString(
         new java.io.File(base, "hierarchy.txt").toPath, hier)
-      java.nio.file.Files.writeString(marker.toPath, "ok")
     }
     sources.Geonames.load(spark,
         new java.io.File(base, "allCountries.txt").getAbsolutePath,

@@ -32,25 +32,6 @@ import org.apache.spark.sql.functions._
   * same call from data, per join. */
 object JoinPlanner {
 
-  /** Rollback flag for the three production adoption sites (gather,
-    * ER blocking, name-index join). Default ON. */
-  val EnabledKey = "spark.graft.joinPlanner.enabled"
-
-  /** Defensive flag parse (advice r15): the old per-site
-    * `.forall(_.toBoolean)` threw a bare IllegalArgumentException from
-    * String.toBoolean inside query-plan construction on any value other
-    * than true/false (e.g. "1", "on", a typo). Accept case-insensitive
-    * true/false, treat unset as true, and reject anything else with an
-    * error that names the key and the bad value. */
-  def enabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption(EnabledKey) match {
-      case None => true
-      case Some(v) if v.equalsIgnoreCase("true")  => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"$EnabledKey must be true or false, got: '$v'")
-    }
-
   /** Deployment thresholds (the autoBroadcastJoinThreshold /
     * skewJoin.skewedPartitionFactor analogs, in rows and milli-share;
     * fixtures scale them down with their data). */

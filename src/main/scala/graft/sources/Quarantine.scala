@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
 
@@ -15,24 +14,15 @@ import org.apache.spark.util.LongAccumulator
   * accumulator updated in a transformation, task retries can
   * over-count — the number is monitoring, never data. */
 object Quarantine {
-  private val counters =
-    scala.collection.concurrent.TrieMap.empty[(SparkContext, String), LongAccumulator]
-
-  /** The driver-created counter for `name`, memoized per context so
-    * repeated loads share one total. Synchronized: getOrElseUpdate's
-    * builder is not atomic and a losing duplicate accumulator would
-    * silently swallow its tasks' counts. Entries for stopped contexts
-    * are evicted on access — without that, a driver cycling sessions
-    * would pin every dead SparkContext (and its accumulators) for the
-    * JVM lifetime. */
+  /** The driver-created counter for `name`, memoized per session
+    * ([[graft.Fixtures.once]]) so repeated loads share one total — a
+    * losing duplicate accumulator would silently swallow its tasks'
+    * counts. */
   def counter(spark: SparkSession, name: String): LongAccumulator =
-    counters.synchronized {
-      counters.filterInPlace { case ((sc, _), _) => !sc.isStopped }
-      counters.getOrElseUpdate((spark.sparkContext, name),
-        spark.sparkContext.longAccumulator(s"graft.quarantine.$name"))
-    }
+    graft.Fixtures.once(spark, "quarantine", name)(
+      spark.sparkContext.longAccumulator(s"graft.quarantine.$name"))
 
-  /** Current count (0 if the counter was never created). */
+  /** Current count (0 before the first load). */
   def value(spark: SparkSession, name: String): Long =
-    counters.get((spark.sparkContext, name)).map(_.value.longValue).getOrElse(0L)
+    counter(spark, name).value.longValue
 }

@@ -39,7 +39,7 @@ class CleanupSpec extends AnyFunSuite {
   test("K5 export writes real CSV the reader round-trips") {
     val spark = TestSpark.spark
     val df = CleanupQueries.indexCsv(spark, TestSpark.sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_k5").toString
+    val dir = Fixtures.tempDir("graft_k5").getPath
     df.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.schema(df.schema).option("header", "true").csv(dir)
     assert(back.count() == df.count())

@@ -16,8 +16,7 @@ class DegenerateDocsSpec extends AnyFunSuite {
 
   private lazy val fixtureDir: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_degen").toFile
-    dir.deleteOnExit()
+    val dir = Fixtures.tempDir("graft_degen")
     for (t <- Tables.names if t != "documents")
       java.nio.file.Files.createSymbolicLink(
         new java.io.File(dir, s"$t.parquet").toPath,

@@ -15,8 +15,7 @@ class DegenerateEmbeddingsSpec extends AnyFunSuite {
 
   private lazy val fixtureDir: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_degen_emb").toFile
-    dir.deleteOnExit()
+    val dir = Fixtures.tempDir("graft_degen_emb")
     for (t <- Tables.names if t != "embeddings")
       java.nio.file.Files.createSymbolicLink(
         new java.io.File(dir, s"$t.parquet").toPath,

@@ -18,8 +18,7 @@ class DegenerateEventsSpec extends AnyFunSuite {
 
   private def writeFixture(tag: String)(
       events: org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_degen_ev_$tag").toFile
-    dir.deleteOnExit()
+    val dir = Fixtures.tempDir(s"graft_degen_ev_$tag")
     for (t <- Tables.names if t != "events")
       java.nio.file.Files.createSymbolicLink(
         new java.io.File(dir, s"$t.parquet").toPath,

@@ -22,8 +22,7 @@ class DegenerateGraphSpec extends AnyFunSuite {
   private lazy val fixtureDir: String = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_degen_graph").toFile
-    dir.deleteOnExit()
+    val dir = Fixtures.tempDir("graft_degen_graph")
     val rewritten = Map(
       "lineitem" -> (($"l_orderkey" % 50) =!= 0),
       "customer" -> ($"c_custkey" >= 10),

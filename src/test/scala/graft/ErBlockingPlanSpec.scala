@@ -10,8 +10,7 @@ import graft.operators.JoinPlanner.Config
   * self-join (`OpsQueries.blockingJoin`). Pins the pick per regime on
   * the ER shape — broadcast while the record table fits the budget,
   * shuffle-hash past it, salt on a hot blocking key (the common-surname
-  * reality) — plus the flag rollback and result equality in every
-  * branch. Decision arithmetic is JoinPlannerSpec's; gather-site
+  * reality) — plus result equality in every branch. Decision arithmetic is JoinPlannerSpec's; gather-site
   * adoption is GatherPlanSpec's; this pins the ER call site. */
 class ErBlockingPlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -74,15 +73,5 @@ class ErBlockingPlanSpec extends AnyFunSuite {
     val joinLine = plan.linesIterator.find(_.contains("ShuffledHashJoin"))
     assert(joinLine.exists(_.contains("salt")), plan)
     assert(agg(j) === agg(l.join(r, "k")))
-  }
-
-  test("er blocking: the config flag reverts to the plain Catalyst join") {
-    spark.conf.set("spark.graft.joinPlanner.enabled", "false")
-    try {
-      val (l, r) = sides(4000, hot = true)
-      val j = OpsQueries.blockingJoin(l, r, cfg)
-      assert(!executed(j).contains("salt"), "flag off must bypass the planner")
-      assert(agg(j) === agg(l.join(r, "k")))
-    } finally spark.conf.unset("spark.graft.joinPlanner.enabled")
   }
 }

@@ -39,7 +39,7 @@ class FetcherSpec extends AnyFunSuite {
   test("zip loader: per-archive unzip with the loadDir skip rules") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zip_spec").toFile
+    val dir = Fixtures.tempDir("graft_zip_spec")
     val zout = new java.util.zip.ZipOutputStream(
       new java.io.FileOutputStream(new java.io.File(dir, "d.zip")))
     def entry(name: String, body: String): Unit = {
@@ -60,8 +60,7 @@ class FetcherSpec extends AnyFunSuite {
   test("zip loader: corrupt archives quarantine, salvaging streamed entries") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zipq_spec").toFile
-    dir.deleteOnExit()
+    val dir = Fixtures.tempDir("graft_zipq_spec")
     def zipBytes(entries: (String, String)*): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       val zout = new java.util.zip.ZipOutputStream(bos)
@@ -97,8 +96,7 @@ class FetcherSpec extends AnyFunSuite {
   test("zip loader: a bomb entry quarantines its archive at the byte cap") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zipb_spec").toFile
-    dir.deleteOnExit()
+    val dir = Fixtures.tempDir("graft_zipb_spec")
     val pad = "x" * 40
     def entry(zout: java.util.zip.ZipOutputStream, n: String, b: Array[Byte]): Unit = {
       zout.putNextEntry(new java.util.zip.ZipEntry(n)); zout.write(b); zout.closeEntry()

@@ -12,7 +12,7 @@ class FileStreamSpec extends AnyFunSuite {
 
   test("parquet file stream matches batch tumbling aggregation") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evstream").toString
+    val dir = Fixtures.tempDir("evstream").getPath
     val batch = Tables.load(spark, TestSpark.sf, "events")
       .select($"ts", $"event_type", $"value")
     batch.write.mode("overwrite").parquet(s"$dir/in")

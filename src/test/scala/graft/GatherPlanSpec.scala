@@ -10,10 +10,10 @@ import graft.operators.JoinPlanner.Config
   * build chain's reference-rewrite gather runs through planJoin. Pins
   * the chosen physical shape per data regime — broadcast on the
   * reach-bounded fixture, shuffle-hash when the members side outgrows
-  * the budget, salt when the probe is hot-keyed — plus the config-flag
-  * rollback and result equality against the plain join in every branch.
-  * (The decision arithmetic itself is JoinPlannerSpec's; this spec pins
-  * the ADOPTION: the gather call site honors the pick and the flag.) */
+  * the budget, salt when the probe is hot-keyed — plus result equality
+  * against the plain join in every branch. (The decision arithmetic
+  * itself is JoinPlannerSpec's; this spec pins the ADOPTION: the gather
+  * call site honors the pick.) */
 class GatherPlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -58,16 +58,5 @@ class GatherPlanSpec extends AnyFunSuite {
     assert(joinLine.exists(_.contains("salt")),
       s"expected salt in the join keys:\n$plan")
     assert(g.agg(count(lit(1)), sum($"sk")).head() === plain(refs(hot = true), members))
-  }
-
-  test("gather: the config flag reverts to the plain Catalyst join") {
-    spark.conf.set("spark.graft.joinPlanner.enabled", "false")
-    try {
-      val members = (0L until 100L).map(k => (k, k * 8L + 2L)).toDF("k", "yuid")
-      val g = BuildChainQueries.gatherRefs(refs(hot = true), members, cfg)
-      assert(!executed(g).contains("salt"),
-        "flag off must bypass the planner entirely")
-      assert(g.agg(count(lit(1)), sum($"sk")).head() === plain(refs(hot = true), members))
-    } finally spark.conf.unset("spark.graft.joinPlanner.enabled")
   }
 }

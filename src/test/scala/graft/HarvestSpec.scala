@@ -57,7 +57,7 @@ class HarvestSpec extends AnyFunSuite {
   test("archive loader: path idents, short-body skip, cache-through, parse") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_arch_spec").toFile
+    val dir = Fixtures.tempDir("graft_arch_spec")
     def write(rel: String, body: String): Unit = {
       val f = new java.io.File(dir, rel)
       f.getParentFile.mkdirs()

@@ -25,7 +25,7 @@ class LuxSubstrateSpec extends AnyFunSuite {
 
   /** The sf0.001 substrate tables rewritten as 1 and as 4 files each. */
   private lazy val rewritten: Map[Int, String] = {
-    val root = java.nio.file.Files.createTempDirectory("graft_lux_substrate_")
+    val root = Fixtures.tempDir("graft_lux_substrate_").toPath
     Seq(1, 4).map { k =>
       val d = root.resolve(s"files$k").toString
       tables.foreach { t =>

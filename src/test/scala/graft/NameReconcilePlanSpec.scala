@@ -11,9 +11,8 @@ import graft.operators.JoinPlanner.Config
   * hand-sharded key class (AAT en names 820k, reconciler.py:66-75).
   * Pins the pick per regime on the reconcile shape: broadcast while the
   * index fits the budget (the pre-adoption plan, reproduced), shuffle-
-  * hash past it, salt on a hot name (the "john smith" class), plus the
-  * flag rollback (which must restore the EXPLICIT broadcast, the exact
-  * round-13 physical shape) and result equality in every branch. */
+  * hash past it, salt on a hot name (the "john smith" class), plus
+  * result equality in every branch. */
 class NameReconcilePlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -69,18 +68,6 @@ class NameReconcilePlanSpec extends AnyFunSuite {
     val joinLine = plan.linesIterator.find(_.contains("ShuffledHashJoin"))
     assert(joinLine.exists(_.contains("salt")), plan)
     assert(agg(j) === agg(cands.join(index, "k")))
-  }
-
-  test("name reconcile: flag off restores the explicit broadcast") {
-    spark.conf.set("spark.graft.joinPlanner.enabled", "false")
-    try {
-      val (cands, index) = fixtures(4000, hot = true, names = 2000)
-      val j = OpsQueries.indexJoin(cands, index, cfg)
-      val plan = executed(j)
-      assert(plan.contains("BroadcastHashJoin"), plan)
-      assert(!plan.contains("salt"), "flag off must bypass the planner")
-      assert(agg(j) === agg(cands.join(index, "k")))
-    } finally spark.conf.unset("spark.graft.joinPlanner.enabled")
   }
 
   test("r1 itself: planner broadcast pick in the audited plan, rows intact") {

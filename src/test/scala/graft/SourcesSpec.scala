@@ -8,7 +8,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("jsonl roundtrip with skip-existing anti-join") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString
+    val dir = Fixtures.tempDir("jsonl").getPath
     val docs = Tables.load(spark, TestSpark.sf, "documents")
     Jsonl.save(docs, s"$dir/out", shards = 2)
     val back = Jsonl.load(spark, s"$dir/out", "doc_id")
@@ -20,7 +20,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("csv roundtrip with explicit schema (S5 per-source format shape)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("csv").toString
+    val dir = Fixtures.tempDir("csv").getPath
     val docs = Tables.load(spark, TestSpark.sf, "documents")
       .select($"doc_id", $"lang", $"source", $"n_chars")
     docs.write.mode("overwrite").option("header", "true").csv(s"$dir/out")
@@ -34,7 +34,7 @@ class SourcesSpec extends AnyFunSuite {
     import spark.implicits._
     // batch 1: the original envelope; batch 2 adds a column (the
     // 100 TB reality — sources drift; readers must not break)
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toFile
+    val dir = Fixtures.tempDir("graft_evolve")
     Seq((1L, "a")).toDF("id", "v")
       .write.mode("append").parquet(s"$dir/t")
     Seq((2L, "b", 9L)).toDF("id", "v", "extra")
@@ -49,7 +49,7 @@ class SourcesSpec extends AnyFunSuite {
   test("corrupt jsonl lines are quarantined, not fatal") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_corrupt")
+    val dir = Fixtures.tempDir("graft_corrupt").toPath
     val f = dir.resolve("part0.jsonl")
     java.nio.file.Files.writeString(f,
       """{"id": 1, "v": "a"}
@@ -70,7 +70,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("partitioned export prunes partitions on the read path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toFile
+    val dir = Fixtures.tempDir("graft_part")
     val docs = Tables.load(spark, TestSpark.sf, "documents")
       .select($"doc_id", $"lang", $"source")
     docs.write.partitionBy("lang").mode("overwrite")

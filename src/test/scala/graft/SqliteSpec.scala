@@ -137,8 +137,7 @@ class SqliteSpec extends AnyFunSuite {
   test("loadTable quarantines corrupt dbs and keeps the healthy ones") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sqlite_q").toFile
-    dir.deleteOnExit()
+    val dir = Fixtures.tempDir("graft_sqlite_q")
     val rows = (0 until 20).map(i => Seq[Any](s"id$i", s"body-$i"))
     val ddl = "CREATE TABLE geojson (id TEXT, body TEXT)"
     Sqlite.writeDb(new java.io.File(dir, "good.db"), "geojson", ddl, rows)

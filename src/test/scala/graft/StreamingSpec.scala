@@ -336,7 +336,7 @@ class StreamingSpec extends AnyFunSuite {
   test("interval join restart: click state survives the checkpoint stop") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ij_ck").toFile
+    val ckpt = Fixtures.tempDir("graft_ij_ck")
     val ev = Tables.load(spark, TestSpark.sf, "events")
     val clickRows = ev.filter($"event_type" === "click")
       .select($"ts", $"user_id", $"event_id")
@@ -390,7 +390,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream-static enrich restart: offsets resume, no replay, no loss") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_en_ck").toFile
+    val ckpt = Fixtures.tempDir("graft_en_ck")
     val evRows = Tables.load(spark, TestSpark.sf, "events")
       .select($"event_id", $"user_id", $"event_type")
       .as[(Long, Long, String)].collect()
@@ -428,7 +428,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_nd_ck").toFile
+    val ckpt = Fixtures.tempDir("graft_nd_ck")
     val docs = Tables.load(spark, TestSpark.sf, "documents")
       .select($"doc_id", $"text")
     var sids = DedupQueries.shingleTableOf(
@@ -474,7 +474,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("idempotent batch writer: replaying a batch does not duplicate rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toFile
+    val dir = Fixtures.tempDir("graft_sink")
     val w = StreamingOps.idempotentBatchWriter(dir.getAbsolutePath)
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     w(b0, 0L)
@@ -488,7 +488,7 @@ class StreamingSpec extends AnyFunSuite {
   test("exactly-once sink end-to-end over a MemoryStream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink2").toFile
+    val dir = Fixtures.tempDir("graft_sink2")
     val input = MemoryStream[(Long, String)]
     val q = StreamingOps.exactlyOnceSink(
       input.toDF().toDF("k", "v"), dir.getAbsolutePath).start()
@@ -507,9 +507,9 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpointed restart resumes at the committed offset, no replay") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val in = java.nio.file.Files.createTempDirectory("graft_rst_in").toFile
-    val out = java.nio.file.Files.createTempDirectory("graft_rst_out").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rst_ck").toFile
+    val in = Fixtures.tempDir("graft_rst_in")
+    val out = Fixtures.tempDir("graft_rst_out")
+    val ckpt = Fixtures.tempDir("graft_rst_ck")
     val schema = new StructType().add("k", LongType).add("v", StringType)
     def start() = StreamingOps.exactlyOnceSink(
         spark.readStream.schema(schema).parquet(in.getAbsolutePath),
@@ -538,7 +538,7 @@ class StreamingSpec extends AnyFunSuite {
   test("committed-only reader skips a crash's partial batch directory") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink3").toFile
+    val dir = Fixtures.tempDir("graft_sink3")
     val input = MemoryStream[(Long, String)]
     val q = StreamingOps.exactlyOnceSink(
       input.toDF().toDF("k", "v"), dir.getAbsolutePath).start()
@@ -557,8 +557,8 @@ class StreamingSpec extends AnyFunSuite {
   test("maxFilesPerTrigger bounds each micro-batch") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val in = java.nio.file.Files.createTempDirectory("graft_mft_in").toFile
-    val out = java.nio.file.Files.createTempDirectory("graft_mft_out").toFile
+    val in = Fixtures.tempDir("graft_mft_in")
+    val out = Fixtures.tempDir("graft_mft_out")
     (1 to 3).foreach { i =>
       Seq((i.toLong, s"v$i")).toDF("k", "v")
         .coalesce(1).write.mode("append").parquet(in.getAbsolutePath)

@@ -11,7 +11,7 @@ import graft.sources.TableCommit
 class TableCommitSpec extends AnyFunSuite {
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_commit_spec_").toString
+    Fixtures.tempDir("graft_commit_spec_").getPath
 
   test("empty table reads as version 0; first commit publishes v1") {
     val dir = freshDir()

@@ -6,7 +6,10 @@
 # about to commit as the snapshot; a green exit is the precondition for
 # the snapshot commit. It runs, in order:
 #   1. full `sbt test` (includes the cache-regime + plan-audit lints),
-#   2. Verify at sf0.01 + the DuckDB oracle compare (tools/check.py),
+#   2. Verify at sf0.01 + the DuckDB oracle compare (tools/check.py);
+#      Verify runs with java.io.tmpdir set to a fresh directory, and the
+#      leak step fails if anything but the cross-JVM source fixtures
+#      (Fixtures.onDisk, prefix graft_fixture_) survives the JVM,
 #   3. the stress_diff gate selftest,
 #   4. the repo benchmark's trace-analysis self-tests (pure Python).
 # Usage: tools/gate.sh [sf-dir]       (default /root/testdata/sf0.01)
@@ -17,8 +20,9 @@ cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=/tmp/graft_gate
 VDIR=$OUT/verify
-mkdir -p "$OUT"
-rm -rf "$VDIR"
+TMPD=$OUT/tmpdir
+rm -rf "$VDIR" "$TMPD"
+mkdir -p "$OUT" "$TMPD"
 
 SHA=$(git rev-parse --short HEAD)
 DIRTY=$(git status --porcelain | wc -l)
@@ -38,8 +42,17 @@ step() {
   fi
 }
 
+# everything a JVM leaves in its tmpdir besides the onDisk fixtures
+leaks() {
+  local left
+  left=$(ls -A "$TMPD" | grep -v '^graft_fixture_')
+  [ -z "$left" ] || { echo "left behind in $TMPD:"; echo "$left"; return 1; }
+}
+
 step sbt_test sbt -batch test
-step verify sbt -batch "runMain graft.Verify $SF $VDIR"
+step verify sbt -batch "set run / javaOptions += \"-Djava.io.tmpdir=$TMPD\"" \
+  "runMain graft.Verify $SF $VDIR"
+step tmp_leaks leaks
 step oracle python3 tools/check.py "$VDIR" "$SF"
 step diff_selftest python3 tools/stress_diff_selftest.py
 step perfbench_layers python3 perfbench/test_perfbench.py LayerTest

@@ -14,6 +14,8 @@ import json, os, subprocess, sys, tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 DIFF = os.path.join(HERE, "stress_diff.py")
+# the synthetic artifacts; removed when main() returns
+TMP = tempfile.TemporaryDirectory(prefix="stress_diff_selftest_")
 
 
 def art(queries, adjudications=None):
@@ -21,7 +23,7 @@ def art(queries, adjudications=None):
     if adjudications:
         d["adjudications"] = adjudications
     f = tempfile.NamedTemporaryFile(
-        "w", suffix=".json", delete=False, dir=tempfile.gettempdir())
+        "w", suffix=".json", delete=False, dir=TMP.name)
     json.dump(d, f)
     f.close()
     return f.name
@@ -137,4 +139,6 @@ def main():
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    with TMP:
+        rc = main()
+    sys.exit(rc)
