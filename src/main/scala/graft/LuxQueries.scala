@@ -80,23 +80,30 @@ object LuxQueries extends QueryGroup {
     * — ceil(leaf bytes of both / `spark.graft.substrateTargetPartitionBytes`),
     * no cores floor (the Substrate header says why). The persisted
     * layout stays statically visible (Sessions freezes cached-plan
-    * partitioning), so a FORWARD hop (`Rel`: triples joined on `object`
-    * against a broadcast sub-result) keeps the subject partitioning,
-    * its `distinct` on the subject id needs no exchange, and its
-    * semi-join with an entity leaf is co-partitioned. An INVERSE hop
-    * (`InvRel`) projects `object`, which is not a partitioning key, so
-    * its `distinct` still shuffles; a second triple permutation keyed
-    * on `object` would remove that. At 100 TB the same layout is a
-    * bucketed table on disk (by id / subject, one bucket count).
+    * partitioning), so a FORWARD hop (`Rel`: triples semi-joined on
+    * `object` against a broadcast sub-result) keeps the subject
+    * partitioning, its `distinct` on the subject id needs no exchange,
+    * and its semi-join with an entity leaf is co-partitioned. An
+    * INVERSE hop (`InvRel`) projects `object`, which is not a
+    * partitioning key, so at two or more partitions its `distinct`
+    * still shuffles; a second triple permutation keyed on `object`
+    * would remove that. At 100 TB the same layout is a bucketed table
+    * on disk (by id / subject, one bucket count).
     *
-    * One-partition caveat: below one target of leaf bytes (64 MiB by
-    * default, so every bench corpus) the layout is a single partition.
-    * Spark keeps a join's single-partition sides unshuffled only while
-    * each side's size estimate is at most `spark.sql.maxSinglePartitionBytes`
-    * (128 MiB), and without CBO a hop's inner join is estimated as the
-    * product of its sides, so the static plan still shuffles both sides
-    * of a forward hop's semi-join there (lux_q1_hop_range at sf0.1); at
-    * two or more partitions it does not. */
+    * Key contract: `id` is a key of the entity table. Every entity class
+    * mints its ids from its own table's primary key under its own
+    * prefix (c, o, p, s, n, d), so no two rows share an id. The compiler
+    * folds the leaves of one boolean group into one row predicate,
+    * which is exact only under this contract (`LuxCompileSpec` checks it).
+    *
+    * One partition: below one target of leaf bytes (64 MiB by default,
+    * so every bench corpus) the layout is a single partition. Spark
+    * keeps a join's single-partition sides unshuffled while each side's
+    * size estimate is at most `spark.sql.maxSinglePartitionBytes`
+    * (128 MiB). The compiler's hops are semi-joins, estimated at their
+    * triple scan, so the estimates stay that small and the static plan
+    * of lux_q1_hop_range at sf0.1 has no shuffle exchange
+    * (`LuxSubstrateSpec` pins the one-partition case). */
   private[graft] def substrate(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val Seq(e, t) = Fixtures.persisted(spark, "lux_substrate", dir) {
       val (e0, t0) = (entities(spark, dir), triples(spark, dir))

@@ -209,6 +209,27 @@ object OpsQueries extends QueryGroup {
     import spark.implicits._
     import graft.plans.{LuxCompiler, LuxSimilar}
     val docs = Tables.load(spark, dir, "documents")
+    val (entities, triples) = similarSubstrate(spark, docs)
+    val compiler = new LuxCompiler(entities, triples, LuxSimilar.catalog)
+    Seq(0L, 30L, 60L).map { sid =>
+      val row = docs.filter($"doc_id" === sid)
+        .select($"text", $"lang", $"source").head() // fetch_record analog
+      val b = (1500L + sid * 7L % 520L).toInt
+      val seed = LuxSimilar.Seed(
+        classifications = Seq("lang:" + row.getString(1)),
+        texts = Seq(row.getString(0)),
+        born = Some(b),
+        died = Some(b + 40 + (sid % 25L).toInt),
+        memberOf = Seq("src:" + row.getString(2)))
+      compiler.compile(LuxSimilar.agentQueryString(seed).get)
+        .withColumn("seed_id", lit(sid))
+    }.reduce(_ unionByName _)
+  }
+
+  /** similarFull's (entities, triples) over the documents table. */
+  private[graft] def similarSubstrate(spark: SparkSession,
+      docs: DataFrame): (DataFrame, DataFrame) = {
+    import spark.implicits._
     val bornC = (lit(1500L) + ($"doc_id" * 7L) % 520L).cast("long")
     val diedC = (bornC + lit(40L) + ($"doc_id" % 25L)).cast("long")
     val nullS = lit(null).cast("string")
@@ -228,21 +249,9 @@ object OpsQueries extends QueryGroup {
       .union(docs.select(concat(lit("d"), $"doc_id").as("subject"),
         lit("memberOf").as("predicate"),
         concat(lit("src:"), $"source").as("object")))
-    val compiler = new LuxCompiler(entities, triples, LuxSimilar.catalog)
-    Seq(0L, 30L, 60L).map { sid =>
-      val row = docs.filter($"doc_id" === sid)
-        .select($"text", $"lang", $"source").head() // fetch_record analog
-      val b = (1500L + sid * 7L % 520L).toInt
-      val seed = LuxSimilar.Seed(
-        classifications = Seq("lang:" + row.getString(1)),
-        texts = Seq(row.getString(0)),
-        born = Some(b),
-        died = Some(b + 40 + (sid % 25L).toInt),
-        memberOf = Seq("src:" + row.getString(2)))
-      compiler.compile(LuxSimilar.agentQueryString(seed).get)
-        .withColumn("seed_id", lit(sid))
-    }.reduce(_ unionByName _)
+    (entities, triples)
   }
+
   private val similarFullOracle: String =
     """WITH docs AS (
       |  SELECT doc_id, text, lang, source,

@@ -132,11 +132,16 @@ object Graph {
         .join(stepped.select($"node".as("pNode"), $"label".as("pLabel")),
           stepped("label") === $"pNode", "left")
         .select($"node", $"prev", coalesce($"pLabel", $"label").as("label"))
-        // lazy checkpoint: the convergence aggregate below materializes it,
-        // so each round costs ONE job (still truncates lineage for reuse)
+        // lazy checkpoint: truncates lineage for reuse, but a round is
+        // not ONE job — `localCheckpoint(eager = false)` still calls
+        // `physicalPlan.execute()`, which under AQE runs this plan's
+        // shuffle and broadcast stages at the call; only the result
+        // stage waits for the aggregate below (counts: ROADMAP carried
+        // item A)
         .localCheckpoint(eager = false)
-      // ONE job: count of changed labels doubles as the convergence test
-      // (labels only decrease, so zero changes = neighbor-min fixpoint)
+      // ONE driver scalar: count of changed labels doubles as the
+      // convergence test (labels only decrease, so zero changes =
+      // neighbor-min fixpoint)
       val nChanged = next.agg(count(when($"label" < $"prev", 1))).head().getLong(0)
       converged = nChanged == 0L
       changed = next.filter($"label" < $"prev").select($"node", $"label")

@@ -87,14 +87,19 @@ object Reconcile {
       val (e1, f1) = layer(frontier, seen)
       if (iter + 1 < maxIter) {
         // TWO layers per driver round-trip (r18, guide §1.2/§2): the
-        // second expansion chains lazily on the first layer's
-        // checkpoint, so ONE count materializes both layers — half the
-        // per-layer driver scalar barriers of the one-layer loop. The
-        // frontier sequence f1, f2 is exactly the one-layer loop's; an
-        // empty f1 gives an empty e2/f2 by the empty-in/empty-out
-        // contract (scaladoc), so stopping on n2 == 0 alone stops at the
-        // same layer set. An odd maxIter falls through to the single-
-        // layer tail below, so the layer COUNT bound is also unchanged.
+        // second expansion chains on the first layer's checkpoint, and
+        // n2 is the round-pair's only driver scalar — half the per-layer
+        // scalar barriers of the one-layer loop. It is not ONE job:
+        // `localCheckpoint(eager = false)` still calls
+        // `physicalPlan.execute()`, which under AQE runs every shuffle
+        // and broadcast stage of the frame at the call, so each layer's
+        // checkpoints submit their own jobs (counts: ROADMAP carried
+        // item A). The frontier sequence f1, f2 is exactly the
+        // one-layer loop's; an empty f1 gives an empty e2/f2 by the
+        // empty-in/empty-out contract (scaladoc), so stopping on
+        // n2 == 0 alone stops at the same layer set. An odd maxIter
+        // falls through to the single-layer tail below, so the layer
+        // COUNT bound is also unchanged.
         val seen1 = seen.union(f1) // disjoint by anti-join
         val (e2, f2) = layer(f1, seen1)
         val n2 = f2.count() // the round-pair's single driver scalar

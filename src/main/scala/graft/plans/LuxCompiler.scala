@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Compiles a LuxQL AST to DataFrame combinators over two substrate
@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   *   entities(id, etype, name, num)   — per-entity attributes
   *   triples(subject, predicate, object) — relationship substrate
   *
+  * Contract: `id` is a key of `entities` (no two rows share an id).
+  * Every engine substrate keeps it (`LuxCompileSpec` checks them).
+  *
   * Mapping: leaf string = TOKENIZED word match (case-, diacritic- and
   * punctuation-insensitive whole-token equality after WordFold — the
   * cts word-query default option list, cts.py:2; `_contains` escapes
@@ -18,16 +21,27 @@ import org.apache.spark.sql.functions._
   * intersect/union of id sets; NOT inside AND = andNot (except);
   * Rel = semi-join subject<-object; InvRel = reversed.
   *
-  * Scale: sub-results are id sets (narrow). Every hop joins the triple
-  * table against its sub-result; small sub-results broadcast (statically
-  * or by AQE at runtime). Over `LuxQueries.substrate` — entities
-  * hash-partitioned on `id`, triples on `subject`, one shared partition
-  * count — a FORWARD hop (Rel) whose sub-result broadcasts streams
+  * Plan shape, as the reference composes a boolean query into one
+  * predicate and a hop into a semi-join over its triple index:
+  *  - The positive entity leaves of one AND become ONE scan,
+  *    `entities.filter(p1 && p2 …)`; each NOT kid, leaf or not, stays an
+  *    anti-join. The leaves of one OR become one scan of
+  *    `p1 || p2 …`. Folding leaves into one row predicate is exact only
+  *    because `id` is a key: a leaf's id set is then the ids of the
+  *    rows it matches.
+  *  - A hop is a `left_semi` of the filtered triples against its
+  *    sub-result, then `distinct`. A semi-join's size estimate is its
+  *    triple scan, not the product of both sides (an inner join's
+  *    estimate without CBO), so the planner broadcasts hop results in
+  *    the static plan and a one-partition substrate stays unshuffled.
+  *
+  * Over `LuxQueries.substrate` (entities hash-partitioned on `id`,
+  * triples on `subject`, one shared count) a FORWARD hop (Rel) streams
   * triples in their subject layout, so its `distinct` needs no exchange
   * and its semi-join with an entity leaf is co-partitioned. An INVERSE
-  * hop (InvRel) returns `object`, which the layout does not key, so its
-  * `distinct` still shuffles. The compiler itself takes any two frames;
-  * the layout, and its one-partition caveat, are the substrate's.
+  * hop (InvRel) returns `object`, which the layout does not key, so at
+  * two or more partitions its `distinct` still shuffles. The compiler
+  * itself takes any two frames; the layout is the substrate's.
   */
 /** Q4: the searchConfig-style field catalog — config as data (§1.3).
   * Declares queryable leaf fields and relationship predicates; the
@@ -58,39 +72,19 @@ final class LuxCompiler(entities: DataFrame, triples: DataFrame,
 
   /** Result: DataFrame with a single `id` column (distinct). */
   def ids(q: Ast): DataFrame = q match {
-    // the identity leaf (ml_lexer.py:177-182): field "id" bypasses the
-    // catalog (every class has it) and completes a bare identifier to
-    // the data-namespace IRI before the exact lookup — our namespace
-    // twin is the urn:graft: prefix the N-Triples export uses
-    case Leaf("id", "=", str, _, false, _, _) =>
-      val v = if (str.startsWith("urn:graft:")) str.stripPrefix("urn:graft:")
-        else str
-      entities.filter(col("id") === v).select("id")
-    case Leaf(field, _, _, _, _, _, _) if !catalog.fields(field) =>
-      sys.error(s"unknown field '$field' (catalog: ${catalog.fields.toSeq.sorted.mkString(",")})")
+    case l: Leaf => scan(predicate(l))
     case Rel(pred, _) if !catalog.predicates(pred) =>
       sys.error(s"unknown relationship '$pred'")
     case InvRel(pred, _) if !catalog.predicates(pred) =>
       sys.error(s"unknown relationship '^$pred'")
-    case Leaf(field, op, str, num, isNum, stemmed, contains) =>
-      // catalog membership already checked above; any catalog field is a
-      // column of the entity substrate (facet booleans are numeric)
-      val col = entities.col(field)
-      val pred = (op, isNum) match {
-        case ("=", false) if catalog.exactFields(field) => col === str
-        case ("=", false) =>
-          LuxCompiler.wordPredicate(col, str, stemmed, contains)
-        case ("=", true) => col === num
-        case ("<", true) => col < num
-        case (">", true) => col > num
-        case ("<=", true) => col <= num
-        case (">=", true) => col >= num
-        case other => sys.error(s"unsupported comparator: $other")
-      }
-      entities.filter(pred).select("id")
 
+    // the leaves scan the entity table once, as one disjunction; a
+    // single part is already a distinct id set
     case Bool("OR", kids) =>
-      kids.map(ids).reduce(_ union _).distinct()
+      val (leaves, others) = splitLeaves(kids)
+      val parts = (if (leaves.isEmpty) Nil
+        else Seq(scan(leaves.map(predicate).reduce(_ || _)))) ++ others.map(ids)
+      if (parts.size == 1) parts.head else parts.reduce(_ union _).distinct()
 
     // NEAR: membership is AND of the kids, and word leaves that share a
     // text field additionally require TOKEN PROXIMITY — every pair of
@@ -173,10 +167,14 @@ final class LuxCompiler(entities: DataFrame, triples: DataFrame,
         case _ => false
       }
       require(pos.nonEmpty, "AND requires at least one positive term")
-      // left-semi instead of intersect: sub-results are already distinct
-      // id sets, and semi-join skips intersect's per-side dedup shuffles
-      // (AQE turns small sides into broadcasts)
-      val anded = pos.map(ids).reduce((a, b) => a.join(b, Seq("id"), "left_semi"))
+      val (posLeaves, posOthers) = splitLeaves(pos)
+      // the positive leaves scan the entity table once, as one
+      // conjunction. Left-semi instead of intersect: sub-results are
+      // already distinct id sets, and semi-join skips intersect's
+      // per-side dedup shuffles
+      val anded = ((if (posLeaves.isEmpty) Nil
+        else Seq(scan(posLeaves.map(predicate).reduce(_ && _)))) ++
+        posOthers.map(ids)).reduce((a, b) => a.join(b, Seq("id"), "left_semi"))
       // left_anti, not except: both sides are already-distinct id sets, so
       // except's per-side dedup shuffles are wasted work (same argument as
       // the left_semi AND above; AQE broadcasts small NOT sides)
@@ -190,17 +188,52 @@ final class LuxCompiler(entities: DataFrame, triples: DataFrame,
     case Bool("NOT", _) =>
       sys.error("NOT is only supported inside AND (andNot semantics)")
 
+    // hops are semi-joins: their size estimate is the triple scan, not
+    // the product of both sides, so the planner broadcasts hop results
     case Rel(pred, sub) =>
       triples.filter(col("predicate") === pred)
-        .join(ids(sub).withColumnRenamed("id", "object"), "object")
+        .join(ids(sub).withColumnRenamed("id", "object"), Seq("object"), "left_semi")
         .select(col("subject").as("id")).distinct()
 
     case InvRel(pred, sub) =>
       triples.filter(col("predicate") === pred)
-        .join(ids(sub).withColumnRenamed("id", "subject"), "subject")
+        .join(ids(sub).withColumnRenamed("id", "subject"), Seq("subject"), "left_semi")
         .select(col("object").as("id")).distinct()
 
     case other => sys.error(s"cannot compile $other")
+  }
+
+  /** The ids of the entities matching `p`: one scan of the table. */
+  private def scan(p: Column): DataFrame = entities.filter(p).select("id")
+
+  private def splitLeaves(kids: Seq[Ast]): (Seq[Leaf], Seq[Ast]) =
+    (kids.collect { case l: Leaf => l }, kids.filterNot(_.isInstanceOf[Leaf]))
+
+  /** A leaf's predicate over the entity table. */
+  private def predicate(l: Leaf): Column = l match {
+    // the identity leaf (ml_lexer.py:177-182): field "id" bypasses the
+    // catalog (every class has it) and completes a bare identifier to
+    // the data-namespace IRI before the exact lookup — our namespace
+    // twin is the urn:graft: prefix the N-Triples export uses
+    case Leaf("id", "=", str, _, false, _, _) =>
+      entities.col("id") === str.stripPrefix("urn:graft:")
+    case Leaf(field, _, _, _, _, _, _) if !catalog.fields(field) =>
+      sys.error(s"unknown field '$field' (catalog: ${catalog.fields.toSeq.sorted.mkString(",")})")
+    case Leaf(field, op, str, num, isNum, stemmed, contains) =>
+      // any catalog field is a column of the entity substrate (facet
+      // booleans are numeric)
+      val col = entities.col(field)
+      (op, isNum) match {
+        case ("=", false) if catalog.exactFields(field) => col === str
+        case ("=", false) =>
+          LuxCompiler.wordPredicate(col, str, stemmed, contains)
+        case ("=", true) => col === num
+        case ("<", true) => col < num
+        case (">", true) => col > num
+        case ("<=", true) => col <= num
+        case (">=", true) => col >= num
+        case other => sys.error(s"unsupported comparator: $other")
+      }
   }
 
   def compile(query: String): DataFrame = ids(LuxQL.parse(query))
@@ -304,8 +337,6 @@ object LuxCompiler {
   /** NEAR token window (cts near-query default distance analog; the
     * same window q12's standalone positional NEAR uses). */
   val NearWindow = 3
-
-  import org.apache.spark.sql.Column
 
   /** True if the term uses the cts `wildcarded` option — detected from
     * the term itself (`*`/`?` present), matching MarkLogic's automatic

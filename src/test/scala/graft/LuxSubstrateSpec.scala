@@ -2,12 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.storage.StorageLevel
 import graft.operators.Substrate
@@ -103,16 +103,25 @@ class LuxSubstrateSpec extends AnyFunSuite {
     LuxQueries.evictSubstrate(spark, Some(dir))
   }
 
-  /** Nodes from `p` down to, not into, the first inner join: for a
+  /** A hop's join: a semi-join whose left side scans the triples. */
+  private def isHop(p: SparkPlan): Boolean = p match {
+    case j: BaseJoinExec if j.joinType == LeftSemi =>
+      j.left.exists {
+        case s: InMemoryTableScanExec => s.output.exists(_.name == "predicate")
+        case _ => false
+      }
+    case _ => false
+  }
+
+  /** Nodes from `p` down to, not into, the first hop join: for a
     * semi-join over a hop, the entity leaf side plus the hop's
     * distinct, excluding the hop join's own inputs. */
-  private def aboveHop(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case j: BaseJoinExec if j.joinType == Inner => Nil
-    case _ => p.children.flatMap(aboveHop)
-  })
+  private def aboveHop(p: SparkPlan): Seq[SparkPlan] =
+    p +: (if (isHop(p)) Nil else p.children.flatMap(aboveHop))
 
+  /** The first semi-join that is not a hop: an AND's. */
   private def semiJoin(p: SparkPlan): BaseJoinExec = p.collectFirst {
-    case j: BaseJoinExec if j.joinType == LeftSemi => j
+    case j: BaseJoinExec if j.joinType == LeftSemi && !isHop(j) => j
   }.getOrElse(fail(s"no semi-join in\n$p"))
 
   test("keyed layout: a forward hop's distinct and its semi-join with an " +
@@ -125,21 +134,42 @@ class LuxSubstrateSpec extends AnyFunSuite {
       assert(n > 1, "the lowered target must split the substrate")
       assert(nParts(t) === n, "both tables share one partition count")
       val c = new LuxCompiler(e, t)
+      // a broadcast threshold at the hop sub-result's own size estimate:
+      // the hop broadcasts its sub-result (with no broadcast at all it
+      // would sort-merge on `object` and shuffle the triples), while
+      // the AND semi-join's hop side, estimated at the triple scan,
+      // stays partitioned
+      def estimate(q: String) = c.compile(q).queryExecution.optimizedPlan.stats.sizeInBytes
+      val (sub, hop) = (estimate("""id="c3""""), estimate("""placedBy(id="c3")"""))
+      assert(sub < hop, s"sub-result estimate $sub not below the hop's $hop")
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> sub.toString) {
+        val fwd = plan(c.compile("""AND(etype="order", placedBy(id="c3"))"""))
+        val semi = semiJoin(fwd)
+        assert(!semi.isInstanceOf[BroadcastHashJoinExec],
+          s"the semi-join must be partitioned for this check:\n$fwd")
+        assert(semi.exists(isHop), s"no hop join below the semi-join:\n$fwd")
+        val exchanges = aboveHop(semi).collect { case x: Exchange => x }
+        assert(exchanges.isEmpty, s"forward hop shuffles above its join:\n$fwd")
 
-      val fwd = plan(c.compile("""AND(etype="order", placedBy(id="c3"))"""))
-      val semi = semiJoin(fwd)
-      assert(!semi.isInstanceOf[BroadcastHashJoinExec],
-        s"the semi-join must be partitioned for this check:\n$fwd")
-      assert(semi.collectFirst { case j: BaseJoinExec if j.joinType == Inner => j }
-        .nonEmpty, s"no hop join below the semi-join:\n$fwd")
-      val exchanges = aboveHop(semi).collect { case x: Exchange => x }
-      assert(exchanges.isEmpty, s"forward hop shuffles above its join:\n$fwd")
+        // contrast: an inverse hop returns `object`, which the layout
+        // does not key, so its distinct still shuffles
+        val inv = plan(c.compile("""AND(etype="customer", ^placedBy(id="o1"))"""))
+        assert(aboveHop(semiJoin(inv)).exists(_.isInstanceOf[Exchange]),
+          s"inverse hop unexpectedly exchange-free:\n$inv")
+      }
+    }
+    LuxQueries.evictSubstrate(spark, Some(dir))
+  }
 
-      // contrast: an inverse hop returns `object`, which the layout does
-      // not key, so its distinct still shuffles
-      val inv = plan(c.compile("""AND(etype="customer", ^placedBy(id="o1"))"""))
-      assert(aboveHop(semiJoin(inv)).exists(_.isInstanceOf[Exchange]),
-        s"inverse hop unexpectedly exchange-free:\n$inv")
+  test("one-partition substrate: lux_q1's static plan has no shuffle") {
+    val dir = rewritten(4)
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val (e, t) = fresh(dir)
+      assert(nParts(e) === 1, "the default target keeps sf0.001 in one partition")
+      val q1 = plan(new LuxCompiler(e, t).compile(LuxQueries.q1))
+      assert(q1.exists(isHop), s"no hop join in\n$q1")
+      val shuffles = q1.collect { case x: ShuffleExchangeExec => x }
+      assert(shuffles.isEmpty, s"one-partition lux_q1 shuffles:\n$q1")
     }
     LuxQueries.evictSubstrate(spark, Some(dir))
   }

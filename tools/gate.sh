@@ -11,7 +11,10 @@
 #      leak step fails if anything but the cross-JVM source fixtures
 #      (Fixtures.onDisk, prefix graft_fixture_) survives the JVM,
 #   3. the stress_diff gate selftest,
-#   4. the repo benchmark's trace-analysis self-tests (pure Python).
+#   4. the repo benchmark's trace-analysis self-tests (pure Python),
+#   5. the shortest run of the benchmark's seeded search templates
+#      (warm-up plus one round), each output checked against its
+#      DuckDB twin.
 # Usage: tools/gate.sh [sf-dir]       (default /root/testdata/sf0.01)
 # Logs land in /tmp/graft_gate/ stamped with the tree state so the
 # round record can cite "gate ran at <sha/dirty>".
@@ -56,6 +59,8 @@ step tmp_leaks leaks
 step oracle python3 tools/check.py "$VDIR" "$SF"
 step diff_selftest python3 tools/stress_diff_selftest.py
 step perfbench_layers python3 perfbench/test_perfbench.py LayerTest
+step perfbench_search python3 perfbench/run.py --workload search --seed 5 \
+  --seconds 0 --trace 0
 
 if [ "$fail" -eq 0 ]; then
   echo "[gate] ALL GREEN at $STAMP — snapshot commit may proceed"
