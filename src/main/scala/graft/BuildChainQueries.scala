@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Substrate.SubstrateOps
 
 /** The composed Linked-Art build chain — the reference's actual product:
   * one lineage from mapped records through reconcile fixpoint → idmap
@@ -12,8 +11,9 @@ import graft.operators.Substrate.SubstrateOps
   * Stage map (reference lifecycle):
   *   1. map          — entity + relationship substrate (`run-reconcile.py:109-148`:
   *                     acquire/map producing records + their references)
-  *   2. reconcile    — `operators.Reconcile.fixpoint` (reconciler.py:34-125):
-  *                     the collector crawl + name pass repeated to fixpoint
+  *   2. reconcile    — `operators.Reconcile.frontierFixpoint` (reconciler.py:34-125):
+  *                     the collector crawl + name pass expanded from the
+  *                     frontier until no new node appears
   *   3. idmap CC     — `operators.Graph.connectedComponents` over the
   *                     equivalence subset (reference_manager.py:212-407)
   *   4. reidentify   — left join + coalesce fallback (`run-merge.py:105-140`:
@@ -24,7 +24,7 @@ import graft.operators.Substrate.SubstrateOps
   *   7. export       — N-Triples lines (`run-export.py:45-69`, K2 shape)
   *
   * Scale shape: every per-round driver interaction in stages 2-3 is ONE
-  * scalar (edge count / changed-label count); the merge fold is a single
+  * scalar (new-node count / changed-label count); the merge fold is a single
   * groupByKey(yuid) shuffle with clusters folding independently; the
   * export is map-only explode+concat. The idmap join in stage 4 is a
   * key-equi join against a table bounded by the reconciled entity count —
@@ -101,7 +101,7 @@ object BuildChainQueries extends QueryGroup {
       // once per fixpoint round: without the persist every round
       // re-scans the parquet inputs (the single biggest cost in the
       // chain — O(rounds × |rel|)).
-      .persistSubstrate()
+      .persist()
     // the K4 name index as equivalence edges: part → min partkey per
     // name — groupBy-min + join, NOT min-over-partition: a boilerplate
     // name is a hot partition that sorts under a window, while the
@@ -114,7 +114,7 @@ object BuildChainQueries extends QueryGroup {
       .join(nameIdx, "nm")
       .filter($"pk" =!= $"m")
       .select(($"pk" * 8L + 2L).as("src"), ($"m" * 8L + 2L).as("dst"))
-      .persistSubstrate() // same: probed once per round by the name pass
+      .persist() // same: probed once per round by the name pass
     val seed = orders.filter($"o_custkey" <= 5)
       .select(($"o_custkey" * 8L).as("src"), ($"o_orderkey" * 8L + 1L).as("dst"))
 
@@ -131,7 +131,7 @@ object BuildChainQueries extends QueryGroup {
     val namePass = (ns: DataFrame) =>
       twin.join(broadcast(ns.withColumnRenamed("v", "src")), "src")
     val edges = operators.Reconcile.frontierFixpoint(seed, Seq(crawl, namePass))
-      .persistSubstrate() // read three ways: eqEdges (CC), reached, final layers
+      .persist() // read three ways: eqEdges (CC), reached, final layers
     // the fixpoint's per-round counts materialized every layer's
     // localCheckpoint, so the loop inputs are dead the moment it
     // returns — release them instead of pinning fresh copies per
@@ -152,7 +152,7 @@ object BuildChainQueries extends QueryGroup {
       .join(idmap.select($"node", $"component"), $"pk" * 8L + 2L === $"node", "left")
       .select($"pk", $"p_name",
         shiftright(coalesce($"component", $"pk" * 8L + 2L) - 2L, 3).as("yuid"))
-      .persistSubstrate() // read twice: merge input + relationship rewrite
+      .persist() // read twice: merge input + relationship rewrite
     val suppliedBy = gatherRefs(
       li.select($"l_partkey".cast("long").as("k"), $"l_suppkey".cast("long").as("sk")),
       members.select($"pk".as("k"), $"yuid"))
@@ -199,7 +199,7 @@ object BuildChainQueries extends QueryGroup {
     val esc = (s: Column) =>
       replace(replace(s, lit("\\"), lit("\\\\")), lit("\""), lit("\\\""))
     val uri = (y: Column) => concat(lit("<urn:graft:y"), y, lit(">"))
-    val md = merged.toDF().persistSubstrate() // fanned out into 6 line projections
+    val md = merged.toDF().persist() // fanned out into 6 line projections
     val lines = Seq(
       md.select(concat(uri($"yuid"),
         lit(" <urn:graft:type> <urn:graft:HumanMadeObject> .")).as("line")),
@@ -567,12 +567,7 @@ object BuildChainQueries extends QueryGroup {
         .getOrElse(Array.empty[java.io.File])
       if d.getName.startsWith("run-")
       if listParquet(d.getAbsolutePath).forall(f => !keep(f))
-    } {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(d)
-    }
+    } Fixtures.sweep(d) // removes links, never follows them
     spark.read.parquet(pub.files: _*)
       .withColumn("v_advance", lit(pub.version - base.version))
   }

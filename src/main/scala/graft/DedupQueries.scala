@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -240,7 +239,7 @@ object DedupQueries extends QueryGroup {
     // alias chain into the filter and re-trigger the per-element
     // re-evaluation documented on shingleIdsFrom. The cache also serves
     // the band join (x2) and both verify joins.
-    val sidTbl = shingleTable(spark, dir).persistSubstrate()
+    val sidTbl = shingleTable(spark, dir).persist()
     minhashVerified(sidTbl.filter(size($"sid") > 0))
   }
 
@@ -283,7 +282,7 @@ object DedupQueries extends QueryGroup {
     import spark.implicits._
     // the LSH band index is materialized once (at 100 TB this is the
     // on-disk index-build stage) — three joins below read it
-    val bandRows = bandIndex(base).persistSubstrate()
+    val bandRows = bandIndex(base).persist()
     // the three-regime guarded band join (guardedBandPairs): cap, salt,
     // plain — shared with d3
     val cand = guardedBandPairs(bandRows, Seq("band_idx", "band_hash"), "doc_id")
@@ -367,7 +366,7 @@ object DedupQueries extends QueryGroup {
     // would run 64 per-element lambda folds per row)
     val fps = ids
       .select($"doc_id", functions.VecMath.simhashCol($"ids", SimK).as("fp"))
-      .persistSubstrate() // band fan-out + final left join read this
+      .persist() // band fan-out + final left join read this
     val bandCols = (0 until 4).map(b =>
       struct(lit(b).as("band_idx"),
         shiftright($"fp", 16 * b).bitwiseAND(65535L).as("band_hash")))
@@ -447,7 +446,7 @@ object DedupQueries extends QueryGroup {
     Tables.load(spark, dir, "documents")
       .select($"doc_id", transform(tokensCol($"text"), wordHash(_)).as("h"))
       .select($"doc_id", bigramIds.as("sid"))
-      .persistSubstrate() // barrier before filter (see minhashLsh) + verify joins
+      .persist() // barrier before filter (see minhashLsh) + verify joins
       .filter(size($"sid") > 0)
       .withColumn("len", size($"sid").cast("long"))
   }
@@ -588,7 +587,7 @@ object DedupQueries extends QueryGroup {
       .filter(size($"sid") > 0)
       .select($"doc_id", array_sort($"sid").as("sid"))
       .withColumn("len", size($"sid").cast("long"))
-      .persistSubstrate() // candidate fan-out + both verify joins
+      .persist() // candidate fan-out + both verify joins
     val cand = ngramCandidates(base).localCheckpoint()
     val truth = cand
       .join(base.select($"doc_id".as("doc_a"), $"sid".as("sid_a")), "doc_a")
@@ -699,7 +698,7 @@ object DedupQueries extends QueryGroup {
         transform($"embedding", x => SimilarityQueries.quantElem(x)).as("q"))
       .withColumn("n2", functions.VecMath.dotCol($"q", $"q"))
       .filter($"n2" > 0L)
-      .persistSubstrate() // signature fan-out + both verify joins read this
+      .persist() // signature fan-out + both verify joins read this
     val cand = embCandidates(base)
       .localCheckpoint() // barrier before verify (see minhashLsh)
     cand
@@ -855,7 +854,7 @@ object DedupQueries extends QueryGroup {
     // cache barrier: the election aggregate AND the final join both
     // read this; without it the documents scan + the token-diversity
     // HOFs run twice (the v5/t_source_overlap lesson)
-    val scored = clusterAssign(spark, dir).join(q, Seq("doc_id")).persistSubstrate()
+    val scored = clusterAssign(spark, dir).join(q, Seq("doc_id")).persist()
     // max over (dm, -doc_id) = highest score, then lowest id
     val reps = scored.groupBy($"cluster")
       .agg(max(struct($"dm", (-$"doc_id").as("nid"))).as("best"))
@@ -897,7 +896,7 @@ object DedupQueries extends QueryGroup {
     val sid = Tables.load(spark, dir, "documents")
       .select($"doc_id", transform(tokensCol($"text"), wordHash(_)).as("h"))
       .select($"doc_id", shingleIdsFrom($"h").as("sid"))
-      .persistSubstrate() // HOF-CSE guard: shingles feed both branches below
+      .persist() // HOF-CSE guard: shingles feed both branches below
     val benchSids = sid.filter($"doc_id" % 37 === 0)
       .select(explode($"sid").as("s")).distinct()
     sid.filter($"doc_id" % 37 =!= 0)
@@ -943,9 +942,9 @@ object DedupQueries extends QueryGroup {
     * One row per training doc (the audit shape, like d7). */
   def fuzzyDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sid = shingleTable(spark, dir).persistSubstrate()
+    val sid = shingleTable(spark, dir).persist()
     val base = sid.filter(size($"sid") > 0)
-    val bands = bandIndex(base).persistSubstrate()
+    val bands = bandIndex(base).persist()
     val benchBands0 = bands.filter($"doc_id" % 37 === 0)
     val hot = benchBands0.groupBy($"band_idx", $"band_hash")
       .agg(count(lit(1)).as("n")).filter($"n" > bandCap(spark))
@@ -1104,7 +1103,7 @@ object DedupQueries extends QueryGroup {
     * the cross-split filter drops pairs before the per-doc max. */
   def splitLeakage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sid = shingleTable(spark, dir).persistSubstrate()
+    val sid = shingleTable(spark, dir).persist()
     val pairs = minhashVerified(sid.filter(size($"sid") > 0))
     val cross = pairs
       .filter(($"doc_a" % 10 === 0) =!= ($"doc_b" % 10 === 0))
@@ -1157,12 +1156,12 @@ object DedupQueries extends QueryGroup {
     // cache barrier below the join (minhashLsh discipline): without it
     // the join/generate rewrites re-inline the shingle HOF chain and
     // the explode re-evaluates it — measured 21 s -> 5 s at sf0.1
-    val sidTbl = shingleTableOf(docs).persistSubstrate()
+    val sidTbl = shingleTableOf(docs).persist()
     val srcShingle = sidTbl
       .join(docs.select($"doc_id", $"source"), "doc_id")
       .select($"source", explode($"sid").as("s"))
       .distinct()
-      .persistSubstrate() // feeds the per-source sizes AND the pair join
+      .persist() // feeds the per-source sizes AND the pair join
     val perSrc = srcShingle.groupBy($"source").agg(count(lit(1)).as("n"))
     val shared = srcShingle.select($"s", $"source".as("src_a"))
       .join(srcShingle.select($"s", $"source".as("src_b")), "s")
@@ -1207,9 +1206,9 @@ object DedupQueries extends QueryGroup {
     * exactly as in the batch path. */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sid = shingleTable(spark, dir).persistSubstrate()
+    val sid = shingleTable(spark, dir).persist()
     val base = sid.filter(size($"sid") > 0)
-    val bands = bandIndex(base).persistSubstrate()
+    val bands = bandIndex(base).persist()
     val hot = bands.groupBy($"band_idx", $"band_hash")
       .agg(count(lit(1)).as("n")).filter($"n" > bandCap(spark))
       .select($"band_idx", $"band_hash")
@@ -1285,7 +1284,7 @@ object DedupQueries extends QueryGroup {
     val stop = TextQueries.stopwords
     val docs = Tables.load(spark, dir, "documents")
       .select($"doc_id", $"lang", $"source", tokensCol($"text").as("t"))
-      .persistSubstrate() // quality + fingerprint + shingles read this
+      .persist() // quality + fingerprint + shingles read this
     val n = size($"t").cast("long")
     val nd = size(array_distinct($"t")).cast("long")
     val ns = size(filter($"t", x => x.isInCollection(stop))).cast("long")
@@ -1294,7 +1293,7 @@ object DedupQueries extends QueryGroup {
       intDiv(nd * 1000L, n) >= 100L && intDiv(ns * 1000L, n) <= 500L)
     // 2. decontamination (benchmark docs excluded outright); ONE shingle
     // table serves the benchmark sweep AND the LSH pair stage below
-    val sid = shingleTable(spark, dir).persistSubstrate()
+    val sid = shingleTable(spark, dir).persist()
     val benchSids = sid.filter($"doc_id" % 37 === 0)
       .select(explode($"sid").as("s")).distinct()
     val contaminated = sid.filter($"doc_id" % 37 =!= 0)
@@ -1311,7 +1310,7 @@ object DedupQueries extends QueryGroup {
     val exact = keyed
       .join(winners, Seq("ck", "doc_id"), "left_semi")
       .select($"doc_id", $"lang", $"source", size($"t").cast("long").as("n_tokens"))
-      .persistSubstrate() // endpoint filter (x2) + cluster join read this
+      .persist() // endpoint filter (x2) + cluster join read this
     // 4. near-dup clustering over the surviving docs
     val ids = exact.select($"doc_id")
     val pairs = minhashVerified(sid.filter(size($"sid") > 0))
@@ -1504,7 +1503,7 @@ object DedupQueries extends QueryGroup {
       .select($"doc_id".cast("long").as("doc_id"),
         tokensCol(lower($"text")).as("t"))
       .select($"doc_id", $"t", (size($"t") / S).cast("int").as("nc"))
-      .persistSubstrate() // read twice: span explode + final reassembly join
+      .persist() // read twice: span explode + final reassembly join
     val chunks = base.filter($"nc" > 0)
       .select($"doc_id", explode(transform(sequence(lit(0), $"nc" - 1),
         i => struct(i.cast("long").as("pos"),
@@ -1598,14 +1597,14 @@ object DedupQueries extends QueryGroup {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.load(spark, dir, "documents")
       .select($"doc_id", tokensCol(lower($"text")).as("t"))
-      .persistSubstrate() // grams + final total_tokens join
+      .persist() // grams + final total_tokens join
     val grams = toks.filter(size($"t") >= SubK)
       .select($"doc_id", posexplode(transform(
         sequence(lit(0), size($"t") - SubK),
         i => concat_ws(" ", slice($"t", i + 1, lit(SubK)))))
         .as(Seq("pos", "gram")))
       .withColumn("gh", xxhash64($"gram"))
-      .persistSubstrate() // count pass + probe pass share the explode
+      .persist() // count pass + probe pass share the explode
     val dupHashes = grams.groupBy($"gh").agg(count(lit(1)).as("c"))
       .filter($"c" >= 2).select($"gh")
     val cand = grams.join(dupHashes, Seq("gh"), "left_semi")
@@ -1721,17 +1720,17 @@ object DedupQueries extends QueryGroup {
     import spark.implicits._
     val stop = TextQueries.stopwords
     val docs = Tables.load(spark, dir, "documents")
-      .select($"doc_id", tokensCol($"text").as("t")).persistSubstrate()
+      .select($"doc_id", tokensCol($"text").as("t")).persist()
     val n = size($"t").cast("long")
     val nd = size(array_distinct($"t")).cast("long")
     val ns = size(filter($"t", x => x.isInCollection(stop))).cast("long")
     val flags = docs.select($"doc_id",
       (n >= 10L && intDiv(nd * 1000L, n) >= 100L &&
         intDiv(ns * 1000L, n) <= 500L).as("q_pass"),
-      docFingerprint(array_sort($"t")).as("ck")).persistSubstrate()
+      docFingerprint(array_sort($"t")).as("ck")).persist()
     val isShard = $"doc_id" % 10 === 7
     val shard = flags.filter(isShard)
-    val sid = shingleTable(spark, dir).persistSubstrate()
+    val sid = shingleTable(spark, dir).persist()
     val benchS = sid.filter($"doc_id" % 37 === 0 && $"doc_id" % 10 =!= 7)
       .select(explode($"sid").as("s")).distinct()
     val contaminated = sid.filter($"doc_id" % 10 === 7)
@@ -1742,7 +1741,7 @@ object DedupQueries extends QueryGroup {
     val exactDup = shard.join(corpusCk, Seq("ck"), "left_semi")
       .select($"doc_id").withColumn("e_hit", lit(true))
     val base = sid.filter(size($"sid") > 0)
-    val bands = bandIndex(base).persistSubstrate()
+    val bands = bandIndex(base).persist()
     val hot = bands.groupBy($"band_idx", $"band_hash")
       .agg(count(lit(1)).as("nb")).filter($"nb" > bandCap(spark))
       .select($"band_idx", $"band_hash")
@@ -1829,9 +1828,9 @@ object DedupQueries extends QueryGroup {
     import spark.implicits._
     // persist BEFORE filtering (minhashLsh discipline): size(sid) below
     // the cache re-inlines the shingle HOF chain into the predicate
-    val sidTbl = shingleTable(spark, dir).persistSubstrate()
+    val sidTbl = shingleTable(spark, dir).persist()
     val base = sidTbl.filter(size($"sid") > 0)
-    val bandRows = bandIndex(base).persistSubstrate()
+    val bandRows = bandIndex(base).persist()
     val cand = guardedBandPairs(bandRows, Seq("band_idx", "band_hash"), "doc_id")
       .select($"doc_id_a".as("doc_a"), $"doc_id_b".as("doc_b"))
       .localCheckpoint() // same materialization barrier as d2
@@ -1908,7 +1907,7 @@ object DedupQueries extends QueryGroup {
       .select($"doc_id", transform(tokensCol($"text"), wordHash(_)).as("h"))
       .select($"doc_id", kgrams.as("kg")) // attribute barrier (shingleIdsFrom)
       .select($"doc_id", fps.as("sid"))
-      .persistSubstrate() // barrier before filter (see minhashLsh) + verify joins
+      .persist() // barrier before filter (see minhashLsh) + verify joins
       .filter(size($"sid") > 0)
       .withColumn("len", size($"sid").cast("long"))
   }
@@ -1984,7 +1983,7 @@ object DedupQueries extends QueryGroup {
     val keys = Tables.load(spark, dir, "documents")
       .select($"doc_id",
         docFingerprint(array_sort(tokensCol($"text"))).as("key"))
-      .persistSubstrate() // corpus build + stream probe + exact check all read it
+      .persist() // corpus build + stream probe + exact check all read it
     val corpus = keys.filter($"doc_id" % 3 =!= 0)
     val stream = keys.filter($"doc_id" % 3 === 0)
     // key < P and aj < P, so aj*key < 2^62: no overflow
@@ -2101,7 +2100,7 @@ object DedupQueries extends QueryGroup {
     val base = cdcBase(Tables.load(spark, dir, "documents")
         .select($"doc_id".cast("long").as("doc_id"),
           tokensCol(lower($"text")).as("t")))
-      .persistSubstrate() // read twice: chunk explode + final reassembly join
+      .persist() // read twice: chunk explode + final reassembly join
     val chunks = cdcChunks(base)
     val firsts = chunks.groupBy($"fp").agg(min($"okey").as("first_okey"))
     val kept = chunks.join(firsts, Seq("fp"))

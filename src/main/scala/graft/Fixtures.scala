@@ -5,7 +5,6 @@ import java.nio.file.{FileSystemException, Files, StandardCopyOption}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
-import graft.operators.Substrate.SubstrateOps
 
 /** The one owner of session-memoized state and generated fixture
   * directories: every query that keeps a substrate, a written table or
@@ -17,8 +16,9 @@ import graft.operators.Substrate.SubstrateOps
   *     lock; one `onApplicationEnd` listener per session drops all of
   *     that session's entries, so a long-lived multi-session embedding
   *     does not pin dead sessions. [[evict]] drops one entry early.
-  *   - [[persisted]]: `once` over DataFrames that are persisted
-  *     (`persistSubstrate`) and built eagerly on first use, and again
+  *   - [[persisted]]: `once` over DataFrames that are persisted (at
+  *     `spark.sql.defaultCacheStorageLevel`, read when the frame is
+  *     persisted) and built eagerly on first use, and again
   *     after an external `spark.catalog.clearCache()` (Bench's per-key
   *     cache lifecycle) — the memo keeps the frames, so re-armed blocks
   *     keep their layout. Both happen under the lock, so two concurrent
@@ -62,7 +62,7 @@ object Fixtures {
     // built eagerly: under AQE a cached plan's partitioning is visible to
     // the planner only once the cache is built
     if (unarmed(frames).nonEmpty)
-      synchronized(unarmed(frames).foreach(_.persistSubstrate().count()))
+      synchronized(unarmed(frames).foreach(_.persist().count()))
     frames
   }
 

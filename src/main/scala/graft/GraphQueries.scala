@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Substrate.SubstrateOps
 
 /** Identity-graph operators (SURVEY §2.4): connected components over an
   * equivalence-edge table (J7 idmap clustering) and the bounded reference
@@ -142,9 +141,10 @@ object GraphQueries extends QueryGroup {
       |UNION ALL SELECT seed, node, 1 FROM d1
       |UNION ALL SELECT seed, node, 2 FROM d2""".stripMargin
 
-  /** J6: the reconcile fixpoint end-to-end — Reconcile.fixpoint driven
-    * by two data-backed reconcilers until the equivalence-edge set
-    * stops growing (`reconciler.py:34-125`: the URI/name passes plus
+  /** J6: the reconcile fixpoint end-to-end — Reconcile.frontierFixpoint
+    * driven by two data-backed, node-anchored reconcilers until no new
+    * node appears, so the equivalence-edge set stops growing
+    * (`reconciler.py:34-125`: the URI/name passes plus
     * the collector crawl, repeated until `issubset`):
     *   crawl — every relationship edge whose subject already appears
     *           in the current edge set (the collector pass);
@@ -156,9 +156,10 @@ object GraphQueries extends QueryGroup {
     * the final edge set is seed ∪ every graph edge whose source is
     * forward-reachable from the seed nodes.
     *
-    * Scale: each round is one distributed semi-join against the
-    * (bucketable) relationship table; per round ONE scalar (the edge
-    * count) reaches the driver — g1's convergence discipline. */
+    * Scale: each layer is one distributed join of the frontier against
+    * the (bucketable) relationship table; per round (two layers) ONE
+    * scalar (the new-node count) reaches the driver — g1's convergence
+    * discipline. */
   def reconcileFixpoint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // RAW edge unions — no distinct — PERSISTED: the fixpoint dedups
@@ -184,7 +185,7 @@ object GraphQueries extends QueryGroup {
         concat(lit("n"), $"c_nationkey").as("dst")))
       .union(su.select(concat(lit("s"), $"s_suppkey").as("src"),
         concat(lit("n"), $"s_nationkey").as("dst")))
-      .persistSubstrate()
+      .persist()
     // groupBy-min + join, not min-over-partition: a boilerplate name is
     // a hot window partition that sorts, while the aggregate combines
     // map-side (the repo-wide name-twin rule; same shape as the build
@@ -198,7 +199,7 @@ object GraphQueries extends QueryGroup {
       .filter($"p_partkey" =!= $"m")
       .select(concat(lit("p"), $"p_partkey").as("src"),
         concat(lit("p"), $"m").as("dst"))
-      .persistSubstrate()
+      .persist()
     // node-anchored expanders (src ∈ input nodes) — the
     // frontierFixpoint contract; per-round cost ∝ frontier fan-out.
     // The frontier is BROADCAST: it is bounded by one round's fan-out
@@ -275,7 +276,7 @@ object GraphQueries extends QueryGroup {
     val symRaw = e.union(e.select($"dst".as("src"), $"src".as("dst")))
     val sym = symRaw
       .repartition(operators.Substrate.scaledPartitions(symRaw), $"src")
-      .dropDuplicates("src", "dst").persistSubstrate()
+      .dropDuplicates("src", "dst").persist()
     val deg = sym.groupBy($"src").agg(count(lit(1)).as("outdeg"))
     var rank = deg.select($"src".as("node"), lit(1000L).as("rank"))
     for (_ <- 1 to 3) {
@@ -466,7 +467,7 @@ object GraphQueries extends QueryGroup {
       .select(($"l_partkey" * 2L).as("src"), ($"l_suppkey" * 2L + 1L).as("dst"))
       .distinct()
     val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
-      .distinct().persistSubstrate() // read every round
+      .distinct().persist() // read every round
     var lbl = sym.select($"src".as("node")).distinct()
       .select($"node", $"node".as("lbl"))
     for (_ <- 1 to LpRounds) {
@@ -582,7 +583,7 @@ object GraphQueries extends QueryGroup {
     val e = po.as("a").join(po.as("b"), "ok")
       .filter($"a.p" < $"b.p")
       .select($"a.p".cast("long").as("u"), $"b.p".cast("long").as("v"))
-      .distinct().persistSubstrate() // degree agg + intra-edge agg + |E|
+      .distinct().persist() // degree agg + intra-edge agg + |E|
     val mRow = e.agg(count(lit(1)).as("m"))
     val deg = e.select(explode(array($"u", $"v")).as("n"))
       .groupBy($"n").agg(count(lit(1)).as("d"))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +41,7 @@ object IncrementalQueries extends QueryGroup {
     def isRefOnly(c: Column) = c % 4 === 2
     val ids = Tables.load(spark, dir, "customer")
       .select(col("c_custkey").cast("long").as("id"))
-      .persistSubstrate() // snapshot scan is reused by edges / standing / deltas
+      .persist() // snapshot scan is reused by edges / standing / deltas
 
     // snapshot edge set and standing inbound counts
     val e0 = ids.select($"id".as("src"), (($"id" * 7 + 3) % 100).as("dst"))
@@ -245,7 +244,7 @@ object IncrementalQueries extends QueryGroup {
       .select($"o_orderkey".cast("long").as("k"),
         ($"o_orderkey" % 16).cast("long").as("grp"),
         RelationalQueries.cents($"o_totalprice").as("pc"))
-      .persistSubstrate() // log derivation + merge + group stats all read this
+      .persist() // log derivation + merge + group stats all read this
     val log =
       base.filter($"k" % 3 === 0)
         .select($"k", lit(1L).as("ver"), lit("u").as("op"),

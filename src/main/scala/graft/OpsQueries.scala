@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.DateLib
@@ -356,7 +355,7 @@ object OpsQueries extends QueryGroup {
       concat(lit("city"), ck % 23).as("city"),
       concat(lit("street"),
         when(ck % 5 === 0, (ck + 1) % 97).otherwise(ck % 97)).as("street"))
-    val recs = recsA.union(recsB).persistSubstrate() // blocking join + final label join
+    val recs = recsA.union(recsB).persist() // blocking join + final label join
     val lhs = recs.select($"nm".as("k"), $"rid".as("ra"), $"city".as("ca"), $"street".as("sa"))
     val rhs = recs.select($"nm".as("k"), $"rid".as("rb"), $"city".as("cb"), $"street".as("sb"))
     val scored = blockingJoin(lhs, rhs).filter($"ra" < $"rb")

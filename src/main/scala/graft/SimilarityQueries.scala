@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -276,7 +275,7 @@ object SimilarityQueries extends QueryGroup {
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val base = quantized(spark, dir).persistSubstrate() // feeds codebook + assign + search
+    val base = quantized(spark, dir).persist() // feeds codebook + assign + search
     val step = base.count() / IvfLists
     val centsRow = base
       .filter($"vec_id" % step === 0 && $"vec_id" < step * IvfLists)
@@ -351,7 +350,7 @@ object SimilarityQueries extends QueryGroup {
     import spark.implicits._
     val MaxProbe = 8
     val levels = Seq(1, 2, 4, 8).toDF("nprobe")
-    val base = quantized(spark, dir).persistSubstrate()
+    val base = quantized(spark, dir).persist()
     val step = base.count() / IvfLists
     val centsRow = base
       .filter($"vec_id" % step === 0 && $"vec_id" < step * IvfLists)
@@ -488,7 +487,7 @@ object SimilarityQueries extends QueryGroup {
       // dequantization HOFs into the probe join's output, running them
       // once per (probe, vec) PAIR instead of once per vector — a
       // NQueries-fold recompute that cost 10x wall-clock at sf1
-      .persistSubstrate()
+      .persist()
     val probes = deq.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"qh".as("pq"), $"n2h".as("pn2"))
     val scored = deq.join(broadcast(probes), $"vec_id" =!= $"query_id")
@@ -555,7 +554,7 @@ object SimilarityQueries extends QueryGroup {
   private[graft] def kmeansStateOf(base0: DataFrame): (DataFrame, DataFrame) = {
     val spark = base0.sparkSession
     import spark.implicits._
-    val base = base0.persistSubstrate()
+    val base = base0.persist()
     val step = base.count() / KmK
     def collapse(cents: DataFrame): DataFrame =
       cents.agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
@@ -638,7 +637,7 @@ object SimilarityQueries extends QueryGroup {
     * that tell an operator when a retrain IS due. */
   def ivfAppend(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val all = quantized(spark, dir).persistSubstrate()
+    val all = quantized(spark, dir).persist()
     val (cents1, a2) = kmeansStateOf(all.filter($"vec_id" % 10 =!= 9))
     val centsRow = cents1
       .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
@@ -676,7 +675,7 @@ object SimilarityQueries extends QueryGroup {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val TruncD = 16; val K = 5; val Coarse = 20
-    val base = quantized(spark, dir).persistSubstrate()
+    val base = quantized(spark, dir).persist()
     val probes = base.filter($"vec_id" < NQueries)
       .select($"vec_id".as("query_id"), $"q".as("pq"), $"n2".as("pn2"))
     val trunc = (c: Column) => slice(c, 1, TruncD)
@@ -691,7 +690,7 @@ object SimilarityQueries extends QueryGroup {
           functions.VecMath.dotCol(trunc($"q"), trunc($"q")) -
           lit(2L) * functions.VecMath.dotCol(trunc($"q"), trunc($"pq")))
           .as("d2_trunc"))
-      .persistSubstrate() // exact ranking + coarse/rerank both read this
+      .persist() // exact ranking + coarse/rerank both read this
     val exact = pairs.withColumn("rk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"d2_full".asc, $"vec_id".asc)))
       .filter($"rk" <= K).select($"query_id", $"vec_id", $"rk")
@@ -765,7 +764,7 @@ object SimilarityQueries extends QueryGroup {
   def ivfDelete(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import TextQueries.intDiv
-    val all = quantized(spark, dir).persistSubstrate()
+    val all = quantized(spark, dir).persist()
     val (_, a2) = kmeansStateOf(all)
     val tomb = all.filter($"vec_id" % 7 === 3).select($"vec_id")
     val live = a2.join(tomb, Seq("vec_id"), "left_anti")
@@ -955,7 +954,7 @@ object SimilarityQueries extends QueryGroup {
   private[graft] def pqScored(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val base = quantized(spark, dir).persistSubstrate()
+    val base = quantized(spark, dir).persist()
     val step = base.count() / KmK
     val subs = base.select($"vec_id",
         explode(transform(sequence(lit(0), lit(PqM - 1)), m =>
@@ -963,7 +962,7 @@ object SimilarityQueries extends QueryGroup {
             slice($"q", m * PqD + 1, lit(PqD)).as("qm")))).as("s"))
       .select($"vec_id", $"s.m".as("m"), $"s.qm".as("qm"))
       .withColumn("qn2", functions.VecMath.dotCol($"qm", $"qm"))
-      .persistSubstrate()
+      .persist()
     def collapse(c: DataFrame): DataFrame = c.groupBy($"m")
       .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
     def assign(centsByM: DataFrame): DataFrame =
@@ -1149,8 +1148,8 @@ object SimilarityQueries extends QueryGroup {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val (cents1, a2raw) = kmeansState(spark, dir)
-    val a2 = a2raw.persistSubstrate()
-    val coarse = cents1.persistSubstrate()
+    val a2 = a2raw.persist()
+    val coarse = cents1.persist()
     val step = a2.count() / KmK
     val resid = a2.join(coarse.select($"cid", $"cv"), "cid")
       .select($"vec_id", $"cid",
@@ -1161,7 +1160,7 @@ object SimilarityQueries extends QueryGroup {
             slice($"r", m * PqD + 1, lit(PqD)).as("qm")))).as("s"))
       .select($"vec_id", $"cid", $"s.m".as("m"), $"s.qm".as("qm"))
       .withColumn("qn2", functions.VecMath.dotCol($"qm", $"qm"))
-      .persistSubstrate()
+      .persist()
     def collapse(c: DataFrame): DataFrame = c.groupBy($"m")
       .agg(sort_array(collect_list(struct($"pcid", $"cv", $"cn2"))).as("cents"))
     def assign(centsByM: DataFrame): DataFrame =
@@ -1185,7 +1184,7 @@ object SimilarityQueries extends QueryGroup {
       .agg(sort_array(collect_list(struct($"pos", $"mm"))).as("pm"))
       .select($"m", $"pcid", transform($"pm", _.getField("mm")).as("cv"))
       .withColumn("cn2", functions.VecMath.dotCol($"cv", $"cv"))
-      .persistSubstrate()
+      .persist()
     val pa2 = assign(collapse(pc1))
     val pIdx = operators.GlobalRank.withRank(
       pc1.select($"m", $"pcid"), "idx", $"m".asc, $"pcid".asc)
@@ -1322,7 +1321,7 @@ object SimilarityQueries extends QueryGroup {
     val scored = base.join(broadcast(probes), $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id", $"label", $"plabel",
         cosMilli($"pq", $"q", $"pn2", $"n2").as("cos_milli"))
-      .persistSubstrate() // one scan feeds the positive max and the negative top-k
+      .persist() // one scan feeds the positive max and the negative top-k
     val pos = scored.filter($"label" === $"plabel")
       .groupBy($"query_id").agg(max($"cos_milli").as("pos_milli"))
     // negative top-5 via the bounded aggregator (corpus-scale scan);
@@ -1413,10 +1412,10 @@ object SimilarityQueries extends QueryGroup {
       .join(langOf, $"vec_id" === $"doc_id").drop("doc_id")
     val en = base.filter($"lang" === "en")
       .select($"vec_id".as("en_id"), $"q".as("eq"), $"n2".as("en2"))
-      .persistSubstrate() // three map-only cross passes re-read it
+      .persist() // three map-only cross passes re-read it
     val xx = base.filter($"lang" =!= "en")
       .select($"vec_id".as("xx_id"), $"q".as("xq"), $"n2".as("xn2"))
-      .persistSubstrate() // broadcast side of every pass
+      .persist() // broadcast side of every pass
     // the cross is REGENERATED per pass (def, not val+persist): a
     // quadratic intermediate must never be a cache resident at 100 TB,
     // and each regeneration is a map-only broadcast join — no shuffle
@@ -1517,7 +1516,7 @@ object SimilarityQueries extends QueryGroup {
       .select($"en_id", $"xx_id",
         cosMilli($"eq", $"xq", $"en2", $"xn2").as("cos_milli"))
       .filter($"cos_milli".isNotNull)
-      .persistSubstrate()
+      .persist()
     val sx = topKSum(scored, "en_id", "xx_id", "sx", K)
     val sy = topKSum(scored, "xx_id", "en_id", "sy", K)
     scored.join(sx, "en_id").join(sy, "xx_id")

@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -105,7 +104,7 @@ object SourceQueries extends QueryGroup {
   def imageNearDup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val bands = imageBands(spark, dir)
-      .persistSubstrate() // both sides of the band self-join
+      .persist() // both sides of the band self-join
     val e = bands.select($"doc_id", $"b0", $"b1", $"b2", $"b3",
       posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("j", "v")))
     e.as("a").join(e.as("b"),
@@ -177,7 +176,7 @@ object SourceQueries extends QueryGroup {
     val e = imageBands(spark, dir)
       .select($"doc_id",
         posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("j", "v")))
-      .persistSubstrate()
+      .persist()
     val counts = e.groupBy($"j", $"v").agg(count(lit(1)).as("n"))
     e.join(counts, Seq("j", "v"))
       .groupBy($"doc_id")

@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -220,7 +219,7 @@ object StreamQueries extends QueryGroup {
     // size(sid) below the cache re-inlines the whole shingle HOF chain
     // into the predicate — measured 94 s vs 4 s at the sf1 stress scale
     val sids = DedupQueries.shingleTableOf(docs)
-      .persistSubstrate() // corpus index + stream probes
+      .persist() // corpus index + stream probes
     val nz = sids.filter(size($"sid") > 0)
     val idx = DedupQueries.bandIndex(nz.filter($"doc_id" % 3 =!= 0))
       .groupBy($"band_idx", $"band_hash").agg(count(lit(1)).as("n"))
@@ -259,18 +258,18 @@ object StreamQueries extends QueryGroup {
     val stream = docs.filter($"doc_id" % 3 === 0)
     // the maintained index: both tables MATERIALIZED (at 100 TB these
     // are the on-disk index files); each batch appends its own rows
-    var sids = DedupQueries.shingleTableOf(corpus).persistSubstrate()
+    var sids = DedupQueries.shingleTableOf(corpus).persist()
     var bands = DedupQueries.bandIndex(
-      sids.filter(size($"sid") > 0)).persistSubstrate()
+      sids.filter(size($"sid") > 0)).persist()
     val decisions = Seq(stream.filter($"doc_id" < NeardupCut),
         stream.filter($"doc_id" >= NeardupCut)).map { b =>
       // one hashing pass per batch: the same shingle table decides and
       // then joins the index
-      val bSids = DedupQueries.shingleTableOf(b).persistSubstrate()
+      val bSids = DedupQueries.shingleTableOf(b).persist()
       val dec = streaming.StreamingOps.neardupAdmit(bSids, sids, bands)
-      sids = sids.unionByName(bSids).persistSubstrate()
+      sids = sids.unionByName(bSids).persist()
       bands = bands.unionByName(DedupQueries.bandIndex(
-        bSids.filter(size($"sid") > 0))).persistSubstrate()
+        bSids.filter(size($"sid") > 0))).persist()
       dec
     }
     decisions.reduce(_ unionByName _)
@@ -450,21 +449,21 @@ object StreamQueries extends QueryGroup {
     val docs = Tables.load(spark, dir, "documents").select($"doc_id", $"text")
     val corpus = docs.filter($"doc_id" % 3 =!= 0)
     val stream = docs.filter($"doc_id" % 3 === 0)
-    var sids = DedupQueries.shingleTableOf(corpus).persistSubstrate()
+    var sids = DedupQueries.shingleTableOf(corpus).persist()
     val corpusBands = DedupQueries.bandIndex(sids.filter(size($"sid") > 0))
     val hot = corpusBands.groupBy($"band_idx", $"band_hash")
       .agg(count(lit(1)).as("n")).filter($"n" > NeardupCapC)
-      .select($"band_idx", $"band_hash").persistSubstrate()
+      .select($"band_idx", $"band_hash").persist()
     var bands = corpusBands
-      .join(hot, Seq("band_idx", "band_hash"), "left_anti").persistSubstrate()
+      .join(hot, Seq("band_idx", "band_hash"), "left_anti").persist()
     val decisions = Seq(stream.filter($"doc_id" < NeardupCut),
         stream.filter($"doc_id" >= NeardupCut)).map { b =>
-      val bSids = DedupQueries.shingleTableOf(b).persistSubstrate()
+      val bSids = DedupQueries.shingleTableOf(b).persist()
       val dec = streaming.StreamingOps.neardupAdmitCapped(bSids, sids, bands, hot)
-      sids = sids.unionByName(bSids).persistSubstrate()
+      sids = sids.unionByName(bSids).persist()
       bands = bands.unionByName(
         DedupQueries.bandIndex(bSids.filter(size($"sid") > 0))
-          .join(hot, Seq("band_idx", "band_hash"), "left_anti")).persistSubstrate()
+          .join(hot, Seq("band_idx", "band_hash"), "left_anti")).persist()
       dec
     }
     decisions.reduce(_ unionByName _)

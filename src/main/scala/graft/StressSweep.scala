@@ -41,8 +41,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * (stamped into the artifact as `env_conf`) and `SPARK_GRAFT_SWEEP_ONLY`
   * (the key battery). The memory-pressure (spill) regime squeezes the
   * unified pool so heavy shuffles, aggregations and persists must take
-  * the spill path; nonzero spill is the proof it engaged:
-  *   SPARK_GRAFT_CONF="spark.memory.fraction=0.15;spark.graft.substrateStorageLevel=DISK_ONLY"
+  * the spill path, and puts every engine cache (a plain `persist()`)
+  * on disk; nonzero spill is the proof it engaged:
+  *   SPARK_GRAFT_CONF="spark.memory.fraction=0.15;spark.sql.defaultCacheStorageLevel=DISK_ONLY"
   *   SPARK_GRAFT_SWEEP_ONLY=la_build_pipeline,la_daily_run,t_corpus_pipeline,j6_reconcile_fixpoint,g1_connected_components,d2_minhash_lsh,k2_nt_triples,st8c_stream_admit_capped
   * Leave the contract-quadratic pair-listers (j17, d4, d19, d13, st8,
   * m1v) out of such a battery: under a starved pool their quadratic

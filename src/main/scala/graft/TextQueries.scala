@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Substrate.SubstrateOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -238,7 +237,7 @@ object TextQueries extends QueryGroup {
     val toks = Tables.load(spark, dir, "documents")
       .select($"source", explode(tokensCol(lower($"text"))).as("tok"))
       .select($"source", $"tok", wordHash($"tok").as("h"))
-      .persistSubstrate() // registers + exact truth
+      .persist() // registers + exact truth
     val regs = toks
       .select($"source", pmod(lit(functions.VecMath.aj(60)) * $"h" +
         lit(functions.VecMath.bj(60)), lit(HashP)).as("h2"))
@@ -317,7 +316,7 @@ object TextQueries extends QueryGroup {
     val toks = Tables.load(spark, dir, "documents")
       .select(explode(tokensCol(lower($"text"))).as("tok"))
       .select($"tok", wordHash($"tok").as("h"))
-      .persistSubstrate() // sketch build + exact ground truth both read it
+      .persist() // sketch build + exact ground truth both read it
     val cells = toks
       .select(explode(array((0 until CmsD).map(j =>
         struct(lit(j).as("row"), bucket(j, $"h").as("bucket"))): _*)).as("c"))
@@ -640,7 +639,7 @@ object TextQueries extends QueryGroup {
           array_distinct(transform(sequence(lit(1), size($"t") - 1), i =>
             concat_ws(" ", element_at($"t", i), element_at($"t", i + 1)))))
           .otherwise(array().cast("array<string>")).as("bg"))
-      .persistSubstrate() // feeds the df aggregation AND the per-doc join
+      .persist() // feeds the df aggregation AND the per-doc join
     val exploded = bigrams.select($"doc_id", explode($"bg").as("b"))
     val df = exploded.groupBy($"b").agg(count(lit(1)).as("df"))
     val perDoc = exploded.join(df, "b")
@@ -898,7 +897,7 @@ object TextQueries extends QueryGroup {
       .select(explode(tokensCol(lower($"text"))).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("cnt"))
       .select(regexp_replace($"w", "(.)", "|$1|").as("s"), $"cnt")
-      .persistSubstrate()
+      .persist()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     for (r <- 1 to rounds) {
       val syms = split(btrim($"s", lit("|")), "\\|\\|")
@@ -914,7 +913,7 @@ object TextQueries extends QueryGroup {
       merges += ((r, bp, sup))
       val next = words
         .select(replace($"s", lit(bp), lit(bp.replace("||", ""))).as("s"), $"cnt")
-        .persistSubstrate()
+        .persist()
       next.count() // materialize before dropping the parent
       words.unpersist()
       words = next
@@ -1246,7 +1245,7 @@ object TextQueries extends QueryGroup {
     import spark.implicits._
     val docs = Tables.load(spark, dir, "documents")
       .select($"doc_id", $"lang", tokensCol($"text").as("t"))
-      .persistSubstrate() // two token passes: bucket stats + per-doc scoring
+      .persist() // two token passes: bucket stats + per-doc scoring
     val tok = docs.select($"doc_id", $"lang",
       explode($"t").as("w"))
       .select($"doc_id", $"lang", (wordHash($"w") % DsirDim).as("bucket"))
@@ -1334,7 +1333,7 @@ object TextQueries extends QueryGroup {
     import spark.implicits._
     val docs = Tables.load(spark, dir, "documents")
       .select($"doc_id", tokensCol($"text").as("t"))
-      .persistSubstrate() // token pass feeds positions, count tables, final join
+      .persist() // token pass feeds positions, count tables, final join
     val pos = docs
       .select($"doc_id",
         when(size($"t") >= 3,

@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * for suffix stripping", Program 14(3), 1980) — the production-grade
   * `stemmed` word-query option the reference's cts layer gets from its
   * search engine (`pipeline/storage/marklogic/cts.py:2`), replacing
-  * round 11's three-stage light stem (kept as the documented fallback,
-  * [[graft.plans.LuxCompiler.stemTerm]]).
+  * round 11's three-stage light stem; it is the only stemmer a word
+  * leaf uses.
   *
   * Semantics follow the published algorithm with the reference C
   * implementation's conventions: words of length <= 2 are returned

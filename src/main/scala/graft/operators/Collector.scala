@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Substrate.SubstrateOps
 
 /** J5: the equivalence-crawl collector WITH its garbage filters — the
   * predicates that keep the crawl from absorbing junk
@@ -70,8 +69,8 @@ object Collector {
     import spark.implicits._
 
     val attrs = nodes.select($"node", $"rtype", $"byear", $"dyear", $"refs")
-      .persistSubstrate()
-    val e = edges.select($"src", $"dst").persistSubstrate()
+      .persist()
+    val e = edges.select($"src", $"dst").persist()
     // fanout cap: per (src, prefix) counts, computed once — applies to
     // every NON-seed expansion (the reference caps xrec equivalents
     // only, collector.py:203-218)
@@ -80,7 +79,7 @@ object Collector {
       val hot = withPfx.groupBy($"src", $"pfx").agg(count(lit(1)).as("n"))
         .filter($"n" > 2).select($"src", $"pfx")
       withPfx.join(hot, Seq("src", "pfx"), "left_anti").select($"src", $"dst")
-        .persistSubstrate()
+        .persist()
     }
     val rootAttrs = seeds.select($"node".as("seed"))
       .join(attrs, $"node" === $"seed")

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Substrate.SubstrateOps
 
 /** Iterative graph algorithms as driver-controlled DataFrame loops — the
   * Spark re-expression of the reference's identity-graph machinery
@@ -106,7 +105,7 @@ object Graph {
       .union(star.select($"dst".as("src"), $"src".as("dst")))
     val sym = symRaw
       .repartition(Substrate.scaledPartitions(symRaw), $"src")
-      .dropDuplicates("src", "dst").persistSubstrate()
+      .dropDuplicates("src", "dst").persist()
     var labels = sym.select($"src".as("node")).distinct()
       .withColumn("label", $"node").localCheckpoint()
     // DELTA propagation: only nodes whose label changed last round send
@@ -177,7 +176,7 @@ object Graph {
   def boundedSssp(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select($"src", $"dst", $"w".cast("long").as("w")).persistSubstrate()
+    val e = edges.select($"src", $"dst", $"w".cast("long").as("w")).persist()
     var dist = seeds.select($"node").distinct()
       .withColumn("dist", lit(0L)).localCheckpoint()
     var frontier = dist
@@ -213,7 +212,7 @@ object Graph {
   def bfs(edges: DataFrame, seeds: DataFrame, maxDist: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select($"src", $"dst").persistSubstrate()
+    val e = edges.select($"src", $"dst").persist()
     var visited = seeds.select($"node").distinct()
       .withColumn("dist", lit(0)).localCheckpoint()
     var frontier = visited.select($"node")

@@ -1,42 +1,22 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
-/** The engine-owned cache regime for ENGINE-INTERNAL CORPUS-SHAPED
-  * CACHES — originally (round 15) the iterative-operator substrates a
-  * fixpoint loop probes every round (edge tables, name indexes, day-0
-  * bases); broadened in round 16 to every `.persist()` in the query
-  * layer (LSH shingle/signature/band tables, the lux entity+triple
-  * substrate, token tables, monotone stream indexes — all tables whose
-  * size scales with the corpus). Plain `.persist()` remains only for
-  * provably batch-bounded deltas (StreamingOps' per-batch tables) and
-  * O(1)-size grids (JoinPlanner sketches), where a pressure profile
-  * gains nothing by spilling them.
+/** Partition sizing for the engine's corpus-shaped caches: the
+  * fixpoint substrates (edge tables, name indexes, day-0 bases), LSH
+  * shingle/signature/band tables, the lux entity and triple substrate.
   *
-  * Why this exists (round-14 spill-regime finding): on a squeezed
-  * executor pool, a stage that MATERIALIZES a MEMORY_AND_DISK substrate
-  * in the same stage as its aggregations holds in-progress UNROLL
-  * reservations — storage-side memory that is not evictable at any
-  * storageFraction while the unroll runs — and the same tasks'
-  * hash-aggregate first page finds a zero-free pool
-  * (`HashAggregateExec.createHashMap` OOM on la_build / j6 at 8 GiB ×
-  * fraction 0.15). DISK_ONLY skips the MemoryStore entirely (no unroll
-  * reservation), so execution keeps the whole pool. Round 14 proved the
-  * fix with the cluster-wide `spark.sql.defaultCacheStorageLevel` knob;
-  * that leaves the lesson as deployment folklore — a deployment that
-  * misses the doc re-discovers the OOM. This config makes the regime
-  * the ENGINE's: every fixpoint substrate persist routes through here,
-  * and a pressure profile sets ONE graft-owned key instead of rewriting
-  * every `persist()` in the application.
-  *
-  * Default stays MEMORY_AND_DISK — the right level when the pool is
-  * healthy (the common case; a round-probed substrate in memory is the
-  * point of persisting it). Pressure deployments set DISK_ONLY.
-  *
-  * Reference frame: the reference survives memory pressure because
-  * Postgres spills for it (`storage/cache/postgres.py:117-140`); this
-  * engine survives because its operators declare their cache regime.
+  * Their storage level is Spark's: every engine cache is a plain
+  * `persist()`, which reads `spark.sql.defaultCacheStorageLevel` at
+  * call time (default MEMORY_AND_DISK). A memory-pressure profile sets
+  * that key to DISK_ONLY. The reason (round-14 spill-regime finding):
+  * on a squeezed executor pool, a stage that materializes a
+  * MEMORY_AND_DISK cache in the same stage as its aggregations holds
+  * an in-progress unroll reservation that is not evictable at any
+  * storageFraction, and the same tasks' hash-aggregate first page finds
+  * no free pool (`HashAggregateExec.createHashMap` OOM on la_build / j6
+  * at 8 GiB × fraction 0.15). DISK_ONLY skips the MemoryStore, so
+  * execution keeps the whole pool.
   *
   * Partition counts follow the substrate's bytes ([[leafBytes]]), and
   * the caller decides whether the cores count is a floor:
@@ -53,8 +33,6 @@ import org.apache.spark.storage.StorageLevel
   *     near-empty tasks. It takes the byte count alone.
   */
 object Substrate {
-
-  val ConfKey = "spark.graft.substrateStorageLevel"
 
   /** Advisory bytes per partition for byte-scaled substrate builds
     * (below). 64 MiB: small enough that one straggler partition is a
@@ -127,26 +105,5 @@ object Substrate {
       case r: LocalRelation => r.stats.sizeInBytes
       case _ => BigInt(0) // LogicalRDD etc.: no trustworthy size
     }.filter(b => b > 0 && b < junk).sum
-  }
-
-  /** Resolution order (advice r15): the graft key REFINES the cluster
-    * knob rather than overriding it. When `spark.graft.
-    * substrateStorageLevel` is unset, fall back to the session's
-    * `spark.sql.defaultCacheStorageLevel` — the knob the round-14
-    * pressure recipe documented — so a deployment that sets ONLY the
-    * cluster-wide level to DISK_ONLY still gets DISK_ONLY at the
-    * substrate sites (which previously honored it via bare persist()),
-    * instead of a silent MEMORY_AND_DISK that can re-hit the
-    * unroll-reservation OOM this regime exists to prevent. */
-  def level(spark: SparkSession): StorageLevel =
-    StorageLevel.fromString(spark.conf.getOption(ConfKey).getOrElse(
-      spark.conf.get("spark.sql.defaultCacheStorageLevel", "MEMORY_AND_DISK")))
-
-  /** `.persistSubstrate()` — drop-in for `.persist()` at substrate
-    * sites; reads the session's configured regime at call time. */
-  implicit final class SubstrateOps[T](private val ds: Dataset[T])
-      extends AnyVal {
-    def persistSubstrate(): Dataset[T] =
-      ds.persist(level(ds.sparkSession))
   }
 }

@@ -371,44 +371,6 @@ object LuxCompiler {
       case c => c.toString
     }
 
-  /** Light plural/verbal suffix fold — the DOCUMENTED FALLBACK stemmer
-    * (the production path is classic Porter, `functions/Porter.scala`,
-    * which the stemmed word leaf uses since round 12). Three stages:
-    * plural (ies→y, s-drop), verbal (ing/ed-drop), final-e drop (so
-    * merging/merged/merges and merge all fold to "merg"). [[stemCol]]
-    * (token side) and [[stemTerm]] (query side) implement IDENTICAL
-    * rules. Input must be lowercase. */
-  def stemTerm(s: String): String = {
-    val p =
-      if (s.endsWith("ies") && s.length > 4) s.dropRight(3) + "y"
-      else if (s.endsWith("s") && !s.endsWith("ss") && s.length > 3) s.dropRight(1)
-      else s
-    val v =
-      if (p.endsWith("ing") && p.length > 5) p.dropRight(3)
-      else if (p.endsWith("ed") && p.length > 4) p.dropRight(2)
-      else p
-    if (v.endsWith("e") && v.length > 3) v.dropRight(1) else v
-  }
-
-  /** Column twin of [[stemTerm]] — same three stages, token input must
-    * be lowercase. */
-  def stemCol(t: Column): Column = {
-    def pluralFold(x: Column): Column =
-      when(x.endsWith("ies") && length(x) > 4,
-        concat(x.substr(lit(1), length(x) - 3), lit("y")))
-        .when(x.endsWith("s") && !x.endsWith("ss") && length(x) > 3,
-          x.substr(lit(1), length(x) - 1))
-        .otherwise(x)
-    def verbalFold(x: Column): Column =
-      when(x.endsWith("ing") && length(x) > 5, x.substr(lit(1), length(x) - 3))
-        .when(x.endsWith("ed") && length(x) > 4, x.substr(lit(1), length(x) - 2))
-        .otherwise(x)
-    def eFold(x: Column): Column =
-      when(x.endsWith("e") && length(x) > 3, x.substr(lit(1), length(x) - 1))
-        .otherwise(x)
-    eFold(verbalFold(pluralFold(t)))
-  }
-
   /** Fold a wildcarded term's literal chars through WordFold while
     * keeping the wildcard metachars themselves. Whitespace produced by
     * the fold (punctuation is a token break since round 13, and literal

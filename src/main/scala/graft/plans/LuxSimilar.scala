@@ -85,10 +85,6 @@ object LuxSimilar {
     }
   }
 
-  /** Parsed form, for compiling directly. */
-  def agentQuery(seed: Seed): Option[Ast] =
-    agentQueryString(seed).map(LuxQL.parse)
-
   /** Catalog for the document substrate the similar query runs over:
     * docs carry text + born/died years; concepts (lang) and sets
     * (source) are hop targets addressed by exact id. */

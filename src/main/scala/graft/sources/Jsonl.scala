@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Substrate.SubstrateOps
 
 /** JSONL/dump ingestion (SURVEY §2.1 S1/S2): gzip JSONL → table with
   * skip-existing semantics — the Spark form of the reference loader
@@ -57,10 +56,9 @@ object Jsonl {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", cr)
       .json(path)
-      // corpus-shaped (the whole parsed dump): substrate regime, not a
-      // bare persist — a pressure deployment's DISK_ONLY knob must
-      // reach the single biggest cache on the ingest path
-      .persistSubstrate()
+      // the single biggest cache on the ingest path: a pressure
+      // profile's spark.sql.defaultCacheStorageLevel=DISK_ONLY reaches it
+      .persist()
     Quarantined(
       good = raw.filter(col(cr).isNull).drop(cr),
       bad = raw.filter(col(cr).isNotNull).select(col(cr).as("raw_line")),

@@ -94,15 +94,6 @@ class LuxParserSpec extends AnyFunSuite {
     // glob translation escapes regex metachars, maps only */?
     assert(LuxCompiler.globToRegex("w?dg*") === "w.dg.*")
     assert(LuxCompiler.globToRegex("a.b*") === "a\\.b.*")
-    // the three-stage light stem fold (plural -> verbal -> final e)
-    assert(LuxCompiler.stemTerm("merges") === "merg")
-    assert(LuxCompiler.stemTerm("merge") === "merg")
-    assert(LuxCompiler.stemTerm("merged") === "merg")
-    assert(LuxCompiler.stemTerm("merging") === "merg")
-    assert(LuxCompiler.stemTerm("queries") === "query")
-    assert(LuxCompiler.stemTerm("query") === "query")
-    assert(LuxCompiler.stemTerm("class") === "class") // ss guard
-    assert(LuxCompiler.stemTerm("as") === "as")       // length guard
   }
 
   test("wildcard and stemmed leaves compile against the substrate") {

@@ -3,74 +3,49 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.Substrate
-import graft.operators.Substrate.SubstrateOps
-
-/** The engine-owned substrate cache regime (round-14 spill-sweep
-  * lesson, made config): `spark.graft.substrateStorageLevel` must reach
-  * the actual persisted level of a fixpoint substrate, read at CALL
-  * time (a long-lived session can flip profiles between jobs), and
-  * default to MEMORY_AND_DISK. */
+/** The engine's one cache-level knob (round-14 spill-sweep lesson):
+  * every engine cache is a plain `persist()`, so Spark's
+  * `spark.sql.defaultCacheStorageLevel` must reach the actual level of
+  * a substrate, read at CALL time (a long-lived session can flip
+  * profiles between jobs), with MEMORY_AND_DISK when it is unset. */
 class SubstrateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("default level is MEMORY_AND_DISK") {
-    spark.conf.unset(Substrate.ConfKey)
-    assert(Substrate.level(spark) === StorageLevel.MEMORY_AND_DISK)
-  }
+  private val Key = "spark.sql.defaultCacheStorageLevel"
 
   test("conf reaches the persisted storage level, read at call time") {
-    val df = Seq(1, 2, 3).toDF("x")
-    spark.conf.set(Substrate.ConfKey, "DISK_ONLY")
+    // the lux substrate takes the Fixtures.persisted path; evict first
+    // so this call persists its frames instead of reusing armed ones
+    LuxQueries.evictSubstrate(spark)
+    spark.conf.set(Key, "DISK_ONLY")
     try {
-      val p = df.persistSubstrate()
-      assert(p.storageLevel === StorageLevel.DISK_ONLY)
-      p.unpersist()
-      // flip back mid-session: the next substrate persist follows
-      spark.conf.unset(Substrate.ConfKey)
-      val q = df.persistSubstrate()
-      assert(q.storageLevel === StorageLevel.MEMORY_AND_DISK)
-      q.unpersist()
-      ()
-    } finally spark.conf.unset(Substrate.ConfKey)
+      val (e, t) = LuxQueries.substrate(spark, TestSpark.sf)
+      assert(e.storageLevel === StorageLevel.DISK_ONLY)
+      assert(t.storageLevel === StorageLevel.DISK_ONLY)
+      // flip back mid-session: the rebuilt substrate follows
+      LuxQueries.evictSubstrate(spark)
+      spark.conf.unset(Key)
+      val (e2, t2) = LuxQueries.substrate(spark, TestSpark.sf)
+      assert(e2.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      assert(t2.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    } finally spark.conf.unset(Key)
   }
 
   test("an operator substrate runs under DISK_ONLY (g1 shape)") {
     // correctness must be level-independent: run connectedComponents
     // under the pressure profile and check the labeling
-    spark.conf.set(Substrate.ConfKey, "DISK_ONLY")
+    spark.conf.set(Key, "DISK_ONLY")
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
       val cc = operators.Graph.connectedComponents(edges)
         .as[(Long, Long)].collect().toMap
       assert(cc === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    } finally spark.conf.unset(Substrate.ConfKey)
-  }
-
-  test("unset graft key falls back to the cluster cache knob (advice r15)") {
-    // the round-14 recipe sets ONLY spark.sql.defaultCacheStorageLevel;
-    // the substrate sites must keep honoring it (they did via bare
-    // persist() before round 15) — the graft key refines, not overrides
-    spark.conf.unset(Substrate.ConfKey)
-    spark.conf.set("spark.sql.defaultCacheStorageLevel", "DISK_ONLY")
-    try assert(Substrate.level(spark) === StorageLevel.DISK_ONLY)
-    finally spark.conf.unset("spark.sql.defaultCacheStorageLevel")
-  }
-
-  test("graft key set wins over the cluster cache knob") {
-    spark.conf.set("spark.sql.defaultCacheStorageLevel", "DISK_ONLY")
-    spark.conf.set(Substrate.ConfKey, "MEMORY_ONLY")
-    try assert(Substrate.level(spark) === StorageLevel.MEMORY_ONLY)
-    finally {
-      spark.conf.unset("spark.sql.defaultCacheStorageLevel")
-      spark.conf.unset(Substrate.ConfKey)
-    }
+    } finally spark.conf.unset(Key)
   }
 
   test("a malformed level fails loudly, not as a silent default") {
-    spark.conf.set(Substrate.ConfKey, "MEMORY_AND_DSIK")
-    try assertThrows[IllegalArgumentException](Substrate.level(spark))
-    finally spark.conf.unset(Substrate.ConfKey)
+    try assertThrows[IllegalArgumentException](spark.conf.set(Key, "MEMORY_AND_DSIK"))
+    finally spark.conf.unset(Key)
   }
 }

@@ -14,7 +14,10 @@
 #   4. the repo benchmark's trace-analysis self-tests (pure Python),
 #   5. the shortest run of the benchmark's seeded search templates
 #      (warm-up plus one round), each output checked against its
-#      DuckDB twin.
+#      DuckDB twin,
+#   6. the shortest run of the benchmark's build workload
+#      (la_build_pipeline on a permuted file split), its output checked
+#      against DuckDB.
 # Usage: tools/gate.sh [sf-dir]       (default /root/testdata/sf0.01)
 # Logs land in /tmp/graft_gate/ stamped with the tree state so the
 # round record can cite "gate ran at <sha/dirty>".
@@ -60,6 +63,8 @@ step oracle python3 tools/check.py "$VDIR" "$SF"
 step diff_selftest python3 tools/stress_diff_selftest.py
 step perfbench_layers python3 perfbench/test_perfbench.py LayerTest
 step perfbench_search python3 perfbench/run.py --workload search --seed 5 \
+  --seconds 0 --trace 0
+step perfbench_build python3 perfbench/run.py --workload build --seed 5 \
   --seconds 0 --trace 0
 
 if [ "$fail" -eq 0 ]; then
