@@ -114,7 +114,7 @@ object Bench {
     }))
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     val spark = Sessions.create("graft-bench", cpus)
     val fns = Queries.queries
     // optional comma-separated filter for local single-query timing; the

@@ -5,7 +5,7 @@ package graft
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = Sessions.create("graft-explain", "4")
+    val spark = Sessions.create("graft-explain", Sessions.cpus)
     val fns = Queries.queries
     val names = if (args.length > 1) args.drop(1).toSeq else Queries.benchNames
     names.foreach { n =>

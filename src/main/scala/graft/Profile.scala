@@ -72,7 +72,7 @@ object Profile {
     require(args.length >= 2, "usage: Profile <sfDir> <query> [query...]")
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     val spark = Sessions.create("graft-profile", cpus)
     val fns = Queries.queries
     val listener = new JobListener

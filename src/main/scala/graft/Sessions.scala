@@ -14,6 +14,14 @@ import org.apache.spark.sql.SparkSession
   * of TIMESTAMP_NTZ, which unix_micros/window() reject.
   */
 object Sessions {
+  /** Local task slots: `SPARK_GRAFT_CPUS`, else this machine's cores. A
+    * fixed default larger than the machine splits the unified memory
+    * pool over slots that never run at once (a 1g driver at
+    * `spark.memory.fraction=0.05` fails with `UNABLE_TO_ACQUIRE_MEMORY`
+    * over 32 slots on a 4-core host). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def create(appName: String, cpus: String): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -253,17 +253,118 @@ object SimilarityQueries extends QueryGroup {
        |SELECT query_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 5""".stripMargin
   }
 
-  private val IvfLists = 16 // coarse centroids
+  /** Codebook size, one for the whole vector-index family: the IVF lists
+    * (v4/v16), the k-means K (v6/v7/v11/v14, d9), and the entries of
+    * each PQ sub-codebook (v8/v10) and of both IVF-PQ codebooks (v9). */
+  private val CodebookK = 16
   private val IvfProbe = 2  // lists probed per query
 
+  /** Squared distance ||q - c||^2 = n2 - 2 q·c + cn2, exact in longs:
+    * the one centroid distance of the codebook kernel and the PQ LUTs. */
+  private def sqDist(q: Column, n2: Column, cv: Column, cn2: Column): Column =
+    n2 - lit(2L) * functions.VecMath.dotCol(q, cv) + cn2
+
+  /** The codebook kernel of the vector-index family: a
+    * `CodebookK`-entry codebook over `train`'s (vec_id, q, n2) rows, one
+    * per value of the subspace key `by` when there is one (the PQ
+    * sub-codebooks, `by = Seq("m")`). Centroids are (by…, cid, cv, cn2)
+    * rows. Seeding is deterministic (every `step`-th vector — the IVF
+    * stand-in for a trained codebook, and the Lloyd start), and all
+    * arithmetic is integer except the d2 comparison, which is exact; ties
+    * go to the lower cid, so the DuckDB oracles replay every step.
+    *
+    * Scale shape: each round is (a) one broadcast of the K-row codebook
+    * collapsed to a single array row per group — assignment is a
+    * map-side argmin fold, no shuffle; (b) one posexplode +
+    * partial-aggregated groupBy((by, cid, pos)) sum — the shuffle carries
+    * only K×dim×partitions pre-combined rows, independent of corpus
+    * size. That is the canonical distributed Lloyd's step; more rounds
+    * repeat (a)+(b). */
+  private[graft] final case class Codebook(train: DataFrame, step: Long,
+      by: Seq[String] = Nil) {
+    /** Every `step`-th vector (below `step * CodebookK`) is a centroid,
+      * `cid = vec_id div step`. */
+    def seed: DataFrame = train
+      .filter(col("vec_id") % step === 0 && col("vec_id") < step * CodebookK)
+      .select(by.map(col) ++ Seq(
+        TextQueries.intDiv(col("vec_id"), lit(step)).as("cid"),
+        col("q").as("cv"), col("n2").as("cn2")): _*)
+
+    /** `df`'s columns plus its nearest centroid `(cid, d2)`. Argmin via
+      * array_min, not array_sort(...)[1]: same struct ordering, but O(K)
+      * with no sorted copy per row (r17; KmeansArgminSpec pins equality
+      * on ties and null scores). */
+    def assign(cents: DataFrame, df: DataFrame = train): DataFrame =
+      Codebook.against(df, cents, by)
+        .withColumn("best", array_min(Codebook.dists))
+        .select(df.columns.map(col) ++ Seq(
+          col("best").getField("cid").as("cid"),
+          col("best").getField("d2").as("d2")): _*)
+
+    /** One Lloyd's round: seed → assign → integer-mean update → re-assign.
+      * Returns (cents1, a2): the trained centroids and the final
+      * assignment, `train`'s columns plus (cid, d2). The mean uses
+      * truncating `div`, matching DuckDB `//` on signed sums. */
+    def lloyd: (DataFrame, DataFrame) = {
+      val keys = by.map(col)
+      val cents1 = assign(seed)
+        .select(keys ++ Seq(col("cid"), posexplode(col("q")).as(Seq("pos", "x"))): _*)
+        .groupBy(keys ++ Seq(col("cid"), col("pos")): _*)
+        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+        .withColumn("mean", expr("s div n"))
+        .groupBy(keys :+ col("cid"): _*)
+        .agg(sort_array(collect_list(struct(col("pos"), col("mean")))).as("pm"))
+        .select(keys ++ Seq(col("cid"),
+          transform(col("pm"), _.getField("mean")).as("cv")): _*)
+        .withColumn("cn2", functions.VecMath.dotCol(col("cv"), col("cv")))
+      (cents1, assign(cents1))
+    }
+  }
+
+  private[graft] object Codebook {
+    /** The whole-vector codebook over a quantized base. The base feeds the
+      * seed, both assignments and the update, so it is persisted here —
+      * the only persist of a training base — and `step` is its count
+      * over `CodebookK`. */
+    def of(base0: DataFrame): Codebook = {
+      val base = base0.persist()
+      Codebook(base.select("vec_id", "q", "n2"), base.count() / CodebookK)
+    }
+
+    /** `df` beside its group's codebook, collapsed into one broadcast
+      * sorted `cents: array<struct<cid, cv, cn2>>` row per group. */
+    private def against(df: DataFrame, cents: DataFrame, by: Seq[String] = Nil): DataFrame = {
+      val row = broadcast(cents.groupBy(by.map(col): _*)
+        .agg(sort_array(collect_list(struct(col("cid"), col("cv"), col("cn2"))))
+          .as("cents")))
+      if (by.isEmpty) df.crossJoin(row) else df.join(row, by)
+    }
+
+    /** The row's (d2, cid) against every centroid in `cents`. */
+    private val dists: Column = transform(col("cents"), c =>
+      struct(sqDist(col("q"), col("n2"), c.getField("cv"), c.getField("cn2")).as("d2"),
+        c.getField("cid").as("cid")))
+
+    /** Probe ranking: the `k` nearest centroids of each probe-set row
+      * (vec_id < NQueries) of `df`, nearest first, as (query_id, pq, pn2,
+      * probe_rank, probe_list). */
+    def probes(df: DataFrame, cents: DataFrame, k: Int): DataFrame =
+      against(df.filter(col("vec_id") < NQueries), cents)
+        .select(col("vec_id").as("query_id"), col("q").as("pq"),
+          col("n2").as("pn2"),
+          posexplode(slice(array_sort(dists), 1, k)).as(Seq("pos", "probe")))
+        .select(col("query_id"), col("pq"), col("pn2"),
+          (col("pos") + 1).as("probe_rank"), col("probe.cid").as("probe_list"))
+  }
+
   /** IVF (inverted-file) ANN — the OTHER standard scale path next to
-    * LSH: partition the corpus into `IvfLists` cells around coarse
+    * LSH: partition the corpus into `CodebookK` cells around coarse
     * centroids, store each vector in its nearest cell, and have each
-    * query probe only its `IvfProbe` nearest cells. Centroids are
-    * picked deterministically (every (n/16)-th vector — the fixture's
-    * stand-in for a k-means codebook, which is just a better centroid
-    * set feeding the identical index/search machinery). Assignment is
-    * exact integer arithmetic: argmin ||v-c||^2 = n2_v - 2 v.c + n2_c,
+    * query probe only its `IvfProbe` nearest cells. Centroids are the
+    * [[Codebook]] seed (every (n/16)-th vector — the fixture's stand-in
+    * for a k-means codebook, which is just a better centroid set feeding
+    * the identical index/search machinery, v7). Assignment is exact
+    * integer arithmetic: argmin ||v-c||^2 = n2_v - 2 v.c + n2_c,
     * tie-broken by cell id, so the DuckDB oracle replays it.
     *
     * Scale shape: the 16-entry codebook is collapsed into ONE broadcast
@@ -273,28 +374,11 @@ object SimilarityQueries extends QueryGroup {
     * query is bounded by nprobe/nlists of the corpus, the IVF
     * contract. */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val base = quantized(spark, dir).persist() // feeds codebook + assign + search
-    val step = base.count() / IvfLists
-    val centsRow = base
-      .filter($"vec_id" % step === 0 && $"vec_id" < step * IvfLists)
-      .select(TextQueries.intDiv($"vec_id", lit(step)).as("cid"),
-        $"q".as("cv"), $"n2".as("cn2"))
-      .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
-    val withDists = base.crossJoin(broadcast(centsRow))
-      .withColumn("dists", array_sort(transform($"cents", c =>
-        struct(($"n2" - lit(2L) * functions.VecMath.dotCol($"q", c.getField("cv"))
-          + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))))
-    val assigned = withDists
-      .select($"vec_id", $"q", $"n2",
-        element_at($"dists", 1).getField("cid").as("list_id"))
-    val probes = withDists.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("query_id"), $"q".as("pq"), $"n2".as("pn2"),
-        explode(slice($"dists", 1, IvfProbe)).as("probe"))
-      .select($"query_id", $"pq", $"pn2", $"probe.cid".as("probe_list"))
-    val scored = assigned.join(broadcast(probes),
-        $"list_id" === $"probe_list" && $"vec_id" =!= $"query_id")
+    val cb = Codebook.of(quantized(spark, dir))
+    val scored = cb.assign(cb.seed)
+      .join(broadcast(Codebook.probes(cb.train, cb.seed, IvfProbe)),
+        $"cid" === $"probe_list" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id",
         cosMilli($"pq", $"q", $"pn2", $"n2").as("cos_milli"))
     topKPerQuery(scored, 5)
@@ -302,10 +386,10 @@ object SimilarityQueries extends QueryGroup {
   private val annIvfOracle: String = {
     val dot = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [v.q[i]*c.cv[i] for i in range(1, len(v.q)+1)]), (x,y)->x+y)"
     s"""WITH base AS ($quantizedSql),
-       |s AS (SELECT COUNT(*) // $IvfLists AS step FROM base),
+       |s AS (SELECT COUNT(*) // $CodebookK AS step FROM base),
        |cents AS (
        |  SELECT vec_id // step AS cid, q AS cv, n2 AS cn2
-       |  FROM base, s WHERE vec_id % step = 0 AND vec_id < step * $IvfLists),
+       |  FROM base, s WHERE vec_id % step = 0 AND vec_id < step * $CodebookK),
        |dists AS (
        |  SELECT v.vec_id, c.cid,
        |    v.n2 - 2 * $dot + c.cn2 AS d2,
@@ -339,10 +423,10 @@ object SimilarityQueries extends QueryGroup {
     * floor division on positive operands.
     *
     * Scale shape: probe assignment ranks ONE broadcast 16-entry
-    * codebook map-side; the swept candidate set is generated once at
-    * the widest budget (rank ≤ 8) and each level filters by probe
-    * rank, so the corpus-side join happens a single time, not once per
-    * level. Exact ground truth is the v1 brute pass over the broadcast
+    * codebook map-side ([[Codebook.probes]]); the swept candidate set is
+    * generated once at the widest budget (rank ≤ 8) and each level
+    * filters by probe rank, so the corpus-side join happens a single
+    * time, not once per level. Exact ground truth is the v1 brute pass over the broadcast
     * query set — at 100 TB you run it on a sampled query set, exactly
     * what NQueries models. */
   def nprobeSweep(spark: SparkSession, dir: String): DataFrame = {
@@ -350,27 +434,11 @@ object SimilarityQueries extends QueryGroup {
     import spark.implicits._
     val MaxProbe = 8
     val levels = Seq(1, 2, 4, 8).toDF("nprobe")
-    val base = quantized(spark, dir).persist()
-    val step = base.count() / IvfLists
-    val centsRow = base
-      .filter($"vec_id" % step === 0 && $"vec_id" < step * IvfLists)
-      .select(TextQueries.intDiv($"vec_id", lit(step)).as("cid"),
-        $"q".as("cv"), $"n2".as("cn2"))
-      .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
-    val withDists = base.crossJoin(broadcast(centsRow))
-      .withColumn("dists", array_sort(transform($"cents", c =>
-        struct(($"n2" - lit(2L) * functions.VecMath.dotCol($"q", c.getField("cv"))
-          + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))))
-    val assigned = withDists
-      .select($"vec_id", $"q", $"n2",
-        element_at($"dists", 1).getField("cid").as("list_id"))
-    val probes = withDists.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("query_id"), $"q".as("pq"), $"n2".as("pn2"),
-        posexplode(slice($"dists", 1, MaxProbe)).as(Seq("pos", "probe")))
-      .select($"query_id", $"pq", $"pn2",
-        ($"pos" + 1).as("probe_rank"), $"probe.cid".as("probe_list"))
-    val scored = assigned.join(broadcast(probes),
-        $"list_id" === $"probe_list" && $"vec_id" =!= $"query_id")
+    val cb = Codebook.of(quantized(spark, dir))
+    val base = cb.train
+    val scored = cb.assign(cb.seed)
+      .join(broadcast(Codebook.probes(base, cb.seed, MaxProbe)),
+        $"cid" === $"probe_list" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"probe_rank", $"vec_id",
         cosMilli($"pq", $"q", $"pn2", $"n2").as("cos_milli"))
     val wiv = Window.partitionBy($"nprobe", $"query_id")
@@ -397,10 +465,10 @@ object SimilarityQueries extends QueryGroup {
   private val nprobeSweepOracle: String = {
     val dot = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [v.q[i]*c.cv[i] for i in range(1, len(v.q)+1)]), (x,y)->x+y)"
     s"""WITH base AS ($quantizedSql),
-       |s AS (SELECT COUNT(*) // $IvfLists AS step FROM base),
+       |s AS (SELECT COUNT(*) // $CodebookK AS step FROM base),
        |cents AS (
        |  SELECT vec_id // step AS cid, q AS cv, n2 AS cn2
-       |  FROM base, s WHERE vec_id % step = 0 AND vec_id < step * $IvfLists),
+       |  FROM base, s WHERE vec_id % step = 0 AND vec_id < step * $CodebookK),
        |dists AS (
        |  SELECT v.vec_id, c.cid,
        |    ROW_NUMBER() OVER (PARTITION BY v.vec_id
@@ -529,62 +597,16 @@ object SimilarityQueries extends QueryGroup {
        |SELECT query_id, rank, vec_id, cos_milli FROM ranked WHERE rank <= 10""".stripMargin
   }
 
-  private val KmK = 16 // codebook size (shared with IVF's list count)
-
-  /** One Lloyd's round over the milli-quantized corpus: seed centroids
-    * (every (n/K)-th vector, as IVF), assign → integer-mean update →
-    * re-assign. Returns (cents1, a2): the trained centroids
-    * `(cid, cv, cn2)` and the final assignment
-    * `(vec_id, q, n2, cid, d2)`. All arithmetic is integer except the
-    * d2 comparison (exact: n2 - 2 q·c + cn2); the centroid mean uses
-    * truncating `div`, matching DuckDB `//` on signed sums.
-    *
-    * Scale shape: each round is (a) one broadcast of the K-row
-    * codebook collapsed to a single array row — assignment is a
-    * map-side argmin fold, no shuffle; (b) one posexplode +
-    * partial-aggregated groupBy((cid,pos)) sum — the shuffle carries
-    * only K×dim×partitions pre-combined rows, independent of corpus
-    * size. That is the canonical distributed Lloyd's step; more
-    * rounds repeat (a)+(b). */
+  /** One Lloyd's round of the [[Codebook]] kernel over the
+    * milli-quantized corpus. Returns (cents1, a2): the trained centroids
+    * `(cid, cv, cn2)` and the final assignment `(vec_id, q, n2, cid, d2)`. */
   private[graft] def kmeansState(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     kmeansStateOf(quantized(spark, dir))
 
   /** Lloyd round over an arbitrary quantized base — v6/v7 train on the
     * full table; v11 trains on the corpus only and FREEZES the result. */
-  private[graft] def kmeansStateOf(base0: DataFrame): (DataFrame, DataFrame) = {
-    val spark = base0.sparkSession
-    import spark.implicits._
-    val base = base0.persist()
-    val step = base.count() / KmK
-    def collapse(cents: DataFrame): DataFrame =
-      cents.agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
-    // argmin via array_min, not array_sort(...)[1]: same struct ordering
-    // (both use the element type's interpreted ordering), but O(K) with
-    // no sorted-copy allocation per row where the sort was O(K log K) +
-    // one K-element array allocation per input row (r17, guide §1.2
-    // "per-task work"; result provably identical — the comparator is
-    // shared, KmeansArgminSpec pins equality on ties and null scores)
-    def assign(centsRow: DataFrame): DataFrame =
-      base.crossJoin(broadcast(centsRow))
-        .withColumn("best", array_min(transform($"cents", c =>
-          struct(($"n2" - lit(2L) * functions.VecMath.dotCol($"q", c.getField("cv"))
-            + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))))
-        .select($"vec_id", $"q", $"n2",
-          $"best".getField("cid").as("cid"), $"best".getField("d2").as("d2"))
-    val cents0 = base
-      .filter($"vec_id" % step === 0 && $"vec_id" < step * KmK)
-      .select(TextQueries.intDiv($"vec_id", lit(step)).as("cid"),
-        $"q".as("cv"), $"n2".as("cn2"))
-    val a1 = assign(collapse(cents0))
-    val cents1 = a1.select($"cid", posexplode($"q").as(Seq("pos", "x")))
-      .groupBy($"cid", $"pos").agg(sum($"x").as("s"), count(lit(1)).as("n"))
-      .withColumn("m", expr("s div n"))
-      .groupBy($"cid")
-      .agg(sort_array(collect_list(struct($"pos", $"m"))).as("pm"))
-      .select($"cid", transform($"pm", _.getField("m")).as("cv"))
-      .withColumn("cn2", functions.VecMath.dotCol($"cv", $"cv"))
-    (cents1, assign(collapse(cents1)))
-  }
+  private[graft] def kmeansStateOf(base0: DataFrame): (DataFrame, DataFrame) =
+    Codebook.of(base0).lloyd
 
   /** Shared oracle CTE chain replaying kmeansState; ends in `cents1b`
     * (cid, cv, cn2) and `a2` (vec_id, q, n2, cid, d2). */
@@ -595,10 +617,10 @@ object SimilarityQueries extends QueryGroup {
   private[graft] def kmeansCtesFrom(baseSql: String): String = {
     val dot0 = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [v.q[i]*c.cv[i] for i in range(1, len(v.q)+1)]), (x,y)->x+y)"
     s"""base AS ($baseSql),
-       |s AS (SELECT COUNT(*) // $KmK AS step FROM base),
+       |s AS (SELECT COUNT(*) // $CodebookK AS step FROM base),
        |cents0 AS (
        |  SELECT vec_id // step AS cid, q AS cv, n2 AS cn2
-       |  FROM base, s WHERE vec_id % step = 0 AND vec_id < step * $KmK),
+       |  FROM base, s WHERE vec_id % step = 0 AND vec_id < step * $CodebookK),
        |d1 AS (
        |  SELECT v.vec_id, c.cid,
        |    ROW_NUMBER() OVER (PARTITION BY v.vec_id
@@ -638,17 +660,9 @@ object SimilarityQueries extends QueryGroup {
   def ivfAppend(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val all = quantized(spark, dir).persist()
-    val (cents1, a2) = kmeansStateOf(all.filter($"vec_id" % 10 =!= 9))
-    val centsRow = cents1
-      .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
-    val assigned = all.filter($"vec_id" % 10 === 9)
-      .crossJoin(broadcast(centsRow))
-      // argmin via array_min (see kmeansStateOf.assign — identical move)
-      .withColumn("best", array_min(transform($"cents", c =>
-        struct(($"n2" - lit(2L) * functions.VecMath.dotCol($"q", c.getField("cv"))
-          + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))))
-      .select($"vec_id", $"best".getField("cid").as("cid"),
-        $"best".getField("d2").as("d2"))
+    val cb = Codebook.of(all.filter($"vec_id" % 10 =!= 9))
+    val (cents1, a2) = cb.lloyd
+    val assigned = cb.assign(cents1, all.filter($"vec_id" % 10 === 9))
     val oldN = a2.groupBy($"cid").agg(count(lit(1)).as("n_corpus"))
     val addN = assigned.groupBy($"cid").agg(
       count(lit(1)).as("n_added"), sum($"d2").as("add_inertia"))
@@ -764,9 +778,10 @@ object SimilarityQueries extends QueryGroup {
   def ivfDelete(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import TextQueries.intDiv
-    val all = quantized(spark, dir).persist()
-    val (_, a2) = kmeansStateOf(all)
-    val tomb = all.filter($"vec_id" % 7 === 3).select($"vec_id")
+    val (_, a2) = kmeansState(spark, dir)
+    // the training base kmeansState persisted serves this same plan
+    val tomb = quantized(spark, dir).filter($"vec_id" % 7 === 3)
+      .select($"vec_id")
     val live = a2.join(tomb, Seq("vec_id"), "left_anti")
     val total = a2.groupBy($"cid").agg(count(lit(1)).as("n_total"))
     val liveAgg = live.groupBy($"cid").agg(
@@ -848,20 +863,9 @@ object SimilarityQueries extends QueryGroup {
     * probe the 2 nearest trained cells per query). Same scale shape as
     * v4; only the centroid quality changes. */
   def annIvfTrained(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val (cents1, a2) = kmeansState(spark, dir)
-    val centsRow = cents1
-      .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
-    val probes = a2.filter($"vec_id" < NQueries)
-      .select($"vec_id", $"q", $"n2").crossJoin(broadcast(centsRow))
-      .withColumn("dists", array_sort(transform($"cents", c =>
-        struct(($"n2" - lit(2L) * functions.VecMath.dotCol($"q", c.getField("cv"))
-          + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))))
-      .select($"vec_id".as("query_id"), $"q".as("pq"), $"n2".as("pn2"),
-        explode(slice($"dists", 1, IvfProbe)).as("probe"))
-      .select($"query_id", $"pq", $"pn2", $"probe.cid".as("probe_list"))
-    val scored = a2.join(broadcast(probes),
+    val scored = a2.join(broadcast(Codebook.probes(a2, cents1, IvfProbe)),
         $"cid" === $"probe_list" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id",
         cosMilli($"pq", $"q", $"pn2", $"n2").as("cos_milli"))
@@ -938,7 +942,7 @@ object SimilarityQueries extends QueryGroup {
     * query scans codes with an asymmetric-distance LUT — approx_d2 =
     * Σ_m lut[m][code_m], NO vector arithmetic per corpus row.
     *
-    * Training reuses v6's distributed Lloyd shape per subspace (seeded
+    * Training is the [[Codebook]] kernel grouped by subspace (seeded
     * centroids, one integer-mean update round); codes and LUTs are
     * flat-indexed through a global (m, cid) rank so empty cells cannot
     * misalign the positional lookup. Scale shape: codes build is the
@@ -949,66 +953,60 @@ object SimilarityQueries extends QueryGroup {
   def pqSearch(spark: SparkSession, dir: String): DataFrame =
     topKPerQueryAsc(pqScored(spark, dir), 5, "approx_d2")
 
+  /** The PQ split: each `v` vector as PqM rows (keep…, m, q, n2), `q`
+    * its m-th PqD-dim slice and `n2` the slice's squared norm — the
+    * training base of the per-subspace [[Codebook]]. */
+  private[graft] def subspaces(df: DataFrame, v: String, keep: String*): DataFrame =
+    df.select(keep.map(col) :+ explode(transform(sequence(lit(0), lit(PqM - 1)),
+        m => struct(m.cast("int").as("m"),
+          slice(col(v), m * PqD + 1, lit(PqD)).as("q")))).as("s"): _*)
+      .select(keep.map(col) ++ Seq(col("s.m").as("m"), col("s.q").as("q")): _*)
+      .withColumn("n2", functions.VecMath.dotCol(col("q"), col("q")))
+
+  /** PQ coding and ADC lookup tables for trained sub-codebooks `cents1`
+    * (m, cid, cv, cn2) and their assignment `a2`: `codes` holds one code
+    * array per `codeKeys` group, `lut` one distance array per `lutKeys`
+    * group of the query subspaces `qsubs` (lutKeys…, m, q, n2). Both are
+    * flat-indexed through one global (m, cid) rank, so empty cells
+    * cannot misalign the positional lookup (tiny dim table, ≤
+    * PqM*CodebookK rows). */
+  private def adcTables(cents1: DataFrame, a2: DataFrame, codeKeys: Seq[String],
+      qsubs: DataFrame, lutKeys: Seq[String]): (DataFrame, DataFrame) = {
+    val idx = operators.GlobalRank.withRank(
+      cents1.select(col("m"), col("cid")), "idx", col("m").asc, col("cid").asc)
+    val codes = a2.join(broadcast(idx), Seq("m", "cid"))
+      .groupBy(codeKeys.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("m"), col("idx")))).as("cs"))
+      .select(codeKeys.map(col) :+
+        transform(col("cs"), _.getField("idx")).as("codes"): _*)
+    val lut = qsubs.join(broadcast(cents1), Seq("m"))
+      .select(lutKeys.map(col) ++ Seq(col("m"), col("cid"),
+        sqDist(col("q"), col("n2"), col("cv"), col("cn2")).as("pd2")): _*)
+      .join(broadcast(idx), Seq("m", "cid"))
+      .groupBy(lutKeys.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("idx"), col("pd2")))).as("l"))
+      .select(lutKeys.map(col) :+
+        transform(col("l"), _.getField("pd2")).as("lut"): _*)
+    (codes, lut)
+  }
+
+  /** The ADC scan of one (codes, lut) pair: approx_d2 = Σ_m lut[code_m]. */
+  private val adcD2: Column = aggregate(col("codes"), lit(0L),
+    (acc, ix) => acc + element_at(col("lut"), ix.cast("int"))).as("approx_d2")
+
   /** The PQ train + code + ADC scan up to (query_id, vec_id, approx_d2)
     * — shared by v8 (rank on approx) and v10 (exact re-rank). */
   private[graft] def pqScored(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val base = quantized(spark, dir).persist()
-    val step = base.count() / KmK
-    val subs = base.select($"vec_id",
-        explode(transform(sequence(lit(0), lit(PqM - 1)), m =>
-          struct(m.cast("int").as("m"),
-            slice($"q", m * PqD + 1, lit(PqD)).as("qm")))).as("s"))
-      .select($"vec_id", $"s.m".as("m"), $"s.qm".as("qm"))
-      .withColumn("qn2", functions.VecMath.dotCol($"qm", $"qm"))
-      .persist()
-    def collapse(c: DataFrame): DataFrame = c.groupBy($"m")
-      .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
-    def assign(centsByM: DataFrame): DataFrame =
-      subs.join(broadcast(centsByM), "m")
-        // argmin via array_min (see kmeansStateOf.assign — identical move)
-        .withColumn("best", array_min(transform($"cents", c =>
-          struct(($"qn2" - lit(2L) * functions.VecMath.dotCol($"qm", c.getField("cv"))
-            + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))))
-        .select($"vec_id", $"m", $"qm", $"qn2", $"best".getField("cid").as("cid"))
-    val cents0 = subs.filter($"vec_id" % step === 0 && $"vec_id" < step * KmK)
-      .select($"m", TextQueries.intDiv($"vec_id", lit(step)).as("cid"),
-        $"qm".as("cv"))
-      .withColumn("cn2", functions.VecMath.dotCol($"cv", $"cv"))
-    val a1 = assign(collapse(cents0))
-    val cents1 = a1.select($"m", $"cid", posexplode($"qm").as(Seq("pos", "x")))
-      .groupBy($"m", $"cid", $"pos")
-      .agg(sum($"x").as("s"), count(lit(1)).as("n"))
-      .withColumn("mm", expr("s div n"))
-      .groupBy($"m", $"cid")
-      .agg(sort_array(collect_list(struct($"pos", $"mm"))).as("pm"))
-      .select($"m", $"cid", transform($"pm", _.getField("mm")).as("cv"))
-      .withColumn("cn2", functions.VecMath.dotCol($"cv", $"cv"))
-    val a2 = assign(collapse(cents1))
-    // global flat rank over (m, cid): codes and LUT share one index
-    // space, immune to empty cells (tiny dim table, ≤ PqM*KmK rows)
-    val centIdx = operators.GlobalRank.withRank(
-      cents1.select($"m", $"cid"), "idx", $"m".asc, $"cid".asc)
-    val codes = a2.join(broadcast(centIdx), Seq("m", "cid"))
-      .groupBy($"vec_id")
-      .agg(sort_array(collect_list(struct($"m", $"idx"))).as("cs"))
-      .select($"vec_id", transform($"cs", _.getField("idx")).as("codes"))
-    val lut = a2.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("query_id"), $"m", $"qm", $"qn2")
-      .join(broadcast(cents1), Seq("m"))
-      .select($"query_id", $"m", $"cid",
-        ($"qn2" - lit(2L) * functions.VecMath.dotCol($"qm", $"cv") + $"cn2")
-          .as("pd2"))
-      .join(broadcast(centIdx), Seq("m", "cid"))
-      .groupBy($"query_id")
-      .agg(sort_array(collect_list(struct($"idx", $"pd2"))).as("l"))
-      .select($"query_id", transform($"l", _.getField("pd2")).as("lut"))
+    val vecs = Codebook.of(quantized(spark, dir))
+    val (cents1, a2) = Codebook(subspaces(vecs.train, "q", "vec_id").persist(),
+      vecs.step, Seq("m")).lloyd
+    val (codes, lut) = adcTables(cents1, a2, Seq("vec_id"),
+      a2.filter($"vec_id" < NQueries).select($"vec_id".as("query_id"), $"m", $"q", $"n2"),
+      Seq("query_id"))
     codes.crossJoin(broadcast(lut))
       .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id",
-        aggregate($"codes", lit(0L),
-          (acc, ix) => acc + element_at($"lut", ix.cast("int"))).as("approx_d2"))
+      .select($"query_id", $"vec_id", adcD2)
   }
   /** Oracle CTE chain replaying PQ train + code + ADC scan, ending in
     * `scored` (query_id, vec_id, approx_d2) — shared by v8 and v10. */
@@ -1016,7 +1014,7 @@ object SimilarityQueries extends QueryGroup {
     def dot(a: String, b: String) =
       s"list_reduce(list_prepend(CAST(0 AS BIGINT), [$a[i]*$b[i] for i in range(1, $PqD+1)]), (x,y)->x+y)"
     s"""base AS ($quantizedSql),
-       |s AS (SELECT COUNT(*) // $KmK AS step FROM base),
+       |s AS (SELECT COUNT(*) // $CodebookK AS step FROM base),
        |subs AS (
        |  SELECT vec_id, CAST(t.m AS INT) AS m,
        |    q[CAST(t.m*$PqD+1 AS INT):CAST(t.m*$PqD+$PqD AS INT)] AS qm
@@ -1025,7 +1023,7 @@ object SimilarityQueries extends QueryGroup {
        |  SELECT vec_id, m, qm, ${dot("qm", "qm")} AS qn2 FROM subs),
        |cents0 AS (
        |  SELECT m, vec_id // step AS cid, qm AS cv, qn2 AS cn2
-       |  FROM subs2, s WHERE vec_id % step = 0 AND vec_id < step * $KmK),
+       |  FROM subs2, s WHERE vec_id % step = 0 AND vec_id < step * $CodebookK),
        |d1 AS (
        |  SELECT v.vec_id, v.m, v.qm, v.qn2, c.cid,
        |    ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.m
@@ -1145,87 +1143,30 @@ object SimilarityQueries extends QueryGroup {
     * the oracle replays coarse train → residuals → PQ train → coding
     * → per-cell LUT → scan. */
   def ivfPq(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val (cents1, a2raw) = kmeansState(spark, dir)
+    val coarse = Codebook.of(quantized(spark, dir))
+    val (cents1, a2raw) = coarse.lloyd
     val a2 = a2raw.persist()
-    val coarse = cents1.persist()
-    val step = a2.count() / KmK
-    val resid = a2.join(coarse.select($"cid", $"cv"), "cid")
-      .select($"vec_id", $"cid",
+    val cells = cents1.persist()
+    val resid = a2.join(cells.select($"cid", $"cv"), "cid")
+      .select($"vec_id", $"cid".as("cell"),
         zip_with($"q", $"cv", (a, b) => a - b).as("r"))
-    val subs = resid.select($"vec_id", $"cid",
-        explode(transform(sequence(lit(0), lit(PqM - 1)), m =>
-          struct(m.cast("int").as("m"),
-            slice($"r", m * PqD + 1, lit(PqD)).as("qm")))).as("s"))
-      .select($"vec_id", $"cid", $"s.m".as("m"), $"s.qm".as("qm"))
-      .withColumn("qn2", functions.VecMath.dotCol($"qm", $"qm"))
-      .persist()
-    def collapse(c: DataFrame): DataFrame = c.groupBy($"m")
-      .agg(sort_array(collect_list(struct($"pcid", $"cv", $"cn2"))).as("cents"))
-    def assign(centsByM: DataFrame): DataFrame =
-      subs.join(broadcast(centsByM), "m")
-        // argmin via array_min (see kmeansStateOf.assign — identical move)
-        .withColumn("best", array_min(transform($"cents", c =>
-          struct(($"qn2" - lit(2L) * functions.VecMath.dotCol($"qm", c.getField("cv"))
-            + c.getField("cn2")).as("d2"), c.getField("pcid").as("pcid")))))
-        .select($"vec_id", $"cid", $"m", $"qm", $"qn2",
-          $"best".getField("pcid").as("pcid"))
-    val pc0 = subs.filter($"vec_id" % step === 0 && $"vec_id" < step * KmK)
-      .select($"m", TextQueries.intDiv($"vec_id", lit(step)).as("pcid"),
-        $"qm".as("cv"))
-      .withColumn("cn2", functions.VecMath.dotCol($"cv", $"cv"))
-    val pa1 = assign(collapse(pc0))
-    val pc1 = pa1.select($"m", $"pcid", posexplode($"qm").as(Seq("pos", "x")))
-      .groupBy($"m", $"pcid", $"pos")
-      .agg(sum($"x").as("s"), count(lit(1)).as("n"))
-      .withColumn("mm", expr("s div n"))
-      .groupBy($"m", $"pcid")
-      .agg(sort_array(collect_list(struct($"pos", $"mm"))).as("pm"))
-      .select($"m", $"pcid", transform($"pm", _.getField("mm")).as("cv"))
-      .withColumn("cn2", functions.VecMath.dotCol($"cv", $"cv"))
-      .persist()
-    val pa2 = assign(collapse(pc1))
-    val pIdx = operators.GlobalRank.withRank(
-      pc1.select($"m", $"pcid"), "idx", $"m".asc, $"pcid".asc)
-    val codes = pa2.join(broadcast(pIdx), Seq("m", "pcid"))
-      .groupBy($"vec_id", $"cid")
-      .agg(sort_array(collect_list(struct($"m", $"idx"))).as("cs"))
-      .select($"vec_id", $"cid", transform($"cs", _.getField("idx")).as("codes"))
+    // residual PQ: v8's per-subspace round, seeded with the coarse
+    // round's step (the residuals are the same rows)
+    val (pc1raw, pa2) = Codebook(subspaces(resid, "r", "vec_id", "cell").persist(),
+      coarse.step, Seq("m")).lloyd
+    val pc1 = pc1raw.persist()
     // probes: 2 nearest coarse cells by exact d2, then per-cell residual LUTs
-    val centsRow = coarse
-      .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
-    val probes = a2.filter($"vec_id" < NQueries)
-      .select($"vec_id".as("query_id"), $"q", $"n2")
-      .crossJoin(broadcast(centsRow))
-      .withColumn("dists", array_sort(transform($"cents", c =>
-        struct(($"n2" - lit(2L) * functions.VecMath.dotCol($"q", c.getField("cv"))
-          + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))))
-      .select($"query_id", $"q", explode(slice($"dists", 1, IvfProbe)).as("pr"))
-      .select($"query_id", $"q", $"pr.cid".as("probe_cid"))
-    val probeResid = probes.join(coarse.select($"cid".as("probe_cid"), $"cv"),
-        "probe_cid")
-      .select($"query_id", $"probe_cid",
-        zip_with($"q", $"cv", (a, b) => a - b).as("rq"))
-    val prSubs = probeResid.select($"query_id", $"probe_cid",
-        explode(transform(sequence(lit(0), lit(PqM - 1)), m =>
-          struct(m.cast("int").as("m"),
-            slice($"rq", m * PqD + 1, lit(PqD)).as("rqm")))).as("s"))
-      .select($"query_id", $"probe_cid", $"s.m".as("m"), $"s.rqm".as("rqm"))
-      .withColumn("rqn2", functions.VecMath.dotCol($"rqm", $"rqm"))
-    val lut = prSubs.join(broadcast(pc1), Seq("m"))
-      .select($"query_id", $"probe_cid", $"m", $"pcid",
-        ($"rqn2" - lit(2L) * functions.VecMath.dotCol($"rqm", $"cv") + $"cn2")
-          .as("pd2"))
-      .join(broadcast(pIdx), Seq("m", "pcid"))
-      .groupBy($"query_id", $"probe_cid")
-      .agg(sort_array(collect_list(struct($"idx", $"pd2"))).as("l"))
-      .select($"query_id", $"probe_cid", transform($"l", _.getField("pd2")).as("lut"))
-    val scored = codes.join(broadcast(lut), $"cid" === $"probe_cid"
+    val probeResid = Codebook.probes(a2, cells, IvfProbe)
+      .join(cells.select($"cid".as("probe_list"), $"cv"), "probe_list")
+      .select($"query_id", $"probe_list",
+        zip_with($"pq", $"cv", (a, b) => a - b).as("rq"))
+    val (codes, lut) = adcTables(pc1, pa2, Seq("vec_id", "cell"),
+      subspaces(probeResid, "rq", "query_id", "probe_list"),
+      Seq("query_id", "probe_list"))
+    val scored = codes.join(broadcast(lut), $"cell" === $"probe_list"
         && $"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id",
-        aggregate($"codes", lit(0L),
-          (acc, ix) => acc + element_at($"lut", ix.cast("int"))).as("approx_d2"))
+      .select($"query_id", $"vec_id", adcD2)
     topKPerQueryAsc(scored, 5, "approx_d2")
   }
   private val ivfPqOracle: String = {
@@ -1243,7 +1184,7 @@ object SimilarityQueries extends QueryGroup {
        |psubs2 AS (SELECT vec_id, cid, m, qm, ${dot("qm", "qm")} AS qn2 FROM psubs),
        |pc0 AS (
        |  SELECT m, vec_id // step AS pcid, qm AS cv, qn2 AS cn2
-       |  FROM psubs2, s WHERE vec_id % step = 0 AND vec_id < step * $KmK),
+       |  FROM psubs2, s WHERE vec_id % step = 0 AND vec_id < step * $CodebookK),
        |pd1 AS (
        |  SELECT v.vec_id, v.cid, v.m, v.qm, v.qn2, c.pcid,
        |    ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.m

@@ -35,8 +35,7 @@ object StressGen {
     // 600M-row lineitem it never reads
     val onlyTables = args.lift(3)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = Sessions.create("graft-stressgen",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.create("graft-stressgen", Sessions.cpus)
     import spark.implicits._
 
     val B = 10000000L // key-shift base, far above any sf0.1 key

@@ -95,7 +95,7 @@ object StressSweep {
         case _ => Map.empty[String, Double]
       }
     }.getOrElse(Map.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     // a sweep variant under a session knob — e.g. SPARK_GRAFT_CONF=
     // "spark.graft.bandCap=256" for the capped-d2 sf100 rung — runs
     // through the SAME harness instead of a one-off main; Sessions

@@ -7,6 +7,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional name filter (local iteration)
+    // not Sessions.cpus: every recorded oracle run used 4 slots, which is
+    // also the shuffle-partition count, so a fixed default keeps the
+    // plans the oracle checks the same on any host
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.create("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()

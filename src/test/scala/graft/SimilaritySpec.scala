@@ -38,27 +38,48 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("k-means update round does not increase total inertia") {
     import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.functions._
-    // inertia vs the UPDATED centroids (v6 output) must be <= inertia vs
-    // the seed centroids (the v4 IVF assignment replayed on d2) — the
-    // Lloyd's monotonicity invariant, here on integer-mean centroids.
-    val (_, a2) = SimilarityQueries.kmeansState(spark, TestSpark.sf)
-    val after = a2.agg(sum($"d2")).as[Long].head()
+    // inertia vs the UPDATED centroids must be <= inertia vs the seed
+    // centroids (the v4 IVF assignment replayed on d2) — the Lloyd's
+    // monotonicity invariant, here on integer-mean centroids. Checked on
+    // both inputs the codebook kernel trains: whole vectors (v6, one
+    // codebook) and the PQ subspaces (v8, one codebook per m, each
+    // checked on its own). The seed and its argmin are replayed here.
     val quant = SimilarityQueries.quantized(spark, TestSpark.sf).persist()
     val step = quant.count() / 16
-    val seedRow = quant
-      .filter($"vec_id" % step === 0 && $"vec_id" < step * 16)
-      .select(TextQueries.intDiv($"vec_id", lit(step)).as("cid"),
-        $"q".as("cv"), $"n2".as("cn2"))
-      .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
-    val before = quant.crossJoin(broadcast(seedRow))
-      .select(element_at(array_sort(transform($"cents", c =>
+    def inertia(df: DataFrame, group: Column): Map[Long, Long] =
+      df.groupBy(group.cast("long").as("g")).agg(sum($"d2"))
+        .as[(Long, Long)].collect().toMap
+    def seedInertia(train: DataFrame, by: Seq[String], group: Column): Map[Long, Long] = {
+      val seedRow = train
+        .filter($"vec_id" % step === 0 && $"vec_id" < step * 16)
+        .select(by.map(col) ++ Seq(TextQueries.intDiv($"vec_id", lit(step)).as("cid"),
+          $"q".as("cv"), $"n2".as("cn2")): _*)
+        .groupBy(by.map(col): _*)
+        .agg(sort_array(collect_list(struct($"cid", $"cv", $"cn2"))).as("cents"))
+      val withSeed =
+        if (by.isEmpty) train.crossJoin(broadcast(seedRow))
+        else train.join(broadcast(seedRow), by)
+      inertia(withSeed.select(group.as("group"), element_at(array_sort(transform($"cents", c =>
         struct(($"n2" - lit(2L) * functions.VecMath.dotCol($"q", c.getField("cv"))
           + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))), 1)
-        .getField("d2").as("d2"))
-      .agg(sum($"d2")).as[Long].head()
-    assert(after <= before, s"inertia rose: $before -> $after")
-    assert(after > 0L)
+        .getField("d2").as("d2")), $"group")
+    }
+    val (_, a2) = SimilarityQueries.kmeansState(spark, TestSpark.sf)
+    val subs = SimilarityQueries.subspaces(quant, "q", "vec_id")
+    val (_, pqA2) = SimilarityQueries.Codebook(subs, step, Seq("m")).lloyd
+    val inputs = Seq(
+      ("whole vectors", inertia(a2, lit(0L)), seedInertia(quant, Nil, lit(0L))),
+      ("PQ subspace m", inertia(pqA2, $"m"), seedInertia(subs, Seq("m"), $"m")))
+    inputs.foreach { case (what, after, before) =>
+      assert(after.keySet == before.keySet && after.nonEmpty, what)
+      after.foreach { case (g, a) =>
+        assert(a <= before(g), s"$what $g: inertia rose: ${before(g)} -> $a")
+        assert(a > 0L, s"$what $g")
+      }
+    }
+    assert(inputs(1)._2.size == 4) // one codebook per subspace
   }
 
   test("semantic prune keeps one representative per near-dup pair") {

@@ -17,7 +17,11 @@
 #      DuckDB twin,
 #   6. the shortest run of the benchmark's build workload
 #      (la_build_pipeline on a permuted file split), its output checked
-#      against DuckDB.
+#      against DuckDB,
+#   7. the shortest run of the benchmark's curate workload (the corpus
+#      pipeline and v9_ivf_pq on a permuted row-to-file split — the only
+#      check of the vector index off the fixture's file layout), its
+#      output checked against DuckDB.
 # Usage: tools/gate.sh [sf-dir]       (default /root/testdata/sf0.01)
 # Logs land in /tmp/graft_gate/ stamped with the tree state so the
 # round record can cite "gate ran at <sha/dirty>".
@@ -65,6 +69,8 @@ step perfbench_layers python3 perfbench/test_perfbench.py LayerTest
 step perfbench_search python3 perfbench/run.py --workload search --seed 5 \
   --seconds 0 --trace 0
 step perfbench_build python3 perfbench/run.py --workload build --seed 5 \
+  --seconds 0 --trace 0
+step perfbench_curate python3 perfbench/run.py --workload curate --seed 5 \
   --seconds 0 --trace 0
 
 if [ "$fail" -eq 0 ]; then
