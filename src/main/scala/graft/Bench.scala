@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Driver-run benchmark: times the headline query set (bench-flagged in
   * the registry — one per operator family: scan-agg, join-agg, window,
@@ -112,25 +114,49 @@ object Bench {
         .agg(count(lit(1)).as("n"), avg(col("id")).as("s"))
         .agg(sum("n"), avg("s")).collect(); ()
     }))
+  /** `{"id", "tables": {name: {"rows", "bytes"}}}`: the corpus stamp
+    * that Bench and StressSweep artifacts carry. */
+  def corpusJson(id: String, stats: Seq[(String, Long, Long)]): JObject =
+    ("id" -> id) ~ ("tables" -> JObject(stats.map { case (n, r, b) =>
+      n -> (("rows" -> r) ~ ("bytes" -> b)) }.toList))
+
+  private def secs(kv: Seq[(String, Double)]): JObject =
+    JObject(kv.map { case (k, v) => k -> Json.fixed(v, 3) }.toList)
+
+  private def recorded(results: Seq[(String, Either[String, Double])]): JObject =
+    JObject(results.map { case (k, r) => k -> r.fold(_ => JString("err"), Json.fixed(_, 3)) }.toList)
+
+  /** The driver records a 2000-char TAIL of stdout and parses its final
+    * line; this budget leaves room to spare. */
+  private val FinalLineBudget = 1500
+
+  /** The stdout lines that end a run: the compact final line (total,
+    * per-key recorded, calibration, corpus.id, errors, sf), or, when it
+    * would pass the budget, a note and the same line with `queries`
+    * shed to the sidecar — the header must survive the tail cut. */
+  private[graft] def finalLines(results: Seq[(String, Either[String, Double])],
+      cal: Seq[(String, Double)], corpusId: String, sf: String): Seq[String] = {
+    val errs = results.collect { case (k, Left(e)) => s"$k: $e" }
+    val total = if (errs.nonEmpty) -1.0 else results.flatMap(_._2.toOption).sum
+    def line(qs: JValue) = Json.write(("metric" -> "total") ~
+      ("value" -> Json.fixed(total, 3)) ~ ("unit" -> "sec") ~ ("queries" -> qs) ~
+      ("calibration" -> secs(cal)) ~ ("corpus" -> ("id" -> corpusId)) ~
+      ("errors" -> Some(errs).filter(_.nonEmpty)) ~ ("sf" -> sf))
+    val full = line(recorded(results))
+    if (full.length <= FinalLineBudget) Seq(full)
+    else Seq(s"[bench] final line ${full.length} chars > $FinalLineBudget budget; " +
+      "shedding queries field (full map in sidecar)", line("see_sidecar"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional filter for local single-query timing; the driver never
+    // sets it, so recorded rounds always cover the full set
+    val benchNames = Queries.selectFromEnv(Queries.benchNames, "SPARK_GRAFT_BENCH_ONLY")
     val cpus = Sessions.cpus
     val spark = Sessions.create("graft-bench", cpus)
     val fns = Queries.queries
-    // optional comma-separated filter for local single-query timing; the
-    // driver never sets it, so recorded rounds always cover the full set
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val benchNames = Queries.benchNames
-      .filter(n => only.forall(_.contains(n)))
-    // a typo'd or empty filter must not print a green 0.000s total
-    only.foreach { names =>
-      val unknown = names -- Queries.benchNames.toSet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not bench-flagged: ${unknown.mkString(", ")}")
-    }
-    require(benchNames.nonEmpty, "bench filter matched no queries")
-    def timeOnceRun(run: () => Unit): Either[String, Double] = {
+    def timeOnce(run: () => Unit): Either[String, Double] = {
       val t0 = System.nanoTime()
       try {
         run()
@@ -139,40 +165,32 @@ object Bench {
         Left(e.toString.linesIterator.next().take(160))
       }
     }
-    def timeOnce(name: String): Either[String, Double] =
-      timeOnceRun(() => { fns(name)(spark, sfDir).count(); () })
-    // the full per-key protocol, shared by BOTH phases: warmup + two
-    // timed passes + a tie-break pass when they disagree by >1.5x
-    def bestOf(name: String): Either[String, Double] = {
-      // per-query warmup (JIT + this query's substrate only)
-      try fns(name)(spark, sfDir).count()
-      catch { case _: Throwable => () } // surfaced by the timed pass below
-      val r = (timeOnce(name), timeOnce(name)) match {
+    // the one timing protocol, for keys and calibrations alike: warmup
+    // + two timed passes + a tie-break pass when they disagree by >1.5x
+    def bestOf(run: () => Unit): Either[String, Double] = {
+      // warmup (JIT + codegen + this key's substrate only)
+      try run() catch { case _: Throwable => () } // surfaced by the timed pass below
+      (timeOnce(run), timeOnce(run)) match {
         case (Right(a), Right(b)) =>
           val lo = math.min(a, b)
           if (math.max(a, b) > lo * 1.5)
             // tie-break pass: a transient failure must not discard the
             // two good measurements — fall back to their min
-            Right(timeOnce(name).fold(_ => lo, c => math.min(lo, c)))
+            Right(timeOnce(run).fold(_ => lo, c => math.min(lo, c)))
           else Right(lo)
         case (e @ Left(_), _) => e
         case (_, e) => e
       }
+    }
+    def timeKey(name: String): Either[String, Double] = {
+      val r = bestOf(() => { fns(name)(spark, sfDir).count(); () })
       // drop this query's persisted substrate before the next key so
       // measurements never depend on key-set size or run order
       spark.catalog.clearCache()
       r
     }
     val results: Seq[(String, Either[String, Double])] =
-      benchNames.map(name => name -> bestOf(name))
-    // JSON demands '.' decimal separators; f"" uses the JVM default
-    // locale, which on comma-separator locales would emit invalid JSON
-    def num3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map {
-      case (k, Right(v)) => "\"" + k + "\":" + num3(v)
-      case (k, Left(_))  => "\"" + k + "\":\"err\""
-    }.mkString("{", ",", "}")
+      benchNames.map(name => name -> timeKey(name))
     // isolated best-of: single recordings on a shared sandbox are noisy
     // at the ±10% level round-over-round comparison needs (r10's
     // recorded-vs-quiet gap was 27.4 vs 24.1 s). After the sweep — JVM
@@ -193,7 +211,7 @@ object Bench {
         // from — "iso" (re-run strictly better), "rec" (the recorded
         // min was already best; the isolated pass never beat it, or
         // errored), "tie" (within 1 ms — genuine sub-ms equality)
-        val isoPass = bestOf(k)
+        val isoPass = timeKey(k)
         val best = isoPass.fold(_ => rec, v => math.min(rec, v))
         val src = isoPass match {
           case Left(_) => "rec"
@@ -203,51 +221,29 @@ object Bench {
         }
         (k, best, src)
       }
-    val iso = isolated.map { case (k, v, _) => "\"" + k + "\":" + num3(v) }
-      .mkString("{", ",", "}")
-    val isoSrc = isolated.map { case (k, _, s) => "\"" + k + "\":\"" + s + "\"" }
-      .mkString("{", ",", "}")
     // machine-state calibration: fixed work, timed under the same
-    // warmup+two-pass+tie-break protocol, AFTER the sweeps (same JVM
-    // warmth as the isolated phase)
+    // protocol, AFTER the sweeps (same JVM warmth as the isolated
+    // phase); a failed timed pass records -1, as a failed key records
+    // "err" — loud, since a silently wrong calibration defeats its purpose
     val cal = calibrations(spark).map { case (k, run) =>
-      try { run(spark) } catch { case _: Throwable => () } // warmup
-      val t = (timeOnceRun(() => run(spark)), timeOnceRun(() => run(spark))) match {
-        case (Right(a), Right(b)) =>
-          val lo = math.min(a, b)
-          if (math.max(a, b) > lo * 1.5)
-            timeOnceRun(() => run(spark)).fold(_ => lo, c => math.min(lo, c))
-          else lo
-        case (Right(a), _) => a
-        case (_, Right(b)) => b
-        case (Left(e), _) =>
-          // loud: a silently -1 calibration would defeat its purpose
-          println(s"[bench] calibration $k failed both passes: $e"); -1.0
-      }
-      "\"" + k + "\":" + num3(t)
-    }.mkString("{", ",", "}")
+      k -> bestOf(() => run(spark)).fold(
+        e => { println(s"[bench] calibration $k failed: $e"); -1.0 }, identity)
+    }
     // corpus fingerprint: deterministic per-table rows+bytes and digest
     val (corpusId, corpusStats) = corpusFingerprint(spark, sfDir)
-    val corpusTables = corpusStats.map { case (n, r, b) =>
-      "\"" + n + "\":{\"rows\":" + r + ",\"bytes\":" + b + "}"
-    }.mkString("{", ",", "}")
-    val corpus =
-      s"""{"id":"$corpusId","tables":$corpusTables}"""
-    val errs = results.collect { case (k, Left(e)) =>
-      "\"" + (k + ": " + e).replace("\\", "\\\\").replace("\"", "'") + "\"" }
-    val total = if (errs.nonEmpty) -1.0
-      else results.collect { case (_, Right(v)) => v }.sum
-    val errField = if (errs.isEmpty) "" else s""","errors":[${errs.mkString(",")}]"""
-    // Two-line protocol (round-16 verdict item 2): the driver records
-    // only a 2000-char TAIL of stdout and parses the final JSON line.
-    // Round 16's single ~3.3 KB line lost its leading "metric"/"value"
-    // fields to the tail cut and the artifact landed unparseable
+    // Two-line protocol (round-16 verdict item 2): round 16's single
+    // ~3.3 KB line lost its leading "metric"/"value" fields to the
+    // driver's tail cut and the artifact landed unparseable
     // (BENCH_r16.json parsed:null). So the bulky provenance
     // (isolated_best, isolated_src, per-table corpus stats) goes on an
     // EARLIER stdout line + a sidecar file, and the FINAL line stays
-    // compact: total, per-key recorded, calibration, corpus.id, sf.
-    val provenance =
-      s"""{"metric":"provenance","queries":$qs,"isolated_best":$iso,"isolated_src":$isoSrc,"calibration":$cal,"corpus":$corpus,"sf":"$sfDir"}"""
+    // compact.
+    val provenance = Json.write(("metric" -> "provenance") ~
+      ("queries" -> recorded(results)) ~
+      ("isolated_best" -> secs(isolated.map { case (k, v, _) => (k, v) })) ~
+      ("isolated_src" -> JObject(isolated.map { case (k, _, src) => k -> JString(src) }.toList)) ~
+      ("calibration" -> secs(cal)) ~ ("corpus" -> corpusJson(corpusId, corpusStats)) ~
+      ("sf" -> sfDir))
     println(provenance)
     // cpu count stamped into the default filename (r17 verdict item 6):
     // the driver benches the same tree at two core counts, and a shared
@@ -259,17 +255,8 @@ object Bench {
       java.nio.file.Paths.get(sidecar), provenance + "\n")
     catch { case e: Throwable =>
       println(s"[bench] sidecar write failed ($sidecar): $e") }
-    val finalLine =
-      s"""{"metric":"total","value":${num3(total)},"unit":"sec","queries":$qs,"calibration":$cal,"corpus":{"id":"${corpusId}"}$errField,"sf":"$sfDir"}"""
-    // hard budget: the line must survive the driver's tail cut with
-    // room to spare; if the key set ever grows past it, shed the
-    // per-key map (it lives in the sidecar) rather than the header
-    if (finalLine.length <= 1500) println(finalLine)
-    else {
-      println(s"[bench] final line ${finalLine.length} chars > 1500 budget; shedding queries field (full map in sidecar)")
-      println(s"""{"metric":"total","value":${num3(total)},"unit":"sec","queries":"see_sidecar","calibration":$cal,"corpus":{"id":"${corpusId}"}$errField,"sf":"$sfDir"}""")
-    }
+    finalLines(results, cal, corpusId, sfDir).foreach(println)
     spark.stop()
-    if (errs.nonEmpty) sys.exit(1)
+    if (results.exists(_._2.isLeft)) sys.exit(1)
   }
 }

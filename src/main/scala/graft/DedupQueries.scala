@@ -47,7 +47,7 @@ object DedupQueries extends QueryGroup {
     * runs the default.
     *
     * CONFIRMED at 1024 by the round-16 ladder (its committed result:
-    * STRESS_bandcap_r16.json): planted genuine-near-dup clusters of
+    * plans/stress/STRESS_bandcap_r16.json): planted genuine-near-dup clusters of
     * {20,100,400,1600,6400} members (expected band occupancies
     * {16,80,320,1280,5120}) swept over caps {64,256,1024,4096,
     * uncapped}. Measured per rung (candidate-pair mass / peak exec
@@ -72,9 +72,9 @@ object DedupQueries extends QueryGroup {
     * edge — 1000-copy identical-text cliques sit just UNDER 1024, so
     * no bucket of theirs was dropped and the verify mass was
     * C(1000,2)×5000 ≈ 2.5e9 pairs, 30× wall at a 10× data step
-    * (STRESS_sf100_r16.json); at cap 256 those buckets go dead and the
-    * run is near-linear (STRESS_sf100_r16_cap256.json). The ladder
-    * placing the default is committed as STRESS_bandcap_r16.json.
+    * (plans/stress/STRESS_sf100_r16.json); at cap 256 those buckets go dead and the
+    * run is near-linear (plans/stress/STRESS_sf100_r16_cap256.json). The ladder
+    * placing the default is committed as plans/stress/STRESS_bandcap_r16.json.
     * Deployments with exact-dedup-first composition (t_corpus's
     * ordering) keep the default; a pipeline that must run LSH over
     * un-collapsed corpora lowers it. */

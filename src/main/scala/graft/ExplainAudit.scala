@@ -5,9 +5,11 @@ package graft
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val names =
+      if (args.length < 2) Queries.benchNames
+      else Queries.select(Queries.all.map(_.name), Some(args.drop(1).toSeq), "ExplainAudit")
     val spark = Sessions.create("graft-explain", Sessions.cpus)
     val fns = Queries.queries
-    val names = if (args.length > 1) args.drop(1).toSeq else Queries.benchNames
     names.foreach { n =>
       println(s"\n========== $n ==========")
       fns(n)(spark, sfDir).explain("formatted")

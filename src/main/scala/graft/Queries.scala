@@ -42,6 +42,26 @@ object Queries {
   lazy val oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
   lazy val benchNames: Seq[String] = all.filter(_.bench).map(_.name)
+
+  /** The keys a main runs, in `universe` order: all of `universe` when
+    * nothing is requested, else the requested names. An unknown name or
+    * an empty selection fails loudly, so a typo never reads as a green
+    * run over nothing. `source` names the input in the error. */
+  def select(universe: Seq[String], requested: Option[Seq[String]],
+      source: String): Seq[String] = {
+    val picked = requested.fold(universe) { names =>
+      val unknown = names.filterNot(universe.toSet)
+      require(unknown.isEmpty, s"$source: unknown names ${unknown.mkString(", ")}")
+      universe.filter(names.toSet)
+    }
+    require(picked.nonEmpty, s"$source selects no queries")
+    picked
+  }
+
+  /** [[select]] over a comma-separated list in env var `name`, if set. */
+  def selectFromEnv(universe: Seq[String], name: String): Seq[String] =
+    select(universe,
+      sys.env.get(name).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq), name)
 }
 
 trait QueryGroup {

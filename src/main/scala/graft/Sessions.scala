@@ -62,7 +62,7 @@ object Sessions {
     // SPARK_GRAFT_CONF ("k=v;k=v") sets session conf for regimes the
     // mains don't parametrize: a substrate target partition size in an
     // A/B, or the memory-pressure StressSweep variant whose runs are
-    // committed as STRESS_spill_r1*.json (static confs like
+    // committed as plans/stress/STRESS_spill_r1*.json (static confs like
     // spark.memory.fraction, hence before getOrCreate). The driver
     // never sets it, so recorded rounds always run the defaults.
     val spark = envConf.foldLeft(builder) {

@@ -411,7 +411,7 @@ object StreamQueries extends QueryGroup {
     * life of the stream (st8c).
     *
     * CONFIRMED at 16 by the round-16 ladder (its committed result:
-    * STRESS_neardupcap_r16.json): planted clusters with per-band corpus
+    * plans/stress/STRESS_neardupcap_r16.json): planted clusters with per-band corpus
     * occupancies {~2.7, 8, 27, 108, 432} straddling caps {4,16,64,256}.
     * Measured trade per rung (recall‰ of genuine near-dups / candidate
     * pairs / peak exec mem): 4 → 377/12.6k/0.7GB; 16 → 620/46.6k/0.8GB;
@@ -432,7 +432,7 @@ object StreamQueries extends QueryGroup {
     * policy note prescribes for 100 TB — the production scale path the
     * round-15 pressure sweep showed st8's uncapped contract cannot
     * follow (clique-quadratic verify mass OOMs a starved 32-thread
-    * heap; STRESS_spill_r15_streaming*.json). A band bucket whose
+    * heap; plans/stress/STRESS_spill_r15_streaming*.json). A band bucket whose
     * occupancy in the CORPUS index exceeds `NeardupCapC` is dropped
     * from the index — and from every later probe and append — for the
     * life of the stream. Because the hot set is FIXED AT BUILD (corpus

@@ -1,14 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.util.control.NonFatal
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Executes EVERY registered query against a (stress) sf dir with full
   * row evaluation — the completion-at-scale companion to Bench: where
@@ -53,8 +53,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   */
 object StressSweep {
   final private case class Res(secs: Double, status: String, note: String,
-      guardDrops: Long, dropsTainted: Boolean, memSpilled: Long,
-      diskSpilled: Long, peakExecMem: Long)
+      guardDrops: Long, dropsTainted: Boolean, spill: Telemetry.Spill)
 
   /** Keys whose sf1/sf0.1 ratio is super-linear BY CONTRACT — the note
     * rides the artifact so a round-over-round ratio diff reads the why
@@ -81,7 +80,6 @@ object StressSweep {
     val timeoutSecs = args.lift(1).map(_.toLong).getOrElse(300L)
     val outJson = args.lift(2)
     val baseline: Map[String, Double] = args.lift(3).map { p =>
-      import org.json4s._
       val root = jackson.JsonMethods.parse(
         java.nio.file.Files.readString(java.nio.file.Paths.get(p)))
       (root \ "queries") match {
@@ -95,6 +93,11 @@ object StressSweep {
         case _ => Map.empty[String, Double]
       }
     }.getOrElse(Map.empty)
+    // key-battery filter (comma-separated): local iteration or a
+    // variant's battery; the driver never sets it, so recorded sweeps
+    // always cover the full registry
+    val sweepSet = Queries.selectFromEnv(Queries.all.map(_.name), "SPARK_GRAFT_SWEEP_ONLY")
+    val fns = Queries.queries
     val cpus = Sessions.cpus
     // a sweep variant under a session knob — e.g. SPARK_GRAFT_CONF=
     // "spark.graft.bandCap=256" for the capped-d2 sf100 rung — runs
@@ -105,23 +108,10 @@ object StressSweep {
     val envConf = Sessions.envConf
     val spark = Sessions.create("graft-stress-sweep", cpus)
     envConf.foreach { case (k, v) => println(s"[sweep] env conf: $k=$v") }
-    // stage-level memory counters, read per key as deltas (peak: reset
-    // per key); under the spill regime a sweep that "passes" with zero
-    // spill just wasn't under pressure
-    val memSpilled, diskSpilled, peakExec = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        Option(e.stageInfo.taskMetrics).foreach { m =>
-          memSpilled.addAndGet(m.memoryBytesSpilled)
-          diskSpilled.addAndGet(m.diskBytesSpilled)
-          peakExec.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        }
-    })
-    // key-battery filter (comma-separated): local iteration or a
-    // variant's battery; the driver never sets it, so recorded sweeps
-    // always cover the full registry
-    val only = sys.env.get("SPARK_GRAFT_SWEEP_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // stage-level memory counters, reset per key; under the spill
+    // regime a sweep that "passes" with zero spill just wasn't under
+    // pressure
+    val telemetry = Telemetry.attach(spark)
     var failed = List.empty[String]
     var timedOut = List.empty[String]
     // zombie futures: timed-out queries whose future did not drain in
@@ -129,23 +119,7 @@ object StressSweep {
     // while any is live, later keys' drop deltas are flagged tainted
     // instead of silently misattributed
     var zombies = List.empty[Future[String]]
-    val sweepSet = Queries.all.filter(q => only.forall(_.contains(q.name)))
-    only.foreach { names =>
-      val unknown = names -- Queries.all.map(_.name).toSet
-      require(unknown.isEmpty, s"SPARK_GRAFT_SWEEP_ONLY unknown: ${unknown.mkString(",")}")
-    }
     var results = Vector.empty[(String, Res)]
-
-    // JSON demands '.' decimal separators; f"" uses the JVM default
-    // locale, which on comma-separator locales would emit invalid JSON
-    def num(fmt: String, v: Double): String =
-      String.format(java.util.Locale.ROOT, fmt, Double.box(v))
-    def str(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // env + corpus stamp: a sweep's seconds are only comparable to a
     // prior artifact's under the same heap/threads AND the same
     // corpus draw (the driver regenerates testdata every round, and
@@ -155,14 +129,10 @@ object StressSweep {
     val stamp = outJson.map { _ =>
       val heapG = Runtime.getRuntime.maxMemory() / (1 << 30)
       val (corpusId, corpusStats) = Bench.corpusFingerprint(spark, sfDir)
-      val corpusTables = corpusStats.map { case (n, r, b) =>
-        s"""${str(n)}:{"rows":$r,"bytes":$b}""" }.mkString("{", ",", "}")
-      val envConfJson = envConf.map { case (k, v) => s"${str(k)}:${str(v)}" }
-        .mkString("{", ",", "}")
-      Profile.drainListenerBus(spark) // its stages precede the first key
-      s""""sf_dir":${str(sfDir)},"timeout_secs":$timeoutSecs,""" +
-        s""""heap_gib":$heapG,"cpus":$cpus,"env_conf":$envConfJson,""" +
-        s""""corpus":{"id":${str(corpusId)},"tables":$corpusTables},"""
+      telemetry.drain(spark) // its stages precede the first key
+      ("sf_dir" -> sfDir) ~ ("timeout_secs" -> timeoutSecs) ~ ("heap_gib" -> heapG) ~
+        ("cpus" -> cpus.toInt) ~ ("env_conf" -> JObject(envConf.map { case (k, v) =>
+          k -> JString(v) }.toList)) ~ ("corpus" -> Bench.corpusJson(corpusId, corpusStats))
     }
     // the artifact is REWRITTEN after every key: a key that kills the
     // whole JVM (an executor OutOfMemoryError in local mode exits the
@@ -171,25 +141,22 @@ object StressSweep {
     // can land DURING a plain truncate-then-write.
     def writeArtifact(isoSecs: Map[String, Double]): Unit = for (path <- outJson; head <- stamp) {
       val rows = results.map { case (name, r) =>
-        val ratio = baseline.get(name).filter(_ > 0)
-          .map(b => s""","ratio":${num("%.2f", r.secs / b)}""").getOrElse("")
-        val note = if (r.note.nonEmpty) s""","note":${str(r.note)}""" else ""
-        val drops = if (r.guardDrops > 0) s""","guard_drops":${r.guardDrops}""" else ""
-        val taint = if (r.dropsTainted) s""","drops_tainted":true""" else ""
-        val iso = isoSecs.get(name)
-          .map(s => s""","iso_secs":${num("%.3f", s)}""").getOrElse("")
-        val mem = s""","mem_spilled_bytes":${r.memSpilled},""" +
-          s""""disk_spilled_bytes":${r.diskSpilled},""" +
-          s""""peak_exec_mem_bytes":${r.peakExecMem}"""
-        s"""${str(name)}:{"secs":${num("%.3f", r.secs)},"status":${str(r.status)}$ratio$iso$drops$taint$mem$note}"""
-      }.mkString(",")
-      val doc = s"""{$head""" +
-        s""""n_queries":${results.size},""" +
-        s""""total_secs":${num("%.1f", results.map(_._2.secs).sum)},""" +
-        s""""n_timeout":${timedOut.size},"n_fail":${failed.size},""" +
-        s""""total_mem_spilled_bytes":${results.map(_._2.memSpilled).sum},""" +
-        s""""total_disk_spilled_bytes":${results.map(_._2.diskSpilled).sum},""" +
-        s""""queries":{$rows}}"""
+        name -> (("secs" -> Json.fixed(r.secs, 3)) ~ ("status" -> r.status) ~
+          ("ratio" -> baseline.get(name).filter(_ > 0).map(b => Json.fixed(r.secs / b, 2))) ~
+          ("iso_secs" -> isoSecs.get(name).map(Json.fixed(_, 3))) ~
+          ("guard_drops" -> Some(r.guardDrops).filter(_ > 0)) ~
+          ("drops_tainted" -> Some(true).filter(_ => r.dropsTainted)) ~
+          ("mem_spilled_bytes" -> r.spill.memory) ~
+          ("disk_spilled_bytes" -> r.spill.disk) ~
+          ("peak_exec_mem_bytes" -> r.spill.peakExec) ~
+          ("note" -> Some(r.note).filter(_.nonEmpty)))
+      }
+      val doc = Json.write(head ~ ("n_queries" -> results.size) ~
+        ("total_secs" -> Json.fixed(results.map(_._2.secs).sum, 1)) ~
+        ("n_timeout" -> timedOut.size) ~ ("n_fail" -> failed.size) ~
+        ("total_mem_spilled_bytes" -> results.map(_._2.spill.memory).sum) ~
+        ("total_disk_spilled_bytes" -> results.map(_._2.spill.disk).sum) ~
+        ("queries" -> JObject(rows.toList)))
       val target = Paths.get(path)
       val dir = Option(target.toAbsolutePath.getParent).getOrElse(Paths.get("."))
       val tmp = Files.createTempFile(dir, ".sweep", ".tmp")
@@ -198,21 +165,20 @@ object StressSweep {
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     }
 
-    sweepSet.foreach { q =>
+    sweepSet.foreach { name =>
       zombies = zombies.filterNot(_.isCompleted)
-      val (m0, d0) = (memSpilled.get, diskSpilled.get)
-      peakExec.set(0L)
+      telemetry.reset()
       val t0 = System.nanoTime()
       val drops0 = DedupQueries.guardDropCount.get()
-      val group = s"sweep-${q.name}"
+      val group = s"sweep-${name}"
       val fut = Future {
-        spark.sparkContext.setJobGroup(group, q.name, interruptOnCancel = true)
-        try { q.fn(spark, sfDir).foreach(_ => ()); "ok" }
+        spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
+        try { fns(name)(spark, sfDir).foreach(_ => ()); "ok" }
         finally spark.sparkContext.clearJobGroup()
       }
       val (status, note) = try {
         (Await.result(fut, timeoutSecs.seconds),
-          contractNotes.getOrElse(q.name, ""))
+          contractNotes.getOrElse(name, ""))
       }
       catch {
         case _: java.util.concurrent.TimeoutException =>
@@ -225,15 +191,15 @@ object StressSweep {
           spark.sparkContext.cancelJobGroupAndFutureJobs(group)
           try Await.ready(fut, 60.seconds)
           catch { case _: java.util.concurrent.TimeoutException =>
-            println(s"[sweep] ${q.name}: zombie future did not drain in 60s")
+            println(s"[sweep] ${name}: zombie future did not drain in 60s")
             zombies ::= fut
           }
-          timedOut ::= q.name
+          timedOut ::= name
           ("timeout", s">${timeoutSecs}s; if a pair-lister: output is " +
             "quadratic in dup-clique size by contract — compose after " +
             "exact dedup, or read its bounded *b twin")
         case e: Throwable =>
-          failed ::= q.name
+          failed ::= name
           ("fail",
             String.valueOf(e.getMessage).linesIterator.next().take(120))
       }
@@ -241,18 +207,17 @@ object StressSweep {
       // on a stopped context throws: the key must still be recorded
       try spark.catalog.clearCache() catch { case NonFatal(_) => () }
       val secs = (System.nanoTime() - t0) / 1e9
-      Profile.drainListenerBus(spark) // this key's stage events land here
-      val (mem, disk, peak) =
-        (memSpilled.get - m0, diskSpilled.get - d0, peakExec.get)
+      telemetry.drain(spark) // this key's stage events land here
+      val spill = telemetry.spill
       val drops = DedupQueries.guardDropCount.get() - drops0
       val tainted = drops > 0 && zombies.exists(!_.isCompleted)
       val extra = (if (drops > 0) s"  [guard drops: $drops" +
           (if (tainted) ", TAINTED by a live zombie future]" else "]")
         else "") +
         (if (note.nonEmpty) s"  $note" else "")
-      println(f"[sweep] ${q.name}%-28s $secs%7.2f s  $status  " +
-        f"peak=${peak / 1e6}%.0fMB spill=${mem / 1e6}%.0f/${disk / 1e6}%.0fMB$extra")
-      results :+= q.name -> Res(secs, status, note, drops, tainted, mem, disk, peak)
+      println(f"[sweep] ${name}%-28s $secs%7.2f s  $status  " +
+        f"peak=${spill.peakExec / 1e6}%.0fMB spill=${spill.memory / 1e6}%.0f/${spill.disk / 1e6}%.0fMB$extra")
+      results :+= name -> Res(secs, status, note, drops, tainted, spill)
       writeArtifact(Map.empty)
     }
     // isolated re-measurement of ratio-flag suspects — the manual
@@ -268,7 +233,7 @@ object StressSweep {
     val isoSecs: Map[String, Double] = results.collect {
       case (name, r) if r.status == "ok" &&
           baseline.get(name).exists(b => b > 0 && r.secs > b * 1.5) =>
-        val fn = sweepSet.find(_.name == name).get.fn
+        val fn = fns(name)
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).foreach(_ => ()); true }
           catch { case _: Throwable => false }
@@ -282,8 +247,8 @@ object StressSweep {
     val slowest = results.sortBy(-_._2.secs).take(10)
       .map { case (n, r) => f"$n=${r.secs}%.1f" }.mkString(", ")
     println(f"[sweep] TOTAL ${results.size} queries $total%.1f s; slowest: $slowest")
-    println(f"[sweep] spilled mem ${results.map(_._2.memSpilled).sum / 1e9}%.2f GB, " +
-      f"disk ${results.map(_._2.diskSpilled).sum / 1e9}%.2f GB")
+    println(f"[sweep] spilled mem ${results.map(_._2.spill.memory).sum / 1e9}%.2f GB, " +
+      f"disk ${results.map(_._2.spill.disk).sum / 1e9}%.2f GB")
     if (timedOut.nonEmpty)
       println(s"[sweep] TIMED OUT (reported, not silent): ${timedOut.reverse.mkString(", ")}")
     writeArtifact(isoSecs)

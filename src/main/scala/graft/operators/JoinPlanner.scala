@@ -48,9 +48,9 @@ object JoinPlanner {
         * first measured on the r2 blocking self-join at sf10 (~2000×
         * fan-out): hinted 69-75 s vs unhinted sort-merge 48-63 s.
         * The CONSTANT is placed by the round-15 fixed-output-mass
-        * ladder (committed as STRESS_fanout_r15.json at 32M
+        * ladder (committed as plans/stress/STRESS_fanout_r15.json at 32M
         * output rows, confirmed at 4× mass in
-        * STRESS_fanout_r15_m128.json): the hint wins-or-ties through
+        * plans/stress/STRESS_fanout_r15_m128.json): the hint wins-or-ties through
         * fan-out 32 (ratio 0.85-1.03 across both masses) and loses
         * monotonically from 64 up (1.05-1.30 at 64 → 1.26-1.62 at
         * 512-2048) — the knee sits exactly between the rungs this
@@ -70,7 +70,7 @@ object JoinPlanner {
         * revisit only if a production key regresses with fan-out ≤ 32
         * AND output mass ≥ 10^8 (then condition on
         * `Estimate.outRows`, already computed). Data:
-        * STRESS_fanout_r15.json / STRESS_fanout_r15_m128.json. */
+        * plans/stress/STRESS_fanout_r15.json / plans/stress/STRESS_fanout_r15_m128.json. */
       shuffleHashMaxFanout: Long = 32L)
 
   /** Never-undercount bounds from the per-side CMS cell grids. */

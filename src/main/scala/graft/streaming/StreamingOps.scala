@@ -164,7 +164,7 @@ object StreamingOps {
     * 100-TB prescription, made a first-class path by round 15's
     * pressure finding — the uncapped probe's clique-quadratic verify
     * mass cannot complete under a starved heap,
-    * STRESS_spill_r15_streaming*.json). `hotBuckets` is the FIXED
+    * plans/stress/STRESS_spill_r15_streaming*.json). `hotBuckets` is the FIXED
     * (band_idx, band_hash) set whose corpus-build occupancy exceeded
     * the cap: those buckets are dead on BOTH probe and reference
     * sides, so candidate fan-out per bucket is bounded while

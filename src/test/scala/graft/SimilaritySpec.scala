@@ -51,7 +51,8 @@ class SimilaritySpec extends AnyFunSuite {
     def inertia(df: DataFrame, group: Column): Map[Long, Long] =
       df.groupBy(group.cast("long").as("g")).agg(sum($"d2"))
         .as[(Long, Long)].collect().toMap
-    def seedInertia(train: DataFrame, by: Seq[String], group: Column): Map[Long, Long] = {
+    // each training row beside its nearest seed centroid (group, cid, q, d2)
+    def seedAssign(train: DataFrame, by: Seq[String], group: Column): DataFrame = {
       val seedRow = train
         .filter($"vec_id" % step === 0 && $"vec_id" < step * 16)
         .select(by.map(col) ++ Seq(TextQueries.intDiv($"vec_id", lit(step)).as("cid"),
@@ -61,22 +62,44 @@ class SimilaritySpec extends AnyFunSuite {
       val withSeed =
         if (by.isEmpty) train.crossJoin(broadcast(seedRow))
         else train.join(broadcast(seedRow), by)
-      inertia(withSeed.select(group.as("group"), element_at(array_sort(transform($"cents", c =>
+      withSeed.select(group.cast("long").as("group"), $"q", element_at(array_sort(transform($"cents", c =>
         struct(($"n2" - lit(2L) * functions.VecMath.dotCol($"q", c.getField("cv"))
-          + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))), 1)
-        .getField("d2").as("d2")), $"group")
+          + c.getField("cn2")).as("d2"), c.getField("cid").as("cid")))), 1).as("best"))
+        .select($"group", $"best.cid".cast("long").as("cid"), $"q", $"best.d2".as("d2"))
     }
-    val (_, a2) = SimilarityQueries.kmeansState(spark, TestSpark.sf)
+    // the first round's update: per (group, cid), the truncating integer
+    // mean (`s div n`) of its members, position by position
+    def firstMeans(assigned: DataFrame): Map[(Long, Long), Seq[Long]] =
+      assigned.select($"group", $"cid", $"q").as[(Long, Long, Seq[Long])].collect()
+        .groupBy { case (g, cid, _) => (g, cid) }
+        .map { case (k, rows) =>
+          k -> rows.toSeq.map(_._3).transpose.map(xs => xs.sum / xs.size.toLong) }
+    def trained(cents1: DataFrame, group: Column): Map[(Long, Long), Seq[Long]] =
+      cents1.select(group.cast("long"), $"cid".cast("long"), $"cv")
+        .as[(Long, Long, Seq[Long])].collect()
+        .map { case (g, cid, cv) => (g, cid) -> cv }.toMap
+    val (cents1, a2) = SimilarityQueries.kmeansState(spark, TestSpark.sf)
     val subs = SimilarityQueries.subspaces(quant, "q", "vec_id")
-    val (_, pqA2) = SimilarityQueries.Codebook(subs, step, Seq("m")).lloyd
+    val (pqCents1, pqA2) = SimilarityQueries.Codebook(subs, step, Seq("m")).lloyd
+    val wholeSeed = seedAssign(quant, Nil, lit(0L))
+    val subsSeed = seedAssign(subs, Seq("m"), $"m")
     val inputs = Seq(
-      ("whole vectors", inertia(a2, lit(0L)), seedInertia(quant, Nil, lit(0L))),
-      ("PQ subspace m", inertia(pqA2, $"m"), seedInertia(subs, Seq("m"), $"m")))
-    inputs.foreach { case (what, after, before) =>
+      ("whole vectors", inertia(a2, lit(0L)), inertia(wholeSeed, $"group"),
+        trained(cents1, lit(0L)), firstMeans(wholeSeed)),
+      ("PQ subspace m", inertia(pqA2, $"m"), inertia(subsSeed, $"group"),
+        trained(pqCents1, $"m"), firstMeans(subsSeed)))
+    inputs.foreach { case (what, after, before, cents, means) =>
       assert(after.keySet == before.keySet && after.nonEmpty, what)
       after.foreach { case (g, a) =>
         assert(a <= before(g), s"$what $g: inertia rose: ${before(g)} -> $a")
         assert(a > 0L, s"$what $g")
+      }
+      // every trained centroid is the integer mean of its first-round
+      // members: inertia alone cannot see a sign error in the update,
+      // since near-origin means leave ||x + mu|| close to ||x - mu||
+      assert(cents.keySet == means.keySet && cents.nonEmpty, what)
+      cents.foreach { case (k, cv) =>
+        assert(cv == means(k), s"$what $k: centroid is not its members' mean")
       }
     }
     assert(inputs(1)._2.size == 4) // one codebook per subspace

@@ -11,14 +11,17 @@
 #      leak step fails if anything but the cross-JVM source fixtures
 #      (Fixtures.onDisk, prefix graft_fixture_) survives the JVM,
 #   3. the stress_diff gate selftest,
-#   4. the repo benchmark's trace-analysis self-tests (pure Python),
-#   5. the shortest run of the benchmark's seeded search templates
+#   4. a two-key StressSweep (q1_agg, g1_connected_components) whose
+#      artifact must load in tools/stress_diff.py (diffed against
+#      itself, exit 0),
+#   5. the repo benchmark's trace-analysis self-tests (pure Python),
+#   6. the shortest run of the benchmark's seeded search templates
 #      (warm-up plus one round), each output checked against its
 #      DuckDB twin,
-#   6. the shortest run of the benchmark's build workload
+#   7. the shortest run of the benchmark's build workload
 #      (la_build_pipeline on a permuted file split), its output checked
 #      against DuckDB,
-#   7. the shortest run of the benchmark's curate workload (the corpus
+#   8. the shortest run of the benchmark's curate workload (the corpus
 #      pipeline and v9_ivf_pq on a permuted row-to-file split — the only
 #      check of the vector index off the fixture's file layout), its
 #      output checked against DuckDB.
@@ -65,6 +68,10 @@ step verify sbt -batch "set run / javaOptions += \"-Djava.io.tmpdir=$TMPD\"" \
 step tmp_leaks leaks
 step oracle python3 tools/check.py "$VDIR" "$SF"
 step diff_selftest python3 tools/stress_diff_selftest.py
+rm -f "$OUT/stress.json"
+step stress_smoke env SPARK_GRAFT_SWEEP_ONLY=q1_agg,g1_connected_components \
+  sbt -batch "runMain graft.StressSweep $SF 120 $OUT/stress.json"
+step stress_smoke_diff python3 tools/stress_diff.py "$OUT/stress.json" "$OUT/stress.json"
 step perfbench_layers python3 perfbench/test_perfbench.py LayerTest
 step perfbench_search python3 perfbench/run.py --workload search --seed 5 \
   --seconds 0 --trace 0

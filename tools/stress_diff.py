@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Diff two StressSweep artifacts (STRESS_r{N}.json) the way BENCH
+"""Diff two StressSweep artifacts (plans/stress/STRESS_r{N}.json) the way BENCH
 wall-times are diffed round-over-round. Usage:
     python3 tools/stress_diff.py <old.json> <new.json> [--ratio-jump 1.5]
 Reports, in order of severity:
