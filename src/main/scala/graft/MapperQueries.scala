@@ -1690,8 +1690,8 @@ object MapperQueries extends QueryGroup {
     * name:LLL language routing, concordance equivalents, hierarchy
     * parent election, the bbox point/broken gates, the lbl→geom point
     * fallback with the reference's POINT spacing, and the tiny-area
-    * rejection. The adaptive factor loop and the degenerate-ring
-    * EDIVZERO escape are spec-covered (`WofMapSpec`). */
+    * rejection. The degenerate-ring EDIVZERO escape is spec-covered
+    * (`WofMapSpec`). */
   def wofMapper(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.pipeline.WofMap

@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 /** Event-time window operators over the `events` table (SURVEY §2.10).
   * The reference's incremental layer is a high-water-mark batch walk
   * (`pipeline/process/base/harvester.py:111-286`); Structured Streaming
-  * windows/watermarks are the idiomatic Spark superset. These run the
-  * same window logic in batch so the DuckDB oracle can check them; the
-  * streaming path (readStream + watermark + flatMapGroupsWithState) is
-  * exercised in the ScalaTest specs with MemoryStream.
+  * windows/watermarks are the idiomatic Spark superset. Keys with a
+  * streaming form (st1, st7, st8, st8c, st9, st10, st12) call the
+  * `streaming.StreamingOps` operator on the batch table, so the DuckDB
+  * oracle checks the same code that StreamingSpec runs over
+  * MemoryStreams; the rest (st2, st3, st5, st6, st8b, st11) are batch
+  * forms only.
   *
   * Exactness: counts + cents sums only (integer); window bounds are
   * epoch-aligned so both engines bucket identically.
@@ -17,14 +19,8 @@ import org.apache.spark.sql.functions._
 object StreamQueries extends QueryGroup {
 
   /** Tumbling 1-day event-time windows per event type. */
-  def tumbling(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.load(spark, dir, "events")
-      .groupBy(window($"ts", "1 day").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum(RelationalQueries.cents($"value")).cast("long").as("value_cents"))
-      .select($"w.start".as("window_start"), $"event_type", $"n_events", $"value_cents")
-  }
+  def tumbling(spark: SparkSession, dir: String): DataFrame =
+    streaming.StreamingOps.tumblingCounts(Tables.load(spark, dir, "events"))
   private val tumblingOracle: String =
     """SELECT time_bucket(INTERVAL '1 day', ts) AS window_start, event_type,
       |  COUNT(*) AS n_events,
@@ -32,26 +28,12 @@ object StreamQueries extends QueryGroup {
       |FROM events GROUP BY 1, 2""".stripMargin
 
   /** ST12: the streaming data-quality gate — s18's rule battery scoped
-    * to tumbling 1-day event-time windows, so a bad producer deploy
-    * surfaces in its own window instead of diluting into the lifetime
-    * counts. Same single-scan wide conditional aggregation; the shape
-    * is watermark-compatible (groupBy window + sums) and the
-    * StreamingSpec harness runs it over a MemoryStream. */
-  def streamDq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val k = nullif(regexp_extract($"props", "\"k\": (\\d+)", 1), lit(""))
-      .cast("long")
-    Tables.load(spark, dir, "events")
-      .groupBy(window($"ts", "1 day").as("w"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when($"value" > 450d, 1L).otherwise(0L)).as("v_value_max"),
-        sum(when($"user_id" <= 0L, 1L).otherwise(0L)).as("v_user_pos"),
-        sum(when(k >= 90L, 1L).otherwise(0L)).as("v_props_k"),
-        sum(when($"event_type" === "purchase" && $"value" < 50d, 1L)
-          .otherwise(0L)).as("v_purchase_min"))
-      .select($"w.start".as("window_start"), $"n_rows", $"v_value_max",
-        $"v_user_pos", $"v_props_k", $"v_purchase_min")
-  }
+    * to tumbling 1-day event-time windows (`StreamingOps.dqCounts`, the
+    * operator StreamingSpec runs over a MemoryStream), so a bad producer
+    * deploy surfaces in its own window instead of diluting into the
+    * lifetime counts. */
+  def streamDq(spark: SparkSession, dir: String): DataFrame =
+    streaming.StreamingOps.dqCounts(Tables.load(spark, dir, "events"))
   private val streamDqOracle: String =
     """SELECT time_bucket(INTERVAL '1 day', ts) AS window_start,
       |  CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -78,8 +60,7 @@ object StreamQueries extends QueryGroup {
       |GROUP BY 1""".stripMargin
 
   /** Sessionization: 30-minute inactivity gap per user; per-session stats.
-    * Batch form = lag/cumsum window functions; the streaming form is
-    * flatMapGroupsWithState (see streaming.Sessionize + spec). */
+    * Batch form only: lag/cumsum window functions. */
   def sessionize(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
@@ -137,14 +118,10 @@ object StreamQueries extends QueryGroup {
       |SELECT user_id, MIN(us) AS start_us, COUNT(*) AS n_events
       |FROM sess GROUP BY user_id, sid""".stripMargin
 
-  /** Streaming dedup, batch-checked: keep the FIRST event per
+  /** Event dedup, batch form only: keep the FIRST event per
     * (user_id, event_type) — min (event-time, event_id) — and count the
-    * duplicates it shadows. The batch form of
-    * `dropDuplicatesWithinWatermark` (exercised on a real stream in
-    * StreamingSpec); at 100 TB this is one hash shuffle on the dedup
-    * key with map-side partial min/count, and in the streaming form
-    * the watermark bounds the state store exactly like the reference's
-    * harvest cut-off bounds its re-reads. */
+    * duplicates it shadows. At 100 TB this is one hash shuffle on the
+    * dedup key with map-side partial min/count. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.load(spark, dir, "events")
@@ -171,24 +148,14 @@ object StreamQueries extends QueryGroup {
 
   /** Per-window heavy hitters: the top-3 event types of every 1-day
     * window by count (ties: type asc) — the streaming top-k shape
-    * (trending items per window). Batch form = window rank over the
-    * tumbling aggregate; the streaming form ranks each watermark-
-    * finalized window in foreachBatch (spec:`StreamingSpec`). Scale:
-    * rank partitions carry at most |event_type| rows per window —
-    * the aggregate, not the events, is what shuffles twice. */
-  def streamTopk(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val agg = Tables.load(spark, dir, "events")
-      .groupBy(window($"ts", "1 day").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n_events"))
-      .select($"w.start".as("window_start"), $"event_type", $"n_events")
-    val w = Window.partitionBy($"window_start")
-      .orderBy($"n_events".desc, $"event_type".asc)
-    agg.withColumn("rank", row_number().over(w)).filter($"rank" <= 3)
-      .select($"window_start", $"rank".cast("long").as("rank"),
-        $"event_type", $"n_events")
-  }
+    * (trending items per window): `topkPerWindow` over `tumblingCounts`,
+    * the pair StreamingSpec runs in foreachBatch over watermark-
+    * finalized windows. Scale: rank partitions carry at most
+    * |event_type| rows per window — the aggregate, not the events, is
+    * what shuffles twice. */
+  def streamTopk(spark: SparkSession, dir: String): DataFrame =
+    streaming.StreamingOps.topkPerWindow(
+      streaming.StreamingOps.tumblingCounts(Tables.load(spark, dir, "events")), 3)
   private val streamTopkOracle: String =
     """WITH agg AS (
       |  SELECT time_bucket(INTERVAL '1 day', ts) AS window_start, event_type,
@@ -299,30 +266,23 @@ object StreamQueries extends QueryGroup {
        |LEFT JOIN sver ON d.doc_id = new_id""".stripMargin
   }
 
-  /** Batch twin of the stream-stream interval join
-    * (streaming.StreamingOps.intervalJoin, MemoryStream-tested in
-    * StreamingSpec): every error within 30 minutes AFTER a click by the
-    * same user, with the gap. Registering the batch form puts the
-    * interval-join semantics under the DuckDB oracle — the streaming
-    * path keeps the same projection and bound so the spec can pin the
-    * two forms to each other.
+  /** The stream-stream interval join (`StreamingOps.intervalJoin`) run
+    * on the batch table: every error within 30 minutes AFTER a click by
+    * the same user, with the gap. Registering it puts the interval-join
+    * semantics under the DuckDB oracle; StreamingSpec runs the same
+    * operator over two MemoryStreams and pins it to this key.
     * Scale: shuffle join on user_id; the time bound is a join-condition
     * filter, not a post-filter, so Spark prunes pairs inside the join.
     * In the streaming form the watermark bounds both state stores. */
   def intervalJoinBatch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.load(spark, dir, "events")
-      .select($"event_id", $"user_id", unix_micros($"ts").as("us"),
-        $"event_type")
-    val c = ev.filter($"event_type" === "click")
-      .select($"user_id", $"event_id".as("click_id"), $"us".as("cus"))
-    val e = ev.filter($"event_type" === "error")
-      .select($"user_id".as("e_user"), $"event_id".as("error_id"),
-        $"us".as("eus"))
-    c.join(e, $"user_id" === $"e_user" &&
-        $"eus" >= $"cus" && $"eus" <= $"cus" + 1800L * 1000000L)
-      .select($"user_id", $"click_id", $"error_id",
-        ($"eus" - $"cus").as("gap_micros"))
+    def side(kind: String, user: String, id: String, ts: String) =
+      ev.filter($"event_type" === kind)
+        .select($"user_id".as(user), $"event_id".as(id), $"ts".as(ts))
+    streaming.StreamingOps.intervalJoin(
+      side("click", "user_id", "click_id", "cts"),
+      side("error", "e_user", "error_id", "ets"))
   }
   private val intervalJoinOracle: String =
     """WITH ev AS (

@@ -33,9 +33,10 @@ import org.json4s.JsonDSL._
   * drop counts) so rounds can diff scaling the way BENCH_r*.json diffs
   * wall-times; with a fourth argument (a prior artifact, e.g. an sf0.1
   * run) each key also carries `ratio` = this run's seconds over the
-  * baseline's. Every key also records the stage-level memory counters
-  * (`mem_spilled_bytes`, `disk_spilled_bytes`, `peak_exec_mem_bytes`),
-  * and the artifact is rewritten after every key.
+  * baseline's. Every key also records the stage-level counters
+  * (`mem_spilled_bytes`, `disk_spilled_bytes`, `peak_exec_mem_bytes`,
+  * `shuffle_read_bytes`, `shuffle_write_bytes`), and the artifact is
+  * rewritten after every key.
   *
   * VARIANTS run through this same harness under `SPARK_GRAFT_CONF`
   * (stamped into the artifact as `env_conf`) and `SPARK_GRAFT_SWEEP_ONLY`
@@ -53,7 +54,8 @@ import org.json4s.JsonDSL._
   */
 object StressSweep {
   final private case class Res(secs: Double, status: String, note: String,
-      guardDrops: Long, dropsTainted: Boolean, spill: Telemetry.Spill)
+      guardDrops: Long, dropsTainted: Boolean, spill: Telemetry.Spill,
+      shuffle: Telemetry.Shuffle)
 
   /** Keys whose sf1/sf0.1 ratio is super-linear BY CONTRACT — the note
     * rides the artifact so a round-over-round ratio diff reads the why
@@ -108,9 +110,9 @@ object StressSweep {
     val envConf = Sessions.envConf
     val spark = Sessions.create("graft-stress-sweep", cpus)
     envConf.foreach { case (k, v) => println(s"[sweep] env conf: $k=$v") }
-    // stage-level memory counters, reset per key; under the spill
-    // regime a sweep that "passes" with zero spill just wasn't under
-    // pressure
+    // stage-level memory and shuffle counters, reset per key; under the
+    // spill regime a sweep that "passes" with zero spill just wasn't
+    // under pressure
     val telemetry = Telemetry.attach(spark)
     var failed = List.empty[String]
     var timedOut = List.empty[String]
@@ -149,6 +151,8 @@ object StressSweep {
           ("mem_spilled_bytes" -> r.spill.memory) ~
           ("disk_spilled_bytes" -> r.spill.disk) ~
           ("peak_exec_mem_bytes" -> r.spill.peakExec) ~
+          ("shuffle_read_bytes" -> r.shuffle.read) ~
+          ("shuffle_write_bytes" -> r.shuffle.written) ~
           ("note" -> Some(r.note).filter(_.nonEmpty)))
       }
       val doc = Json.write(head ~ ("n_queries" -> results.size) ~
@@ -156,6 +160,8 @@ object StressSweep {
         ("n_timeout" -> timedOut.size) ~ ("n_fail" -> failed.size) ~
         ("total_mem_spilled_bytes" -> results.map(_._2.spill.memory).sum) ~
         ("total_disk_spilled_bytes" -> results.map(_._2.spill.disk).sum) ~
+        ("total_shuffle_read_bytes" -> results.map(_._2.shuffle.read).sum) ~
+        ("total_shuffle_write_bytes" -> results.map(_._2.shuffle.written).sum) ~
         ("queries" -> JObject(rows.toList)))
       val target = Paths.get(path)
       val dir = Option(target.toAbsolutePath.getParent).getOrElse(Paths.get("."))
@@ -217,7 +223,8 @@ object StressSweep {
         (if (note.nonEmpty) s"  $note" else "")
       println(f"[sweep] ${name}%-28s $secs%7.2f s  $status  " +
         f"peak=${spill.peakExec / 1e6}%.0fMB spill=${spill.memory / 1e6}%.0f/${spill.disk / 1e6}%.0fMB$extra")
-      results :+= name -> Res(secs, status, note, drops, tainted, spill)
+      results :+= name -> Res(secs, status, note, drops, tainted, spill,
+        telemetry.shuffle)
       writeArtifact(Map.empty)
     }
     // isolated re-measurement of ratio-flag suspects — the manual

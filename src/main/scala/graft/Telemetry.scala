@@ -8,10 +8,11 @@ import scala.util.control.NonFatal
 /** The one SparkListener of the measurement mains (`Profile`,
   * `StressSweep`). Per job it records id, submit and end time, stage
   * and task counts and `spark.job.description`; per completed stage it
-  * adds up memory and disk spill and keeps the peak execution memory.
+  * adds up memory and disk spill and shuffle bytes read and written, and
+  * keeps the peak execution memory.
   *
   * Protocol: [[drain]], [[reset]], run the measured work, [[drain]],
-  * then read [[jobs]] / [[spill]]. The bus delivers events
+  * then read [[jobs]] / [[spill]] / [[shuffle]]. The bus delivers events
   * asynchronously, so a read without the second drain can miss the
   * tail of the work. */
 final class Telemetry extends SparkListener {
@@ -20,6 +21,7 @@ final class Telemetry extends SparkListener {
   private val jobMap = mutable.LinkedHashMap[Int, Job]()
   private val stageToJob = mutable.HashMap[Int, Int]()
   private var spilled = Spill(0L, 0L, 0L)
+  private var shuffled = Shuffle(0L, 0L)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val desc = Option(e.properties)
@@ -40,11 +42,14 @@ final class Telemetry extends SparkListener {
       spilled = Spill(spilled.memory + m.memoryBytesSpilled,
         spilled.disk + m.diskBytesSpilled,
         math.max(spilled.peakExec, m.peakExecutionMemory))
+      shuffled = Shuffle(shuffled.read + m.shuffleReadMetrics.totalBytesRead,
+        shuffled.written + m.shuffleWriteMetrics.bytesWritten)
     }
   }
 
   def reset(): Unit = synchronized {
-    jobMap.clear(); stageToJob.clear(); spilled = Spill(0L, 0L, 0L)
+    jobMap.clear(); stageToJob.clear()
+    spilled = Spill(0L, 0L, 0L); shuffled = Shuffle(0L, 0L)
   }
 
   /** Blocks until the async listener bus has delivered every posted
@@ -65,6 +70,9 @@ final class Telemetry extends SparkListener {
   /** Spill and peak execution memory since the last [[reset]]. */
   def spill: Spill = synchronized(spilled)
 
+  /** Shuffle bytes read and written since the last [[reset]]. */
+  def shuffle: Shuffle = synchronized(shuffled)
+
   /** Milliseconds at least one job since the last [[reset]] ran. */
   def busy: Long = busyTime(jobs.map(j => (j.submitted, j.completed)))
 }
@@ -78,6 +86,10 @@ object Telemetry {
   /** Bytes spilled from memory and to disk, summed over completed
     * stages, and the largest stage peak execution memory. */
   final case class Spill(memory: Long, disk: Long, peakExec: Long)
+
+  /** Shuffle bytes read (local + remote) and written, summed over
+    * completed stages. */
+  final case class Shuffle(read: Long, written: Long)
 
   def attach(spark: SparkSession): Telemetry = {
     val t = new Telemetry

@@ -39,13 +39,8 @@ object TextQueries extends QueryGroup {
 
   /** Polynomial hash of one word's bytes: fold (a*31+b) % (2^31-1).
     * Backed by the native codegen'd PolyHash expression; identical to the
-    * HOF char-fold (wordHashHof) for ASCII input. */
+    * HOF char-fold reference `PolyHashSpec.wordHashHof` for ASCII input. */
   def wordHash(w: Column): Column = call_function("poly_hash", w)
-
-  /** Reference HOF implementation (kept for the equivalence spec). */
-  def wordHashHof(w: Column): Column =
-    aggregate(transform(split(w, ""), c => ascii(c).cast("long")),
-      lit(0L), (a, c) => (a * WordB + c) % HashP)
   def wordHashSql(w: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), [CAST(unicode(($w)[i]) AS BIGINT) for i in range(1, len($w)+1)]), (a,b) -> (a*$WordB+b) % $HashP)"
 

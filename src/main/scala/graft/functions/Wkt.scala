@@ -63,9 +63,6 @@ object Wkt {
       .when(kindCol(w) === "POLYGON",
         size(split(regexp_extract(w, "\\(\\(([^)]*)\\)", 1), ",")))
 
-  def kindOf(wkt: String): Option[String] = parse(wkt).map(_.kind)
-  def coordCount(wkt: String): Option[Int] = parse(wkt).map(_.nCoords)
-
   /** The textual x/y of the first coordinate — the reference compares the
     * STRING length of coordinates as a decimal-precision proxy
     * (`merger.py:234-244`: "just compare str len"). */

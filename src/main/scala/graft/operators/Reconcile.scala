@@ -7,41 +7,22 @@ import org.apache.spark.sql.DataFrame
   * (`pipeline/process/reconciler.py:34-125`: URI pass, name pass,
   * collector crawl repeated until `issubset`).
   *
-  * Each reconciler is `currentEdges => newEdges` (same (src, dst)
-  * schema). The loop unions + dedupes and stops when the distinct count
-  * is stable — the declarative form of the reference's per-record
-  * fixpoint. Edges feed Graph.connectedComponents for idmap minting.
+  * `frontierFixpoint` is the engine's one fixpoint loop; edges feed
+  * Graph.connectedComponents for idmap minting. Its reference is the
+  * whole-set loop `ReconcileSpec.fixpoint` (test side): union every
+  * reconciler's output and re-distinct until the distinct count is
+  * stable — the declarative form of the reference's per-record
+  * fixpoint, which ReconcileSpec checks the frontier loop against.
   */
 object Reconcile {
 
-  def fixpoint(seed: DataFrame,
-      reconcilers: Seq[DataFrame => DataFrame],
-      maxIter: Int = 10): DataFrame = {
-    var edges = seed.select("src", "dst").distinct().localCheckpoint()
-    var n = edges.count()
-    var iter = 0
-    var grown = true
-    while (grown && iter < maxIter) {
-      var next = edges
-      reconcilers.foreach { r =>
-        next = next.union(r(next).select("src", "dst")).distinct()
-      }
-      next = next.localCheckpoint()
-      val n2 = next.count()
-      grown = n2 != n
-      n = n2
-      edges = next
-      iter += 1
-    }
-    edges
-  }
-
   import org.apache.spark.sql.functions.col
 
-  /** Frontier-driven fixpoint — same closure as `fixpoint` when every
-    * expander is NODE-ANCHORED and monotone: it takes a one-column
-    * (`v`) node set and returns only edges whose `src` is in that set
-    * (the crawl and name-pass reconcilers both have this shape). Then
+  /** Frontier-driven fixpoint — same closure as the whole-set reference
+    * `ReconcileSpec.fixpoint` when every expander is NODE-ANCHORED and
+    * monotone: it takes a one-column (`v`) node set and returns only
+    * edges whose `src` is in that set (the crawl and name-pass
+    * reconcilers both have this shape). Then
     * each edge is produced exactly once — the round its anchor node
     * first appears — so per-round work is proportional to the FRONTIER
     * fan-out, not the accumulated reach: the old loop re-joined and
@@ -50,7 +31,8 @@ object Reconcile {
     * graph per round at 100 TB. One scalar (new-node count) reaches
     * the driver per round; lineage is cut with localCheckpoint.
     *
-    * Contract, both parts required for the closure to equal `fixpoint`'s:
+    * Contract, both parts required for the closure to equal the
+    * reference's (`ReconcileSpec.fixpoint`):
     *   - NODE-ANCHORED and monotone: an expander returns only edges whose
     *     `src` is in its input node set;
     *   - EMPTY IN, EMPTY OUT: an expander maps an empty node set to an

@@ -114,7 +114,4 @@ object FastMap {
       b.map(_.begin).getOrElse(""), b.map(_.end).getOrElse(""),
       d.map(_.begin).getOrElse(""), d.map(_.end).getOrElse("")))
   }
-
-  def combineSubfields(fields: Seq[String]): String =
-    fields.filter(_.nonEmpty).mkString(", ")
 }

@@ -144,7 +144,6 @@ object GettyMap {
   private val genderFlag = "http://vocab.getty.edu/aat/300055147"
   private val nationalityFlag = "http://vocab.getty.edu/aat/300379842"
   private val occupationFlag = "http://vocab.getty.edu/aat/300263369"
-  private val activeFlag = "http://vocab.getty.edu/aat/300393177"
   private val roleFlag = "http://vocab.getty.edu/aat/300435108"
   private val ignoreValues = Set(
     "http://vocab.getty.edu/aat/300379012", // undetermined
@@ -171,9 +170,4 @@ object GettyMap {
       out.toSeq
     }
   }
-
-  /** ULAN carried_out → Active dates (`:456-470`): only nodes flagged
-    * 300393177 become Active events. */
-  def isActive(classificationIds: Seq[String]): Boolean =
-    classificationIds.contains(activeFlag)
 }

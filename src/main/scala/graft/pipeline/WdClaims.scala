@@ -5,7 +5,7 @@ import graft.functions.DateLib
 /** M3/M4/M5: the wikidata claim processors — re-expression of
   * `pipeline/sources/general/wikidata/mapper.py`:
   *
-  *   - `process_labels` / `process_only_label` (:297-368): multilingual
+  *   - `process_labels` (:311-368): multilingual
   *     prefLabel → PrimaryName list, must-have top-10 languages first,
   *     content-deduped with language union; descriptions for must-have
   *     languages; `mul` entries appended without a language.
@@ -85,16 +85,6 @@ object WdClaims {
         descs :+= WdName(v, Seq(lang))
 
     LabelResult(label, names, descs)
-  }
-
-  /** process_only_label (mapper.py:297-309). */
-  def onlyLabel(prefLabel: Seq[(String, String)]): Option[String] = {
-    val byLang = prefLabel.toMap
-    mustHave.collectFirst {
-      case l if byLang.get(l).exists(v => v != null && v.nonEmpty) => byLang(l)
-    }.orElse(prefLabel.collectFirst {
-      case (l, v) if processLangs.contains(l) => v
-    }).orElse(byLang.get("mul"))
   }
 
   /** mapper.py:26-45 ext_hash, in iteration (insertion) order; P244 and

@@ -10,9 +10,6 @@ package graft.pipeline
   *     closed-ring endpoint pick (first == last → use the
   *     second-to-last as the far end) and the divide-by-zero escape
   *     (coincident endpoints raise, the caller drops the geometry);
-  *   - the adaptive factor loop (`:186-201`): rings longer than 350
-  *     points start at factor 500/(10·len) and halve/double until the
-  *     simplified ring lands in [100, 600];
   *   - fix_identifier (`:64-69`): path/geojson ids reduce to the bare
   *     record number;
   *   - name:LLL_x_preferred properties (`:93-99`): the three-letter
@@ -67,23 +64,6 @@ object WofMap {
       ramerdouglas(line.take(pos + 2), dist) ++
         ramerdouglas(line.drop(pos + 1), dist).tail
     }
-  }
-
-  /** The adaptive factor loop (`:186-201`): None when simplification
-    * raised (degenerate ring), Some(simplified) once the length lands
-    * in [100, 600]. Rings of <= 350 points pass through untouched. */
-  def simplifyRing(coords: Seq[Pt]): Option[Seq[Pt]] = {
-    if (coords.length <= 350) return Some(coords)
-    var factor = 500.0 / (coords.length * 10)
-    while (true) {
-      val n =
-        try ramerdouglas(coords, factor)
-        catch { case _: Exception => return None }
-      if (n.length < 100) factor /= 2
-      else if (n.length > 600) factor *= 2
-      else return Some(n)
-    }
-    None // unreachable
   }
 
   /** fix_identifier (`:64-69`). */

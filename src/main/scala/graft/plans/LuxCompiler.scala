@@ -304,10 +304,6 @@ final class LuxCompiler(entities: DataFrame, triples: DataFrame,
 
   def compileRanked(query: String): DataFrame = ranked(LuxQL.parse(query))
 
-  /** JSON query form → the same ranked plan as its string twin. */
-  def compileRankedJson(query: String): DataFrame =
-    ranked(LuxQL.parseJson(query))
-
   /** The scoring-term bag of a boosting argument: non-empty only when
     * the whole subtree is plain word leaves (alone or under AND/OR) —
     * anything else opts the BOOST into the flat membership lift. */
@@ -467,55 +463,4 @@ object LuxCompiler {
     }
     size(phrase) > 0
   }
-}
-
-/** Q4: the searchConfig field catalog with `*` template expansion
-  * (`ml_lexer.py:259-321`): the `*` pseudo-class holds templates whose
-  * index tag contains a literal `*` replaced by the lower-cased class
-  * name; entries typed string/xstring/date/number are leaf fields,
-  * anything else is a relationship whose type names the target class.
-  * Per-class entries then override/extend the expanded templates. */
-object LuxSearchConfig {
-  /** class → field → (index tag template, value type). */
-  type Config = Map[String, Map[String, (String, String)]]
-
-  val fieldTypes: Set[String] = Set("string", "xstring", "date", "number")
-
-  final case class ClassCatalog(
-      fields: Map[String, (String, String)], // name -> (index tag, type)
-      rels: Map[String, (String, String)])   // name -> (index tag, target)
-
-  /** Expand a config into per-class catalogs (process_config,
-    * ml_lexer.py:274-298). */
-  def expand(cfg: Config): Map[String, ClassCatalog] = {
-    val templates = cfg.getOrElse("*", Map.empty)
-    cfg.iterator.filter(_._1 != "*").map { case (cls, own) =>
-      val base = templates.map { case (name, (tag, vtype)) =>
-        name -> (tag.replace("*", cls.toLowerCase(java.util.Locale.ROOT)), vtype)
-      }
-      val merged = base ++ own
-      val (fs, rs) = merged.partition { case (_, (_, vtype)) => fieldTypes(vtype) }
-      cls -> ClassCatalog(fs, rs)
-    }.toMap
-  }
-
-  /** A searchConfig modeled on the reference's (shape, not content —
-    * tags name our substrate predicates). */
-  val default: Config = Map(
-    "*" -> Map(
-      "name" -> ("*Name", "string"),
-      "classification" -> ("*ClassifiedAs", "Concept"),
-      "memberOf" -> ("*MemberOf", "Set"),
-      "anyRef" -> ("*Any", "Reference")),
-    "Agent" -> Map(
-      "startAt" -> ("agentStartPlace", "Place"),
-      "endAt" -> ("agentEndPlace", "Place"),
-      "activeDate" -> ("agentActiveDate", "date")),
-    "Item" -> Map(
-      "producedBy" -> ("agentOfProduction", "Agent"),
-      "producedAt" -> ("placeOfProduction", "Place"),
-      "depth" -> ("itemDepth", "number")),
-    "Work" -> Map(
-      "aboutAgent" -> ("about_agent", "Agent"),
-      "language" -> ("workLanguage", "Concept")))
 }

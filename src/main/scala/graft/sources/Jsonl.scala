@@ -30,38 +30,4 @@ object Jsonl {
   /** Write as JSONL shards (compact separators, like export_full_N). */
   def save(df: DataFrame, path: String, shards: Int): Unit =
     df.repartition(shards).write.mode("overwrite").json(path)
-
-  /** A quarantined ingest: `good` parsed rows, `bad` raw reject lines,
-    * `release()` drops the shared cache once both are consumed. */
-  final case class Quarantined(good: DataFrame, bad: DataFrame,
-      release: () => Unit)
-
-  /** Schema'd JSONL read with corrupt-line QUARANTINE: PERMISSIVE mode
-    * parks unparseable lines in a corrupt-record column instead of
-    * failing the job — one mangled byte in a 100 TB dump must cost one
-    * row, not the build. The reject lines land in `bad` for triage
-    * next to the output (the reference's error-envelope split,
-    * `Fetcher` style, applied to the ingest path).
-    *
-    * The two frames share one cached read: Spark refuses a filter on
-    * the corrupt-record column over a direct file scan (the parser
-    * would have to re-run with a different required schema), so the
-    * parse is pinned first — also what you want at scale, one pass not
-    * two. Call `release()` when both sides are consumed. */
-  def loadQuarantine(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): Quarantined = {
-    val cr = "_corrupt_record"
-    val raw = spark.read
-      .schema(schema.add(cr, org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", cr)
-      .json(path)
-      // the single biggest cache on the ingest path: a pressure
-      // profile's spark.sql.defaultCacheStorageLevel=DISK_ONLY reaches it
-      .persist()
-    Quarantined(
-      good = raw.filter(col(cr).isNull).drop(cr),
-      bad = raw.filter(col(cr).isNotNull).select(col(cr).as("raw_line")),
-      release = () => { raw.unpersist(); () })
-  }
 }

@@ -15,9 +15,7 @@ import java.nio.file.{Files, Paths, FileAlreadyExistsException, StandardOpenOpti
   * re-reads the fresh manifest and RE-APPLIES its change against it:
   * commits serialize without locks, and a crash between data write and
   * manifest put leaks only unreferenced files (cleaned by compaction,
-  * u4). Pairs with `StreamingOps.idempotentBatchWriter`: the batch
-  * writer makes the DATA write replay-safe, this makes the VERSION
-  * advance race-safe.
+  * u4).
   *
   * Reference analog: the record cache's versioned swap discipline —
   * the reference serializes through Postgres; Spark-side at 100 TB the

@@ -1,37 +1,44 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming operators (SURVEY §2.10) — the engine's streaming
   * surface. The reference consumes ActivityStreams pages with a
   * high-water-mark (`pipeline/process/base/harvester.py:111-286`); here the
   * same semantics are expressed as event-time processing: watermarks bound
-  * lateness (the `last_harvest` cut-off analog), windows aggregate, and
-  * keyed state (flatMapGroupsWithState) implements custom session logic.
+  * lateness (the `last_harvest` cut-off analog) and windows aggregate.
   *
-  * All functions take a (possibly streaming) DataFrame so batch tests and
-  * MemoryStream tests exercise identical logic.
+  * Every function takes a (possibly streaming) DataFrame, and the
+  * registered keys run them on the batch `events`/`documents` tables,
+  * where the optimizer drops `withWatermark` (EliminateEventTimeWatermark):
+  *   - `tumblingCounts`: st1_tumbling_window, and st7's window aggregate;
+  *   - `topkPerWindow`: st7_stream_topk;
+  *   - `intervalJoin`: st9_interval_join;
+  *   - `enrich`: st10_stream_enrich;
+  *   - `dqCounts`: st12_stream_dq;
+  *   - `neardupAdmit` / `neardupAdmitCapped`: st8 / st8c.
+  * StreamingSpec runs the same functions over MemoryStreams, so the
+  * oracle-checked batch key and the streaming form are one code path.
   */
 object StreamingOps {
 
   /** Watermarked tumbling-window aggregate: count + cents sum per
     * (1-day window, event_type); late events beyond the watermark are
-    * dropped — the streaming form of StreamQueries.tumbling. */
+    * dropped. Cents follow `RelationalQueries.cents`: a NaN or
+    * overflowing value is an absent (null) measure, not a failed job. */
   def tumblingCounts(events: DataFrame, watermark: String = "1 hour"): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum(round(col("value") * 100).cast("long")).cast("long").as("value_cents"))
+        sum(graft.RelationalQueries.cents(col("value"))).cast("long").as("value_cents"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("value_cents"))
 
-  /** Per-window top-k over a finalized window aggregate — the rank
-    * step of the streaming heavy-hitters pipeline (StreamQueries
-    * .streamTopk). Runs inside foreachBatch on the append-mode output
-    * of `tumblingCounts`, where every arriving row belongs to a
+  /** Per-window top-k over a finalized window aggregate (ties: type
+    * asc). In a stream it runs inside foreachBatch on the append-mode
+    * output of `tumblingCounts`, where every arriving row belongs to a
     * watermark-finalized window, so ranking each batch is exact. */
   def topkPerWindow(finalized: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -41,6 +48,29 @@ object StreamingOps {
       .filter(col("rank") <= k)
       .select(col("window_start"), col("rank").cast("long").as("rank"),
         col("event_type"), col("n_events"))
+  }
+
+  /** Windowed data-quality rule counts: per 1-day event-time window, the
+    * rows and the violations of each rule (value > 450, user_id <= 0,
+    * props `"k"` >= 90, purchase below 50) — one wide conditional
+    * aggregation over a single scan. A `props` without `"k"` violates
+    * nothing (null, not a failed cast). */
+  def dqCounts(events: DataFrame): DataFrame = {
+    val k = nullif(regexp_extract(col("props"), "\"k\": (\\d+)", 1), lit(""))
+      .cast("long")
+    def rule(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
+    events
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 day").as("w"))
+      .agg(count(lit(1)).as("n_rows"),
+        rule(col("value") > 450d).as("v_value_max"),
+        rule(col("user_id") <= 0L).as("v_user_pos"),
+        rule(k >= 90L).as("v_props_k"),
+        rule(col("event_type") === "purchase" && col("value") < 50d)
+          .as("v_purchase_min"))
+      .select(col("w.start").as("window_start"), col("n_rows"),
+        col("v_value_max"), col("v_user_pos"), col("v_props_k"),
+        col("v_purchase_min"))
   }
 
   /** Stream-static enrichment join: each micro-batch of the stream is
@@ -54,78 +84,29 @@ object StreamingOps {
     events.join(broadcast(dim), col(eventKey) === col(dimKey), "left")
       .drop(dimKey)
 
-  /** Stream-stream INTERVAL join — the streaming form of
-    * j15_range_join: each error joins clicks of the same user from
-    * the previous 30 minutes. Both sides watermarked so Spark can
-    * expire join state (a click older than watermark + 30 min can
-    * never match again and is evicted — bounded state, the whole
-    * point of the time-bound condition at scale). Inner join in
-    * append mode; event-time columns must be distinct across sides. */
+  /** Stream-stream INTERVAL join: each error joins clicks of the same
+    * user from the previous 30 minutes, with the gap in microseconds.
+    * Inputs: clicks (`user_id`, `click_id`, `cts`) and errors
+    * (`e_user`, `error_id`, `ets`). The bound is exact long arithmetic
+    * on the micros of both timestamps. Both sides are watermarked, and
+    * on a stream the same bound is also stated on the watermarked
+    * timestamp columns: that is the form Spark derives the state
+    * watermark from, so a click older than watermark + 30 min is
+    * evicted and join state stays bounded. A batch join keeps no state,
+    * and the zoned `timestamp + interval` add on every candidate pair
+    * made st9 slower (1.09 → 2.04 s median over 8× the sf0.1 events on
+    * a 4-cpu VM), so a batch leaves those redundant conjuncts out.
+    * Inner join in append mode. */
   def intervalJoin(clicks: DataFrame, errors: DataFrame): DataFrame = {
-    val c = clicks.withWatermark("cts", "1 hour")
-    val e = errors.withWatermark("ets", "1 hour")
-    c.join(e,
-      col("c_user") === col("e_user") &&
-        col("ets") >= col("cts") &&
-        col("ets") <= col("cts") + expr("interval 30 minutes"))
-      .select(col("c_user").as("user_id"), col("click_id"), col("error_id"),
-        (expr("unix_micros(ets)") - expr("unix_micros(cts)"))
-          .as("gap_micros"))
-  }
-
-  /** Streaming dedup: drop repeats of a dedup key inside the watermark
-    * horizon — the streaming form of StreamQueries.streamDedup (first
-    * event per key wins within a microbatch; across batches the state
-    * store remembers keys until the watermark expires them, bounding
-    * state exactly like the reference's harvest cut-off bounds
-    * re-reads). `keys` must not include the event-time column —
-    * dropDuplicatesWithinWatermark tracks it implicitly. */
-  def dedupFirst(events: DataFrame, watermark: String, keys: String*): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys.toSeq)
-
-  /** Exactly-once parquet sink as idempotent foreachBatch: each
-    * microbatch overwrites its own `batch_id=<id>` directory and only
-    * then drops a commit marker — replaying a batch after a crash
-    * rewrites the SAME path (overwrite, not append), so at-least-once
-    * delivery times an idempotent target equals exactly-once output.
-    * This is the Spark-native replacement for the reference's
-    * transactional upsert sink (K3, out of scope as a REST sink): at
-    * 100 TB each batch directory is a partition of the output table
-    * and downstream readers filter on the marker set. */
-  def idempotentBatchWriter(dir: String): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      val marker = new java.io.File(dir, s"_batch_${id}_COMMITTED")
-      if (!marker.exists()) {
-        batch.write.mode("overwrite").parquet(s"$dir/batch_id=$id")
-        java.nio.file.Files.writeString(marker.toPath, "ok")
-      }
-    }
-
-  /** Drive a stream into the idempotent sink. */
-  def exactlyOnceSink(events: DataFrame, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch(idempotentBatchWriter(dir))
-
-  /** Reader dual of the idempotent sink: load ONLY batch directories
-    * whose commit marker exists. A crash between the parquet write and
-    * the marker drop leaves a partial `batch_id=N` directory; replay
-    * rewrites it, but until then readers must not see it — this filter
-    * is what makes the at-least-once + idempotent-target combination
-    * read as exactly-once. */
-  def readCommitted(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val committed = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.startsWith("_batch_") &&
-        f.getName.endsWith("_COMMITTED"))
-      .map(_.getName.stripPrefix("_batch_").stripSuffix("_COMMITTED"))
-      .sorted
-    if (committed.isEmpty)
-      spark.emptyDataFrame
-    else
-      spark.read.parquet(
-        committed.map(id => s"$dir/batch_id=$id").toIndexedSeq: _*)
+    val c = clicks.withWatermark("cts", "1 hour").withColumn("cus", unix_micros(col("cts")))
+    val e = errors.withWatermark("ets", "1 hour").withColumn("eus", unix_micros(col("ets")))
+    val bound = col("user_id") === col("e_user") &&
+      col("eus") >= col("cus") && col("eus") <= col("cus") + 1800L * 1000000L
+    val stateBound = col("ets") >= col("cts") &&
+      col("ets") <= col("cts") + expr("interval 30 minutes")
+    c.join(e, if (clicks.isStreaming) bound && stateBound else bound)
+      .select(col("user_id"), col("click_id"), col("error_id"),
+        (col("eus") - col("cus")).as("gap_micros"))
   }
 
   /** Streaming near-dup ADMISSION — the d8 incremental probe run per
@@ -206,55 +187,5 @@ object StreamingOps {
     newSids.select($"doc_id")
       .join(dups.withColumnRenamed("new_id", "doc_id"), Seq("doc_id"), "left")
       .select($"doc_id", $"dup_of".isNull.as("admitted"), $"dup_of")
-  }
-
-  final case class Ev(user_id: Long, event_id: Long, us: Long)
-  final case class SessionState(startUs: Long, lastUs: Long, n: Long)
-  final case class Session(user_id: Long, start_us: Long, end_us: Long, n_events: Long)
-
-  val GapUs: Long = 1800L * 1000000L
-
-  /** Keyed-state sessionization: emits a session when a 30-minute gap (or
-    * state timeout) closes it. Input must be per-user ordered within a
-    * batch (guaranteed by sorting inside groups for the batch/test path;
-    * in production the watermark bounds reordering). */
-  def sessionize(events: Dataset[Ev]): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[SessionState], Session](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, evs: Iterator[Ev], state: GroupState[List[SessionState]]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.us, e.event_id))
-          var open: Option[SessionState] =
-            state.getOption.flatMap(_.headOption)
-          val closed = scala.collection.mutable.ArrayBuffer[Session]()
-          sorted.foreach { e =>
-            open match {
-              case Some(s) if e.us - s.lastUs <= GapUs =>
-                open = Some(SessionState(s.startUs, e.us, s.n + 1))
-              case Some(s) =>
-                closed += Session(user, s.startUs, s.lastUs, s.n)
-                open = Some(SessionState(e.us, e.us, 1L))
-              case None =>
-                open = Some(SessionState(e.us, e.us, 1L))
-            }
-          }
-          open match {
-            case Some(s) => state.update(List(s))
-            case None => state.remove()
-          }
-          closed.iterator
-      }
-  }
-
-  /** Flush helper for tests/batch: closes all still-open sessions by
-    * sending a sentinel far-future event per user is unnecessary — batch
-    * callers instead union the state-closing output by running sessionize
-    * over events plus a per-user sentinel. Provided for spec use. */
-  def withSentinels(events: Dataset[Ev]): Dataset[Ev] = {
-    import events.sparkSession.implicits._
-    val sentinels = events.groupByKey(_.user_id)
-      .mapGroups((u, _) => Ev(u, Long.MaxValue, Long.MaxValue - 1))
-    events.union(sentinels)
   }
 }

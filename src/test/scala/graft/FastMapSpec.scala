@@ -75,9 +75,4 @@ class FastMapSpec extends AnyFunSuite {
     assert(FastMap.buildTimespan(None, Some("9999")) === None)
     assert(FastMap.buildTimespan(None, None) === None)
   }
-
-  test("combine_subfields joins non-empty with comma-space") {
-    assert(FastMap.combineSubfields(Seq("Amsterdam", "", "Noord-Holland"))
-      === "Amsterdam, Noord-Holland")
-  }
 }

@@ -108,9 +108,4 @@ class GettyMapSpec extends AnyFunSuite {
       === Seq("Occupation", "Occupation"))
     assert(GettyMap.ulanClassifications("", Seq(s"${aat}300055147")) === Nil)
   }
-
-  test("ulan carried_out: only the active flag makes an Active event") {
-    assert(GettyMap.isActive(Seq(s"${aat}300393177")))
-    assert(!GettyMap.isActive(Seq(s"${aat}300000001")))
-  }
 }

@@ -161,10 +161,10 @@ class LuxParserSpec extends AnyFunSuite {
       """BOOST(etype="customer", locatedIn(name="NATION_3"))""").collect()
     assert(flat.map(_.getLong(1)).toSet === Set(1000L, 2000L))
     // JSON twin of the ranked surface compiles to the same result
-    val jsonRanked = c.compileRankedJson(
+    val jsonRanked = c.ranked(LuxQL.parseJson(
       """{"BOOST": [
         |  {"AND": [{"etype": "document"}, {"name": "table"}]},
-        |  {"name": "merge"}]}""".stripMargin).collect()
+        |  {"name": "merge"}]}""".stripMargin)).collect()
     assert(jsonRanked.map(r => (r.getString(0), r.getLong(1))).toSet ===
       ranked.map(r => (r.getString(0), r.getLong(1))).toSet)
   }
@@ -253,25 +253,6 @@ class LuxParserSpec extends AnyFunSuite {
     // and opt the BOOST scorer into the flat fallback
     assert(!LuxCompiler.isSingleWord("merge scan"))
     assert(!LuxCompiler.isSingleWord("Merge-Scan")) // hyphen splits: 2 tokens
-  }
-
-  test("catalog * template expansion (ml_lexer.py:274-298)") {
-    import graft.plans.LuxSearchConfig
-    val cats = LuxSearchConfig.expand(LuxSearchConfig.default)
-    // template fields expand with the lower-cased class name
-    assert(cats("Agent").fields("name") == ("agentName", "string"))
-    assert(cats("Item").fields("name") == ("itemName", "string"))
-    // template relationships carry their target class
-    assert(cats("Agent").rels("classification") == ("agentClassifiedAs", "Concept"))
-    assert(cats("Work").rels("anyRef") == ("workAny", "Reference"))
-    // class-specific entries extend the template set
-    assert(cats("Item").rels("producedBy") == ("agentOfProduction", "Agent"))
-    assert(cats("Agent").fields("activeDate") == ("agentActiveDate", "date"))
-    // field vs relationship split follows the value type
-    assert(!cats("Item").fields.contains("producedBy"))
-    assert(!cats("Agent").rels.contains("activeDate"))
-    // '*' itself never becomes a class
-    assert(!cats.contains("*"))
   }
 
   test("string and JSON forms of the same query compile to equal results") {

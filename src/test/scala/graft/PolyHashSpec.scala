@@ -11,7 +11,7 @@ class PolyHashSpec extends AnyFunSuite {
     val d = Tables.load(spark, TestSpark.sf, "documents")
       .select(explode(TextQueries.tokensCol($"text")).as("w"))
     val diff = d.select(TextQueries.wordHash($"w").as("a"),
-        TextQueries.wordHashHof($"w").as("b"))
+        PolyHashSpec.wordHashHof($"w").as("b"))
       .filter($"a" =!= $"b").count()
     assert(diff === 0)
   }
@@ -33,4 +33,13 @@ class PolyHashSpec extends AnyFunSuite {
     val got = words.toDF("w").select(TextQueries.wordHash($"w")).as[Long].collect()
     assert(got.toSeq === words.map(ref))
   }
+}
+
+object PolyHashSpec {
+
+  /** The HOF char-fold reference the native `poly_hash` expression
+    * (`TextQueries.wordHash`) is checked against. */
+  def wordHashHof(w: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    aggregate(transform(split(w, ""), c => ascii(c).cast("long")),
+      lit(0L), (a, c) => (a * TextQueries.WordB + c) % TextQueries.HashP)
 }

@@ -20,7 +20,7 @@ class ReconcileSpec extends AnyFunSuite {
     }
     val symmetric: DataFrame => DataFrame = e =>
       e.select($"dst".as("src"), $"src".as("dst"))
-    val edges = Reconcile.fixpoint(seed, Seq(bridge, symmetric))
+    val edges = ReconcileSpec.fixpoint(seed, Seq(bridge, symmetric))
     // bridge cascades: 2->3, then 3->4, ... merging everything into one
     // component reaching 6
     val comps = Graph.connectedComponents(edges)
@@ -32,7 +32,7 @@ class ReconcileSpec extends AnyFunSuite {
     import spark.implicits._
     val seed = Seq((1L, 2L)).toDF("src", "dst")
     val noop: DataFrame => DataFrame = e => e.limit(0)
-    val edges = Reconcile.fixpoint(seed, Seq(noop))
+    val edges = ReconcileSpec.fixpoint(seed, Seq(noop))
     assert(edges.count() === 1)
   }
 
@@ -52,7 +52,7 @@ class ReconcileSpec extends AnyFunSuite {
         rel.join(nodesOf(e).withColumnRenamed("v", "src"), "src")
       val nodeCrawl: DataFrame => DataFrame = ns =>
         rel.join(ns.withColumnRenamed("v", "src"), "src")
-      val whole = Reconcile.fixpoint(seed, Seq(edgeCrawl), maxIter = 50)
+      val whole = ReconcileSpec.fixpoint(seed, Seq(edgeCrawl), maxIter = 50)
       val front = Reconcile.frontierFixpoint(seed, Seq(nodeCrawl))
       assert(whole.except(front).count() === 0L, s"trial $trial: whole ⊄ front")
       assert(front.except(whole).count() === 0L, s"trial $trial: front ⊄ whole")
@@ -122,7 +122,7 @@ class ReconcileSpec extends AnyFunSuite {
     val front = Reconcile.frontierFixpoint(seed, Seq(crawl))
     val edgeCrawl: DataFrame => DataFrame = e =>
       rel.join(e.select($"src").union(e.select($"dst")).distinct(), "src")
-    val whole = Reconcile.fixpoint(seed, Seq(edgeCrawl), maxIter = 50)
+    val whole = ReconcileSpec.fixpoint(seed, Seq(edgeCrawl), maxIter = 50)
     assert(frontiers.size === 4, "expected two paired rounds")
     assert(frontiers.last.count() === 0L, "the last layer must expand an empty frontier")
     assert(front.as[(Long, Long)].collect().toSet ===
@@ -145,5 +145,34 @@ class ReconcileSpec extends AnyFunSuite {
     assertThrows[Exception](c.compile("""bogus="x""""))
     assertThrows[Exception](c.compile("""AND(etype="part", wrongRel(name="y"))"""))
     assertThrows[Exception](c.compile("""^wrongRel(etype="order")"""))
+  }
+}
+
+object ReconcileSpec {
+
+  /** The whole-set reconcile fixpoint, the reference `frontierFixpoint`
+    * is checked against: each reconciler is `currentEdges => newEdges`
+    * (same (src, dst) schema); the loop unions + dedupes the FULL edge
+    * set and stops when the distinct count is stable. */
+  def fixpoint(seed: DataFrame,
+      reconcilers: Seq[DataFrame => DataFrame],
+      maxIter: Int = 10): DataFrame = {
+    var edges = seed.select("src", "dst").distinct().localCheckpoint()
+    var n = edges.count()
+    var iter = 0
+    var grown = true
+    while (grown && iter < maxIter) {
+      var next = edges
+      reconcilers.foreach { r =>
+        next = next.union(r(next).select("src", "dst")).distinct()
+      }
+      next = next.localCheckpoint()
+      val n2 = next.count()
+      grown = n2 != n
+      n = n2
+      edges = next
+      iter += 1
+    }
+    edges
   }
 }

@@ -46,28 +46,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(rows.toSeq === Seq((1L, "a", None), (2L, "b", Some(9L))))
   }
 
-  test("corrupt jsonl lines are quarantined, not fatal") {
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = Fixtures.tempDir("graft_corrupt").toPath
-    val f = dir.resolve("part0.jsonl")
-    java.nio.file.Files.writeString(f,
-      """{"id": 1, "v": "a"}
-        |{"id": 2, "v": "b"}
-        |{not json at all
-        |{"id": 3, "v": "c"}
-        |{"id": "also-bad-type-but-parseable-json", "v": 7}
-        |""".stripMargin)
-    val schema = new StructType().add("id", LongType).add("v", StringType)
-    val q = sources.Jsonl.loadQuarantine(spark, f.toString, schema)
-    val ids = q.good.select($"id").as[Long].collect().sorted
-    val rejects = q.bad.as[String].collect()
-    q.release()
-    assert(ids.toSeq === Seq(1L, 2L, 3L))
-    assert(rejects.length === 2) // malformed line AND type-mismatch line
-    assert(rejects.exists(_.contains("not json")))
-  }
-
   test("partitioned export prunes partitions on the read path") {
     import spark.implicits._
     val dir = Fixtures.tempDir("graft_part")

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.StreamingOps
-import graft.streaming.StreamingOps.{Ev, Session}
 
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -35,38 +34,76 @@ class StreamingSpec extends AnyFunSuite {
       ("2024-03-01 00:00:00", "b", 1L, 300L)))
   }
 
+  test("NaN and overflowing values: streaming tumblingCounts matches st1, null cents") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    val rows = Seq(
+      (t("2024-03-01 10:00:00"), "a", 1.0),
+      (t("2024-03-01 11:00:00"), "nan", Double.NaN),
+      (t("2024-03-01 12:00:00"), "huge", 1e16))
+    def read(df: org.apache.spark.sql.DataFrame) =
+      df.select($"window_start".cast("string"), $"event_type", $"n_events",
+          $"value_cents")
+        .as[(String, String, Long, Option[Long])].collect().toSet
+    // st1's batch form over an events table holding exactly these rows
+    val dir = Fixtures.tempDir("graft_st1_nan")
+    rows.toDF("ts", "event_type", "value").coalesce(1).write
+      .parquet(new java.io.File(dir, "events.parquet").getAbsolutePath)
+    val want = read(Queries.queries("st1_tumbling_window")(spark, dir.getAbsolutePath))
+    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val q = StreamingOps.tumblingCounts(
+        input.toDF().toDF("ts", "event_type", "value"), watermark = "0 seconds")
+      .writeStream.format("memory").queryName("tumbling_nan_out")
+      .outputMode(OutputMode.Append()).start()
+    input.addData(rows)
+    q.processAllAvailable()
+    input.addData((t("2024-03-03 00:00:01"), "a", 1.0)) // finalize day 1
+    q.processAllAvailable()
+    val got = read(spark.table("tumbling_nan_out"))
+    q.stop()
+    // the 1e16 row only has to finish and agree with st1: its cents are
+    // whatever RelationalQueries.cents gives a large finite value
+    assert(got.map { case (w, ty, n, _) => (w, ty, n) } === Set(
+      ("2024-03-01 00:00:00", "a", 1L),
+      ("2024-03-01 00:00:00", "nan", 1L),
+      ("2024-03-01 00:00:00", "huge", 1L)))
+    assert(got.collect { case (_, ty, _, c) if ty != "huge" => ty -> c }.toMap ===
+      Map("a" -> Some(100L), "nan" -> None))
+    assert(got === want)
+  }
+
   test("streaming DQ gate: per-window rule counts finalize over MemoryStream") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String, Double, String)]
-    val df = input.toDF().toDF("ts", "user_id", "event_type", "value", "props")
-    val k = regexp_extract($"props", "\"k\": (\\d+)", 1).cast("long")
-    val q = df.withWatermark("ts", "0 seconds")
-      .groupBy(window($"ts", "1 day").as("w"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when($"value" > 450d, 1L).otherwise(0L)).as("v_value_max"),
-        sum(when($"user_id" <= 0L, 1L).otherwise(0L)).as("v_user_pos"),
-        sum(when(k >= 90L, 1L).otherwise(0L)).as("v_props_k"))
-      .select($"w.start".as("window_start"), $"n_rows", $"v_value_max",
-        $"v_user_pos", $"v_props_k")
-      .writeStream.format("memory").queryName("dq_out")
-      .outputMode(OutputMode.Append()).start()
     def t(s: String) = java.sql.Timestamp.valueOf(s)
-    input.addData(
+    val rows = Seq(
       (t("2024-03-01 10:00:00"), 1L, "view", 10.0, "{\"k\": 5}"),
       (t("2024-03-01 11:00:00"), 0L, "click", 470.0, "{\"k\": 95}"),
-      (t("2024-03-01 12:00:00"), 2L, "view", 20.0, "{\"k\": 50}"))
+      (t("2024-03-01 12:00:00"), 2L, "view", 20.0, "{\"k\": 50}"),
+      (t("2024-03-01 13:00:00"), 4L, "purchase", 30.0, "{}"))
+    def read(df: org.apache.spark.sql.DataFrame) =
+      df.select($"window_start".cast("string"), $"n_rows", $"v_value_max",
+          $"v_user_pos", $"v_props_k", $"v_purchase_min")
+        .as[(String, Long, Long, Long, Long, Long)].collect().toSet
+    val input = MemoryStream[(java.sql.Timestamp, Long, String, Double, String)]
+    val q = StreamingOps.dqCounts(
+        input.toDF().toDF("ts", "user_id", "event_type", "value", "props"))
+      .writeStream.format("memory").queryName("dq_out")
+      .outputMode(OutputMode.Append()).start()
+    input.addData(rows)
     q.processAllAvailable()
     input.addData((t("2024-03-03 00:00:01"), 3L, "view", 1.0, "{\"k\": 1}"))
     q.processAllAvailable()
-    val got = spark.table("dq_out")
-      .select($"window_start".cast("string"), $"n_rows", $"v_value_max",
-        $"v_user_pos", $"v_props_k")
-      .as[(String, Long, Long, Long, Long)].collect().toSet
+    val got = read(spark.table("dq_out"))
     q.stop()
-    // the bad producer (user 0, value 470, k 95) shows up in its window
-    assert(got === Set(("2024-03-01 00:00:00", 3L, 1L, 1L, 1L)))
+    // the bad producer (user 0, value 470, k 95) and the cheap purchase
+    // show up in their window; a props without "k" violates nothing
+    assert(got === Set(("2024-03-01 00:00:00", 4L, 1L, 1L, 1L, 1L)))
+    val dir = Fixtures.tempDir("graft_st12")
+    rows.toDF("ts", "user_id", "event_type", "value", "props").coalesce(1).write
+      .parquet(new java.io.File(dir, "events.parquet").getAbsolutePath)
+    assert(got === read(Queries.queries("st12_stream_dq")(spark, dir.getAbsolutePath)))
   }
 
   test("streaming top-k ranks watermark-finalized windows in foreachBatch") {
@@ -110,7 +147,7 @@ class StreamingSpec extends AnyFunSuite {
     val clicks = MemoryStream[(java.sql.Timestamp, Long, Long)]
     val errors = MemoryStream[(java.sql.Timestamp, Long, Long)]
     val q = StreamingOps.intervalJoin(
-        clicks.toDF().toDF("cts", "c_user", "click_id"),
+        clicks.toDF().toDF("cts", "user_id", "click_id"),
         errors.toDF().toDF("ets", "e_user", "error_id"))
       .writeStream.format("memory").queryName("ij_out")
       .outputMode(OutputMode.Append()).start()
@@ -130,6 +167,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Set((1L, 100L, 200L, 600000000L)))
   }
 
+  test("interval join on a stream evicts join state behind the watermark") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val clicks = MemoryStream[(java.sql.Timestamp, Long, Long)]
+    val errors = MemoryStream[(java.sql.Timestamp, Long, Long)]
+    val q = StreamingOps.intervalJoin(
+        clicks.toDF().toDF("cts", "user_id", "click_id"),
+        errors.toDF().toDF("ets", "e_user", "error_id"))
+      .writeStream.format("memory").queryName("ij_evict_out")
+      .outputMode(OutputMode.Append()).start()
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    def stateRows() = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    clicks.addData((t("2024-03-01 10:00:00"), 1L, 100L), (t("2024-03-01 10:01:00"), 1L, 101L))
+    errors.addData((t("2024-03-01 10:02:00"), 1L, 200L))
+    q.processAllAvailable()
+    val before = stateRows()
+    // both watermarks move to 13:00: nothing from 10:00 can match again
+    clicks.addData((t("2024-03-01 14:00:00"), 9L, 102L))
+    errors.addData((t("2024-03-01 14:00:00"), 9L, 201L))
+    q.processAllAvailable()
+    val after = stateRows()
+    q.stop()
+    assert(after < before, s"join state $before -> $after rows: nothing was evicted")
+  }
+
   test("interval join: MemoryStream path reproduces the registered batch twin") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -143,7 +205,7 @@ class StreamingSpec extends AnyFunSuite {
     val clicks = MemoryStream[(java.sql.Timestamp, Long, Long)]
     val errors = MemoryStream[(java.sql.Timestamp, Long, Long)]
     val q = StreamingOps.intervalJoin(
-        clicks.toDF().toDF("cts", "c_user", "click_id"),
+        clicks.toDF().toDF("cts", "user_id", "click_id"),
         errors.toDF().toDF("ets", "e_user", "error_id"))
       .writeStream.format("memory").queryName("ij_sf_out")
       .outputMode(OutputMode.Append()).start()
@@ -184,32 +246,6 @@ class StreamingSpec extends AnyFunSuite {
     val want = Queries.queries("st10_stream_enrich")(spark, TestSpark.sf)
       .as[(Long, Long, String, String, Long)].collect().toSet
     assert(want.nonEmpty && got === want)
-  }
-
-  test("streaming dedup keeps the first event per key within the watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val df = input.toDF().toDF("ts", "user_id", "event_type")
-    val q = StreamingOps.dedupFirst(df, "10 minutes", "user_id", "event_type")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode(OutputMode.Append()).start()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    input.addData(
-      (t("2024-03-01 10:00:00"), 1L, "click"), // first -> kept
-      (t("2024-03-01 10:01:00"), 1L, "click"), // dup within watermark -> dropped
-      (t("2024-03-01 10:02:00"), 2L, "click")) // different key -> kept
-    q.processAllAvailable()
-    input.addData(
-      (t("2024-03-01 10:03:00"), 1L, "click")) // dup across batches -> dropped
-    q.processAllAvailable()
-    val got = spark.table("dedup_out")
-      .select($"ts".cast("string"), $"user_id", $"event_type")
-      .as[(String, Long, String)].collect().toSet
-    q.stop()
-    assert(got === Set(
-      ("2024-03-01 10:00:00", 1L, "click"),
-      ("2024-03-01 10:02:00", 2L, "click")))
   }
 
   test("streaming near-dup admission matches the batch replay, any slicing") {
@@ -360,7 +396,7 @@ class StreamingSpec extends AnyFunSuite {
     val errors = MemoryStream[(java.sql.Timestamp, Long, Long)]
     val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     def start() = StreamingOps.intervalJoin(
-        clicks.toDF().toDF("cts", "c_user", "click_id"),
+        clicks.toDF().toDF("cts", "user_id", "click_id"),
         errors.toDF().toDF("ets", "e_user", "error_id"))
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -470,145 +506,5 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, Boolean, Long)].collect()
     assert(want.nonEmpty && got.map(r => r._1 -> (r._2, r._3)).toMap ===
       want.map(r => r._1 -> (r._2, r._3)).toMap)
-  }
-
-  test("idempotent batch writer: replaying a batch does not duplicate rows") {
-    import spark.implicits._
-    val dir = Fixtures.tempDir("graft_sink")
-    val w = StreamingOps.idempotentBatchWriter(dir.getAbsolutePath)
-    val b0 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    w(b0, 0L)
-    w(b0, 0L) // crash-replay of the same batch id: marker short-circuits
-    w(Seq((3L, "c")).toDF("k", "v"), 1L)
-    val got = spark.read.parquet(dir.getAbsolutePath)
-    assert(got.count() === 3)
-    assert(got.select("batch_id").distinct().as[Int].collect().toSet === Set(0, 1))
-  }
-
-  test("exactly-once sink end-to-end over a MemoryStream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Fixtures.tempDir("graft_sink2")
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.exactlyOnceSink(
-      input.toDF().toDF("k", "v"), dir.getAbsolutePath).start()
-    input.addData((1L, "a"), (2L, "b"))
-    q.processAllAvailable()
-    input.addData((3L, "c"))
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.read.parquet(dir.getAbsolutePath).count() === 3)
-    // every written batch directory carries its commit marker
-    val markers = dir.listFiles().filter(_.getName.endsWith("_COMMITTED")).length
-    val dirs = dir.listFiles().filter(_.getName.startsWith("batch_id=")).length
-    assert(markers === dirs && dirs >= 1)
-  }
-
-  test("checkpointed restart resumes at the committed offset, no replay") {
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val in = Fixtures.tempDir("graft_rst_in")
-    val out = Fixtures.tempDir("graft_rst_out")
-    val ckpt = Fixtures.tempDir("graft_rst_ck")
-    val schema = new StructType().add("k", LongType).add("v", StringType)
-    def start() = StreamingOps.exactlyOnceSink(
-        spark.readStream.schema(schema).parquet(in.getAbsolutePath),
-        out.getAbsolutePath)
-      .option("checkpointLocation", ckpt.getAbsolutePath).start()
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-      .write.mode("append").parquet(in.getAbsolutePath)
-    val q1 = start(); q1.processAllAvailable(); q1.stop()
-    assert(spark.read.parquet(out.getAbsolutePath).count() === 2)
-    // new data lands while the query is DOWN; the restart must pick up
-    // exactly the delta from the checkpointed offset
-    Seq((3L, "c")).toDF("k", "v")
-      .write.mode("append").parquet(in.getAbsolutePath)
-    val q2 = start(); q2.processAllAvailable(); q2.stop()
-    val ks = spark.read.parquet(out.getAbsolutePath)
-      .select($"k").as[Long].collect().sorted
-    assert(ks === Array(1L, 2L, 3L), s"replay or loss: ${ks.mkString(",")}")
-    // batch numbering continued across the restart (fresh query would
-    // restart at 0 and the idempotent sink would skip the write)
-    val ids = out.listFiles().filter(_.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong).sorted
-    assert(ids.distinct.length === ids.length && ids.length >= 2,
-      s"batch ids: ${ids.mkString(",")}")
-  }
-
-  test("committed-only reader skips a crash's partial batch directory") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Fixtures.tempDir("graft_sink3")
-    val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.exactlyOnceSink(
-      input.toDF().toDF("k", "v"), dir.getAbsolutePath).start()
-    input.addData((1L, "a"), (2L, "b"))
-    q.processAllAvailable()
-    q.stop()
-    // simulate a crash mid-batch: parquet landed, marker never dropped
-    val partial = new java.io.File(dir, "batch_id=99")
-    Seq((666L, "ghost")).toDF("k", "v")
-      .write.parquet(partial.getAbsolutePath)
-    val seen = StreamingOps.readCommitted(spark, dir.getAbsolutePath)
-      .select($"k").as[Long].collect().sorted
-    assert(seen.toSeq === Seq(1L, 2L), "uncommitted batch leaked to readers")
-  }
-
-  test("maxFilesPerTrigger bounds each micro-batch") {
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val in = Fixtures.tempDir("graft_mft_in")
-    val out = Fixtures.tempDir("graft_mft_out")
-    (1 to 3).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("k", "v")
-        .coalesce(1).write.mode("append").parquet(in.getAbsolutePath)
-    }
-    val schema = new StructType().add("k", LongType).add("v", StringType)
-    val q = StreamingOps.exactlyOnceSink(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(in.getAbsolutePath),
-        out.getAbsolutePath).start()
-    q.processAllAvailable()
-    q.stop()
-    // three input files -> three bounded micro-batches, all committed
-    val batches = out.listFiles()
-      .count(f => f.getName.startsWith("batch_id=") && {
-        val rows = spark.read.parquet(f.getAbsolutePath).count()
-        rows >= 1 && rows <= 1
-      })
-    assert(batches === 3, s"expected 3 single-file batches")
-    assert(StreamingOps.readCommitted(spark, out.getAbsolutePath).count() === 3)
-  }
-
-  test("keyed-state sessionization emits gap-closed sessions across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val q = StreamingOps.sessionize(input.toDS())
-      .writeStream.format("memory").queryName("sessions_out")
-      .outputMode(OutputMode.Append()).start()
-    val min = 60L * 1000000L
-    // user 1: two events 5 min apart (one session), then a 60-min gap event
-    input.addData(Ev(1L, 1L, 0L), Ev(1L, 2L, 5 * min))
-    q.processAllAvailable()
-    input.addData(Ev(1L, 3L, 65 * min)) // closes session [0, 5min]
-    q.processAllAvailable()
-    val got = spark.table("sessions_out").as[Session].collect().toSet
-    q.stop()
-    assert(got === Set(Session(1L, 0L, 5 * min, 2L)))
-  }
-
-  test("batch sessionize with sentinels matches the window-function query shape") {
-    import spark.implicits._
-    val min = 60L * 1000000L
-    val evs = Seq(
-      Ev(1L, 1L, 0L), Ev(1L, 2L, 10 * min), Ev(1L, 3L, 50 * min), // 2 sessions
-      Ev(2L, 4L, 0L)).toDS()
-    val got = StreamingOps.sessionize(StreamingOps.withSentinels(evs))
-      .collect().toSet
-    assert(got === Set(
-      Session(1L, 0L, 10 * min, 2L),
-      Session(1L, 50 * min, 50 * min, 1L),
-      Session(2L, 0L, 0L, 1L)))
   }
 }

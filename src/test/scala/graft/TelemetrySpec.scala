@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Busy time is the union of job intervals, so the driver gap
-  * (wall - busy) cannot go negative when jobs overlap; and the listener
-  * sees the jobs run between a reset and a drain. */
+  * (wall - busy) cannot go negative when jobs overlap; the listener
+  * sees the jobs run between a reset and a drain, and sums their
+  * shuffle bytes. */
 class TelemetrySpec extends AnyFunSuite {
 
   test("disjoint intervals sum") {
@@ -51,5 +52,32 @@ class TelemetrySpec extends AnyFunSuite {
       t.reset()
       assert(t.jobs.isEmpty && t.spill == Telemetry.Spill(0L, 0L, 0L))
     } finally spark.sparkContext.removeSparkListener(t)
+  }
+
+  /** Shuffle bytes of `work`, run between a reset and a drain. */
+  private def shuffleOf(work: => Unit): Telemetry.Shuffle = {
+    val spark = TestSpark.spark
+    val t = Telemetry.attach(spark)
+    try {
+      t.drain(spark)
+      t.reset()
+      work
+      t.drain(spark)
+      t.shuffle
+    } finally spark.sparkContext.removeSparkListener(t)
+  }
+
+  test("shuffle bytes of an executed aggregation are recorded") {
+    val sh = shuffleOf(Queries.queries("q1_agg")(TestSpark.spark, TestSpark.sf)
+      .foreach(_ => ()))
+    assert(sh.written > 0L && sh.read > 0L, sh)
+  }
+
+  test("a scan-only projection records zero shuffle bytes") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val sh = shuffleOf(Tables.load(spark, TestSpark.sf, "region")
+      .select($"r_regionkey").foreach(_ => ()))
+    assert(sh === Telemetry.Shuffle(0L, 0L))
   }
 }

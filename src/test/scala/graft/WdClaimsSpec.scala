@@ -70,13 +70,6 @@ class WdClaimsSpec extends AnyFunSuite {
       WdName("endesc", Seq("en")), WdName("zhdesc", Seq("zh"))))
   }
 
-  test("process_only_label priority (:297-309)") {
-    assert(onlyLabel(Seq("ru" -> "R", "fr" -> "F")).contains("F"))
-    assert(onlyLabel(Seq("ru" -> "R", "mul" -> "M")).contains("R"))
-    assert(onlyLabel(Seq("xx" -> "X", "mul" -> "M")).contains("M"))
-    assert(onlyLabel(Seq("xx" -> "X")).isEmpty)
-  }
-
   // --- process_equivalents (:370-417) ---
 
   test("ext_hash template expansion in table order") {

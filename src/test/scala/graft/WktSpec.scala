@@ -14,8 +14,8 @@ class WktSpec extends AnyFunSuite {
   }
 
   test("kind and coordinate count") {
-    assert(Wkt.kindOf("POINT(3 4)") === Some("POINT"))
-    assert(Wkt.coordCount("POLYGON((0 0, 1 0, 1 1, 0 0))") === Some(4))
+    assert(Wkt.parse("POINT(3 4)").map(_.kind) === Some("POINT"))
+    assert(Wkt.parse("POLYGON((0 0, 1 0, 1 1, 0 0))").map(_.nCoords) === Some(4))
   }
 
   test("arbitration: polygon beats point, more coords beats fewer, ties keep first") {

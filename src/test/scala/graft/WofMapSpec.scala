@@ -33,27 +33,6 @@ class WofMapSpec extends AnyFunSuite {
       Seq((1.0, 1.0), (2.0, 2.0), (1.0, 1.0)), 0.5).nonEmpty)
   }
 
-  test("simplifyRing: <=350 points pass through; the factor loop lands " +
-      "in [100,600]; a degenerate long ring drops to None") {
-    val small = Seq.tabulate(10)(i => (i.toDouble, 0.0))
-    assert(WofMap.simplifyRing(small) === Some(small))
-    // a SMOOTH closed circle: kept-point count varies smoothly with the
-    // tolerance, so the halve/double search terminates in [100, 600].
-    // (A uniform-amplitude zigzag would oscillate the reference's loop
-    // forever — tolerance above the amplitude keeps 2 points, below it
-    // keeps all — so the spec deliberately uses graded residuals.)
-    val n = 1000
-    val circle = Seq.tabulate(n) { i =>
-      val a = 2 * math.Pi * i / n
-      (100.0 * math.cos(a), 100.0 * math.sin(a))
-    } :+ (100.0, 0.0) // closed ring: endpoint pick uses second-to-last
-    val out = WofMap.simplifyRing(circle).get
-    assert(out.length >= 100 && out.length <= 600, s"got ${out.length}")
-    // long ring with coincident simplification endpoints → None
-    val bad = Seq.fill(400)((1.0, 1.0))
-    assert(WofMap.simplifyRing(bad) === None)
-  }
-
   test("fixIdentifier reduces paths and geojson names") {
     assert(WofMap.fixIdentifier("102/051/581/102051581.geojson") === "102051581")
     assert(WofMap.fixIdentifier("12345.geojson") === "12345")
