@@ -25,6 +25,11 @@ import org.apache.spark.sql.functions._
   *     spreads over `BandSalt` reducers instead of one straggler. Pure
   *     repartitioning — pair set provably unchanged.
   *
+  * The set-similarity join the MinHash keys share (shingle index, hot-
+  * bucket cap, asymmetric band probe, exact-Jaccard verify behind the
+  * candidate barrier) is written once, in [[Lsh]]; d2, d4, d8, d11-d13,
+  * d19, the corpus pipeline and refresh, and st8/st8c run on it.
+  *
   * Hash arithmetic is mod 2^31-1 polynomial folding so the DuckDB oracle
   * reproduces results bit-for-bit (validated).
   */
@@ -103,36 +108,41 @@ object DedupQueries extends QueryGroup {
     * pay the replication. */
   val SaltAt = 64L
 
-  /** Salted self-join on equal `keys` with `idCol` inequality pairing:
-    * left side keyed by hash(id) % BandSalt, right side replicated to
-    * every salt — every (a<b) pair survives exactly once per matching
-    * key, but a hot key's work is spread over BandSalt reducers. */
-  private[graft] def saltedSelfJoin(rows: DataFrame, keys: Seq[String],
-      idCol: String): DataFrame = {
-    val a = rows.withColumn("salt", pmod(hash(col(idCol)), lit(BandSalt)))
+  /** Salted band self-join on equal buckets with doc_id inequality
+    * pairing: left side keyed by hash(doc_id) % BandSalt, right side
+    * replicated to every salt — every (a<b) pair survives exactly once
+    * per matching bucket, but a hot bucket's work is spread over
+    * BandSalt reducers. */
+  private[graft] def saltedSelfJoin(rows: DataFrame): DataFrame = {
+    val a = rows.withColumn("salt", pmod(hash(col("doc_id")), lit(BandSalt)))
     val b = rows.withColumn("salt",
       explode(sequence(lit(0), lit(BandSalt - 1)).cast("array<int>")))
-    val cond = (keys :+ "salt").map(k => col(s"a.$k") <=> col(s"b.$k"))
-      .reduce(_ && _) && col(s"a.$idCol") < col(s"b.$idCol")
-    a.as("a").join(b.as("b"), cond)
+    a.as("a").join(b.as("b"), bandPairCond(Lsh.Keys :+ "salt"))
   }
 
-  /** The three-regime guarded band self-join (header): buckets > BandCap
-    * dropped, buckets in (SaltAt, BandCap] salted, the rest plain. All
-    * regime decisions are made on a localCheckpointed tiny count table
-    * feeding broadcasts. Returns distinct `<`-ordered pairs as columns
-    * `{id}_a`/`{id}_b` plus `{c}_a`/`{c}_b` for every `carry` column. */
+  /** Null-safe equality on `keys` between aliases `a` and `b`, with the
+    * `<`-ordered doc_id pairing of the band self-joins. */
+  private def bandPairCond(keys: Seq[String]): Column =
+    keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _) &&
+      col("a.doc_id") < col("b.doc_id")
+
   /** Cumulative count of band buckets dropped by BandCap in this JVM —
     * StressSweep snapshots it per query, so guard engagement lands in
     * the STRESS artifact as a number, not just a log line. */
   private[graft] val guardDropCount =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private[graft] def guardedBandPairs(bandRows: DataFrame, keys: Seq[String],
-      idCol: String, carry: Seq[String] = Nil): DataFrame = {
+  /** The three-regime guarded band self-join (header) over (doc_id,
+    * band_idx, band_hash) rows: buckets > BandCap dropped, buckets in
+    * (SaltAt, BandCap] salted, the rest plain. All regime decisions are
+    * made on a localCheckpointed tiny count table feeding broadcasts.
+    * Returns distinct `<`-ordered pairs as columns `doc_a`/`doc_b` plus
+    * `{c}_a`/`{c}_b` for every `carry` column. */
+  private[graft] def guardedBandPairs(bandRows: DataFrame,
+      carry: Seq[String] = Nil): DataFrame = {
+    val keys = Lsh.Keys
     val cap = bandCap(bandRows.sparkSession)
-    val counts = bandRows.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"))
+    val counts = Lsh.sizes(bandRows)
       .filter(col("n") > SaltAt) // only oversize buckets matter downstream
       // LAZY checkpoint (r18, guide §1.2): the classify scalar below is
       // the first action and materializes it, so the guard's driver
@@ -144,18 +154,17 @@ object DedupQueries extends QueryGroup {
     // a hot-only count; folding both class counts into one aggregate
     // lets the common all-small corpus skip every guard join below)
     val cls = counts.agg(
-      count(when(col("n") > cap, 1)).as("nHot"),
-      count(when(col("n") <= cap, 1)).as("nBig")).head()
+      count(when(Lsh.isHot(cap), 1)).as("nHot"),
+      count(when(!Lsh.isHot(cap), 1)).as("nBig")).head()
     val (nHot, nBig) = (cls.getLong(0), cls.getLong(1))
     if (nHot > 0) {
       guardDropCount.addAndGet(nHot)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"guardedBandPairs: dropping $nHot band buckets larger than $cap docs")
     }
-    val outCols = (idCol +: carry).flatMap(c =>
-      Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b")))
-    val cond = keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _) &&
-      col(s"a.$idCol") < col(s"b.$idCol")
+    val outCols = Seq(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")) ++
+      carry.flatMap(c => Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b")))
+    val cond = bandPairCond(keys)
     // regime fast paths (r17, guide §1.2): the counts are already on
     // the driver, so prune the guard joins the data cannot need —
     // provably identical output (an anti-join against an EMPTY hot/big
@@ -163,11 +172,9 @@ object DedupQueries extends QueryGroup {
     // The common healthy-corpus case (no bucket above SaltAt) becomes
     // ONE self-join with zero broadcast builds; the full three-regime
     // machinery engages exactly when oversize buckets exist.
-    val hot = counts.filter(col("n") > cap).select(keys.map(col): _*)
-    val big = counts.filter(col("n") <= cap).select(keys.map(col): _*)
-    val capped =
-      if (nHot == 0) bandRows
-      else bandRows.join(broadcast(hot), keys, "left_anti")
+    val hot = counts.filter(Lsh.isHot(cap)).select(keys.map(col): _*)
+    val big = counts.filter(!Lsh.isHot(cap)).select(keys.map(col): _*)
+    val capped = Lsh.dropHot(bandRows, Option.when(nHot > 0)(hot))
     if (nBig == 0) {
       capped.as("a").join(capped.as("b"), cond).select(outCols: _*).distinct()
     } else {
@@ -175,7 +182,7 @@ object DedupQueries extends QueryGroup {
       val bigRows = capped.join(broadcast(big), keys, "left_semi")
       val plainPairs = smallRows.as("a").join(smallRows.as("b"), cond)
         .select(outCols: _*)
-      val saltedPairs = saltedSelfJoin(bigRows, keys, idCol).select(outCols: _*)
+      val saltedPairs = saltedSelfJoin(bigRows).select(outCols: _*)
       plainPairs.union(saltedPairs).distinct()
     }
   }
@@ -230,96 +237,149 @@ object DedupQueries extends QueryGroup {
        |FROM documents GROUP BY 1""".stripMargin
   }
 
+  /** The set-similarity kernel of the near-dup family, written once:
+    * the build-once, probe-many index of *Incremental Based Framework
+    * for Efficient Top-K Similarity Search* (EDBT 2020). Four parts:
+    *   - index: `shingles` (the persisted shingle table), `nz`, `bands`;
+    *   - hot-bucket cap: `sizes`, `isHot`, `hot`, `dropHot`, `capped`;
+    *   - asymmetric probe: `probe`, new band rows against a reference;
+    *   - verify: `verify` / `jaccard` behind the candidate `barrier`.
+    * Each caller keeps its own cap domain: d12 caps the bench bands
+    * only, d8 and t_incremental_refresh cap all bands, st8c caps the
+    * corpus bands at NeardupCapC, and d2/d11 go through the three-regime
+    * [[guardedBandPairs]]. */
+  private[graft] object Lsh {
+    /** The band-bucket key of every band row. */
+    val Keys = Seq("band_idx", "band_hash")
+
+    /** The persisted (doc_id, sid) shingle table of a (doc_id, text)
+      * frame. Persist BEFORE filtering, and filter only above this cache
+      * (through `nz`): a `size(sid)` predicate below it is pushed down
+      * through the alias chain and re-runs the per-element shingle
+      * lambdas documented on shingleIdsFrom — measured 94 s vs 4 s on
+      * the sf1 stress corpus (st8b) and 21 s vs 5 s at sf0.1
+      * (t_source_overlap). The cache also serves the band index and
+      * both verify joins. */
+    def shingles(docs: DataFrame): DataFrame = shingleTableOf(docs).persist()
+    def shingles(spark: SparkSession, dir: String): DataFrame =
+      shingles(Tables.load(spark, dir, "documents"))
+
+    /** The non-empty rows of a shingle table: the ones the index holds. */
+    def nz(sids: DataFrame): DataFrame = sids.filter(size(col("sid")) > 0)
+
+    /** The (doc_id, band_idx, band_hash) LSH index rows of a non-empty
+      * shingle table — the on-disk index-build stage at 100 TB. */
+    def bands(base: DataFrame): DataFrame = {
+      // all K permutation minima in ONE codegen pass (minhash_sig) —
+      // K interpreted array_min(transform(...)) folds per row otherwise
+      val m = col("m")
+      val bandCols = (0 until K / 2).map(b =>
+        struct(lit(b).as("band_idx"),
+          ((element_at(m, 2 * b + 1) * 131L + element_at(m, 2 * b + 2)) % P)
+            .as("band_hash")))
+      base.select(col("doc_id"), functions.VecMath.minhashCol(col("sid"), K).as("m"))
+        .select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
+        .select(col("doc_id"), col("band.band_idx"), col("band.band_hash"))
+    }
+
+    /** Per-bucket occupancy `n` of band rows. */
+    def sizes(bands: DataFrame): DataFrame =
+      bands.groupBy(Keys.map(col): _*).agg(count(lit(1)).as("n"))
+
+    /** A bucket of occupancy `n` is hot above `cap` — the oracles'
+      * `HAVING COUNT(*) > cap`: a bucket of exactly `cap` rows stays. */
+    def isHot(cap: Long): Column = col("n") > cap
+
+    /** The (band_idx, band_hash) buckets of `bands` holding more than
+      * `cap` rows. */
+    def hot(bands: DataFrame, cap: Long): DataFrame =
+      sizes(bands).filter(isHot(cap)).select(Keys.map(col): _*)
+
+    /** `bands` without the rows of the (small, broadcast) hot set. */
+    def dropHot(bands: DataFrame, hot: Option[DataFrame]): DataFrame =
+      hot.fold(bands)(h => bands.join(broadcast(h), Keys, "left_anti"))
+
+    /** `bands` with its own hot buckets dropped. */
+    def capped(bands: DataFrame, cap: Long): DataFrame =
+      dropHot(bands, Some(hot(bands, cap)))
+
+    /** Asymmetric probe: the `probe` band rows (alias `n`) joined to the
+      * reference index `ref` (alias `o`) on the bucket and `on`; returns
+      * the distinct candidate pairs `a`, `b`. Shuffle follows the probe
+      * side and the index, never a self-join of the corpus. */
+    def probe(probe: DataFrame, ref: DataFrame, on: Column = lit(true))(
+        a: Column, b: Column): DataFrame =
+      probe.as("n")
+        .join(ref.as("o"),
+          Keys.map(k => col(s"n.$k") === col(s"o.$k")).reduce(_ && _) && on)
+        .select(a, b).distinct()
+
+    /** Materialization barrier in front of a candidate verify: candidate
+      * pairs are tiny next to the corpus, and fusing signatures, band
+      * join and verify into one whole-stage-codegen tree makes Catalyst
+      * inline the minhash expression forest into every downstream
+      * operator (measured 126 s vs 2 s at sf0.1). Real LSH pipelines
+      * persist the candidate table at this point anyway. */
+    def barrier(cand: DataFrame): DataFrame = cand.localCheckpoint()
+
+    /** Exact verify of a two-column candidate frame (a, b) of doc ids:
+      * each id joins its `sid` array (`a` from `sids`, `b` from `refSids`
+      * when given), behind the [[barrier]]. Returns (a, b, inter, small,
+      * jacc_milli): the intersection size, the smaller set's size and
+      * the integer per-mille Jaccard. */
+    def verify(cand: DataFrame, sids: DataFrame,
+        refSids: Option[DataFrame] = None): DataFrame = {
+      val Array(a, b) = cand.columns
+      val (sa, sb) = (col("sid_a"), col("sid_b"))
+      val inter = size(array_intersect(sa, sb)).cast("long")
+      barrier(cand)
+        .join(sids.select(col("doc_id").as(a), col("sid").as("sid_a")), a)
+        .join(refSids.getOrElse(sids).select(col("doc_id").as(b), col("sid").as("sid_b")), b)
+        .select(col(a), col(b), inter.as("inter"),
+          least(size(sa), size(sb)).cast("long").as("small"),
+          intDiv(inter * 1000L, size(array_union(sa, sb)).cast("long")).as("jacc_milli"))
+    }
+
+    /** The pairs of `cand` whose exact Jaccard is at least `min` per
+      * mille, as (a, b, jacc_milli). */
+    def jaccard(cand: DataFrame, sids: DataFrame, min: Long,
+        refSids: Option[DataFrame] = None): DataFrame = {
+      val Array(a, b) = cand.columns
+      verify(cand, sids, refSids).select(a, b, "jacc_milli")
+        .filter(col("jacc_milli") >= min)
+    }
+  }
+
   /** MinHash + LSH near-dup: per-doc 16-permutation minhash signature
     * (map-side), 8 bands x 2 rows -> band-bucket join for candidates,
     * exact Jaccard verification, keep pairs >= 0.8. */
-  def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // persist BEFORE filtering: predicate pushdown would substitute the
-    // alias chain into the filter and re-trigger the per-element
-    // re-evaluation documented on shingleIdsFrom. The cache also serves
-    // the band join (x2) and both verify joins.
-    val sidTbl = shingleTable(spark, dir).persist()
-    minhashVerified(sidTbl.filter(size($"sid") > 0))
-  }
+  def minhashLsh(spark: SparkSession, dir: String): DataFrame =
+    minhashVerified(Lsh.nz(Lsh.shingles(spark, dir)))
 
-  /** The (doc_id, sid) shingle table — shared by d2, d7 and the corpus
-    * pipeline so composed queries hash the corpus once. */
-  private[graft] def shingleTable(spark: SparkSession, dir: String): DataFrame =
-    shingleTableOf(Tables.load(spark, dir, "documents"))
-
-  /** Shingle table over an arbitrary (doc_id, text) frame — the form the
-    * streaming admission path hashes per micro-batch. */
-  private[graft] def shingleTableOf(docs: DataFrame): DataFrame = {
+  /** Shingle table over an arbitrary (doc_id, text) frame. Build it
+    * through [[Lsh.shingles]], which persists it. */
+  private def shingleTableOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs
       .select($"doc_id", transform(tokensCol($"text"), wordHash(_)).as("h"))
       .select($"doc_id", shingleIdsFrom($"h").as("sid"))
   }
 
-  /** The (doc_id, band_idx, band_hash) LSH index rows for a shingle
-    * table — the on-disk index-build stage at 100 TB; shared by the
-    * full self-join (d2) and the incremental probe (d8). */
-  private[graft] def bandIndex(base: DataFrame): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    // all K permutation minima in ONE codegen pass (minhash_sig) —
-    // K interpreted array_min(transform(...)) folds per row otherwise
-    val sigs = base.select($"doc_id",
-      functions.VecMath.minhashCol($"sid", K).as("m"))
-    val bandCols = (0 until K / 2).map(b =>
-      struct(lit(b).as("band_idx"),
-        ((element_at($"m", 2 * b + 1) * 131L +
-          element_at($"m", 2 * b + 2)) % P).as("band_hash")))
-    sigs.select($"doc_id", explode(array(bandCols: _*)).as("band"))
-      .select($"doc_id", $"band.band_idx", $"band.band_hash")
-  }
-
-  /** LSH band join + exact-Jaccard verification over a pre-built
-    * (persisted, size>0-filtered) shingle table. */
+  /** LSH band join + exact-Jaccard verification over a non-empty view of
+    * a persisted shingle table: d2, the split-leakage audit and the
+    * corpus pipeline. */
   private[graft] def minhashVerified(base: DataFrame): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
     // the LSH band index is materialized once (at 100 TB this is the
-    // on-disk index-build stage) — three joins below read it
-    val bandRows = bandIndex(base).persist()
-    // the three-regime guarded band join (guardedBandPairs): cap, salt,
-    // plain — shared with d3
-    val cand = guardedBandPairs(bandRows, Seq("band_idx", "band_hash"), "doc_id")
-      .select($"doc_id_a".as("doc_a"), $"doc_id_b".as("doc_b"))
-      // Materialization barrier: candidate pairs are tiny relative to the
-      // corpus; fusing signature generation + band join + verify into one
-      // whole-stage-codegen tree makes Catalyst inline the minhash
-      // expression forest into every downstream operator (measured 126 s
-      // vs 2 s at sf0.1). Real LSH pipelines persist the candidate table
-      // at this point anyway.
-      .localCheckpoint()
-    cand
-      .join(base.select($"doc_id".as("doc_a"), $"sid".as("sid_a")), "doc_a")
-      .join(base.select($"doc_id".as("doc_b"), $"sid".as("sid_b")), "doc_b")
-      .select($"doc_a", $"doc_b",
-        intDiv(size(array_intersect($"sid_a", $"sid_b")).cast("long") * 1000L,
-          size(array_union($"sid_a", $"sid_b")).cast("long")).as("jacc_milli"))
-      .filter($"jacc_milli" >= 800L)
+    // on-disk index-build stage) — the guard's count and joins read it
+    val bandRows = Lsh.bands(base).persist()
+    Lsh.jaccard(guardedBandPairs(bandRows), base, 800L)
   }
   /** The d2 oracle pipeline as a reusable CTE chain ending in `pairs`
     * (doc_a, doc_b, jacc_milli with jacc >= 800) — shared by the d2/d6/
     * d8/d11 oracles and the st8 streaming-admission oracle (which reads
     * the uncapped `bandrows0` + `base` prefix). */
-  private[graft] def minhashPairsCtes: String = {
-    val mh = (0 until K).map(j =>
-      s"list_min(list_transform(sid, s -> (${aj(j)}*s + ${bj(j)}) % $P)) AS m$j").mkString(",\n  ")
-    val bands = (0 until K / 2).map(b =>
-      s"((m${2 * b}*131 + m${2 * b + 1}) % $P) AS band$b").mkString(", ")
-    val bandRows = (0 until K / 2).map(b =>
-      s"SELECT doc_id, $b AS band_idx, band$b AS band_hash FROM bandsig").mkString("\nUNION ALL\n")
-    s"""toks AS (SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
-       |th AS (SELECT doc_id, t, $tokenHashesSql AS h FROM toks),
-       |shing AS (SELECT doc_id, $shingleIdsSql AS sid FROM th),
-       |base AS (SELECT doc_id, sid FROM shing WHERE len(sid) > 0),
-       |sigs AS (SELECT doc_id, $mh FROM base),
-       |bandsig AS (SELECT doc_id, $bands FROM sigs),
-       |bandrows0 AS ($bandRows),
+  private[graft] def minhashPairsCtes: String =
+    s"""${bandRowsCtes("bandrows0")},
        |hot AS (
        |  SELECT band_idx, band_hash FROM bandrows0
        |  GROUP BY 1, 2 HAVING COUNT(*) > $BandCap),
@@ -341,7 +401,30 @@ object DedupQueries extends QueryGroup {
        |  JOIN base sb ON sb.doc_id = doc_b
        |  WHERE CAST(len(list_intersect(sa.sid, sb.sid)) AS BIGINT) * 1000
        |      // CAST(len(list_distinct(list_concat(sa.sid, sb.sid))) AS BIGINT) >= 800)""".stripMargin
+
+  /** The oracle index chain: shingles (`shing`), the non-empty `base`,
+    * and the uncapped band rows as CTE `name`. */
+  private def bandRowsCtes(name: String): String = {
+    val mh = (0 until K).map(j =>
+      s"list_min(list_transform(sid, s -> (${aj(j)}*s + ${bj(j)}) % $P)) AS m$j").mkString(",\n  ")
+    val bands = (0 until K / 2).map(b =>
+      s"((m${2 * b}*131 + m${2 * b + 1}) % $P) AS band$b").mkString(", ")
+    val bandRows = (0 until K / 2).map(b =>
+      s"SELECT doc_id, $b AS band_idx, band$b AS band_hash FROM bandsig").mkString("\nUNION ALL\n")
+    s"""toks AS (SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
+       |th AS (SELECT doc_id, t, $tokenHashesSql AS h FROM toks),
+       |shing AS (SELECT doc_id, $shingleIdsSql AS sid FROM th),
+       |base AS (SELECT doc_id, sid FROM shing WHERE len(sid) > 0),
+       |sigs AS (SELECT doc_id, $mh FROM base),
+       |bandsig AS (SELECT doc_id, $bands FROM sigs),
+       |$name AS ($bandRows)""".stripMargin
   }
+
+  /** The oracles' per-mille Jaccard of the `sa`/`sb` shingle sets. */
+  private[graft] def jaccSql: String =
+    """CAST(len(list_intersect(sa.sid, sb.sid)) AS BIGINT) * 1000
+      |    // CAST(len(list_distinct(list_concat(sa.sid, sb.sid))) AS BIGINT)""".stripMargin
+
   private val minhashOracle: String =
     s"""WITH $minhashPairsCtes
        |SELECT doc_a, doc_b, jacc_milli FROM pairs""".stripMargin
@@ -372,10 +455,8 @@ object DedupQueries extends QueryGroup {
         shiftright($"fp", 16 * b).bitwiseAND(65535L).as("band_hash")))
     val bandRows = fps.select($"doc_id", $"fp", explode(array(bandCols: _*)).as("band"))
       .select($"doc_id", $"fp", $"band.band_idx", $"band.band_hash")
-    val pairs = guardedBandPairs(bandRows, Seq("band_idx", "band_hash"),
-        "doc_id", carry = Seq("fp"))
-      .select($"doc_id_a".as("doc_a"), $"doc_id_b".as("doc_b"),
-        bit_count($"fp_a".bitwiseXOR($"fp_b")).as("ham"))
+    val pairs = guardedBandPairs(bandRows, carry = Seq("fp"))
+      .select($"doc_a", $"doc_b", bit_count($"fp_a".bitwiseXOR($"fp_b")).as("ham"))
       .filter($"ham" <= 2)
     // per-doc partner counts: each `<`-ordered pair counts for both ends
     val near = pairs.select($"doc_a".as("doc_id"))
@@ -446,7 +527,7 @@ object DedupQueries extends QueryGroup {
     Tables.load(spark, dir, "documents")
       .select($"doc_id", transform(tokensCol($"text"), wordHash(_)).as("h"))
       .select($"doc_id", bigramIds.as("sid"))
-      .persist() // barrier before filter (see minhashLsh) + verify joins
+      .persist() // barrier before filter (see Lsh.shingles) + verify joins
       .filter(size($"sid") > 0)
       .withColumn("len", size($"sid").cast("long"))
   }
@@ -513,18 +594,8 @@ object DedupQueries extends QueryGroup {
        |FROM inv JOIN counts USING (tok) GROUP BY doc_id""".stripMargin
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = 500L
     val base = ngramBase(spark, dir)
-    val cand = ngramCandidates(base)
-      .localCheckpoint() // barrier before verify (see minhashLsh)
-    cand
-      .join(base.select($"doc_id".as("doc_a"), $"sid".as("sid_a")), "doc_a")
-      .join(base.select($"doc_id".as("doc_b"), $"sid".as("sid_b")), "doc_b")
-      .select($"doc_a", $"doc_b",
-        intDiv(size(array_intersect($"sid_a", $"sid_b")).cast("long") * 1000L,
-          size(array_union($"sid_a", $"sid_b")).cast("long")).as("jacc_milli"))
-      .filter($"jacc_milli" >= t)
+    Lsh.jaccard(ngramCandidates(base), base, 500L)
   }
   /** The bigram-shingle nz CTE chain shared by the d4 oracle and the
     * d4b degree twin's oracle. */
@@ -582,18 +653,13 @@ object DedupQueries extends QueryGroup {
     // re-inline below this cache is paid once over sample-scale rows
     // (an extra raw-array cache layer measured SLOWER than the
     // re-evaluation it avoided — 22 s vs 13 s at sf1)
-    val base = sampleMod.foldLeft(shingleTable(spark, dir))(
+    val base = sampleMod.foldLeft(shingleTableOf(Tables.load(spark, dir, "documents")))(
       (t, m) => t.filter($"doc_id" % m === 1L))
       .filter(size($"sid") > 0)
       .select($"doc_id", array_sort($"sid").as("sid"))
       .withColumn("len", size($"sid").cast("long"))
       .persist() // candidate fan-out + both verify joins
-    val cand = ngramCandidates(base).localCheckpoint()
-    val truth = cand
-      .join(base.select($"doc_id".as("doc_a"), $"sid".as("sid_a")), "doc_a")
-      .join(base.select($"doc_id".as("doc_b"), $"sid".as("sid_b")), "doc_b")
-      .filter(intDiv(size(array_intersect($"sid_a", $"sid_b")).cast("long") * 1000L,
-        size(array_union($"sid_a", $"sid_b")).cast("long")) >= 800L)
+    val truth = Lsh.jaccard(ngramCandidates(base), base, 800L)
       .select($"doc_a", $"doc_b", lit(1L).as("t"))
     val pred = sampleMod.foldLeft(minhashLsh(spark, dir))(
         (p, m) => p.filter($"doc_a" % m === 1L && $"doc_b" % m === 1L))
@@ -699,9 +765,7 @@ object DedupQueries extends QueryGroup {
       .withColumn("n2", functions.VecMath.dotCol($"q", $"q"))
       .filter($"n2" > 0L)
       .persist() // signature fan-out + both verify joins read this
-    val cand = embCandidates(base)
-      .localCheckpoint() // barrier before verify (see minhashLsh)
-    cand
+    Lsh.barrier(embCandidates(base))
       .join(base.select($"vec_id".as("vec_a"), $"q".as("qa"), $"n2".as("n2a")), "vec_a")
       .join(base.select($"vec_id".as("vec_b"), $"q".as("qb"), $"n2".as("n2b")), "vec_b")
       .select($"vec_a", $"vec_b",
@@ -712,10 +776,7 @@ object DedupQueries extends QueryGroup {
       .filter($"cos_milli" >= 300L)
   }
   private val embeddingNearDupOracle: String = {
-    val bits = (0 until EmbPlanes).map { k =>
-      val s = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [q[i] * (((${aj(k + 32)}*i+${bj(k + 32)}) % $P) % 2 * 2 - 1) for i in range(1, len(q)+1)]), (a,b)->a+b)"
-      s"(CASE WHEN $s > 0 THEN ${1L << k} ELSE 0 END)"
-    }.mkString(" + ")
+    val bits = SimilarityQueries.hyperplaneSigSql(EmbPlanes, 32)
     val bitsPerBand = EmbPlanes / EmbBands
     val bandRows = (0 until EmbBands).map(b =>
       s"SELECT vec_id, label, $b AS band_idx, (sig >> ${bitsPerBand * b}) & ${(1L << bitsPerBand) - 1} AS band_val FROM sigs")
@@ -893,10 +954,8 @@ object DedupQueries extends QueryGroup {
     * the per-doc hit count folds map-side. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sid = Tables.load(spark, dir, "documents")
-      .select($"doc_id", transform(tokensCol($"text"), wordHash(_)).as("h"))
-      .select($"doc_id", shingleIdsFrom($"h").as("sid"))
-      .persist() // HOF-CSE guard: shingles feed both branches below
+    // shingles feed both branches below
+    val sid = Lsh.shingles(spark, dir)
     val benchSids = sid.filter($"doc_id" % 37 === 0)
       .select(explode($"sid").as("s")).distinct()
     sid.filter($"doc_id" % 37 =!= 0)
@@ -942,27 +1001,14 @@ object DedupQueries extends QueryGroup {
     * One row per training doc (the audit shape, like d7). */
   def fuzzyDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sid = shingleTable(spark, dir).persist()
-    val base = sid.filter(size($"sid") > 0)
-    val bands = bandIndex(base).persist()
-    val benchBands0 = bands.filter($"doc_id" % 37 === 0)
-    val hot = benchBands0.groupBy($"band_idx", $"band_hash")
-      .agg(count(lit(1)).as("n")).filter($"n" > bandCap(spark))
-      .select($"band_idx", $"band_hash")
-    val benchBands = benchBands0
-      .join(broadcast(hot), Seq("band_idx", "band_hash"), "left_anti")
-      .withColumnRenamed("doc_id", "bench_id")
-    val cand = bands.filter($"doc_id" % 37 =!= 0)
-      .join(broadcast(benchBands), Seq("band_idx", "band_hash"))
-      .select($"doc_id", $"bench_id").distinct()
-      .localCheckpoint() // same barrier rationale as d2
-    val scored = cand
-      .join(base.select($"doc_id", $"sid".as("sid_t")), "doc_id")
-      .join(base.select($"doc_id".as("bench_id"), $"sid".as("sid_b")), "bench_id")
-      .select($"doc_id",
-        intDiv(size(array_intersect($"sid_t", $"sid_b")).cast("long") * 1000L,
-          size(array_union($"sid_t", $"sid_b")).cast("long")).as("jacc_milli"))
-      .filter($"jacc_milli" >= 500L)
+    val sid = Lsh.shingles(spark, dir)
+    val base = Lsh.nz(sid)
+    val bands = Lsh.bands(base).persist()
+    // the cap counts bench-side occupancy only
+    val benchBands = Lsh.capped(bands.filter($"doc_id" % 37 === 0), bandCap(spark))
+    val cand = Lsh.probe(bands.filter($"doc_id" % 37 =!= 0), broadcast(benchBands))(
+      $"n.doc_id".as("doc_id"), $"o.doc_id".as("bench_id"))
+    val scored = Lsh.jaccard(cand, base, 500L)
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bench_hits"), max($"jacc_milli").as("max_jacc_milli"))
     sid.filter($"doc_id" % 37 =!= 0).select($"doc_id")
@@ -972,22 +1018,8 @@ object DedupQueries extends QueryGroup {
         coalesce($"max_jacc_milli", lit(0L)).as("max_jacc_milli"),
         (coalesce($"n_bench_hits", lit(0L)) > 0L).as("contaminated"))
   }
-  private val fuzzyDecontaminateOracle: String = {
-    val mh = (0 until K).map(j =>
-      s"list_min(list_transform(sid, s -> (${aj(j)}*s + ${bj(j)}) % $P)) AS m$j").mkString(",\n  ")
-    val bands = (0 until K / 2).map(b =>
-      s"((m${2 * b}*131 + m${2 * b + 1}) % $P) AS band$b").mkString(", ")
-    val bandRows = (0 until K / 2).map(b =>
-      s"SELECT doc_id, $b AS band_idx, band$b AS band_hash FROM bandsig").mkString("\nUNION ALL\n")
-    val jacc = """CAST(len(list_intersect(sa.sid, sb.sid)) AS BIGINT) * 1000
-      |    // CAST(len(list_distinct(list_concat(sa.sid, sb.sid))) AS BIGINT)""".stripMargin
-    s"""WITH toks AS (SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
-       |th AS (SELECT doc_id, t, $tokenHashesSql AS h FROM toks),
-       |shing AS (SELECT doc_id, $shingleIdsSql AS sid FROM th),
-       |base AS (SELECT doc_id, sid FROM shing WHERE len(sid) > 0),
-       |sigs AS (SELECT doc_id, $mh FROM base),
-       |bandsig AS (SELECT doc_id, $bands FROM sigs),
-       |bandrows AS ($bandRows),
+  private val fuzzyDecontaminateOracle: String =
+    s"""WITH ${bandRowsCtes("bandrows")},
        |benchhot AS (
        |  SELECT band_idx, band_hash FROM bandrows WHERE doc_id % 37 = 0
        |  GROUP BY 1, 2 HAVING COUNT(*) > $BandCap),
@@ -1001,11 +1033,11 @@ object DedupQueries extends QueryGroup {
        |  FROM bandrows t JOIN bb USING (band_idx, band_hash)
        |  WHERE t.doc_id % 37 <> 0),
        |scored AS (
-       |  SELECT c.doc_id, $jacc AS jacc_milli
+       |  SELECT c.doc_id, $jaccSql AS jacc_milli
        |  FROM cand c
        |  JOIN base sa ON sa.doc_id = c.doc_id
        |  JOIN base sb ON sb.doc_id = c.bench_id
-       |  WHERE $jacc >= 500),
+       |  WHERE $jaccSql >= 500),
        |agg AS (
        |  SELECT doc_id, COUNT(*) AS n_bench_hits,
        |    MAX(jacc_milli) AS max_jacc_milli
@@ -1016,7 +1048,6 @@ object DedupQueries extends QueryGroup {
        |  (COALESCE(a.n_bench_hits, 0) > 0) AS contaminated
        |FROM shing s LEFT JOIN agg a ON a.doc_id = s.doc_id
        |WHERE s.doc_id % 37 <> 0""".stripMargin
-  }
 
   /** EMBEDDING-space benchmark decontamination — the semantic third leg
     * of the decontamination battery (exact shingles d7, lexical near-dup
@@ -1103,9 +1134,8 @@ object DedupQueries extends QueryGroup {
     * the cross-split filter drops pairs before the per-doc max. */
   def splitLeakage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sid = shingleTable(spark, dir).persist()
-    val pairs = minhashVerified(sid.filter(size($"sid") > 0))
-    val cross = pairs
+    val sid = Lsh.shingles(spark, dir)
+    val cross = minhashVerified(Lsh.nz(sid))
       .filter(($"doc_a" % 10 === 0) =!= ($"doc_b" % 10 === 0))
       .select(
         when($"doc_a" % 10 === 0, $"doc_a").otherwise($"doc_b").as("doc_id"),
@@ -1153,11 +1183,9 @@ object DedupQueries extends QueryGroup {
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.load(spark, dir, "documents")
-    // cache barrier below the join (minhashLsh discipline): without it
-    // the join/generate rewrites re-inline the shingle HOF chain and
-    // the explode re-evaluates it — measured 21 s -> 5 s at sf0.1
-    val sidTbl = shingleTableOf(docs).persist()
-    val srcShingle = sidTbl
+    // cache barrier below the join (Lsh.shingles): without it the
+    // join/generate rewrites re-inline the shingle HOF chain
+    val srcShingle = Lsh.shingles(docs)
       .join(docs.select($"doc_id", $"source"), "doc_id")
       .select($"source", explode($"sid").as("s"))
       .distinct()
@@ -1206,34 +1234,15 @@ object DedupQueries extends QueryGroup {
     * exactly as in the batch path. */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sid = shingleTable(spark, dir).persist()
-    val base = sid.filter(size($"sid") > 0)
-    val bands = bandIndex(base).persist()
-    val hot = bands.groupBy($"band_idx", $"band_hash")
-      .agg(count(lit(1)).as("n")).filter($"n" > bandCap(spark))
-      .select($"band_idx", $"band_hash")
-    val capped = bands.join(broadcast(hot),
-      Seq("band_idx", "band_hash"), "left_anti")
-    val newRows = capped.filter($"doc_id" % 10 === 9)
-    val cand = newRows.as("n").join(capped.as("o"),
-        col("n.band_idx") === col("o.band_idx") &&
-          col("n.band_hash") === col("o.band_hash") &&
-          col("n.doc_id") =!= col("o.doc_id"))
-      .select(least(col("n.doc_id"), col("o.doc_id")).as("doc_a"),
-        greatest(col("n.doc_id"), col("o.doc_id")).as("doc_b"))
-      .distinct()
-      .localCheckpoint() // same barrier rationale as d2
-    cand
-      .join(base.select($"doc_id".as("doc_a"), $"sid".as("sid_a")), "doc_a")
-      .join(base.select($"doc_id".as("doc_b"), $"sid".as("sid_b")), "doc_b")
-      .select($"doc_a", $"doc_b",
-        intDiv(size(array_intersect($"sid_a", $"sid_b")).cast("long") * 1000L,
-          size(array_union($"sid_a", $"sid_b")).cast("long")).as("jacc_milli"))
-      .filter($"jacc_milli" >= 800L)
+    val base = Lsh.nz(Lsh.shingles(spark, dir))
+    val capped = Lsh.capped(Lsh.bands(base).persist(), bandCap(spark))
+    val cand = Lsh.probe(capped.filter($"doc_id" % 10 === 9), capped,
+        $"n.doc_id" =!= $"o.doc_id")(
+      least($"n.doc_id", $"o.doc_id").as("doc_a"),
+      greatest($"n.doc_id", $"o.doc_id").as("doc_b"))
+    Lsh.jaccard(cand, base, 800L)
   }
-  private val incrementalDedupOracle: String = {
-    val jacc = """CAST(len(list_intersect(sa.sid, sb.sid)) AS BIGINT) * 1000
-      |    // CAST(len(list_distinct(list_concat(sa.sid, sb.sid))) AS BIGINT)""".stripMargin
+  private val incrementalDedupOracle: String =
     s"""WITH $minhashPairsCtes,
        |ncand AS (
        |  SELECT DISTINCT LEAST(n.doc_id, o.doc_id) AS doc_a,
@@ -1241,12 +1250,11 @@ object DedupQueries extends QueryGroup {
        |  FROM bandrows n JOIN bandrows o
        |    ON n.band_idx = o.band_idx AND n.band_hash = o.band_hash
        |   AND n.doc_id % 10 = 9 AND n.doc_id <> o.doc_id)
-       |SELECT doc_a, doc_b, $jacc AS jacc_milli
+       |SELECT doc_a, doc_b, $jaccSql AS jacc_milli
        |FROM ncand
        |JOIN base sa ON sa.doc_id = doc_a
        |JOIN base sb ON sb.doc_id = doc_b
-       |WHERE $jacc >= 800""".stripMargin
-  }
+       |WHERE $jaccSql >= 800""".stripMargin
 
   /** The CAPSTONE: the whole training-data preparation chain as one
     * pipeline, in the order a production corpus build runs it —
@@ -1293,7 +1301,7 @@ object DedupQueries extends QueryGroup {
       intDiv(nd * 1000L, n) >= 100L && intDiv(ns * 1000L, n) <= 500L)
     // 2. decontamination (benchmark docs excluded outright); ONE shingle
     // table serves the benchmark sweep AND the LSH pair stage below
-    val sid = shingleTable(spark, dir).persist()
+    val sid = Lsh.shingles(spark, dir)
     val benchSids = sid.filter($"doc_id" % 37 === 0)
       .select(explode($"sid").as("s")).distinct()
     val contaminated = sid.filter($"doc_id" % 37 =!= 0)
@@ -1313,7 +1321,7 @@ object DedupQueries extends QueryGroup {
       .persist() // endpoint filter (x2) + cluster join read this
     // 4. near-dup clustering over the surviving docs
     val ids = exact.select($"doc_id")
-    val pairs = minhashVerified(sid.filter(size($"sid") > 0))
+    val pairs = minhashVerified(Lsh.nz(sid))
       .select($"doc_a", $"doc_b")
       .join(ids.select($"doc_id".as("doc_a")), Seq("doc_a"), "left_semi")
       .join(ids.select($"doc_id".as("doc_b")), Seq("doc_b"), "left_semi")
@@ -1730,7 +1738,7 @@ object DedupQueries extends QueryGroup {
       docFingerprint(array_sort($"t")).as("ck")).persist()
     val isShard = $"doc_id" % 10 === 7
     val shard = flags.filter(isShard)
-    val sid = shingleTable(spark, dir).persist()
+    val sid = Lsh.shingles(spark, dir)
     val benchS = sid.filter($"doc_id" % 37 === 0 && $"doc_id" % 10 =!= 7)
       .select(explode($"sid").as("s")).distinct()
     val contaminated = sid.filter($"doc_id" % 10 === 7)
@@ -1740,25 +1748,11 @@ object DedupQueries extends QueryGroup {
     val corpusCk = flags.filter(!isShard).select($"ck").distinct()
     val exactDup = shard.join(corpusCk, Seq("ck"), "left_semi")
       .select($"doc_id").withColumn("e_hit", lit(true))
-    val base = sid.filter(size($"sid") > 0)
-    val bands = bandIndex(base).persist()
-    val hot = bands.groupBy($"band_idx", $"band_hash")
-      .agg(count(lit(1)).as("nb")).filter($"nb" > bandCap(spark))
-      .select($"band_idx", $"band_hash")
-    val capped = bands.join(broadcast(hot),
-      Seq("band_idx", "band_hash"), "left_anti")
-    val cand = capped.filter($"doc_id" % 10 === 7).as("n")
-      .join(capped.filter($"doc_id" % 10 =!= 7).as("o"),
-        col("n.band_idx") === col("o.band_idx") &&
-          col("n.band_hash") === col("o.band_hash"))
-      .select(col("n.doc_id").as("sdoc"), col("o.doc_id").as("cdoc"))
-      .distinct().localCheckpoint() // d2's materialization barrier
-    val nearDup = cand
-      .join(base.select($"doc_id".as("sdoc"), $"sid".as("sid_a")), "sdoc")
-      .join(base.select($"doc_id".as("cdoc"), $"sid".as("sid_b")), "cdoc")
-      .filter(intDiv(
-        size(array_intersect($"sid_a", $"sid_b")).cast("long") * 1000L,
-        size(array_union($"sid_a", $"sid_b")).cast("long")) >= 800L)
+    val base = Lsh.nz(sid)
+    val capped = Lsh.capped(Lsh.bands(base).persist(), bandCap(spark))
+    val cand = Lsh.probe(capped.filter($"doc_id" % 10 === 7),
+        capped.filter($"doc_id" % 10 =!= 7))($"n.doc_id".as("sdoc"), $"o.doc_id".as("cdoc"))
+    val nearDup = Lsh.jaccard(cand, base, 800L)
       .select($"sdoc".as("doc_id")).distinct().withColumn("n_hit", lit(true))
     shard.select($"doc_id", $"q_pass")
       .join(contaminated, Seq("doc_id"), "left")
@@ -1773,8 +1767,6 @@ object DedupQueries extends QueryGroup {
   }
   private val incrementalRefreshOracle: String = {
     val stop = TextQueries.stopwords.map(w => s"'$w'").mkString("[", ",", "]")
-    val jacc = """CAST(len(list_intersect(sa.sid, sb.sid)) AS BIGINT) * 1000
-      |    // CAST(len(list_distinct(list_concat(sa.sid, sb.sid))) AS BIGINT)""".stripMargin
     s"""WITH $minhashPairsCtes,
        |m2 AS (
        |  SELECT doc_id, t,
@@ -1805,7 +1797,7 @@ object DedupQueries extends QueryGroup {
        |  SELECT DISTINCT sdoc AS doc_id FROM ncand2
        |  JOIN base sa ON sa.doc_id = sdoc
        |  JOIN base sb ON sb.doc_id = cdoc
-       |  WHERE $jacc >= 800)
+       |  WHERE $jaccSql >= 800)
        |SELECT f.doc_id, f.q_pass,
        |  f.doc_id IN (SELECT doc_id FROM cont2) AS contaminated,
        |  f.ck IN (SELECT ck FROM cck) AS exact_dup,
@@ -1826,23 +1818,10 @@ object DedupQueries extends QueryGroup {
     * have missed. */
   def containment(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // persist BEFORE filtering (minhashLsh discipline): size(sid) below
-    // the cache re-inlines the shingle HOF chain into the predicate
-    val sidTbl = shingleTable(spark, dir).persist()
-    val base = sidTbl.filter(size($"sid") > 0)
-    val bandRows = bandIndex(base).persist()
-    val cand = guardedBandPairs(bandRows, Seq("band_idx", "band_hash"), "doc_id")
-      .select($"doc_id_a".as("doc_a"), $"doc_id_b".as("doc_b"))
-      .localCheckpoint() // same materialization barrier as d2
-    val inter = size(array_intersect($"sid_a", $"sid_b")).cast("long")
-    val small = least(size($"sid_a"), size($"sid_b")).cast("long")
-    val union = size(array_union($"sid_a", $"sid_b")).cast("long")
-    cand
-      .join(base.select($"doc_id".as("doc_a"), $"sid".as("sid_a")), "doc_a")
-      .join(base.select($"doc_id".as("doc_b"), $"sid".as("sid_b")), "doc_b")
+    val base = Lsh.nz(Lsh.shingles(spark, dir))
+    Lsh.verify(guardedBandPairs(Lsh.bands(base).persist()), base)
       .select($"doc_a", $"doc_b",
-        intDiv(inter * 1000L, small).as("cont_milli"),
-        intDiv(inter * 1000L, union).as("jacc_milli"))
+        intDiv($"inter" * 1000L, $"small").as("cont_milli"), $"jacc_milli")
       .filter($"cont_milli" >= 500L)
       .withColumn("containment_only",
         $"cont_milli" >= 800L && $"jacc_milli" < 800L)
@@ -1907,23 +1886,15 @@ object DedupQueries extends QueryGroup {
       .select($"doc_id", transform(tokensCol($"text"), wordHash(_)).as("h"))
       .select($"doc_id", kgrams.as("kg")) // attribute barrier (shingleIdsFrom)
       .select($"doc_id", fps.as("sid"))
-      .persist() // barrier before filter (see minhashLsh) + verify joins
+      .persist() // barrier before filter (see Lsh.shingles) + verify joins
       .filter(size($"sid") > 0)
       .withColumn("len", size($"sid").cast("long"))
   }
 
   def winnowDedup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val base = winnowBase(spark, dir)
-    val cand = ngramCandidates(base) // exact prefix filter, J >= 0.5
-      .localCheckpoint() // barrier before verify (see minhashLsh)
-    cand
-      .join(base.select($"doc_id".as("doc_a"), $"sid".as("sid_a")), "doc_a")
-      .join(base.select($"doc_id".as("doc_b"), $"sid".as("sid_b")), "doc_b")
-      .select($"doc_a", $"doc_b",
-        intDiv(size(array_intersect($"sid_a", $"sid_b")).cast("long") * 1000L,
-          size(array_union($"sid_a", $"sid_b")).cast("long")).as("jacc_milli"))
-      .filter($"jacc_milli" >= 500L)
+    // exact prefix filter, J >= 0.5
+    Lsh.jaccard(ngramCandidates(base), base, 500L)
   }
   /** All-pairs oracle (prefix filtering is exact, cf. ngramJaccardOracle);
     * the winnow selection replays bit-for-bit in DuckDB list
@@ -1950,7 +1921,7 @@ object DedupQueries extends QueryGroup {
        |nz AS (SELECT * FROM base WHERE len(sid) > 0)""".stripMargin
   }
 
-  private val winnowOracle: String = {
+  private val winnowOracle: String =
     s"""WITH $winnowNzCtes
        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |  CAST(len(list_intersect(a.sid, b.sid)) AS BIGINT) * 1000
@@ -1958,7 +1929,6 @@ object DedupQueries extends QueryGroup {
        |FROM nz a JOIN nz b ON a.doc_id < b.doc_id
        |WHERE CAST(len(list_intersect(a.sid, b.sid)) AS BIGINT) * 1000
        |    // CAST(len(list_distinct(list_concat(a.sid, b.sid))) AS BIGINT) >= 500""".stripMargin
-  }
 
   /** Bloom pre-filter geometry: BloomM bits (as 32-bit words in BIGINTs
     * — bit 63 would overflow DuckDB's checked shift), BloomK hash

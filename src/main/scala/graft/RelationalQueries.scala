@@ -10,19 +10,21 @@ import org.apache.spark.sql.functions._
   */
 object RelationalQueries extends QueryGroup {
 
-  /** Exact money arithmetic: double dollars -> integer cents (BIGINT).
-    * A non-finite measure (NaN/Inf from a broken producer — certain at
-    * 100 TB) or one whose cents overflow a long is treated as ABSENT
+  /** Exact money arithmetic: double dollars -> integer cents (BIGINT). */
+  private[graft] def cents(c: Column): Column = hundredths(c)
+  /** double 0.xx rate -> integer percent. */
+  private def pct(c: Column): Column = hundredths(c)
+
+  /** round(c * 100) as a long. A non-finite measure (NaN/Inf from a
+    * broken producer — certain at 100 TB) or one whose |c * 100| is at
+    * least 2^63, so that it overflows a long, is treated as ABSENT
     * (null): it drops out of sums/mins like a null measure instead of
     * killing the job with an ANSI CAST_OVERFLOW (the degenerate-events
-    * sweep's finding). Clean inputs are bit-identical to round*100. */
-  private[graft] def cents(c: Column): Column =
-    round(when(isnan(c) || abs(c) > 9.0e15, lit(null).cast("double"))
-      .otherwise(c) * 100).cast("long")
-  /** double 0.xx rate -> integer percent; same absent-on-non-finite
-    * contract as [[cents]]. */
-  private def pct(c: Column): Column =
-    round(when(isnan(c) || abs(c) > 9.0e15, lit(null).cast("double"))
+    * sweep's finding). Every other input is bit-identical to the
+    * oracles' CAST(ROUND(c*100) AS BIGINT), 1e16 dollars -> 1e18 cents
+    * included. */
+  private def hundredths(c: Column): Column =
+    round(when(isnan(c) || abs(c * 100) >= math.pow(2, 63), lit(null).cast("double"))
       .otherwise(c) * 100).cast("long")
 
   def q1Agg(spark: SparkSession, dir: String): DataFrame = {

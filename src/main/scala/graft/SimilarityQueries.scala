@@ -68,6 +68,15 @@ object SimilarityQueries extends QueryGroup {
       .withColumn("n2", functions.VecMath.dotCol($"q", $"q"))
       .filter($"n2" > 0L)
   }
+  /** The oracle twin of `VecMath.sigCol(q, planes, offset)`: bit k of
+    * the random-hyperplane signature is the sign of q . h_k, h_k[i] = ±1
+    * from the (aj, bj) row k + offset. */
+  private[graft] def hyperplaneSigSql(planes: Int, offset: Int): String =
+    (0 until planes).map { k =>
+      val s = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [q[i] * (((${aj(k + offset)}*i+${bj(k + offset)}) % $P) % 2 * 2 - 1) for i in range(1, len(q)+1)]), (a,b)->a+b)"
+      s"(CASE WHEN $s > 0 THEN ${1L << k} ELSE 0 END)"
+    }.mkString(" + ")
+
   private[graft] val quantizedSql: String =
     s"""SELECT * FROM (
        |  SELECT vec_id, label,
@@ -183,12 +192,8 @@ object SimilarityQueries extends QueryGroup {
     topKPerQuery(scored, 5)
   }
   private val annLshOracle: String = {
-    val bits = (0 until LshBits).map { k =>
-      val s = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [q[i] * (((${aj(k + 16)}*i+${bj(k + 16)}) % $P) % 2 * 2 - 1) for i in range(1, len(q)+1)]), (a,b)->a+b)"
-      s"(CASE WHEN $s > 0 THEN ${1L << k} ELSE 0 END)"
-    }.mkString(" + ")
     s"""WITH base AS ($quantizedSql),
-       |bucketed AS (SELECT vec_id, q, n2, CAST($bits AS BIGINT) AS bucket FROM base),
+       |bucketed AS (SELECT vec_id, q, n2, CAST(${hyperplaneSigSql(LshBits, 16)} AS BIGINT) AS bucket FROM base),
        |probes AS (SELECT vec_id AS query_id, bucket AS pbucket, q AS pq, n2 AS pn2
        |  FROM bucketed WHERE vec_id < $NQueries),
        |scored AS (
@@ -230,10 +235,7 @@ object SimilarityQueries extends QueryGroup {
     topKPerQuery(scored, 5)
   }
   private val annMultiprobeOracle: String = {
-    val bits = (0 until LshBits).map { k =>
-      val s = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [q[i] * (((${aj(k + 16)}*i+${bj(k + 16)}) % $P) % 2 * 2 - 1) for i in range(1, len(q)+1)]), (a,b)->a+b)"
-      s"(CASE WHEN $s > 0 THEN ${1L << k} ELSE 0 END)"
-    }.mkString(" + ")
+    val bits = hyperplaneSigSql(LshBits, 16)
     val flips = (Seq(0L) ++ (0 until LshBits).map(k => 1L << k))
       .map(f => s"SELECT $f AS flip").mkString("\nUNION ALL\n")
     s"""WITH base AS ($quantizedSql),
@@ -1474,12 +1476,8 @@ object SimilarityQueries extends QueryGroup {
         $"m.cos_milli".as("cos_milli"), $"m.margin_milli".as("margin_milli"))
   }
   private val bitextAnnOracle: String = {
-    val bits = (0 until LshBits).map { k =>
-      val s = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [q[i] * (((${aj(k + 16)}*i+${bj(k + 16)}) % $P) % 2 * 2 - 1) for i in range(1, len(q)+1)]), (a,b)->a+b)"
-      s"(CASE WHEN $s > 0 THEN ${1L << k} ELSE 0 END)"
-    }.mkString(" + ")
     s"""WITH base AS ($quantizedSql),
-       |bucketed AS (SELECT vec_id, q, n2, CAST($bits AS BIGINT) AS bucket FROM base),
+       |bucketed AS (SELECT vec_id, q, n2, CAST(${hyperplaneSigSql(LshBits, 16)} AS BIGINT) AS bucket FROM base),
        |en AS (SELECT bucket, b.vec_id AS en_id, q AS eq, n2 AS en2
        |  FROM bucketed b JOIN documents d ON b.vec_id = d.doc_id WHERE d.lang = 'en'),
        |xx AS (SELECT bucket, b.vec_id AS xx_id, q AS xq, n2 AS xn2
@@ -1558,12 +1556,8 @@ object SimilarityQueries extends QueryGroup {
           .cast("long").as("recall_mp_milli"))
   }
   private val bitextRecallOracle: String = {
-    val bits = (0 until LshBits).map { k =>
-      val s = s"list_reduce(list_prepend(CAST(0 AS BIGINT), [q[i] * (((${aj(k + 16)}*i+${bj(k + 16)}) % $P) % 2 * 2 - 1) for i in range(1, len(q)+1)]), (a,b)->a+b)"
-      s"(CASE WHEN $s > 0 THEN ${1L << k} ELSE 0 END)"
-    }.mkString(" + ")
     s"""WITH base AS ($quantizedSql),
-       |bucketed AS (SELECT vec_id, q, n2, CAST($bits AS BIGINT) AS bucket FROM base),
+       |bucketed AS (SELECT vec_id, q, n2, CAST(${hyperplaneSigSql(LshBits, 16)} AS BIGINT) AS bucket FROM base),
        |en AS (SELECT b.vec_id AS en_id, bucket AS eb, q AS eq, n2 AS en2
        |  FROM bucketed b JOIN documents d ON b.vec_id = d.doc_id
        |  WHERE d.lang = 'en' AND b.vec_id % 37 = 1),

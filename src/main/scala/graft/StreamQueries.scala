@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import DedupQueries.{Lsh, jaccSql}
 
 /** Event-time window operators over the `events` table (SURVEY §2.10).
   * The reference's incremental layer is a high-water-mark batch walk
@@ -182,16 +183,11 @@ object StreamQueries extends QueryGroup {
   def streamProbeLoad(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.load(spark, dir, "documents").select($"doc_id", $"text")
-    // persist BEFORE filtering (the minhashLsh discipline): a filter on
-    // size(sid) below the cache re-inlines the whole shingle HOF chain
-    // into the predicate — measured 94 s vs 4 s at the sf1 stress scale
-    val sids = DedupQueries.shingleTableOf(docs)
-      .persist() // corpus index + stream probes
-    val nz = sids.filter(size($"sid") > 0)
-    val idx = DedupQueries.bandIndex(nz.filter($"doc_id" % 3 =!= 0))
-      .groupBy($"band_idx", $"band_hash").agg(count(lit(1)).as("n"))
-    DedupQueries.bandIndex(nz.filter($"doc_id" % 3 === 0))
-      .join(idx, Seq("band_idx", "band_hash"), "left")
+    // one persisted shingle table: corpus index + stream probes
+    val nz = Lsh.nz(Lsh.shingles(docs))
+    val idx = Lsh.sizes(Lsh.bands(nz.filter($"doc_id" % 3 =!= 0)))
+    Lsh.bands(nz.filter($"doc_id" % 3 === 0))
+      .join(idx, Lsh.Keys, "left")
       .groupBy($"doc_id")
       .agg(sum(coalesce($"n", lit(0L))).as("probe_load"),
         max(coalesce($"n", lit(0L))).as("max_bucket"))
@@ -218,34 +214,32 @@ object StreamQueries extends QueryGroup {
     * therefore batch-free, and the spec pins that 1-batch and 2-batch
     * runs decide identically (the MemoryStream run exercises the real
     * foreachBatch loop). */
-  def streamNeardup(spark: SparkSession, dir: String): DataFrame = {
+  def streamNeardup(spark: SparkSession, dir: String): DataFrame =
+    admitStream(spark, dir, None)
+
+  /** st8 and st8c: the stream's two id-ordered batches decided against
+    * a maintained index of the corpus, capped at build by `cap`. */
+  private def admitStream(spark: SparkSession, dir: String,
+      cap: Option[Long]): DataFrame = {
     import spark.implicits._
     val docs = Tables.load(spark, dir, "documents").select($"doc_id", $"text")
-    val corpus = docs.filter($"doc_id" % 3 =!= 0)
     val stream = docs.filter($"doc_id" % 3 === 0)
-    // the maintained index: both tables MATERIALIZED (at 100 TB these
-    // are the on-disk index files); each batch appends its own rows
-    var sids = DedupQueries.shingleTableOf(corpus).persist()
-    var bands = DedupQueries.bandIndex(
-      sids.filter(size($"sid") > 0)).persist()
+    var index = streaming.StreamingOps.NeardupIndex.of(
+      Lsh.shingles(docs.filter($"doc_id" % 3 =!= 0)), cap)
     val decisions = Seq(stream.filter($"doc_id" < NeardupCut),
         stream.filter($"doc_id" >= NeardupCut)).map { b =>
       // one hashing pass per batch: the same shingle table decides and
       // then joins the index
-      val bSids = DedupQueries.shingleTableOf(b).persist()
-      val dec = streaming.StreamingOps.neardupAdmit(bSids, sids, bands)
-      sids = sids.unionByName(bSids).persist()
-      bands = bands.unionByName(DedupQueries.bandIndex(
-        bSids.filter(size($"sid") > 0))).persist()
+      val bSids = Lsh.shingles(b)
+      val dec = index.admit(bSids)
+      index = index.append(bSids)
       dec
     }
     decisions.reduce(_ unionByName _)
       .select($"doc_id", $"admitted",
         coalesce($"dup_of", lit(-1L)).as("dup_of"))
   }
-  private val streamNeardupOracle: String = {
-    val jacc = """CAST(len(list_intersect(sa.sid, sb.sid)) AS BIGINT) * 1000
-      |    // CAST(len(list_distinct(list_concat(sa.sid, sb.sid))) AS BIGINT)""".stripMargin
+  private val streamNeardupOracle: String =
     s"""WITH ${DedupQueries.minhashPairsCtes},
        |scand AS (
        |  SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS ref_id
@@ -258,13 +252,12 @@ object StreamQueries extends QueryGroup {
        |  FROM scand
        |  JOIN base sa ON sa.doc_id = new_id
        |  JOIN base sb ON sb.doc_id = ref_id
-       |  WHERE $jacc >= 800
+       |  WHERE $jaccSql >= 800
        |  GROUP BY 1)
        |SELECT d.doc_id, (dup_of IS NULL) AS admitted,
        |  COALESCE(dup_of, -1) AS dup_of
        |FROM (SELECT doc_id FROM documents WHERE doc_id % 3 = 0) d
        |LEFT JOIN sver ON d.doc_id = new_id""".stripMargin
-  }
 
   /** The stream-stream interval join (`StreamingOps.intervalJoin`) run
     * on the batch table: every error within 30 minutes AFTER a click by
@@ -404,35 +397,9 @@ object StreamQueries extends QueryGroup {
     * ordering; the cap is the guard for the ones that slip through.)
     * The DuckDB oracle replays the same occupancy filter on both join
     * sides, so the capped semantics are exact at any slicing. */
-  def streamNeardupCapped(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.load(spark, dir, "documents").select($"doc_id", $"text")
-    val corpus = docs.filter($"doc_id" % 3 =!= 0)
-    val stream = docs.filter($"doc_id" % 3 === 0)
-    var sids = DedupQueries.shingleTableOf(corpus).persist()
-    val corpusBands = DedupQueries.bandIndex(sids.filter(size($"sid") > 0))
-    val hot = corpusBands.groupBy($"band_idx", $"band_hash")
-      .agg(count(lit(1)).as("n")).filter($"n" > NeardupCapC)
-      .select($"band_idx", $"band_hash").persist()
-    var bands = corpusBands
-      .join(hot, Seq("band_idx", "band_hash"), "left_anti").persist()
-    val decisions = Seq(stream.filter($"doc_id" < NeardupCut),
-        stream.filter($"doc_id" >= NeardupCut)).map { b =>
-      val bSids = DedupQueries.shingleTableOf(b).persist()
-      val dec = streaming.StreamingOps.neardupAdmitCapped(bSids, sids, bands, hot)
-      sids = sids.unionByName(bSids).persist()
-      bands = bands.unionByName(
-        DedupQueries.bandIndex(bSids.filter(size($"sid") > 0))
-          .join(hot, Seq("band_idx", "band_hash"), "left_anti")).persist()
-      dec
-    }
-    decisions.reduce(_ unionByName _)
-      .select($"doc_id", $"admitted",
-        coalesce($"dup_of", lit(-1L)).as("dup_of"))
-  }
-  private val streamNeardupCappedOracle: String = {
-    val jacc = """CAST(len(list_intersect(sa.sid, sb.sid)) AS BIGINT) * 1000
-      |    // CAST(len(list_distinct(list_concat(sa.sid, sb.sid))) AS BIGINT)""".stripMargin
+  def streamNeardupCapped(spark: SparkSession, dir: String): DataFrame =
+    admitStream(spark, dir, Some(NeardupCapC))
+  private val streamNeardupCappedOracle: String =
     s"""WITH ${DedupQueries.minhashPairsCtes},
        |chot AS (
        |  SELECT band_idx, band_hash FROM bandrows0
@@ -453,13 +420,12 @@ object StreamQueries extends QueryGroup {
        |  FROM scand
        |  JOIN base sa ON sa.doc_id = new_id
        |  JOIN base sb ON sb.doc_id = ref_id
-       |  WHERE $jacc >= 800
+       |  WHERE $jaccSql >= 800
        |  GROUP BY 1)
        |SELECT d.doc_id, (dup_of IS NULL) AS admitted,
        |  COALESCE(dup_of, -1) AS dup_of
        |FROM (SELECT doc_id FROM documents WHERE doc_id % 3 = 0) d
        |LEFT JOIN sver ON d.doc_id = new_id""".stripMargin
-  }
 
   override def register(): Unit = {
     Queries.register(QueryDef("st12_stream_dq", streamDq, Some(streamDqOracle)))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.DedupQueries.Lsh
 
 /** Structured Streaming operators (SURVEY §2.10) — the engine's streaming
   * surface. The reference consumes ActivityStreams pages with a
@@ -17,7 +18,8 @@ import org.apache.spark.sql.functions._
   *   - `intervalJoin`: st9_interval_join;
   *   - `enrich`: st10_stream_enrich;
   *   - `dqCounts`: st12_stream_dq;
-  *   - `neardupAdmit` / `neardupAdmitCapped`: st8 / st8c.
+  *   - `neardupAdmit` over a `NeardupIndex`: st8, and st8c with the
+  *     index capped at build; both run on the `DedupQueries.Lsh` kernel.
   * StreamingSpec runs the same functions over MemoryStreams, so the
   * oracle-checked batch key and the streaming form are one code path.
   */
@@ -114,78 +116,73 @@ object StreamingOps {
     * their band rows probe the already-seen index (asymmetric join,
     * shuffle ∝ batch, never corpus), plus smaller-id docs of the SAME
     * batch. A doc is rejected when exact Jaccard ≥ 0.8 verifies against
-    * any such reference; `dup_of` is the smallest matching id.
+    * any such reference; `dup_of` is the smallest matching id. Probe and
+    * verify are `DedupQueries.Lsh`'s.
     *
     * Policy: the index is MONOTONE — every seen doc enters it, admitted
     * or not (rejecting a near-dup of rejected content is still correct,
     * and it keeps each decision per-doc local). With id-ordered batches
     * the decision for doc d depends only on {corpus} ∪ {stream ids < d},
     * so admission is provably independent of micro-batch slicing — the
-    * property the spec pins. Deliberately UNCAPPED, unlike d8's batch
-    * build: a per-batch hot-bucket cap would depend on how the stream
-    * is sliced, breaking both that property and oracle parity. At
-    * 100 TB, cap the PERSISTED index once at build time (bucket counts
-    * are slicing-independent there) before handing it to this probe.
+    * property the spec pins. Uncapped by default: a per-batch hot-bucket
+    * cap would depend on how the stream is sliced, breaking both that
+    * property and oracle parity. The cap that holds at 100 TB is fixed
+    * once at index build (st8c, round 15's pressure finding: the
+    * uncapped probe's clique-quadratic verify mass cannot complete
+    * under a starved heap, plans/stress/STRESS_spill_r15_streaming*.json):
+    * `hot` is the (band_idx, band_hash) set whose corpus occupancy
+    * exceeded the cap, dead on BOTH the probe and the reference side,
+    * so fan-out per bucket is bounded while decisions stay slicing-
+    * independent (the hot set never grows with the stream).
     *
-    * Caller maintains the MATERIALIZED index across batches — both
-    * tables persisted/on disk, never re-derived (re-minhashing the
-    * corpus per batch would make each batch cost corpus-shaped, the
-    * exact failure this operator exists to avoid): `seenSids` =
-    * (doc_id, sid) and `seenBands` = its bandIndex, appending the
-    * batch's rows after deciding. `batchSids` is the batch's OWN
-    * shingle table (one hashing pass, shared with the caller's
-    * index append). doc_ids must be disjoint from the corpus'.
-    * Returns (doc_id, admitted, dup_of) for every batch doc,
+    * The caller maintains the MATERIALIZED index across batches, never
+    * re-derived (re-minhashing the corpus per batch would make each
+    * batch cost corpus-shaped): [[NeardupIndex]]. `batchSids` is the
+    * batch's own persisted shingle table (`Lsh.shingles`, one hashing
+    * pass shared with the index append); doc_ids must be disjoint from
+    * the corpus'. Returns (doc_id, admitted, dup_of) for every batch doc,
     * empty-shingle docs admitted. */
   def neardupAdmit(batchSids: DataFrame, seenSids: DataFrame,
-      seenBands: DataFrame): DataFrame =
-    neardupAdmitImpl(batchSids, seenSids, seenBands, None)
-
-  /** [[neardupAdmit]] with the BUILD-TIME index cap (the policy note's
-    * 100-TB prescription, made a first-class path by round 15's
-    * pressure finding — the uncapped probe's clique-quadratic verify
-    * mass cannot complete under a starved heap,
-    * plans/stress/STRESS_spill_r15_streaming*.json). `hotBuckets` is the FIXED
-    * (band_idx, band_hash) set whose corpus-build occupancy exceeded
-    * the cap: those buckets are dead on BOTH probe and reference
-    * sides, so candidate fan-out per bucket is bounded while
-    * decisions stay micro-batch-slicing-independent (the hot set
-    * never grows with the stream). Caller must maintain `seenBands`
-    * pre-filtered by the same set. */
-  def neardupAdmitCapped(batchSids: DataFrame, seenSids: DataFrame,
-      seenBands: DataFrame, hotBuckets: DataFrame): DataFrame =
-    neardupAdmitImpl(batchSids, seenSids, seenBands, Some(hotBuckets))
-
-  private def neardupAdmitImpl(batchSids: DataFrame, seenSids: DataFrame,
-      seenBands: DataFrame, hotBuckets: Option[DataFrame]): DataFrame = {
-    val spark = batchSids.sparkSession
-    import spark.implicits._
-    import graft.{DedupQueries, TextQueries}
-    val newSids = batchSids.persist()
-    val newNz = newSids.filter(size($"sid") > 0)
-    val seenNz = seenSids.filter(size($"sid") > 0)
-    val probe0 = DedupQueries.bandIndex(newNz)
-    val probe = hotBuckets.fold(probe0)(h =>
-      probe0.join(h, Seq("band_idx", "band_hash"), "left_anti")).persist()
+      seenBands: DataFrame, hot: Option[DataFrame] = None): DataFrame = {
+    val newNz = Lsh.nz(batchSids)
+    val probe = Lsh.dropHot(Lsh.bands(newNz), hot).persist()
     val ref = seenBands.withColumn("seen", lit(true))
       .unionByName(probe.withColumn("seen", lit(false)))
-    val cand = probe.as("n").join(ref.as("o"),
-        col("n.band_idx") === col("o.band_idx") &&
-          col("n.band_hash") === col("o.band_hash") &&
-          (col("o.seen") || col("o.doc_id") < col("n.doc_id")))
-      .select(col("n.doc_id").as("new_id"), col("o.doc_id").as("ref_id"))
-      .distinct()
-      .localCheckpoint() // same materialization barrier as d2/d8
-    val refSids = seenNz.unionByName(newNz)
-    val dups = cand
-      .join(newSids.select($"doc_id".as("new_id"), $"sid".as("sid_n")), "new_id")
-      .join(refSids.select($"doc_id".as("ref_id"), $"sid".as("sid_o")), "ref_id")
-      .filter(TextQueries.intDiv(
-        size(array_intersect($"sid_n", $"sid_o")).cast("long") * 1000L,
-        size(array_union($"sid_n", $"sid_o")).cast("long")) >= 800L)
-      .groupBy($"new_id").agg(min($"ref_id").as("dup_of"))
-    newSids.select($"doc_id")
+    val cand = Lsh.probe(probe, ref, col("o.seen") || col("o.doc_id") < col("n.doc_id"))(
+      col("n.doc_id").as("new_id"), col("o.doc_id").as("ref_id"))
+    val dups = Lsh.jaccard(cand, batchSids, 800L,
+        Some(Lsh.nz(seenSids).unionByName(newNz)))
+      .groupBy(col("new_id")).agg(min(col("ref_id")).as("dup_of"))
+    batchSids.select(col("doc_id"))
       .join(dups.withColumnRenamed("new_id", "doc_id"), Seq("doc_id"), "left")
-      .select($"doc_id", $"dup_of".isNull.as("admitted"), $"dup_of")
+      .select(col("doc_id"), col("dup_of").isNull.as("admitted"), col("dup_of"))
+  }
+
+  /** The maintained index a near-dup admission stream probes: the seen
+    * (doc_id, sid) table, its band rows and, when capped, the hot set
+    * fixed at corpus build. Both tables are persisted (at 100 TB, the
+    * on-disk index files); each batch appends its own rows. */
+  final case class NeardupIndex(sids: DataFrame, bands: DataFrame,
+      hot: Option[DataFrame]) {
+    /** The batch's admission decisions against this index. */
+    def admit(batchSids: DataFrame): DataFrame =
+      neardupAdmit(batchSids, sids, bands, hot)
+
+    /** This index with the batch appended: every seen doc enters, and
+      * hot buckets stay dead. */
+    def append(batchSids: DataFrame): NeardupIndex = copy(
+      sids = sids.unionByName(batchSids).persist(),
+      bands = bands.unionByName(Lsh.dropHot(Lsh.bands(Lsh.nz(batchSids)), hot))
+        .persist())
+  }
+
+  object NeardupIndex {
+    /** The index over a corpus's persisted shingle table; `cap` fixes
+      * the hot set on the corpus's own band occupancy. */
+    def of(sids: DataFrame, cap: Option[Long] = None): NeardupIndex = {
+      val bands = Lsh.bands(Lsh.nz(sids))
+      val hot = cap.map(Lsh.hot(bands, _).persist())
+      NeardupIndex(sids, Lsh.dropHot(bands, hot).persist(), hot)
+    }
   }
 }

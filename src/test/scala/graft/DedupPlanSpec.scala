@@ -13,8 +13,7 @@ class DedupPlanSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = Seq((1L, 10L), (2L, 10L), (3L, 10L), (4L, 20L), (5L, 20L),
       (6L, 30L)).toDF("doc_id", "band_hash").withColumn("band_idx", lit(0))
-    val salted = DedupQueries
-      .saltedSelfJoin(rows, Seq("band_idx", "band_hash"), "doc_id")
+    val salted = DedupQueries.saltedSelfJoin(rows)
       .select($"a.doc_id".as("x"), $"b.doc_id".as("y"))
       .as[(Long, Long)].collect().sorted
     val plain = rows.as("a").join(rows.as("b"),
@@ -128,26 +127,29 @@ class DedupPlanSpec extends AnyFunSuite {
       (0 until midN).map(i => (1000L + i, 0L, 2L)) ++ // salted regime
       Seq((1L, 0L, 3L), (2L, 0L, 3L), (3L, 0L, 3L))) // plain regime
       .toDF("doc_id", "band_idx", "band_hash")
-    val pairs = DedupQueries
-      .guardedBandPairs(rows, Seq("band_idx", "band_hash"), "doc_id")
-      .select($"doc_id_a", $"doc_id_b").as[(Long, Long)].collect()
+    val pairs = DedupQueries.guardedBandPairs(rows)
+      .select($"doc_a", $"doc_b").as[(Long, Long)].collect()
     assert(!pairs.exists(_._1 >= 10000L), "hot bucket contributed pairs")
     assert(pairs.count(p => p._1 >= 1000L && p._1 < 10000L) == midN * (midN - 1) / 2)
     assert(pairs.count(_._1 < 1000L) == 3)
   }
 
   test("d2 band join drops hot buckets above BandCap before pairing") {
-    // semantic probe: a synthetic corpus where one band bucket exceeds the
-    // cap contributes no pairs from that bucket
+    // the oracles' HAVING COUNT(*) > BandCap at its boundary: a bucket of
+    // exactly BandCap docs survives, one of BandCap + 1 is dropped, on
+    // both cap paths — d2's guardedBandPairs and the kernel's own
+    // (d8, d12, refresh, st8c)
     import spark.implicits._
-    val n = (DedupQueries.BandCap + 2).toInt
-    val rows = (0 until n).map(i => (i.toLong, 0L, 7L)) // one hot bucket
+    val cap = DedupQueries.BandCap
+    val rows = ((1L to cap).map(i => (i, 0L, 1L)) ++
+        (1L to cap + 1).map(i => (10000L + i, 0L, 7L)))
       .toDF("doc_id", "band_idx", "band_hash")
-    val hot = rows.groupBy($"band_idx", $"band_hash")
-      .agg(count(lit(1)).as("n")).filter($"n" > DedupQueries.BandCap)
-      .select($"band_idx", $"band_hash")
-    val capped = rows.join(broadcast(hot), Seq("band_idx", "band_hash"), "left_anti")
-    assert(capped.count() == 0L)
+    val kept = DedupQueries.Lsh.capped(rows, cap)
+      .select($"band_hash").as[Long].collect()
+    assert(kept.length == cap && kept.forall(_ == 1L))
+    val pairs = DedupQueries.guardedBandPairs(rows)
+    assert(pairs.filter($"doc_b" > 10000L).count() == 0L, "hot bucket contributed pairs")
+    assert(pairs.count() == cap * (cap - 1) / 2)
   }
 
   test("d13 winnow selection matches a plain-Scala reimplementation") {
@@ -365,8 +367,7 @@ class DedupPlanSpec extends AnyFunSuite {
     // drops it (no pairs), the 1024 default keeps it (salted regime)
     val rows = (1L to 70L).toDF("doc_id")
       .withColumn("band_idx", lit(0)).withColumn("band_hash", lit(42L))
-    def pairs(): Long = DedupQueries.guardedBandPairs(
-      rows, Seq("band_idx", "band_hash"), "doc_id").count()
+    def pairs(): Long = DedupQueries.guardedBandPairs(rows).count()
     assert(pairs() == 70L * 69 / 2) // C(70,2) at the default
     spark.conf.set("spark.graft.bandCap", "65")
     try {

@@ -62,14 +62,11 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     val got = read(spark.table("tumbling_nan_out"))
     q.stop()
-    // the 1e16 row only has to finish and agree with st1: its cents are
-    // whatever RelationalQueries.cents gives a large finite value
-    assert(got.map { case (w, ty, n, _) => (w, ty, n) } === Set(
-      ("2024-03-01 00:00:00", "a", 1L),
-      ("2024-03-01 00:00:00", "nan", 1L),
-      ("2024-03-01 00:00:00", "huge", 1L)))
-    assert(got.collect { case (_, ty, _, c) if ty != "huge" => ty -> c }.toMap ===
-      Map("a" -> Some(100L), "nan" -> None))
+    // 1e16 dollars is 1e18 cents, which fits a long: only NaN is absent
+    assert(got === Set(
+      ("2024-03-01 00:00:00", "a", 1L, Some(100L)),
+      ("2024-03-01 00:00:00", "nan", 1L, None),
+      ("2024-03-01 00:00:00", "huge", 1L, Some(1000000000000000000L))))
     assert(got === want)
   }
 
@@ -254,26 +251,22 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val docs = Tables.load(spark, TestSpark.sf, "documents")
       .select($"doc_id", $"text")
-    var sids = DedupQueries.shingleTableOf(
-      docs.filter($"doc_id" % 3 =!= 0)).persist()
-    var bands = DedupQueries.bandIndex(
-      sids.filter(size($"sid") > 0)).persist()
+    var index = StreamingOps.NeardupIndex.of(
+      DedupQueries.Lsh.shingles(docs.filter($"doc_id" % 3 =!= 0)))
     val stream0 = docs.filter($"doc_id" % 3 === 0)
       .as[(Long, String)].collect().sortBy(_._1)
     val input = MemoryStream[(Long, String)]
     val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean, Long)]
     val q = input.toDF().toDF("doc_id", "text").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val bSids = DedupQueries.shingleTableOf(batch).persist()
+        val bSids = DedupQueries.Lsh.shingles(batch)
         sink.synchronized {
-          sink ++= StreamingOps.neardupAdmit(bSids, sids, bands)
+          sink ++= index.admit(bSids)
             .select($"doc_id", $"admitted",
               coalesce($"dup_of", lit(-1L)).as("dup_of"))
             .as[(Long, Boolean, Long)].collect()
         }
-        sids = sids.unionByName(bSids).persist()
-        bands = bands.unionByName(DedupQueries.bandIndex(
-          bSids.filter(size($"sid") > 0))).persist()
+        index = index.append(bSids)
         ()
       }.start()
     // THREE id-ordered micro-batches — a different slicing than the
@@ -299,31 +292,23 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val docs = Tables.load(spark, TestSpark.sf, "documents")
       .select($"doc_id", $"text")
-    var sids = DedupQueries.shingleTableOf(
-      docs.filter($"doc_id" % 3 =!= 0)).persist()
-    val corpusBands = DedupQueries.bandIndex(sids.filter(size($"sid") > 0))
-    val hot = corpusBands.groupBy($"band_idx", $"band_hash")
-      .agg(count(lit(1)).as("n")).filter($"n" > StreamQueries.NeardupCapC)
-      .select($"band_idx", $"band_hash").persist()
-    var bands = corpusBands
-      .join(hot, Seq("band_idx", "band_hash"), "left_anti").persist()
+    var index = StreamingOps.NeardupIndex.of(
+      DedupQueries.Lsh.shingles(docs.filter($"doc_id" % 3 =!= 0)),
+      Some(StreamQueries.NeardupCapC))
     val stream0 = docs.filter($"doc_id" % 3 === 0)
       .as[(Long, String)].collect().sortBy(_._1)
     val input = MemoryStream[(Long, String)]
     val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean, Long)]
     val q = input.toDF().toDF("doc_id", "text").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val bSids = DedupQueries.shingleTableOf(batch).persist()
+        val bSids = DedupQueries.Lsh.shingles(batch)
         sink.synchronized {
-          sink ++= StreamingOps.neardupAdmitCapped(bSids, sids, bands, hot)
+          sink ++= index.admit(bSids)
             .select($"doc_id", $"admitted",
               coalesce($"dup_of", lit(-1L)).as("dup_of"))
             .as[(Long, Boolean, Long)].collect()
         }
-        sids = sids.unionByName(bSids).persist()
-        bands = bands.unionByName(DedupQueries.bandIndex(
-            bSids.filter(size($"sid") > 0))
-          .join(hot, Seq("band_idx", "band_hash"), "left_anti")).persist()
+        index = index.append(bSids)
         ()
       }.start()
     // THREE id-ordered micro-batches vs the registered query's two —
@@ -344,7 +329,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("the build-time cap kills a mega-clique's buckets: dup admitted") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // a corpus clique larger than the cap saturates every bucket of its
     // text past NeardupCapC, so a streaming duplicate of that text has
@@ -352,19 +336,15 @@ class StreamingSpec extends AnyFunSuite {
     // (exact-dedup's job upstream) for bounded probe fan-out
     val clique = "the exact same duplicated document text body " * 3
     val corpus = (1L to 20L).map(i => (i * 3 + 1, clique)).toDF("doc_id", "text")
-    val sids = DedupQueries.shingleTableOf(corpus)
-    val corpusBands = DedupQueries.bandIndex(sids.filter(size($"sid") > 0))
-    val hot = corpusBands.groupBy($"band_idx", $"band_hash")
-      .agg(count(lit(1)).as("n")).filter($"n" > StreamQueries.NeardupCapC)
-      .select($"band_idx", $"band_hash")
-    val bands = corpusBands.join(hot, Seq("band_idx", "band_hash"), "left_anti")
-    val batch = DedupQueries.shingleTableOf(
+    val sids = DedupQueries.Lsh.shingles(corpus)
+    val batch = DedupQueries.Lsh.shingles(
       Seq((999L, clique)).toDF("doc_id", "text"))
-    val capped = StreamingOps.neardupAdmitCapped(batch, sids, bands, hot)
+    val capped = StreamingOps.NeardupIndex.of(sids, Some(StreamQueries.NeardupCapC))
+      .admit(batch)
       .select($"doc_id", $"admitted").as[(Long, Boolean)].collect().toMap
     assert(capped(999L), "clique buckets past the cap must be dead")
     // control: the UNCAPPED probe rejects the same duplicate
-    val uncapped = StreamingOps.neardupAdmit(batch, sids, corpusBands)
+    val uncapped = StreamingOps.NeardupIndex.of(sids).admit(batch)
       .select($"doc_id", $"admitted").as[(Long, Boolean)].collect().toMap
     assert(!uncapped(999L), "uncapped admission must still reject it")
   }
@@ -467,26 +447,22 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = Fixtures.tempDir("graft_nd_ck")
     val docs = Tables.load(spark, TestSpark.sf, "documents")
       .select($"doc_id", $"text")
-    var sids = DedupQueries.shingleTableOf(
-      docs.filter($"doc_id" % 3 =!= 0)).persist()
-    var bands = DedupQueries.bandIndex(
-      sids.filter(size($"sid") > 0)).persist()
+    var index = StreamingOps.NeardupIndex.of(
+      DedupQueries.Lsh.shingles(docs.filter($"doc_id" % 3 =!= 0)))
     val stream0 = docs.filter($"doc_id" % 3 === 0)
       .as[(Long, String)].collect().sortBy(_._1)
     val input = MemoryStream[(Long, String)]
     val sink = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean, Long)]
     def start() = input.toDF().toDF("doc_id", "text").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val bSids = DedupQueries.shingleTableOf(batch).persist()
+        val bSids = DedupQueries.Lsh.shingles(batch)
         sink.synchronized {
-          sink ++= StreamingOps.neardupAdmit(bSids, sids, bands)
+          sink ++= index.admit(bSids)
             .select($"doc_id", $"admitted",
               coalesce($"dup_of", lit(-1L)).as("dup_of"))
             .as[(Long, Boolean, Long)].collect()
         }
-        sids = sids.unionByName(bSids).persist()
-        bands = bands.unionByName(DedupQueries.bandIndex(
-          bSids.filter(size($"sid") > 0))).persist()
+        index = index.append(bSids)
         ()
       }
       .option("checkpointLocation", ckpt.getAbsolutePath)

@@ -11,7 +11,9 @@
 #      leak step fails if anything but the cross-JVM source fixtures
 #      (Fixtures.onDisk, prefix graft_fixture_) survives the JVM,
 #   3. the stress_diff gate selftest,
-#   4. a two-key StressSweep (q1_agg, g1_connected_components) whose
+#   4. a four-key StressSweep (q1_agg, g1_connected_components, and
+#      d2_minhash_lsh and st8c_stream_admit_capped, whose full-row
+#      evaluation runs the LSH kernel's verify projections) whose
 #      artifact must load in tools/stress_diff.py (diffed against
 #      itself, exit 0),
 #   5. the repo benchmark's trace-analysis self-tests (pure Python),
@@ -69,7 +71,7 @@ step tmp_leaks leaks
 step oracle python3 tools/check.py "$VDIR" "$SF"
 step diff_selftest python3 tools/stress_diff_selftest.py
 rm -f "$OUT/stress.json"
-step stress_smoke env SPARK_GRAFT_SWEEP_ONLY=q1_agg,g1_connected_components \
+step stress_smoke env SPARK_GRAFT_SWEEP_ONLY=q1_agg,g1_connected_components,d2_minhash_lsh,st8c_stream_admit_capped \
   sbt -batch "runMain graft.StressSweep $SF 120 $OUT/stress.json"
 step stress_smoke_diff python3 tools/stress_diff.py "$OUT/stress.json" "$OUT/stress.json"
 step perfbench_layers python3 perfbench/test_perfbench.py LayerTest
