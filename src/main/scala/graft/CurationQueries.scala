@@ -347,8 +347,10 @@ object CurationQueries extends QueryGroup {
     * distance; and only nodes at distance ≤ 4 expand further — a record
     * first reached at distance 5 is flagged but never walked (the
     * reference's `if d > 4: continue`). The flagged (id, dist) set is
-    * the portal-required metadata update. Reuses `operators.Graph.bfs`
-    * (layered frontier, anti-join min-dist — per-round cost ∝ frontier).
+    * the portal-required metadata update. Reuses `operators.Graph.bfs`,
+    * which runs on the engine's one layered-frontier loop
+    * (`operators.Reconcile.frontierFixpoint`: anti-join least depth,
+    * per-layer cost ∝ frontier, stops at the first empty frontier).
     *
     * Fixture: the g2 star graph (cust 4k → order 4k+1 → part 4k+2 →
     * supp 4k+3) plus a supplier chain (4k+3 → 4(k+1)+3) so depth

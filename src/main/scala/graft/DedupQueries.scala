@@ -1331,13 +1331,7 @@ object DedupQueries extends QueryGroup {
     val canonical = exact.join(clusters, Seq("doc_id"), "left")
       .filter(coalesce($"component", $"doc_id") === $"doc_id")
     // 5. stratified sample
-    val u = ($"doc_id" * 1103515245L + 12345L) % P % 1000L
-    val rate = TextQueries.sampleRates.tail.foldLeft(
-      when($"lang" === TextQueries.sampleRates.head._1,
-        TextQueries.sampleRates.head._2)) {
-      case (acc, (l, r)) => acc.when($"lang" === l, r)
-    }.otherwise(25L)
-    val sampled = canonical.filter(u < rate)
+    val sampled = canonical.filter(TextQueries.sampleDraw < TextQueries.sampleRate)
     // 6. pack the kept stream into training windows — NOT a per-source
     // window (a source is not structurally bounded; one huge source
     // would sort on a single reducer): range-partitioned global prefix

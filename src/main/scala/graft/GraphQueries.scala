@@ -264,19 +264,10 @@ object GraphQueries extends QueryGroup {
       .select(($"l_partkey" * 2L).as("src"), ($"l_suppkey" * 2L + 1L).as("dst"))
       .distinct()
     // read 4×, ALWAYS keyed by src (degree + every iteration's join):
-    // build it hash(src)-partitioned — repartition then dropDuplicates
-    // instead of distinct, so the dedup itself needs no second exchange
-    // (hash(src) already co-locates equal (src,dst) rows) and the
-    // cached partitioning makes the degree aggregate AND each power
-    // iteration's edge join exchange-free on the edge bulk (r17, guide
-    // §2.4; the identical move to Graph.connectedComponents' sym)
-    // byte-scaled partition count (r18): the cached layout is frozen by
-    // the cached-plan flag, so it must not inherit the cores-coupled
-    // shuffle.partitions constant (operators.Substrate.scaledPartitions)
-    val symRaw = e.union(e.select($"dst".as("src"), $"src".as("dst")))
-    val sym = symRaw
-      .repartition(operators.Substrate.scaledPartitions(symRaw), $"src")
-      .dropDuplicates("src", "dst").persist()
+    // the hash(src)-partitioned symmetric substrate makes the degree
+    // aggregate AND each power iteration's edge join exchange-free on
+    // the edge bulk
+    val sym = operators.Graph.symmetric(e)
     val deg = sym.groupBy($"src").agg(count(lit(1)).as("outdeg"))
     var rank = deg.select($"src".as("node"), lit(1000L).as("rank"))
     for (_ <- 1 to 3) {

@@ -299,7 +299,7 @@ object SimilarityQueries extends QueryGroup {
     def assign(cents: DataFrame, df: DataFrame = train): DataFrame =
       Codebook.against(df, cents, by)
         .withColumn("best", array_min(Codebook.dists))
-        .select(df.columns.map(col) ++ Seq(
+        .select(df.columns.toSeq.map(col) ++ Seq(
           col("best").getField("cid").as("cid"),
           col("best").getField("d2").as("d2")): _*)
 

@@ -489,6 +489,15 @@ object TextQueries extends QueryGroup {
   val sampleRates: Seq[(String, Long)] =
     Seq("en" -> 800L, "de" -> 400L, "es" -> 200L, "fr" -> 100L, "zh" -> 50L)
 
+  /** The stratified sample's keep test, `sampleDraw < sampleRate`: the
+    * doc's reproducible draw (LCG mod 1000) against its language's
+    * rate (milli; 25 for a language not in `sampleRates`). */
+  val sampleDraw: Column = (col("doc_id") * 1103515245L + 12345L) % HashP % 1000L
+  val sampleRate: Column = sampleRates.tail.foldLeft(
+    when(col("lang") === sampleRates.head._1, sampleRates.head._2)) {
+    case (acc, (l, r)) => acc.when(col("lang") === l, r)
+  }.otherwise(25L)
+
   /** Deterministic stratified sampling / domain mixing: each language
     * stratum keeps a fixed fraction of its documents, selected by a
     * reproducible per-doc hash (LCG mod 1000) — the 100 TB form of
@@ -498,13 +507,9 @@ object TextQueries extends QueryGroup {
     * mixture statistics. */
   def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val u = ($"doc_id" * 1103515245L + 12345L) % HashP % 1000L
-    val rate = sampleRates.tail.foldLeft(
-      when($"lang" === sampleRates.head._1, sampleRates.head._2)) {
-      case (acc, (l, r)) => acc.when($"lang" === l, r)
-    }.otherwise(25L)
     Tables.load(spark, dir, "documents")
-      .select($"doc_id", $"lang", $"source", u.as("u"), rate.as("rate_milli"))
+      .select($"doc_id", $"lang", $"source", sampleDraw.as("u"),
+        sampleRate.as("rate_milli"))
       .filter($"u" < $"rate_milli")
       .select($"doc_id", $"lang", $"source", $"u",
         intDiv(lit(1000000L), $"rate_milli").as("weight_milli"))

@@ -23,12 +23,14 @@ import org.apache.spark.sql.functions._
   *     equivalents, a URI prefix contributed by more than 2 of them is
   *     noise and ALL its entries are dropped.
   *
-  * Distribution model: round-synchronous BFS (like Graph.bfs) carrying
-  * (seed, node) state; every filter is a join predicate on the edge
-  * stream — root attributes broadcast, candidate attributes joined by
-  * node, the cycle guard an anti-join against the per-seed accepted
-  * set. Documented deviation: candidates of the same round are tested
-  * against the PREVIOUS rounds' accepted set, not against each other
+  * Distribution model: the crawl runs on the engine's layered-frontier
+  * loop (`Reconcile.frontierFixpoint`, as Graph.bfs does) with `seed`
+  * as its key column, so every seed's crawl is one (seed, node) layer
+  * set; every filter is a join predicate of the expander — root
+  * attributes broadcast, candidate attributes joined by node, the
+  * cycle guard a semi-join against the per-seed accepted set.
+  * Documented deviation: candidates of the same layer are tested
+  * against the EARLIER layers' accepted set, not against each other
   * (the reference processes its queue one URI at a time).
   */
 object Collector {
@@ -70,64 +72,55 @@ object Collector {
 
     val attrs = nodes.select($"node", $"rtype", $"byear", $"dyear", $"refs")
       .persist()
-    val e = edges.select($"src", $"dst").persist()
-    // fanout cap: per (src, prefix) counts, computed once — applies to
-    // every NON-seed expansion (the reference caps xrec equivalents
+    // fanout cap: per (src, prefix) counts, computed once; `capped`
+    // marks the edges of a prefix with > 2 entries, which every
+    // NON-seed expansion drops (the reference caps xrec equivalents
     // only, collector.py:203-218)
-    val capped = {
-      val withPfx = e.withColumn("pfx", prefixOf($"dst"))
+    val e = {
+      val withPfx = edges.select($"src", $"dst").withColumn("pfx", prefixOf($"dst"))
       val hot = withPfx.groupBy($"src", $"pfx").agg(count(lit(1)).as("n"))
-        .filter($"n" > 2).select($"src", $"pfx")
-      withPfx.join(hot, Seq("src", "pfx"), "left_anti").select($"src", $"dst")
-        .persist()
+        .filter($"n" > 2)
+      withPfx.join(hot, Seq("src", "pfx"), "left")
+        .select($"src", $"dst", $"n".isNotNull.as("capped")).persist()
     }
     val rootAttrs = seeds.select($"node".as("seed"))
       .join(attrs, $"node" === $"seed")
       .select($"seed", $"rtype".as("r_rtype"), $"byear".as("r_byear"),
         $"dyear".as("r_dyear"))
+    val candAttrs = attrs.select($"node".as("dst"), $"rtype".as("c_rtype"),
+      $"byear".as("c_byear"), $"dyear".as("c_dyear"), $"refs".as("c_refs"))
 
-    var visited = seeds.select($"node".as("seed"))
-      .select($"seed", $"seed".as("node"), lit(0).as("dist"))
-      .localCheckpoint()
-    var frontier = visited.select($"seed", $"node")
-    var d = 0
-    while (d < maxDist && !frontier.isEmpty) {
-      d += 1
-      val expand = if (d == 1) e else capped
-      val cand0 = expand.join(frontier, expand("src") === frontier("node"))
-        .select($"seed", $"dst".as("cand")).distinct()
-      // type/date guard: root attrs (broadcast) vs candidate attrs
-      val cand1 = cand0
+    // the guard chain as the loop's expander over (seed, v) rows. The
+    // seed's own row (v = seed, exactly the depth-0 rows) expands
+    // uncapped; the frontier is broadcast (one layer's fan-out).
+    val guarded: Reconcile.Expander = (f, seen) => {
+      val cand = e.join(broadcast(f), $"src" === $"v")
+        .filter(!$"capped" || $"v" === $"seed")
+        // type/date guard: root attrs (broadcast) vs candidate attrs
         .join(broadcast(rootAttrs), "seed")
-        .join(attrs.select($"node".as("cand"), $"rtype".as("c_rtype"),
-          $"byear".as("c_byear"), $"dyear".as("c_dyear"),
-          $"refs".as("c_refs")), "cand")
+        .join(candAttrs, "dst")
         .filter(typeDateOk($"r_rtype", $"r_byear", $"r_dyear",
           $"c_rtype", $"c_byear", $"c_dyear"))
-        .select($"seed", $"cand", $"c_refs")
-      // cycle guard vs the per-seed ACCEPTED set (dist >= 1, not root)
-      val accepted = visited.filter($"dist" >= 1)
-        .select($"seed".as("a_seed"), $"node".as("a_node"))
-      val candRefs = cand1.select($"seed", $"cand", explode($"c_refs").as("ref"))
-      val viol1 = candRefs
+        .select($"seed", $"src", $"dst", $"c_refs")
+      // cycle guard vs the per-seed ACCEPTED set: seen minus the roots
+      val accepted = seen.filter($"v" =!= $"seed")
+        .select($"seed".as("a_seed"), $"v".as("a_node"))
+      val viol1 = cand.select($"seed", $"dst", explode($"c_refs").as("ref"))
         .join(accepted, $"seed" === $"a_seed" && $"ref" === $"a_node", "left_semi")
-        .select($"seed", $"cand")
+        .select($"seed", $"dst")
       val accRefs = accepted
         .join(attrs.select($"node".as("a_node"), $"refs"), "a_node")
         .select($"a_seed", explode($"refs").as("a_ref"))
-      val viol2 = cand1
-        .join(accRefs, $"seed" === $"a_seed" && $"cand" === $"a_ref", "left_semi")
-        .select($"seed", $"cand")
-      val next = cand1.select($"seed", $"cand")
-        .join(viol1.union(viol2).distinct(), Seq("seed", "cand"), "left_anti")
-        .select($"seed", $"cand".as("node"))
-        .join(visited.select($"seed", $"node"), Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(d))
-        .localCheckpoint()
-      visited = visited.union(next).localCheckpoint()
-      frontier = next.select($"seed", $"node")
+      val viol2 = cand
+        .join(accRefs, $"seed" === $"a_seed" && $"dst" === $"a_ref", "left_semi")
+        .select($"seed", $"dst")
+      cand.join(viol1.union(viol2).distinct(), Seq("seed", "dst"), "left_anti")
+        .select($"seed", $"src", $"dst")
     }
-    attrs.unpersist(); e.unpersist(); capped.unpersist()
-    visited
+    val crawl = Reconcile.frontierFixpoint.layers(
+      seeds.select($"node".as("seed"), $"node".as("src"), $"node".as("dst")),
+      Seq(guarded), maxDist)
+    attrs.unpersist(); e.unpersist() // every layer was materialized by the loop's counts
+    crawl.depths.withColumnRenamed("v", "node")
   }
 }

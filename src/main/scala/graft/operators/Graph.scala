@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * Spark re-expression of the reference's identity-graph machinery
   * (`pipeline/process/reference_manager.py:212-407` idmap cluster merge →
   * connected components; `pipeline/process/reference_manager.py:100-210` +
-  * `run-reconcile.py:160-220` reference walk → bounded BFS).
+  * `run-reconcile.py:160-220` reference walk → bounded BFS, which runs on
+  * Reconcile's layered-frontier loop).
   *
   * Scale notes: per-iteration state is a (node, value) table hash-partitioned
   * by node; each round is one shuffle join against the (cached) symmetric
@@ -17,30 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Connected components by min-label propagation with pointer-doubling
-    * shortcuts over an undirected edge set. Input columns (src, dst);
-    * output (node, component) where component = min node id in the
-    * component. Deterministic fixpoint.
-    *
-    * Each round does two label-decreasing steps:
-    *   1. neighbor-min: l(u) := min(l(u), min over nbrs v of l(v))
-    *   2. shortcut:     l(u) := l(l(u))   (pointer doubling)
-    * Step 2 is the star-contraction move (large-star/small-star in label
-    * form): it collapses label chains geometrically, cutting rounds from
-    * O(diameter) to O(log diameter) — the difference between 12 shuffle
-    * rounds and 4 on a chain-of-12 graph, and the difference between
-    * feasible and not on high-diameter identity graphs at 100 TB.
-    *
-    * Both steps preserve the invariant l(u) <= u and only decrease labels,
-    * so the label SUM is monotone non-increasing and a scalar sum-equality
-    * check detects the fixpoint exactly (an unchanged sum means both
-    * sub-steps were identity, and a neighbor-min fixpoint is a correct CC
-    * labeling). Skew: the hot-key groupBy(dst).min is handled by Spark's
-    * partial (map-side) aggregation — a star center's million edges
-    * combine to one partial min per map task before the shuffle, which is
-    * exactly what explicit salting would buy (pinned by GraphSpec's
-    * partial-aggregate plan check); the label-side joins are unique-key
-    * and AQE skew-join splits any oversized probe partitions. */
   /** Partition-local contraction — the map-side combine of CC: a
     * union-find pass inside each partition replaces its edge load with
     * node→local-min star edges. Same connectivity (each partition's
@@ -74,6 +51,49 @@ object Graph {
       }.toDF("src", "dst")
   }
 
+  /** The symmetric edge substrate: `e` (src, dst) plus its reversed
+    * edges, deduplicated and persisted (the caller owns the cache) in
+    * ONE build shuffle keyed by src: hash(src) co-locates equal (src,
+    * dst) rows, so dropDuplicates needs no second exchange, and every
+    * src-keyed consumer (CC's neighbor-min join, pagerank's degree and
+    * power iterations) reads it exchange-free (r17, guide §2.4). The
+    * partition count is byte-scaled (r18): the cached layout is FROZEN,
+    * so it must come from the data, not the cores-coupled
+    * shuffle.partitions (Substrate header). A hub's block is ONE
+    * partition at any count, but each probe of it is one linear scan
+    * (unique-key join + map-side partial min); GraphSubstrateSpec pins
+    * the scaling and the hub rung. */
+  private[graft] def symmetric(e: DataFrame): DataFrame = {
+    val raw = e.select(col("src"), col("dst"))
+      .union(e.select(col("dst").as("src"), col("src").as("dst")))
+    raw.repartition(Substrate.scaledPartitions(raw), col("src"))
+      .dropDuplicates("src", "dst").persist()
+  }
+
+  /** Connected components by min-label propagation with pointer-doubling
+    * shortcuts over an undirected edge set. Input columns (src, dst);
+    * output (node, component) where component = min node id in the
+    * component. Deterministic fixpoint.
+    *
+    * Each round does two label-decreasing steps:
+    *   1. neighbor-min: l(u) := min(l(u), min over nbrs v of l(v))
+    *   2. shortcut:     l(u) := l(l(u))   (pointer doubling)
+    * Step 2 is the star-contraction move (large-star/small-star in label
+    * form): it collapses label chains geometrically, cutting rounds from
+    * O(diameter) to O(log diameter) — the difference between 12 shuffle
+    * rounds and 4 on a chain-of-12 graph, and the difference between
+    * feasible and not on high-diameter identity graphs at 100 TB.
+    *
+    * Both steps preserve the invariant l(u) <= u and only decrease labels,
+    * so the label SUM is monotone non-increasing and a scalar sum-equality
+    * check detects the fixpoint exactly (an unchanged sum means both
+    * sub-steps were identity, and a neighbor-min fixpoint is a correct CC
+    * labeling). Skew: the hot-key groupBy(dst).min is handled by Spark's
+    * partial (map-side) aggregation — a star center's million edges
+    * combine to one partial min per map task before the shuffle, which is
+    * exactly what explicit salting would buy (pinned by GraphSpec's
+    * partial-aggregate plan check); the label-side joins are unique-key
+    * and AQE skew-join splits any oversized probe partitions. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -84,28 +104,7 @@ object Graph {
     // node appears as a star-edge src, so the node set is preserved;
     // local roots keep a self-loop, preserving singletons)
     val star = localContraction(full)
-    // ONE build shuffle, keyed by src, not a (src,dst)-keyed distinct:
-    // hash(src) co-locates equal (src,dst) rows too, so dropDuplicates
-    // dedups with NO second exchange — and the cached relation's
-    // hash(src) partitioning is exactly what every round's
-    // neighbor-min join needs, so no round re-shuffles the edge bulk
-    // (r17, guide §2.4 "two operations keyed the same way share one
-    // exchange"; before: the per-round SMJ re-exchanged the cached sym
-    // every non-broadcast round)
-    // byte-scaled partition count (r18): the layout below is FROZEN by
-    // the cached-plan flag, so the count must come from the data, not
-    // the cores-coupled shuffle.partitions constant (Substrate header).
-    // Hub-skew bound: hash(src) necessarily co-locates one src's edges,
-    // so a hub's block is ONE partition regardless of count — but each
-    // round's probe of it is a single linear scan (unique-key join +
-    // map-side partial min), and delta propagation only pays it in
-    // rounds where a hub neighbor changed. GraphSubstrateSpec pins the
-    // scaling and the hub rung.
-    val symRaw = star.select($"src", $"dst")
-      .union(star.select($"dst".as("src"), $"src".as("dst")))
-    val sym = symRaw
-      .repartition(Substrate.scaledPartitions(symRaw), $"src")
-      .dropDuplicates("src", "dst").persist()
+    val sym = symmetric(star)
     var labels = sym.select($"src".as("node")).distinct()
       .withColumn("label", $"node").localCheckpoint()
     // DELTA propagation: only nodes whose label changed last round send
@@ -208,27 +207,21 @@ object Graph {
   /** Breadth-first search with min-distance semantics over directed edges
     * (src, dst) from a seed set (node), bounded by maxDist — the
     * reference-walk shape (dist <= 3, min-dist re-queueing). Output
-    * (node, dist). */
+    * (node, dist). Runs on the layered-frontier loop
+    * (`Reconcile.frontierFixpoint`), so it stops at the first empty
+    * frontier; each seed enters as its self-edge. The frontier is
+    * BROADCAST: it is one layer's fan-out and checkpointed (no size
+    * estimate), so Spark would otherwise sort-merge the edge bulk every
+    * layer. */
   def bfs(edges: DataFrame, seeds: DataFrame, maxDist: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select($"src", $"dst").persist()
-    var visited = seeds.select($"node").distinct()
-      .withColumn("dist", lit(0)).localCheckpoint()
-    var frontier = visited.select($"node")
-    var d = 0
-    while (d < maxDist) {
-      d += 1
-      val next = e.join(frontier, e("src") === frontier("node"))
-        .select($"dst".as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("dist", lit(d)).localCheckpoint()
-      // plain union over checkpointed layers — re-checkpointing the
-      // accumulated set would rewrite O(reach) every round
-      visited = visited.union(next)
-      frontier = next.select($"node")
-    }
-    e.unpersist()
-    visited
+    val walk = Reconcile.frontierFixpoint.layers(
+      seeds.select($"node".as("src"), $"node".as("dst")),
+      Seq((f, _) => e.join(broadcast(f.withColumnRenamed("v", "src")), "src")),
+      maxDist)
+    e.unpersist() // every layer was materialized by the loop's counts
+    walk.depths.withColumnRenamed("v", "node")
   }
 }

@@ -230,7 +230,7 @@ object JoinPlanner {
       else left.hint("SHUFFLE_HASH").join(right, "k")
     case Salt(r) =>
       val sl = left.withColumn("salt",
-        pmod(xxhash64(left.columns.map(col): _*) +
+        pmod(xxhash64(left.columns.toSeq.map(col): _*) +
           monotonically_increasing_id(), lit(r.toLong)))
       val sr = right.withColumn("salt",
         explode(array((0 until r).map(i => lit(i.toLong)): _*)))

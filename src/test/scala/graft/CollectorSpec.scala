@@ -109,6 +109,21 @@ class CollectorSpec extends AnyFunSuite {
     assert(run(nodes2, edges2, 1L) == Set(1L, 2L, 901L))
   }
 
+  test("two seeds: a seed reached by another crawl is capped there, " +
+      "uncapped in its own") {
+    import spark.implicits._
+    // seed 1 reaches seed 2 at depth 1; 2 fans out to 11, 12, 13, one
+    // prefix (0) with > 2 entries
+    val nodes = Seq(1L, 2L, 11L, 12L, 13L)
+      .map(i => (i, "Person", Option.empty[Long], Option.empty[Long], Seq.empty[Long]))
+    val edges = Seq((1L, 2L), (2L, 11L), (2L, 12L), (2L, 13L))
+    val got = Collector.collect(nodesDf(nodes), edgesDf(edges),
+        Seq(1L, 2L).toDF("node"), 3, d => (d / 100L).cast("long"))
+      .as[(Long, Long, Int)].collect().toSet
+    assert(got == Set((1L, 1L, 0), (1L, 2L, 1), // non-seed 2: capped
+      (2L, 2L, 0), (2L, 11L, 1), (2L, 12L, 1), (2L, 13L, 1))) // seed 2: not
+  }
+
   test("candidates without a node row (acquirer miss) are dropped") {
     val nodes = Seq((1L, "Person", None, None, Seq.empty[Long]))
     assert(run(nodes, Seq((1L, 99L)), 1L) == Set(1L))

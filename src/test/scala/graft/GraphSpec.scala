@@ -52,6 +52,24 @@ class GraphSpec extends AnyFunSuite {
     assert(got === Map(1L -> 0, 2L -> 1, 4L -> 1, 3L -> 2, 5L -> 2))
   }
 
+  test("bfs stops once its frontier is empty") {
+    import spark.implicits._
+    // the same chain: depth 2 is the deepest layer, so a bound of 50
+    // must not cost 50 layers of jobs
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (1L, 4L))
+      .toDF("src", "dst")
+    val t = Telemetry.attach(spark)
+    try {
+      t.drain(spark)
+      t.reset()
+      val got = Graph.bfs(edges, Seq(1L).toDF("node"), maxDist = 50)
+        .as[(Long, Int)].collect().toMap
+      t.drain(spark)
+      assert(got === Map(1L -> 0, 2L -> 1, 4L -> 1, 3L -> 2, 5L -> 2))
+      assert(t.jobs.size < 30, s"${t.jobs.size} jobs for a depth-2 walk")
+    } finally spark.sparkContext.removeSparkListener(t)
+  }
+
   test("kcore reaches the true fixpoint within the round cap") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -98,7 +98,7 @@ class JoinPlannerSpec extends AnyFunSuite {
     // distinct salt values on the hot key: the counter term must spread
     // the identical rows over (nearly) all r reducers
     val spread = dupL.withColumn("salt",
-        pmod(xxhash64(dupL.columns.map(col): _*) +
+        pmod(xxhash64(dupL.columns.toSeq.map(col): _*) +
           monotonically_increasing_id(), lit(r.toLong)))
       .filter($"k" === 0L)
       .agg(countDistinct($"salt")).head().getLong(0)

@@ -60,7 +60,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val r = rnd
     for (_ <- 0 until 100) {
       val ids = Seq.fill(r.nextInt(30) + 1)(math.abs(r.nextLong()) % VecMath.P)
-      val got = VecMath.minhashSig(arr(ids), 16).toLongArray.toSeq
+      val got = VecMath.minhashSig(arr(ids), 16).toLongArray().toSeq
       val want = (0 until 16).map(j =>
         ids.map(s => (VecMath.aj(j) * s + VecMath.bj(j)) % VecMath.P).min)
       assert(got === want)
